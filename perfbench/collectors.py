@@ -7,16 +7,20 @@ from inside the program:
   (``statusTracker().getJobIdsForGroup``);
 - stage metrics: ``AppStatusStore.stageList`` (its 5-argument form on
   Spark 4.1), which is populated with the UI off;
-- plan node counts: the executed (final adaptive) plan of a DataFrame;
-- driver JVM peak RSS, Python worker CPU and host CPU steal:
+- plan node counts: the SQL status store's plan graph of every SQL
+  execution a unit of work ran;
+- driver JVM peak RSS, CPU of the JVM (its JIT compiler threads apart) and
+  its Python workers, host CPU steal:
   ``/proc/<pid>/status``, ``/proc/<pid>/stat`` of the JVM and its
   descendants, and ``/proc/stat``.
+
+It also lists the processes under a pid, so that a run can wait until each
+has ended.
 """
 
 from __future__ import annotations
 
 import os
-import re
 from collections import Counter
 
 STAGE_FIELDS = ("input_bytes", "shuffle_write_bytes", "spill_bytes", "executor_cpu_s", "gc_s")
@@ -41,7 +45,6 @@ PYTHON_EVAL = frozenset(
         "ArrowEvalPythonUDTF",
     }
 )
-_NODE = re.compile(r"^[\s+\-:|]*(?:\*\(\d+\)\s+)?([A-Za-z]\w*)")
 
 
 class StatusReader:
@@ -91,24 +94,22 @@ class StatusReader:
         return out
 
 
-def plan_nodes(df) -> Counter:
-    """Operator names in ``df``'s executed plan; for adaptive plans only the
-    final plan counts, not the initial one printed after it."""
-    text = df._jdf.queryExecution().executedPlan().toString()
+def plan_nodes(spark, description: str) -> Counter:
+    """Operator names over every SQL execution run under the job
+    ``description``, each in its final adaptive plan as the SQL status store
+    holds it. A query that pins a phase with ``localCheckpoint`` runs that
+    phase as an execution of its own, so the phase's operators count here,
+    whereas the returned DataFrame's plan shows it as one ``Scan ExistingRDD``.
+    Call after :meth:`StatusReader.refresh`."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
     names: Counter = Counter()
-    initial_at = None  # column of the open "== Initial Plan ==" section
-    for line in text.splitlines():
-        col = len(line) - len(line.lstrip(" +-:|"))
-        if initial_at is not None:
-            if col >= initial_at:
-                continue
-            initial_at = None
-        if "== Initial Plan ==" in line:
-            initial_at = col
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if e.description() != description:
             continue
-        m = _NODE.match(line)
-        if m and "==" not in line:
-            names[m.group(1)] += 1
+        nodes = store.planGraph(e.executionId()).allNodes()
+        names.update(nodes.apply(j).name() for j in range(nodes.size()))
     return names
 
 
@@ -153,6 +154,76 @@ def cpu_steal_ticks() -> tuple[int, int]:
     with open("/proc/stat") as f:
         ticks = [int(x) for x in f.readline().split()[1:]]
     return sum(ticks[:8]), ticks[7]
+
+
+def jit_cpu_s(jvm_pid: int) -> float:
+    """CPU seconds used so far by the JVM's JIT compiler threads. Exact only
+    while no compiler thread exits: run the JVM with
+    ``-XX:-UseDynamicNumberOfCompilerThreads``."""
+    total = 0.0
+    for tid in os.listdir(f"/proc/{jvm_pid}/task"):
+        try:
+            with open(f"/proc/{jvm_pid}/task/{tid}/stat") as f:
+                raw = f.read()
+        except OSError:
+            continue
+        # The kernel keeps 15 characters of "C2 CompilerThread0".
+        if raw[raw.index("(") + 1 : raw.rindex(")")] in ("C1 CompilerThre", "C2 CompilerThre"):
+            fields = raw[raw.rindex(")") + 2 :].split()
+            total += (int(fields[11]) + int(fields[12])) / os.sysconf("SC_CLK_TCK")
+    return total
+
+
+def program_cpu_s(jvm_pid: int) -> float:
+    """CPU seconds used so far by the driver JVM (every thread, and children
+    it reaped) and its live descendants, the Python workers, less the JIT
+    compiler threads: compiling is JVM warm-up, more than half of the JVM's
+    CPU in a run this short, and its share varies from run to run."""
+    return _stat(jvm_pid)[1] - jit_cpu_s(jvm_pid) + descendant_cpu_s(jvm_pid)
+
+
+def _start_and_state(pid: int) -> tuple[str, str] | None:
+    """(start time since boot in ticks, state letter) of ``pid``, or None if
+    it is gone. The start time tells a process from a later one that
+    reuses its pid."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            raw = f.read()
+    except OSError:
+        return None
+    fields = raw[raw.rindex(")") + 2 :].split()
+    return fields[19], fields[0]
+
+
+def descendants(root_pid: int) -> dict[int, str]:
+    """Every live descendant of ``root_pid``, with its start time."""
+    parent = {}
+    for entry in os.listdir("/proc"):
+        if entry.isdigit():
+            st = _stat(int(entry))
+            if st is not None:
+                parent[int(entry)] = st[0]
+    out = {}
+    for pid in parent:
+        p = parent[pid]
+        while p in parent and p != root_pid:
+            p = parent[p]
+        if p == root_pid:
+            st = _start_and_state(pid)
+            if st is not None:
+                out[pid] = st[0]
+    return out
+
+
+def running(procs: dict[int, str]) -> dict[int, str]:
+    """The processes of ``procs`` (pid -> start time) that have not ended; a
+    zombie has ended."""
+    out = {}
+    for pid, start in procs.items():
+        st = _start_and_state(pid)
+        if st is not None and st[0] == start and st[1] != "Z":
+            out[pid] = start
+    return out
 
 
 def descendant_cpu_s(root_pid: int) -> float:

@@ -1,19 +1,14 @@
-"""Seeded, single-threaded input generators for the benchmark.
+"""Seeded, single-threaded generator of the ingest workload's input.
 
-Two kinds of input, both a pure function of the seed:
+Landing hour-files: gzip JSON lines in the Firehose ``year=/month=/day=/hour=``
+layout, shaped like the reference producer's records (``event_id``, ISO
+``event_timestamp``, ``event_type``, ``user_id``, nested ``data``), a pure
+function of the seed. Ids come from one counter, so they are disjoint apart
+from the planned redeliveries (byte-identical copies of an earlier line: same
+``ts``, same payload) and the corrupt lines.
 
-- **Landing hour-files** for the ingest workload: gzip JSON lines in the
-  Firehose ``year=/month=/day=/hour=`` layout, shaped like the reference
-  producer's records (``event_id``, ISO ``event_timestamp``, ``event_type``,
-  ``user_id``, nested ``data``). Ids come from one counter, so they are
-  disjoint apart from the planned redeliveries (byte-identical copies of an
-  earlier line: same ``ts``, same payload) and the corrupt lines.
-- **Fixture tables** for the query workloads: the ten parquet tables the
-  query registry reads (``catalog.TABLES``), with the column types and value
-  domains of the driver fixtures (FIXTURES.md §2), including the planted
-  near-duplicate documents the dedup family looks for.
-
-Nothing here imports Spark; the program receives only the files.
+Nothing here imports Spark; the program receives only the files. The query
+workload needs no generator: it reads the fixed fixture under ``data/``.
 """
 
 from __future__ import annotations
@@ -24,10 +19,6 @@ import json
 import os
 import random
 from dataclasses import dataclass, field
-
-import numpy as np
-import pyarrow as pa
-import pyarrow.parquet as pq
 
 EVENT_TYPES = ("view", "click", "purchase", "signup")
 PRODUCTS = ("p1", "p2", "p3", "p4")
@@ -172,152 +163,3 @@ def write_hour_file(root: str, hf: HourFile) -> str:
     with open(path, "wb") as raw, gzip.GzipFile(fileobj=raw, mode="wb", mtime=0) as f:
         f.write(("\n".join(hf.lines) + "\n").encode())
     return path
-
-
-# -- fixture tables for the query workloads ---------------------------------
-
-WORDS = (
-    "a the data row column table key value join hash merge sort scan filter "
-    "agg group window stream batch spark query order line part customer "
-    "vector small big fast slow"
-).split()
-LANGS = ("en", "en", "en", "zh", "es", "fr", "de")
-SEGMENTS = ("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
-PART_TYPES = ("ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD")
-PART_WORDS = ("small", "red", "large", "blue", "green", "steel", "brass", "tiny")
-PART_NOUNS = ("ring", "widget", "bolt", "gear", "pipe", "valve", "panel", "spring")
-PRIORITIES = ("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
-EVENT_KINDS = ("view", "click", "purchase", "signup", "error")
-REGIONS = ("AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST")
-
-
-def fixture_tables(seed: int, sf: float) -> dict[str, pa.Table]:
-    """The ten fixture tables at scale factor ``sf`` (0.01 = 60 k lineitems)."""
-    r = np.random.default_rng(seed)
-    n_cust, n_supp, n_part = int(150_000 * sf), max(10, int(10_000 * sf)), int(200_000 * sf)
-    n_ord, n_line, n_ev = int(1_500_000 * sf), int(6_000_000 * sf), int(1_000_000 * sf)
-    n_doc, n_vec = int(50_000 * sf), int(50_000 * sf)
-
-    def money(lo, hi, n):
-        return np.round(r.uniform(lo, hi, n), 2)
-
-    def days(start: str, n_days: int, n: int):
-        base = np.datetime64(start, "ms")
-        return base + r.integers(0, n_days, n).astype("timedelta64[D]")
-
-    t = {}
-    t["region"] = pa.table(
-        {"r_regionkey": pa.array(range(5), pa.int32()), "r_name": list(REGIONS)}
-    )
-    t["nation"] = pa.table(
-        {
-            "n_nationkey": pa.array(range(25), pa.int32()),
-            "n_name": [f"NATION_{i}" for i in range(25)],
-            "n_regionkey": pa.array([i % 5 for i in range(25)], pa.int32()),
-        }
-    )
-    t["customer"] = pa.table(
-        {
-            "c_custkey": np.arange(n_cust, dtype=np.int64),
-            "c_name": [f"Customer#{i:09d}" for i in range(n_cust)],
-            "c_nationkey": r.integers(0, 25, n_cust).astype(np.int32),
-            "c_acctbal": money(-999.99, 9999.99, n_cust),
-            "c_mktsegment": r.choice(SEGMENTS, n_cust),
-        }
-    )
-    t["supplier"] = pa.table(
-        {
-            "s_suppkey": np.arange(n_supp, dtype=np.int64),
-            "s_name": [f"Supplier#{i:09d}" for i in range(n_supp)],
-            "s_nationkey": r.integers(0, 25, n_supp).astype(np.int32),
-            "s_acctbal": money(-999.99, 9999.99, n_supp),
-        }
-    )
-    t["part"] = pa.table(
-        {
-            "p_partkey": np.arange(n_part, dtype=np.int64),
-            "p_name": [
-                f"{PART_WORDS[a]} {PART_NOUNS[b]}"
-                for a, b in zip(r.integers(0, 8, n_part), r.integers(0, 8, n_part))
-            ],
-            "p_brand": [f"Brand#{b}" for b in r.integers(1, 26, n_part)],
-            "p_type": r.choice(PART_TYPES, n_part),
-            "p_size": r.integers(1, 51, n_part).astype(np.int32),
-            "p_retailprice": np.round(900 + (np.arange(n_part) % 1000) * 0.1, 2),
-        }
-    )
-    t["orders"] = pa.table(
-        {
-            "o_orderkey": np.arange(n_ord, dtype=np.int64),
-            "o_custkey": r.integers(0, n_cust, n_ord),
-            "o_orderstatus": r.choice(("F", "O", "P"), n_ord),
-            "o_totalprice": money(1000, 500_000, n_ord),
-            "o_orderdate": pa.array(days("1995-01-01", 2400, n_ord), pa.timestamp("ms")),
-            "o_orderpriority": r.choice(PRIORITIES, n_ord),
-        }
-    )
-    qty = r.integers(1, 51, n_line).astype(np.float64)
-    t["lineitem"] = pa.table(
-        {
-            "l_orderkey": r.integers(0, n_ord, n_line),
-            "l_partkey": r.integers(0, n_part, n_line),
-            "l_suppkey": r.integers(0, n_supp, n_line),
-            "l_linenumber": r.integers(1, 8, n_line).astype(np.int32),
-            "l_quantity": qty,
-            "l_extendedprice": np.round(qty * r.uniform(900, 2100, n_line), 2),
-            "l_discount": r.integers(0, 11, n_line) / 100.0,
-            "l_tax": r.integers(0, 9, n_line) / 100.0,
-            "l_returnflag": r.choice(("A", "N", "R"), n_line),
-            "l_linestatus": r.choice(("F", "O"), n_line),
-            "l_shipdate": pa.array(days("1995-01-02", 2500, n_line), pa.timestamp("ms")),
-        }
-    )
-    # Events: 30 days from 2024-01-01, distinct ns timestamps (TIMESTAMP(NANOS)
-    # in parquet, as in the driver fixture), ~150 users per 10 k events.
-    ts = np.sort(r.choice(30 * 86_400_000_000, n_ev, replace=False)) * 1000
-    t["events"] = pa.table(
-        {
-            "event_id": np.arange(n_ev, dtype=np.int64),
-            "ts": pa.array(
-                np.datetime64("2024-01-01", "ns") + ts.astype("timedelta64[ns]"),
-                pa.timestamp("ns"),
-            ),
-            "user_id": r.integers(0, max(2, n_ev // 66), n_ev),
-            "event_type": r.choice(EVENT_KINDS, n_ev),
-            "value": money(0.01, 500, n_ev),
-            "props": [json.dumps({"k": int(k)}) for k in r.integers(0, 100, n_ev)],
-        }
-    )
-    # Documents: random text over a 30-word vocabulary; 5% are near-dups of
-    # an earlier document (a copy with " dup" appended).
-    texts = []
-    for i in range(n_doc):
-        if i >= 20 and r.random() < 0.05:
-            texts.append(texts[int(r.integers(0, i))] + " dup")
-        else:
-            texts.append(" ".join(r.choice(WORDS, int(r.integers(10, 100)))))
-    t["documents"] = pa.table(
-        {
-            "doc_id": np.arange(n_doc, dtype=np.int64),
-            "text": texts,
-            "lang": r.choice(LANGS, n_doc),
-            "source": [f"src{i % 20}" for i in range(n_doc)],
-            "n_chars": np.array([len(s) for s in texts], dtype=np.int64),
-        }
-    )
-    vec = r.normal(size=(n_vec, 64)).astype(np.float32)
-    vec /= np.linalg.norm(vec, axis=1, keepdims=True)
-    t["embeddings"] = pa.table(
-        {
-            "vec_id": np.arange(n_vec, dtype=np.int64),
-            "embedding": pa.array(list(vec), pa.list_(pa.float32())),
-            "label": r.integers(0, 10, n_vec).astype(np.int32),
-        }
-    )
-    return t
-
-
-def write_fixture(seed: int, sf: float, out_dir: str) -> None:
-    os.makedirs(out_dir, exist_ok=True)
-    for name, table in fixture_tables(seed, sf).items():
-        pq.write_table(table, os.path.join(out_dir, f"{name}.parquet"))
