@@ -521,6 +521,11 @@ def write_embedding_index(
         # scheduling + local-collection round trip for four integers;
         # guide §5: the driver should do almost no data work, and this IS
         # driver work). spark.read.json reads the bare file identically.
+        # The meta dir goes first: a store written by older code holds its
+        # meta as part-*.json, which spark.read.json would read next to
+        # the new file and could return instead of it.
+        fs, meta_dir, _ = _fs_for(spark, f"{path}/meta")
+        fs.delete(meta_dir, True)
         _write_json_file(
             spark,
             f"{path}/meta/meta.json",
@@ -549,15 +554,23 @@ def append_to_embedding_index(
 
 def _write_json_file(spark: SparkSession, path: str, payload: dict) -> None:
     """Write one JSON object as a single file via the Hadoop FS API (no
-    Spark job; works on any FS the session can reach). Overwrites."""
+    Spark job; works on any FS the session can reach). Overwrites.
+
+    The bytes go to a hidden temp file that is renamed into place, so a
+    crash leaves ``path`` absent or complete, never truncated; readers
+    skip the dot-prefixed temp file."""
     import json as _json
 
-    fs, hpath, _ = _fs_for(spark, path)
-    out = fs.create(hpath, True)
+    fs, hpath, jvm = _fs_for(spark, path)
+    tmp = jvm.org.apache.hadoop.fs.Path(hpath.getParent(), f".{hpath.getName()}.tmp")
+    out = fs.create(tmp, True)
     try:
         out.write(bytearray(_json.dumps(payload).encode("utf-8")))
     finally:
         out.close()
+    fs.delete(hpath, False)
+    if not fs.rename(tmp, hpath):
+        raise OSError(f"could not rename {tmp} to {path}")
 
 
 def _read_embedding_meta(spark: SparkSession, path: str) -> dict:

@@ -6,13 +6,18 @@ Reference behavior re-expressed (SURVEY.md §3):
 - S3KeySensor partition poll     -> streaming file source discovery
 - COPY INTO staging (ON_ERROR)   -> PERMISSIVE read, corrupt-record column
 - INSERT..SELECT w/ NOT IN dedup -> not-null filter + left-anti join append
-- DQ SQL + Python gate           -> counts + raise inside foreachBatch
-- XCom records_processed         -> observe() metrics on the batch
+- DQ SQL + Python gate           -> duplicate count + raise inside foreachBatch
+- XCom records_processed         -> Observation metrics on the raw and events
+                                    writes (seen / corrupt / affected dates,
+                                    inserted), no action of their own
 - email notify                   -> log line (listener hook point)
 
 Everything per-batch happens inside ``foreachBatch`` in statement order —
 the same linear dependency chain as the DAG (O5), but transactionally
-closer: a failed gate fails the batch, and the checkpoint replays it.
+closer: a failed gate fails the batch, and the checkpoint replays it. Each
+step is one action: the per-batch counts ride the writes as ``Observation``
+metrics, and both tables are read under declared schemas, so no read
+launches a schema-inference job.
 
 Storage: parquet directories managed by path (works everywhere). The
 pipeline's own insert step stays the partitioned anti-join append below
@@ -29,20 +34,51 @@ import os
 import shutil
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.relational import (
     REQUIRED_EVENT_COLS,
     daily_event_summary,
     insert_dedup_anti_join,
 )
-from ..sources.json_landing import read_landing_stream
+from ..sources.json_landing import PARTITION_COLS, read_landing_stream
+
+#: The events table as ``process_batch`` appends it: the landing columns
+#: without ``_corrupt_record`` and the ``file_name`` lineage column,
+#: ``event_timestamp`` renamed ``ts``, the landing zone's hour-partition
+#: columns, partitioned by ``event_date``.
+EVENTS_SCHEMA = T.StructType(
+    [
+        T.StructField("event_id", T.StringType()),
+        T.StructField("ts", T.TimestampNTZType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("user_id", T.StringType()),
+        T.StructField("data", T.StringType()),
+    ]
+    + [T.StructField(c, T.IntegerType()) for c in PARTITION_COLS]
+    + [T.StructField("event_date", T.DateType())]
+)
+
+#: ``daily_event_summary`` as ``relational.daily_event_summary`` builds it.
+SUMMARY_SCHEMA = T.StructType(
+    [
+        T.StructField("event_date", T.DateType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("event_count", T.LongType()),
+        T.StructField("first_event", T.TimestampNTZType()),
+        T.StructField("last_event", T.TimestampNTZType()),
+    ]
+)
 
 
 @dataclass
 class IngestStats:
-    """Per-batch observability (the XCom metric, O4)."""
+    """Per-batch observability (the XCom metric, O4). ``history`` holds one
+    record per batch: ``batch_id``, ``seen``, ``inserted``, ``corrupt``,
+    ``affected_dates`` (ISO dates) and ``n_dup`` (the DQ gate's duplicate
+    count; 0 when the gate had no dates to check)."""
 
     batches: int = 0
     rows_seen: int = 0
@@ -75,30 +111,30 @@ class IngestPipeline:
     @staticmethod
     def _is_path_missing(exc: Exception) -> bool:
         """True only for 'table effectively absent' — delegates to the
-        shared sources/storage.py marker set (this used to be a narrower
-        hand-rolled copy that rejected UNABLE_TO_INFER_SCHEMA, so a torn
-        first events write wedged ingestion on every replay). Anything
-        else must propagate: swallowing it would hand the anti-join an
-        empty dedup target and re-insert the whole batch as duplicates."""
+        shared sources/storage.py marker set. Anything else must
+        propagate: swallowing it would hand the anti-join an empty dedup
+        target and re-insert the whole batch as duplicates."""
         from ..sources.storage import table_absent
 
         return table_absent(exc)
 
     def _read_events_table(self) -> DataFrame | None:
-        """The events table, or None before the first successful insert."""
+        """The events table, or None before the first insert. A torn first
+        write (a directory with no data files) reads as an empty table
+        under the declared schema, so it cannot wedge ingestion."""
         try:
-            return self.spark.read.parquet(self.events_path)
+            return self.events_table()
         except Exception as exc:
             if self._is_path_missing(exc):
                 return None
             raise
 
     def events_table(self) -> DataFrame:
-        return self.spark.read.parquet(self.events_path)
+        return self.spark.read.schema(EVENTS_SCHEMA).parquet(self.events_path)
 
     def summary_table(self) -> DataFrame:
         self._heal_summary_swap()
-        return self.spark.read.parquet(self.summary_path)
+        return self.spark.read.schema(SUMMARY_SCHEMA).parquet(self.summary_path)
 
     def _heal_summary_swap(self) -> None:
         """Finish a refresh interrupted mid-swap. The swap is two atomic
@@ -129,10 +165,20 @@ class IngestPipeline:
     # -- the per-batch body (the DAG's task chain, in order) --------------
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        """One DAG run, one action per step: raw write, events append, DQ
+        count, summary write.
+
+        The batch's counts come from ``Observation`` metrics on the two
+        writes, not from actions of their own. ``affected_dates`` are the
+        dates of the valid rows (no corrupt record, every required column
+        set) before the within-batch dedup. That is a superset of the dates
+        of the deduplicated rows: a dropped copy of a within-batch duplicate
+        may add a date. Both consumers stay exact over a superset: the DQ
+        gate checks one more partition, and the summary refresh recomputes
+        a date from the events table, which reproduces its rows (or drops
+        them when the date holds no events)."""
         batch_df = batch_df.cache()
         try:
-            n_seen = batch_df.count()
-
             # 1. append everything (incl. corrupt) to raw_data — the landing
             #    table mirrors COPY INTO's keep-all behavior (K3/S3), plus
             #    the reference staging schema's lineage columns file_name /
@@ -141,21 +187,41 @@ class IngestPipeline:
             #    in start() (input_file_name() is empty inside foreachBatch).
             #    Written into a batch_id-keyed subdirectory with overwrite so
             #    a replayed batch (foreachBatch is at-least-once) replaces
-            #    its own rows instead of appending a second copy.
+            #    its own rows instead of appending a second copy. The write
+            #    materializes the cache and observes the batch's counts.
+            #    ``valid`` is the filter of step 2 over the raw column names
+            #    (the raw batch still calls ``ts`` ``event_timestamp``).
+            valid = F.col("_corrupt_record").isNull()
+            for c in REQUIRED_EVENT_COLS:
+                valid &= F.col("event_timestamp" if c == "ts" else c).isNotNull()
+            raw_obs = Observation()
             (
-                batch_df.withColumn(
+                batch_df.observe(
+                    raw_obs,
+                    F.count(F.lit(1)).alias("seen"),
+                    F.count("_corrupt_record").alias("corrupt"),
+                    F.collect_set(
+                        F.when(valid, F.to_date("event_timestamp"))
+                    ).alias("affected_dates"),
+                )
+                .withColumn(
                     "load_timestamp",
                     F.current_timestamp().cast("timestamp_ntz"),
                 )
                 .write.mode("overwrite")
                 .parquet(os.path.join(self.raw_path, f"batch_id={batch_id}"))
             )
+            observed = raw_obs.get
+            n_seen, n_corrupt = observed["seen"], observed["corrupt"]
+            # Dates come from the BATCH, not from the rows inserted: on an
+            # at-least-once replay the anti-join strips already-inserted
+            # rows, and dates of the inserted rows would skip the summary
+            # refresh + DQ re-check for exactly the dates the interrupted
+            # attempt wrote.
+            affected_dates = sorted(observed["affected_dates"])
 
             # 2. clean + transform: drop corrupt rows, enforce not-null keys,
             #    normalize column names to the engine's events schema.
-            n_corrupt = batch_df.filter(
-                F.col("_corrupt_record").isNotNull()
-            ).count()
             clean = (
                 batch_df.filter(F.col("_corrupt_record").isNull())
                 .drop("_corrupt_record", "file_name")
@@ -174,35 +240,26 @@ class IngestPipeline:
             #    retries after step-1 succeeded (defense-in-depth, O8).
             #    Events land partitioned by event_date so date-ranged reads
             #    (incl. the incremental summary below) prune partitions.
-            existing = self._read_events_table()
-            target = (
-                existing.select("event_id")
-                if existing is not None
-                else clean.select("event_id").limit(0)
-            )
-            to_insert = insert_dedup_anti_join(clean, target).cache()
-            try:
-                n_insert = to_insert.count()
-                # affected dates come from the BATCH (clean), not from
-                # to_insert: on an at-least-once replay the anti-join strips
-                # already-inserted rows, and deriving dates from to_insert
-                # would skip the summary refresh + DQ re-check for exactly
-                # the dates the interrupted attempt wrote.
-                affected_dates = [
-                    r["d"]
-                    for r in clean.select(
-                        F.to_date("ts").alias("d")
-                    ).distinct().collect()
-                ]
-                if n_insert:
-                    (
-                        to_insert.withColumn("event_date", F.to_date("ts"))
-                        .write.mode("append")
-                        .partitionBy("event_date")
-                        .parquet(self.events_path)
-                    )
-            finally:
-                to_insert.unpersist()
+            #    The file listing of the target is fixed when the plan is
+            #    built, so appending to the directory it reads is safe.
+            n_insert = 0
+            if affected_dates:
+                existing = self._read_events_table()
+                target = (
+                    existing.select("event_id")
+                    if existing is not None
+                    else clean.select("event_id").limit(0)
+                )
+                insert_obs = Observation()
+                (
+                    insert_dedup_anti_join(clean, target)
+                    .observe(insert_obs, F.count(F.lit(1)).alias("inserted"))
+                    .withColumn("event_date", F.to_date("ts"))
+                    .write.mode("append")
+                    .partitionBy("event_date")
+                    .parquet(self.events_path)
+                )
+                n_insert = insert_obs.get["inserted"]
 
             # 4. DQ gate (O6): duplicate event_ids. Scoped to the dates this
             #    batch touched (partition-pruned) — the anti-join guarantees
@@ -211,6 +268,7 @@ class IngestPipeline:
             #    involve a row in an affected partition; scanning the whole
             #    accumulated table per batch would grow with table age.
             events = self._read_events_table()
+            n_dup = 0
             if events is not None and affected_dates:
                 n_dup = (
                     # filter on the PARTITION column (event_date), not
@@ -249,6 +307,8 @@ class IngestPipeline:
                     "seen": n_seen,
                     "inserted": n_insert,
                     "corrupt": n_corrupt,
+                    "affected_dates": [d.isoformat() for d in affected_dates],
+                    "n_dup": n_dup,
                 }
             )
         finally:

@@ -466,6 +466,33 @@ def test_meta_file_written_driver_side_round_trips(spark, tmp_path):
     assert [f for f in files if f.endswith(".json")] == ["meta.json"]
 
 
+def test_meta_overwrite_drops_stale_part_files(spark, tmp_path):
+    """Overwriting a store whose meta dir still holds a part file from the
+    older Spark-job writer leaves only the new meta.json: spark.read.json
+    would otherwise read the stale parameters next to the new ones. The
+    rename's temp file is gone too."""
+    import os
+
+    df = spark.createDataFrame(
+        [(1, [1.0] * 4), (2, [0.5] * 4)], "vec_id long, embedding array<double>"
+    )
+    path = str(tmp_path / "emb_idx")
+    spark.createDataFrame(
+        [(3, 1, 4, 1)], "n_bits int, n_tables int, dim int, seed int"
+    ).coalesce(1).write.json(f"{path}/meta")
+    assert any(f.startswith("part-") for f in os.listdir(f"{path}/meta"))
+
+    incremental.write_embedding_index(
+        df, "vec_id", "embedding", path, n_bits=9, n_tables=2, dim=4, seed=7
+    )
+    files = os.listdir(f"{path}/meta")
+    assert [f for f in files if not f.endswith(".crc")] == ["meta.json"]
+    assert spark.read.json(f"{path}/meta").count() == 1
+    assert incremental._read_embedding_meta(spark, path) == {
+        "n_bits": 9, "n_tables": 2, "dim": 4, "seed": 7,
+    }
+
+
 def test_build_index_dir_is_fresh_per_invocation():
     """The c2/c5 in-query index build must never reuse a previous
     invocation's directory (round-12 verdict: a fixture-keyed cache is

@@ -366,6 +366,165 @@ def test_incremental_summary_across_batches(spark, dirs):
     assert pipe2.events_table().count() == 2000
 
 
+def _land(landing, name, records, hour="year=2024/month=1/day=1/hour=0"):
+    """Land ``records`` as one gzip JSON-lines file; a str is a raw line."""
+    part = os.path.join(landing, hour)
+    os.makedirs(part, exist_ok=True)
+    with gzip.open(os.path.join(part, f"{name}.json.gz"), "wt") as f:
+        for r in records:
+            f.write((r if isinstance(r, str) else json.dumps(r)) + "\n")
+
+
+def _event(i, day=1, **overrides):
+    rec = {
+        "event_id": f"evt-{i:04d}",
+        "event_timestamp": f"2024-01-{day:02d}T00:{i % 60:02d}:00",
+        "event_type": "view",
+        "user_id": f"user_{i % 7}",
+        "data": "{}",
+    }
+    rec.update(overrides)
+    return rec
+
+
+def _parquet_files(path):
+    return {
+        os.path.join(root, f)
+        for root, _, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    }
+
+
+def _assert_summary_matches_events(pipe):
+    from aws_snowflake_kinesis_airflow_pipeline_spark.operators.relational import (
+        daily_event_summary,
+    )
+
+    def rows(df):
+        return {
+            (r["event_date"], r["event_type"]): (
+                r["event_count"], r["first_event"], r["last_event"]
+            )
+            for r in df.collect()
+        }
+
+    assert rows(pipe.summary_table()) == rows(
+        daily_event_summary(pipe.events_table())
+    )
+
+
+def test_ingest_batch_runs_in_at_most_nine_jobs(spark, dirs):
+    """Regression guard for the per-batch action chain: the counts and the
+    affected dates ride the writes as Observation metrics and the tables
+    are read under declared schemas, so a warm DAG run (events and summary
+    already there) launches at most 9 Spark jobs — raw write, anti-join
+    append, DQ count and summary write, with AQE's shuffle-stage jobs. The
+    streaming query runs its batches under its runId as the job group."""
+    landing, warehouse = dirs
+    _land(landing, "a", [_event(i) for i in range(20)])
+    pipe = IngestPipeline(spark, landing, warehouse)
+    pipe.run_once()
+    _land(landing, "b", [_event(i) for i in range(10, 40)] + ['{"event_id": '])
+    q = pipe.run_once()
+
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert 0 < len(jobs) <= 9, sorted(jobs)
+    assert pipe.stats.history[-1]["inserted"] == 20
+
+
+def test_all_redelivery_batch_inserts_nothing(spark, dirs):
+    """A batch of nothing but redeliveries: the append observes 0 inserted
+    rows and leaves no new parquet file in the events table."""
+    landing, warehouse = dirs
+    events = [_event(i) for i in range(30)]
+    _land(landing, "a", events)
+    pipe = IngestPipeline(spark, landing, warehouse)
+    pipe.run_once()
+    before = _parquet_files(pipe.events_path)
+
+    _land(landing, "b", events[5:15])
+    pipe.run_once()
+    last = pipe.stats.history[-1]
+    assert (last["seen"], last["inserted"], last["corrupt"]) == (10, 0, 0)
+    assert last["affected_dates"] == ["2024-01-01"] and last["n_dup"] == 0
+    assert _parquet_files(pipe.events_path) == before
+    assert pipe.events_table().count() == 30
+    _assert_summary_matches_events(pipe)
+
+
+def test_rows_missing_required_columns_add_no_affected_date(spark, dirs):
+    """Rows with a null required column (and corrupt lines) count in
+    ``seen`` but are not valid rows, so their dates are not affected: the
+    summary gains no row for them."""
+    landing, warehouse = dirs
+    _land(
+        landing,
+        "a",
+        [
+            _event(1),
+            _event(2),
+            _event(3, day=5, user_id=None),
+            _event(4, day=6, event_type=None),
+            {k: v for k, v in _event(5, day=7).items() if k != "event_id"},
+            '{"event_id": "evt-0006", "event_timestamp": ',
+        ],
+    )
+    pipe = IngestPipeline(spark, landing, warehouse)
+    pipe.run_once()
+    last = pipe.stats.history[-1]
+    assert (last["seen"], last["inserted"], last["corrupt"]) == (6, 2, 1)
+    assert last["affected_dates"] == ["2024-01-01"]
+    assert {r["event_date"] for r in pipe.summary_table().collect()} == {
+        dt.date(2024, 1, 1)
+    }
+    _assert_summary_matches_events(pipe)
+
+
+def test_within_batch_duplicate_on_two_dates(spark, dirs):
+    """One event_id twice in a batch, its copies on different dates: the
+    within-batch dedup keeps one copy, the affected dates hold both, the
+    DQ gate passes, and the summary equals a GROUP BY over events — also
+    for the date whose only row was the dropped copy."""
+    landing, warehouse = dirs
+    _land(landing, "a", [_event(i) for i in range(5)])
+    pipe = IngestPipeline(spark, landing, warehouse)
+    pipe.run_once()
+
+    _land(landing, "b", [_event(7), _event(7, day=3), _event(8)])
+    pipe.run_once()
+    last = pipe.stats.history[-1]
+    assert last["affected_dates"] == ["2024-01-01", "2024-01-03"]
+    assert (last["seen"], last["inserted"], last["n_dup"]) == (3, 2, 0)
+    ev = pipe.events_table()
+    assert ev.count() == 7
+    assert ev.groupBy("event_id").count().filter(F.col("count") > 1).isEmpty()
+    _assert_summary_matches_events(pipe)
+
+
+def test_torn_first_events_write_reads_as_empty_target(spark, dirs):
+    """A first events write that crashed before committing leaves a
+    directory with no parquet files. Under the declared schema it reads as
+    an empty table, so the retry inserts every valid row."""
+    from aws_snowflake_kinesis_airflow_pipeline_spark.streaming.pipeline import (
+        EVENTS_SCHEMA,
+    )
+
+    landing, warehouse = dirs
+    pipe = IngestPipeline(spark, landing, warehouse)
+    os.makedirs(os.path.join(pipe.events_path, "_temporary", "0"))
+    torn = pipe._read_events_table()
+    assert torn is not None and torn.schema == EVENTS_SCHEMA and torn.isEmpty()
+
+    _land(landing, "a", [_event(i) for i in range(12)])
+    pipe.run_once()
+    assert pipe.stats.history[-1]["inserted"] == 12
+    assert pipe.events_table().count() == 12
+    _assert_summary_matches_events(pipe)
+
+
 def _streamable_events(spark, tmp_path, rows):
     """Write rows as parquet and reopen as a file-source stream."""
     path = str(tmp_path / "events_src")
