@@ -214,54 +214,6 @@ def doc_shingles(
     )
 
 
-def doc_shingles_with_prefix(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float,
-    k: int = 3,
-    k_chars: int = 5,
-) -> DataFrame:
-    """:func:`doc_shingles` plus a ``prefix_hs`` column: the hashed first
-    ``|A| - ceil(t·|A|) + 1`` shingles of each document under the global
-    lexicographic (binary UTF-8) order of the shingle STRINGS.
-
-    This is the classic prefix filter (Chaudhuri et al. SSJoin / Bayardo
-    et al. All-Pairs): any pair with Jaccard >= t shares >= ceil(t·|A|)
-    shingles (|A∩B| >= t·|A∪B| >= t·|A|), and two sets sharing alpha
-    elements under one total order must both contain their smallest
-    common element within their first ``size - alpha + 1`` elements — so
-    candidate generation over prefixes alone is LOSSLESS. The prefix is
-    row-local (one array_sort + slice), ~(1-t) of the index volume.
-
-    Portability constraints baked in: the order is the shingle string
-    (not its xxhash64) so a DuckDB oracle can replay discoverability with
-    a plain ORDER BY, and the prefix length is integer arithmetic on
-    :func:`_threshold_t5` so no engine ever disagrees through float
-    rounding (0.8*5 is 4.0000000000000002 in binary — a float ceil would
-    be 5 in one engine and 4 in another). The t*100000-5 relaxation is
-    REQUIRED for losslessness, not just parity: the shipped filter admits
-    round(j,4) >= t, i.e. j down to t - 5e-5, and a prefix sized with the
-    unrelaxed ceil(t*n) can miss exactly those boundary pairs (|A|=39998
-    ⊂ |B|=50000 at t=0.8: j=0.79996 rounds in, but m=39998 <
-    ceil(0.8*50000)=40000 so B's unrelaxed prefix need not expose any
-    shared shingle)."""
-    t5 = _threshold_t5(threshold)
-    sorted_sh = F.array_sort(
-        F.array_distinct(adaptive_shingles(text_col, k, k_chars))
-    )
-    n = F.size(sorted_sh)
-    ceil_tn = F.floor(
-        (F.lit(t5) * n.cast("bigint") + 99999) / 100000
-    ).cast("int")
-    hash_all = lambda arr: F.transform(arr, lambda s: F.xxhash64(s))  # noqa: E731
-    return _spread(df.select(id_col, text_col), id_col).select(
-        id_col,
-        hash_all(sorted_sh).alias("hs"),
-        hash_all(F.slice(sorted_sh, 1, n - ceil_tn + 1)).alias("prefix_hs"),
-    )
-
-
 def shingle_index(
     df: DataFrame, id_col: str, text_col: str, k: int = 3
 ) -> DataFrame:
@@ -298,9 +250,7 @@ def _threshold_t5(threshold: float) -> int:
     """The integer admission bound shared by every Jaccard prefilter: the
     shipped comparison is ``round(j, 4) >= t``, which admits j down to
     t - 5e-5, so prefilters must test against ``t*100000 - 5`` (integer —
-    float ceil of 0.8*5 differs across engines). Centralized so the
-    length filter and the df-prefix filter can never disagree about which
-    pairs are admissible."""
+    float ceil of 0.8*5 differs across engines)."""
     return round(threshold * 100000) - 5
 
 
@@ -317,12 +267,11 @@ def _sized_posting_pairs(postings: DataFrame, threshold: float) -> DataFrame:
     filter counts capped intersections against FULL sizes, and
     m_capped <= m <= n_min keeps the implication intact.
 
-    The guard mirrors the df-prefix branch (shared :func:`_threshold_t5`):
-    the shipped filter is round(j, 4) >= t, admitting j down to t - 5e-5,
-    so the ratio test uses integer t*100000 - 5 — no engine can disagree
-    through float rounding. Operands are cast to long first: n_sh is
-    IntegerType and int32 * 100000 overflows (ANSI mode: job-killing
-    exception) for documents beyond ~21k shingles."""
+    The shipped filter is round(j, 4) >= t, admitting j down to t - 5e-5,
+    so the ratio test uses integer t*100000 - 5 (:func:`_threshold_t5`) —
+    no engine can disagree through float rounding. Operands are cast to
+    long first: n_sh is IntegerType and int32 * 100000 overflows (ANSI
+    mode: job-killing exception) for documents beyond ~21k shingles."""
     t5 = _threshold_t5(threshold)
     return (
         postings.select(
@@ -364,7 +313,6 @@ def ngram_jaccard_pairs(
     max_doc_freq: int | None = None,
     sizes: DataFrame | None = None,
     per_doc_sets: DataFrame | None = None,
-    prefix_filter: bool | str = False,
 ) -> DataFrame:
     """Exact word-k-gram Jaccard >= threshold pairs (id1 < id2).
 
@@ -403,178 +351,11 @@ def ngram_jaccard_pairs(
     emitted row-locally -> count per pair. One index-sized exchange
     instead of three; identical pair set.
 
-    ``prefix_filter="df"`` (requires ``max_doc_freq``, no ``candidates``):
-    the frequency-ordered prefix filter under capped-Jaccard semantics —
-    candidates only where RARE shingles collide, verification candidate-
-    volume, result bit-identical to the grouped capped path (rationale
-    and losslessness argument at the branch below). Strategy choice is a
-    measured corpus-shape trade-off (sf10 A/B, 500k docs): the synthetic
-    corpus's ~100-word vocabulary makes 95% of shingle instances df 6-20,
-    so rarest-first prefixes still collide (candidates 113M -> 11.9M, a
-    10x cut) but the two extra corpus-volume exchanges (df attach +
-    per-doc regroup, ~20 s) outweigh the saved pair aggregation: grouped
-    29 s, df-prefix 47 s warm — grouped stays c3's registered config. On
-    a heavy-tailed real corpus the calculus inverts: most shingles are
-    df=1 (generate NO pairs), prefixes starve candidate generation to
-    near-output volume, and the pair aggregation the grouped path must do
-    is the piece that blows up instead.
-
-    ``prefix_filter=True`` (requires ``max_doc_freq``, no ``candidates``):
-    candidates are generated from each document's PREFIX only — its first
-    ``|A| - ceil(t·|A|) + 1`` shingles under the global lexicographic
-    order (:func:`doc_shingles_with_prefix`), lossless by the
-    prefix-filter theorem — then verified EXACTLY by per-document set
-    intersection, so jaccard values are exact (the grouped capped path
-    reports hot-discounted values) and the cap is purely a
-    candidate-recall guard. Trade-off, measured at derived sf1 (50k
-    synthetic docs, t=0.8): the pairing exchange shrinks 2.6M -> 551k
-    index rows, but distinct candidates are still 2.2M because the
-    fixture's ~100-token vocabulary makes shingle co-occurrence dense —
-    and 2.2M array-intersect verifications cost more than
-    count-aggregating the grouped path's 12.7M narrow emitted rows. On
-    that corpus shape the grouped path wins (and is c3's registered
-    configuration); prefix+verify is the right strategy when candidate
-    selectivity is high — Zipfian real-world shingle distributions where
-    co-prefix pairs are rare relative to the corpus (the standard
-    SSJoin/All-Pairs regime).
+    Prefix-filter candidate generation (lexicographic and
+    document-frequency ordered) was retired by measurement: grouped 29 s
+    vs df-prefix 47 s at sf10 (500k docs), and grouped is c3's registered
+    configuration.
     """
-    if prefix_filter == "df":
-        # Frequency-ordered prefix filter (the All-Pairs/PPJoin canonical
-        # ordering): the global shingle order is (document frequency ASC,
-        # shingle), so every document's prefix holds its RAREST shingles
-        # and candidate pairs form only where rare shingles collide.
-        # Motivation, measured at derived sf10 (500k docs, ~52 shingles
-        # each): the grouped path emits 127M candidate pairs of which 113M
-        # are distinct and ~2.5k survive the threshold — co-shingled pairs
-        # share ~1.1 shingles on average, so pair-count aggregation is
-        # 99.998% waste. df-ordering starves candidate generation instead:
-        # a df=1 shingle (the majority of every prefix on a heavy-tailed
-        # corpus) generates NO pairs at all.
-        #
-        # Semantics are identical to the grouped capped path (the c3
-        # oracle): intersections count COOL shingles only (df <= cap),
-        # sizes count every shingle. Losslessness of the prefix w.r.t.
-        # that capped Jaccard: j = m/(n1+n2-m) >= t with n2 >= m gives
-        # m >= t*n1 (and symmetrically m >= t*n2), so a qualifying pair
-        # shares alpha_i = ceil(t*n_i) capped shingles; sharing alpha_i
-        # elements under one total order forces the smallest shared
-        # element into BOTH prefixes of length |capped_i| - alpha_i + 1.
-        # The threshold enters as t - 5e-5 because the shipped filter is
-        # round(j, 4) >= t, which admits j down to t - 5e-5; integer
-        # arithmetic on t*100000 - 5 keeps prefix lengths engine-exact.
-        # A document with |capped| < alpha can never qualify -> empty
-        # prefix (greatest(0)), pruned entirely.
-        if candidates is not None or max_doc_freq is None:
-            raise ValueError(
-                "df prefix filter needs max_doc_freq and no candidates"
-            )
-        per_doc = doc_shingles(df, id_col, text_col, k).localCheckpoint(
-            eager=False  # materializes inside the query's own action
-        )
-        full_sizes = per_doc.select(id_col, F.size("hs").alias("n_sh"))
-        idx = per_doc.select(id_col, F.explode("hs").alias("shingle"))
-        cool = (
-            idx.groupBy("shingle")
-            .agg(F.count("*").alias("sdf"))
-            .filter(F.col("sdf") <= max_doc_freq)
-        )
-        # inner join drops hot shingles and attaches each survivor's df;
-        # both sides arrive partitioned by shingle from the aggregation.
-        cidx = idx.join(cool, "shingle")
-        per_doc_capped = cidx.groupBy(id_col).agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("sdf"), F.col("shingle")))
-            ).alias("arr")
-        )
-        t5 = _threshold_t5(threshold)
-        alpha = F.floor(
-            (F.lit(t5) * F.col("n_sh").cast("bigint") + 99999) / 100000
-        ).cast("int")
-        pre = (
-            per_doc_capped.join(full_sizes, id_col)
-            .select(
-                id_col,
-                F.transform("arr", lambda s: s["shingle"]).alias("hs_capped"),
-                F.greatest(
-                    F.size("arr") - alpha + 1, F.lit(0)
-                ).alias("plen"),
-            )
-            .localCheckpoint(eager=False)  # read by postings AND verification fetch
-        )
-        postings = (
-            pre.select(
-                id_col,
-                F.explode(F.slice("hs_capped", 1, F.col("plen"))).alias(
-                    "shingle"
-                ),
-            )
-            .groupBy("shingle")
-            .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-            # occupancy <= sdf <= max_doc_freq by construction; >= 2 keeps
-            # only pair-generating postings
-            .filter(F.size("ids") >= 2)
-        )
-        cand = _posting_pairs(postings).distinct().localCheckpoint(eager=False)
-        # Candidate-volume verification (the array_path discipline):
-        # fetch capped sets for candidate ids only (AQE broadcasts the id
-        # side), intersect row-locally, finalize against FULL sizes.
-        # SHUFFLE_HASH on the pair joins for the usual reason: cand is a
-        # checkpointed RDD whose stats would bait a static broadcast of
-        # the whole pair set.
-        ids = (
-            cand.select(F.col("id1").alias(id_col))
-            .union(cand.select(F.col("id2").alias(id_col)))
-            .distinct()
-        )
-        cand_sets = pre.join(ids, id_col, "left_semi")
-        s1 = cand_sets.select(
-            F.col(id_col).alias("id1"), F.col("hs_capped").alias("hs1")
-        )
-        s2 = cand_sets.select(
-            F.col(id_col).alias("id2"), F.col("hs_capped").alias("hs2")
-        )
-        inter = (
-            cand.join(s1.hint("shuffle_hash"), "id1")
-            .join(s2.hint("shuffle_hash"), "id2")
-            .select(
-                "id1",
-                "id2",
-                F.size(F.array_intersect("hs1", "hs2")).alias("n_inter"),
-            )
-        )
-        return _jaccard_from_inter(inter, full_sizes, id_col, threshold)
-    if prefix_filter:
-        if candidates is not None or max_doc_freq is None:
-            raise ValueError(
-                "prefix_filter needs max_doc_freq and no candidates"
-            )
-        # ONE streaming corpus pass: only the prefix projection is
-        # computed (column pruning drops the full hs array), exploded,
-        # and grouped — nothing corpus-sized is ever materialized.
-        # Verification below re-derives shingle sets for CANDIDATE docs
-        # only (the candidates-without-per_doc_sets path semi-joins the
-        # candidate ids before tokenization), so set compute is
-        # candidate-volume too.
-        per_doc_prefix = doc_shingles_with_prefix(
-            df, id_col, text_col, threshold, k
-        ).select(id_col, "prefix_hs")
-        postings = (
-            per_doc_prefix.select(
-                id_col, F.explode("prefix_hs").alias("shingle")
-            )
-            .groupBy("shingle")
-            .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-            .filter((F.size("ids") >= 2) & (F.size("ids") <= max_doc_freq))
-        )
-        cand = _posting_pairs(postings).distinct().localCheckpoint(eager=False)
-        return ngram_jaccard_pairs(
-            df,
-            id_col,
-            text_col,
-            k=k,
-            threshold=threshold,
-            candidates=cand,
-        )
     array_path = (
         candidates is not None
         and max_doc_freq is None
@@ -721,11 +502,10 @@ def ngram_jaccard_pairs(
         # optimistic guess into a BroadcastExchange of the whole pair set
         # — AQE cannot demote a statically-planned broadcast over a
         # non-shuffle input, so a large candidate set kills the driver
-        # (measured: broadcast OOM at sf10 on the prefix-filter strategy,
-        # candidate volume ~1e8). Both sides of these joins are
-        # candidate-volume by construction, so a shuffle join costs
-        # O(candidates) regardless of corpus size, and at bench SFs the
-        # two extra small exchanges are noise.
+        # (measured: broadcast OOM at sf10, candidate volume ~1e8). Both
+        # sides of these joins are candidate-volume by construction, so a
+        # shuffle join costs O(candidates) regardless of corpus size, and
+        # at bench SFs the two extra small exchanges are noise.
         return (
             candidates.join(s1.hint("shuffle_hash"), "id1")
             .join(s2.hint("shuffle_hash"), "id2")
@@ -1190,182 +970,23 @@ def _sig_chunk(words: list[Column], offset: int, width: int) -> Column:
     return low.bitwiseOR(F.shiftleft(high, lo_bits)).bitwiseAND(mask)
 
 
-def _simhash_hamming(e1, e2, sig_cols: list[str]) -> Column:
-    """Exact Hamming distance between two signature tuples given column
-    accessors ``e1``/``e2`` mapping a signature column name to a Column."""
-    h = F.bit_count(e1(sig_cols[0]).bitwiseXOR(e2(sig_cols[0])))
-    for c in sig_cols[1:]:
-        h = h + F.bit_count(e1(c).bitwiseXOR(e2(c)))
-    return h
-
-
-def _simhash_pairs_combo(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int,
-    bits: int,
-    sig_cols: list[str],
-) -> DataFrame:
-    """Multi-block pigeonhole candidate generation (the Manku/Jain/Sarma
-    WWW'07 simhash-dedup table discipline): split the signature into
-    ``m = max_hamming + 2`` blocks and key each document under every
-    2-block combination — a pair differing in <= max_hamming bits has
-    errors in <= max_hamming blocks, so SOME pair of blocks is clean on
-    both sides and they collide on that combination's key. Compared to
-    the single-chunk pigeonhole (``max_hamming + 1`` chunks, one clean
-    chunk guaranteed), the effective key width DOUBLES (two blocks ≈
-    2·bits/m bits), so spurious collisions fall from ``n²/2^(bits/(h+1))``
-    to ``C(m,2)·n²/2^(2·bits/m)`` — at 128 bits / h=6 that is 18-bit keys
-    (5 M docs: ~3e8 spurious emissions) vs 32-bit keys (~8e4) for 4x the
-    exchange ROWS. The trade only pays once the quadratic emission term
-    dominates (see the strategy-selection note in
-    :func:`simhash_near_dup_pairs` — measured crossover ~5e8 docs; below
-    it the chunk form's spurious pairs are row-local emissions verified
-    before any exchange, and cost less than the extra rows).
-
-    Narrow-exchange discipline (the linedup fingerprint form): the combo
-    exchange ships (id, key) — the key is one xxhash64 of (combo_id,
-    block_i, block_j); a hash collision can only merge buckets, which
-    only ADDS candidates that exact verification removes, never drops a
-    true collision — and the signature words are fetched by id join-back
-    at CANDIDATE volume for verification, instead of riding every
-    bucket-table row. The id-keyed scaled exchange on the signature table
-    is the pin shared by the combo explode and both verify joins (the
-    tf_idf_vectors term-exchange precedent, search.py)."""
-    import itertools
-
-    m = max_hamming + 2
-    if bits // m < 8:
-        raise ValueError(
-            f"combo strategy needs blocks >= 8 bits; bits={bits} over "
-            f"{m} blocks gives {bits // m} — raise bits or lower max_hamming"
-        )
-    base, extra = divmod(bits, m)
-    widths = [base + (1 if i < extra else 0) for i in range(m)]
-    offsets = [sum(widths[:i]) for i in range(m)]
-    words = [F.col(c) for c in sig_cols]
-
-    sig0 = simhash_signatures(df, id_col, text_col, bits=bits)
-    # Pin: the signature aggregation (explode + one conditional sum per
-    # bit over every token — the operator's dominant compute) feeds the
-    # combo explode AND both candidate-volume verify joins; the id-keyed
-    # exchange (or bench-SF checkpoint) makes all three read one
-    # materialization.
-    sig = _pin_or_scale(sig0, id_col, source=df)
-
-    keys = sig.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(ci),
-                        _sig_chunk(words, offsets[i], widths[i]),
-                        _sig_chunk(words, offsets[j], widths[j]),
-                    )
-                    for ci, (i, j) in enumerate(
-                        itertools.combinations(range(m), 2)
-                    )
-                ]
-            )
-        ).alias("key_val"),
-    )
-    # The combo table is the one corpus-volume exchange (C(m,2) rows/doc
-    # x 16 B) — scaled like every corpus-volume exchange. No checkpoint:
-    # it is a cheap projection of the pinned signatures.
-    keys = _scaled_repartition(keys, "key_val", source=df)
-    postings = (
-        keys.groupBy("key_val")
-        .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    # id1 != id2: a doc appears once per combo under DIFFERENT keys, but
-    # an (astronomically unlikely) xxhash64 collision between two of its
-    # own combo keys would put it twice in one bucket — a self-pair the
-    # exact verify could not remove (hamming 0).
-    cand = (
-        _posting_pairs(postings)
-        .filter(F.col("id1") != F.col("id2"))
-        .distinct()
-    )
-
-    s1 = sig.select(
-        F.col(id_col).alias("id1"),
-        *[F.col(c).alias(f"{c}_1") for c in sig_cols],
-    )
-    s2 = sig.select(
-        F.col(id_col).alias("id2"),
-        *[F.col(c).alias(f"{c}_2") for c in sig_cols],
-    )
-    hamming = _simhash_hamming(
-        lambda c: F.col(f"{c}_1"), lambda c: F.col(f"{c}_2"), sig_cols
-    )
-    # SHUFFLE_HASH: candidate volume joined against the corpus-volume
-    # signature table — a statically mis-estimated broadcast of either
-    # side cannot be demoted by AQE (the incremental._verify_cross_pairs
-    # precedent).
-    return (
-        cand.join(s1.hint("shuffle_hash"), "id1")
-        .join(s2.hint("shuffle_hash"), "id2")
-        .select("id1", "id2", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
 def simhash_near_dup_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
     max_hamming: int = 3,
     bits: int = 64,
-    strategy: str | None = None,
 ) -> DataFrame:
     """Pairs with SimHash Hamming distance <= max_hamming.
 
-    Pigeonhole bucketing, two strategies with the IDENTICAL exact pair
-    set (verification is exact bit_count(xor); only candidate generation
-    differs):
-
-    * ``strategy="combo"`` (the scale path): multi-block keys —
-      ``max_hamming + 2`` blocks, an equality join per 2-block
-      combination, signatures fetched at candidate volume
-      (:func:`_simhash_pairs_combo`). Spurious candidates scale as
-      ``C(m,2)·n²/2^(2·bits/m)``.
-    * ``strategy="chunk"``: ``max_hamming + 1`` chunks — a pair within
-      the Hamming budget must agree exactly on >= 1 chunk. Fewer rows
-      per doc (m+1 vs C(m+2,2)) but SINGLE-block keys: spurious
-      candidates ~``n²/2^(bits/(h+1))`` make it the cheaper form only
-      while the corpus is far from the key-width cliff.
-    * default (``None``): chunk — the measured winner through the 50 M
-      tier (round-12 same-sitting A/B at 5 M: chunk 103.2 s vs combo
-      185.1 s; BASELINE.md). The md5 + per-bit signature aggregation
-      dominates both forms there, and combo's C(m,2) rows/doc exchange
-      costs more than the chunk form's spurious EMISSIONS, which are
-      row-local and verified before any exchange. The crossover is where
-      ``n²·(h+1)/2^(bits/(h+1))`` emissions outgrow ``~C(m,2)·n`` extra
-      exchange rows — ~5e8 docs at 128 bits / h=6 — so pass
-      ``strategy="combo"`` explicitly for corpora beyond ~1e8 documents
-      (at 100 TB the 18-bit chunk buckets hold ~4e5 occupants each and
-      the quadratic emission is infeasible; the combo form is the only
-      viable shape there).
-
-    (A fixed chunk count would silently miss pairs once max_hamming >=
-    n_chunks.) Verification = bit_count(xor) per word — exact, no false
-    positives.
-
-    ``bits`` remains a scale knob at either strategy: doubling the
-    signature widens every key.
+    Pigeonhole bucketing: ``max_hamming + 1`` chunks — a pair within the
+    Hamming budget must agree exactly on >= 1 chunk (a fixed chunk count
+    would silently miss pairs once max_hamming >= n_chunks). Verification
+    = bit_count(xor) per word — exact, no false positives. ``bits`` is the
+    scale knob: doubling the signature widens every chunk key. The
+    multi-block "combo" candidate form was retired by measurement (5 M
+    docs: chunk 103.2 s vs combo 185.1 s, round-12 A/B in VERDICT.md).
     """
-    if strategy is None:
-        strategy = "chunk"
-    if strategy == "combo":
-        sig_cols = ["simhash"] + (["simhash_hi"] if bits == 128 else [])
-        return _simhash_pairs_combo(
-            df, id_col, text_col, max_hamming, bits, sig_cols
-        )
-    if strategy != "chunk":
-        raise ValueError(f"unknown simhash strategy: {strategy!r}")
     n_chunks = max_hamming + 1
     base, extra = divmod(bits, n_chunks)
     widths = [base + (1 if i < extra else 0) for i in range(n_chunks)]

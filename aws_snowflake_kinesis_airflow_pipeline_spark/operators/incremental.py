@@ -42,6 +42,9 @@ online dedup.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -140,14 +143,29 @@ def write_minhash_index(
         )
 
     if mode == "overwrite":
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            for fut in [pool.submit(_write_sets), pool.submit(_write_buckets)]:
-                fut.result()
+        _run_concurrently(df.sparkSession, _write_sets, _write_buckets)
     else:
         _write_sets()
         _write_buckets()
+
+
+def _run_concurrently(spark: SparkSession, *writes) -> None:
+    """Run independent store writes on their own threads and wait for all
+    of them; the first failed write re-raises here. Each target is
+    wrapped with ``pyspark.inheritable_thread_target`` in the caller's
+    thread, so the caller's job group, description, tags and
+    cancellation reach the writes' jobs (a py4j thread otherwise starts
+    with no local properties). Each target gets its own wrapper: one
+    wrapper hands every thread it wraps the SAME properties object, and
+    concurrent SQL executions would then overwrite each other's
+    execution id in it."""
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(w)) for w in writes
+        ]
+    for exc in [fut.exception() for fut in futures]:
+        if exc is not None:
+            raise exc
 
 
 def append_to_index(
@@ -224,7 +242,6 @@ def _cross_candidates(
     new_buckets: DataFrame,
     index_path: str,
     id_col: str,
-    broadcast_batch: bool,
 ) -> DataFrame:
     """(new_id, old_id) distinct band collisions between the batch's
     bucket triple and the persisted store. The batch side broadcasts, so
@@ -232,11 +249,9 @@ def _cross_candidates(
     scan — the corpus is read, never exchanged (pinned in
     tests/test_incremental.py on this un-checkpointed plan)."""
     corpus_buckets = spark.read.parquet(f"{index_path}/buckets")
-    probe_side = new_buckets.select(
-        F.col(id_col).alias("new_id"), "band_id", "band_hash"
+    probe_side = F.broadcast(
+        new_buckets.select(F.col(id_col).alias("new_id"), "band_id", "band_hash")
     )
-    if broadcast_batch:
-        probe_side = F.broadcast(probe_side)
     return (
         corpus_buckets.select(
             F.col(id_col).alias("old_id"), "band_id", "band_hash"
@@ -257,7 +272,6 @@ def incremental_near_dup_pairs(
     bands: int = 16,
     k: int = 3,
     threshold: float = 0.8,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """Near-dup pairs between a new batch and (persisted corpus ∪ itself).
 
@@ -266,11 +280,6 @@ def incremental_near_dup_pairs(
     Batch docs re-submitted with an id already in the index match
     themselves at Jaccard 1.0 (``vs='corpus'``) — the signal
     :func:`incremental_dedup_insert` uses for idempotent re-ingest.
-
-    ``broadcast_batch``: broadcast the batch's bucket triple into the
-    corpus-bucket probe join (the designed shape — corpus scanned, never
-    shuffled). Disable only for a batch too large to broadcast, which
-    degrades to a shuffle join on (band_id, band_hash).
     """
     # Batch-sized artifacts, each read by 2+ downstream joins. All pins
     # here are LAZY local checkpoints (round-12): blocks still build
@@ -290,7 +299,7 @@ def incremental_near_dup_pairs(
 
     # --- batch vs corpus: probe the persisted bucket store -------------
     cross_cand = _cross_candidates(
-        spark, new_buckets, index_path, id_col, broadcast_batch
+        spark, new_buckets, index_path, id_col
     ).localCheckpoint(eager=False)  # candidate-volume; read by bucket collect + verify
 
     # Fetch ONLY candidate corpus docs' sets: directory pruning via the
@@ -353,7 +362,6 @@ def incremental_dedup_insert(
     bands: int = 16,
     k: int = 3,
     threshold: float = 0.8,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """Surviving rows of a new batch under the greedy incremental policy:
     drop batch docs that near-duplicate any indexed doc (including exact
@@ -372,7 +380,6 @@ def incremental_dedup_insert(
         bands,
         k,
         threshold,
-        broadcast_batch,
     )
     return _greedy_insert(new_df, pairs, id_col)
 
@@ -506,11 +513,7 @@ def write_embedding_index(
         # is a rebuild. Appends stay sequential — interleaved appends
         # would let a crash publish bucket rows with no matching vector
         # rows in a LIVE store, which the sequential order bounds.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            for fut in [pool.submit(_write_buckets), pool.submit(_write_vectors)]:
-                fut.result()
+        _run_concurrently(spark, _write_buckets, _write_vectors)
     else:
         _write_buckets()
         _write_vectors()
@@ -590,7 +593,6 @@ def incremental_embedding_near_dups(
     vec_col: str,
     index_path: str,
     threshold: float = 0.9,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """Cosine near-dup pairs between a new vector batch and (persisted
     corpus ∪ itself) — (id1, id2, cosine, vs) with id1 < id2, ``vs`` as in
@@ -618,11 +620,9 @@ def incremental_embedding_near_dups(
 
     # Batch vs corpus: probe the store, batch side broadcast.
     corpus_buckets = spark.read.parquet(f"{index_path}/buckets")
-    probe_side = new_buckets.select(
-        F.col(id_col).alias("new_id"), "table_id", "bucket"
+    probe_side = F.broadcast(
+        new_buckets.select(F.col(id_col).alias("new_id"), "table_id", "bucket")
     )
-    if broadcast_batch:
-        probe_side = F.broadcast(probe_side)
     cross_cand = (
         corpus_buckets.select(
             F.col(id_col).alias("old_id"), "table_id", "bucket"
@@ -701,13 +701,12 @@ def incremental_embedding_insert(
     vec_col: str,
     index_path: str,
     threshold: float = 0.9,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """Greedy-insert survivors of a vector batch (policy of
     :func:`incremental_dedup_insert`, pair source =
     :func:`incremental_embedding_near_dups`)."""
     pairs = incremental_embedding_near_dups(
-        spark, new_df, id_col, vec_col, index_path, threshold, broadcast_batch
+        spark, new_df, id_col, vec_col, index_path, threshold
     )
     return _greedy_insert(new_df, pairs, id_col)
 

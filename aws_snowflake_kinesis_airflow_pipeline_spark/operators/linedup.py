@@ -9,40 +9,37 @@ The fix is frequency-based: a line whose DOCUMENT frequency exceeds a
 threshold is boilerplate and is removed from every document; each
 document's remaining lines are reassembled in their original order.
 
-Scale shape — exactly two corpus-volume equality exchanges, the same
-budget as exact dedup:
+Scale shape — line bodies never enter an exchange:
 
-1. line df: ONE exchange keyed by line text serves both the per-document
-   distinct (hash on {line} clusters equal (doc, line) pairs — subset-key
-   rule) and the groupBy(line) count above it;
-2. mark: lines left-outer-join the hot-line set on line text and carry a
-   boolean flag (the hot set is small by construction at sane thresholds,
-   so the planner/AQE broadcasts it; its size is data-dependent, so no
-   broadcast is forced);
-3. reassemble: ONE exchange keyed by document id computes the rebuilt
-   text, total line count, and kept line count in a single aggregation —
-   collect_list skips the NULL structs the hot flag produces, so no
-   second per-document pass and no re-join exists.
+1. line df: row-local split + posexplode projected to (id, pos, fp0,
+   fp1) — two seeded xxhash64s of the line, 28 bytes/row; ONE scaled
+   fingerprint-keyed exchange serves both the per-document distinct
+   (subset-key rule) and the df count above it;
+2. hot occurrences: the hot fingerprint set (small, aggregate-bounded;
+   AQE broadcasts it from actual size) inner-joins the narrow
+   projection, and hot occurrences group to one (id, sorted position
+   list) row per affected document;
+3. rebuild: the original scan joins those position lists on one
+   id-keyed scaled exchange — the operator's one text-volume exchange —
+   and rebuilds clean_text row-locally with filter-by-index +
+   array_join.
 
-No step is ever pair-quadratic and no driver-side collection exists at any
-size. ``fingerprint_lines=True`` (round-11, the registered scale
-configuration for c26) is the 100 TB form: the df pass shuffles 16-byte
-line fingerprints instead of bodies, hot occurrences reduce to per-doc
-position lists, and the text moves through exactly ONE exchange before a
-row-local rebuild — measured 7.0 → 3.8 s at 5 M docs and 241.4 → 79.8 s
-at 50 M (same sitting). The byte-for-byte oracle is unchanged (output
-identical up to 128-bit collisions); the text form below remains the
-default for body-auditable plans and is property-pinned row-identical.
+No step is ever pair-quadratic and no driver-side collection exists at
+any size. Output is identical to a text-keyed plan up to 128-bit
+fingerprint collisions (below hardware-error probability). The text-keyed
+form was retired by measurement: 7.0 → 3.8 s at 5 M docs and 241.4 →
+79.8 s at 50 M (BASELINE.md, round-11 line-dedup fingerprint A/B).
 
-Residual skew note: when the auto-sizing guard fires, the line-keyed
-exchange routes ALL occurrences of one viral line to a single partition
-(the explicit repartition sits below the distinct, so map-side partial
-dedup no longer thins them first). The reducer's STATE stays small (the
-dedup map holds one entry per document carrying the line), so this is a
-CPU straggler bounded by that line's occurrence count, not an OOM — and
-the alternative (keeping the distinct's own (id, line)-keyed exchange)
-needs a second scaled corpus exchange for the groupBy(line), doubling
-shuffle volume to dodge a bounded straggler. Deliberately not taken.
+Residual skew note: when the auto-sizing guard fires, the
+fingerprint-keyed exchange routes ALL occurrences of one viral line to a
+single partition (the explicit repartition sits below the distinct, so
+map-side partial dedup no longer thins them first). The reducer's STATE
+stays small (the dedup map holds one entry per document carrying the
+line), so this is a CPU straggler bounded by that line's occurrence
+count, not an OOM — and the alternative (keeping the distinct's own
+(id, fp)-keyed exchange) needs a second scaled corpus exchange for the
+df count, doubling shuffle volume to dodge a bounded straggler.
+Deliberately not taken.
 """
 
 from __future__ import annotations
@@ -61,8 +58,6 @@ def drop_duplicate_lines(
     text_col: str = "text",
     max_line_df: int = 3,
     line_sep: str = "\n",
-    hot_join_salts: int = 0,
-    fingerprint_lines: bool = False,
 ) -> DataFrame:
     """Remove every line whose document frequency exceeds ``max_line_df``.
 
@@ -72,35 +67,7 @@ def drop_duplicate_lines(
     line count, and the kept line count. A line's document frequency
     counts each document once however often the line repeats inside it.
     Documents with no text produce ``clean_text = ''``.
-
-    ``hot_join_salts``: the marking join keys corpus line volume by line
-    TEXT, and a viral boilerplate line is by definition a hot key. The
-    default path relies on the hot set broadcasting (it is small at sane
-    thresholds, and AQE converts to broadcast at runtime from actual
-    size); AQE's skew SPLIT cannot reach this join — the hot set is an
-    aggregate, which breaks the rule's sort-over-shuffle pattern match
-    (pinned in tests/test_skew.py). If the hot set ever outgrows
-    broadcast, pass ``hot_join_salts`` > 0 to shard each hot key across
-    that many partitions via ``skew.salted_left_mark_join`` —
-    row-identical output, pinned by test.
-
-    ``fingerprint_lines=True`` — the module docstring's 100 TB form made
-    real (round-11): the df pass shuffles 16-byte line fingerprints
-    (two seeded xxhash64s) instead of line bodies, hot occurrences
-    reduce to per-document POSITION lists (small: a doc's boilerplate
-    count), and the document text itself moves through exactly ONE
-    exchange (the position join-back) before a row-local rebuild —
-    split → filter-by-index → array_join — replaces the collect_list
-    reassembly of line structs entirely. Row-identical to the default
-    path up to 128-bit fingerprint collisions (below hardware-error
-    probability; property-pinned in tests). ``hot_join_salts`` does not
-    apply here: the hot side is a fingerprint set that AQE broadcasts
-    from actual size, and a broadcast join has no skewable exchange.
     """
-    if fingerprint_lines:
-        return _drop_duplicate_lines_fp(
-            df, id_col, text_col, max_line_df, line_sep
-        )
     # coalesce: split(NULL) is NULL and posexplode of NULL emits no rows,
     # which would drop NULL-text documents from the output entirely —
     # the contract is one row per input document, clean_text = ''.
@@ -109,99 +76,6 @@ def drop_duplicate_lines(
     # (e.g. '|' = empty alternation) would split at every character and
     # reassemble garbage. Python's re.escape emits backslash-punctuation
     # escapes Java regex accepts.
-    lines = df.select(
-        F.col(id_col),
-        F.posexplode(
-            F.split(
-                F.coalesce(F.col(text_col), F.lit("")),
-                F.lit(re.escape(line_sep)),
-                -1,
-            )
-        ).alias("pos", "line"),
-    )
-    # Auto-size the two corpus-text-volume exchanges (the line-df pass and
-    # the reassembly below) to the input — spread.scaled_repartition is a
-    # no-op at bench SFs and sizes the final-aggregation partition count
-    # to the data at 100x+ (the 5 M-doc decade's lesson). The exchange is
-    # keyed on 'line' ALONE: {line} is a subset of the distinct's keys
-    # {id, line} (equal pairs imply equal line → same partition) and
-    # equals the groupBy's key, so ONE scaled exchange serves both
-    # aggregations; keyed on (id, line) the groupBy(line) would insert a
-    # second, session-default-sized exchange whose per-partition hash map
-    # holds one full line text per distinct line — the very OOM shape the
-    # guard exists to remove. Hot-line concentration under the line-only
-    # key: when the scaled exchange fires it sits BELOW the distinct, so
-    # no map-side partial dedup runs first and EVERY occurrence of a
-    # viral line (including in-doc repeats) hashes to that key's
-    # partition. The straggler stays bounded because the scaled partition
-    # count grows with the corpus while the hot partition's rows grow
-    # with that one line's occurrence count; past that,
-    # hot_join_salts handles the join-side skew.
-    hot = (
-        _scaled_repartition(lines.select(id_col, "line"), "line", source=df)
-        .distinct()
-        .groupBy("line")
-        .agg(F.count("*").alias("line_df"))
-        .filter(F.col("line_df") > max_line_df)
-        .select("line")
-    )
-    # Mark instead of filter: a left-outer join with a boolean flag lets
-    # the single aggregation below compute total AND kept counts from one
-    # pass, where an anti-join would force a second per-document exchange
-    # (totals) plus a re-join to resurrect all-boilerplate documents.
-    if hot_join_salts > 0:
-        from .skew import salted_left_mark_join
-
-        flagged = salted_left_mark_join(lines, hot, "line", hot_join_salts)
-    else:
-        flagged = lines.join(
-            hot.withColumn("_hot", F.lit(True)), "line", "left"
-        ).withColumn("_hot", F.coalesce("_hot", F.lit(False)))
-    keep = ~F.col("_hot")
-    # collect_list drops the NULLs the un-kept rows' WHEN produces, so the
-    # rebuilt array holds exactly the kept lines; an all-boilerplate (or
-    # empty) document yields an empty array → array_join = ''.
-    return (
-        _scaled_repartition(flagged, id_col, source=df)
-        .groupBy(id_col)
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.when(keep, F.struct("pos", "line")))
-                    ),
-                    lambda s: s["line"],
-                ),
-                line_sep,
-            ).alias("clean_text"),
-            F.count("*").alias("n_lines"),
-            F.count(F.when(keep, F.lit(1))).alias("n_kept"),
-        )
-    )
-
-
-def _drop_duplicate_lines_fp(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_line_df: int,
-    line_sep: str,
-) -> DataFrame:
-    """Fingerprint form of :func:`drop_duplicate_lines` (see its
-    ``fingerprint_lines`` doc): line bodies never enter any exchange.
-
-    Plan: (1) row-local split + posexplode projected to (id, pos, fp0,
-    fp1) — 28 bytes/row; (2) one scaled fingerprint-keyed exchange
-    serves the per-document distinct AND the df count (subset-key rule,
-    the text path's shape at 1/50th the bytes); (3) hot fingerprints
-    (small) broadcast-join the narrow projection, hot OCCURRENCES group
-    to one (id, sorted pos list) row per affected document; (4) the
-    original scan joins those position lists on one id-keyed scaled
-    exchange and rebuilds clean_text row-locally with
-    filter-by-index + array_join. Exchange budget: one narrow
-    fingerprint exchange + one small position-list exchange + one text
-    exchange — the text path pays TWO text-volume exchanges.
-    """
     sep = F.lit(re.escape(line_sep))
     arr_of = lambda c: F.split(  # noqa: E731 — local plan fragment
         F.coalesce(c, F.lit("")), sep, -1

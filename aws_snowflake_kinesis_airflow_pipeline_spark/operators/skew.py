@@ -141,44 +141,3 @@ def salted_left_anti_join(
     out = salted_left.join(replicated_right, [key, "_salt"], "left_anti")
     return out.drop("_salt")
 
-
-def salted_left_mark_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    n_salts: int = 8,
-    mark_col: str = "_hot",
-) -> DataFrame:
-    """Left rows + a boolean ``mark_col`` = "key exists in right",
-    resilient to left-side key skew.
-
-    The membership-FLAG form of :func:`salted_left_anti_join`, for callers
-    that need both matched and unmatched rows downstream (e.g. linedup's
-    single-pass reassembly, which counts total and kept lines in one
-    aggregation). Same construction: deterministic row-salt on the left,
-    right replicated once per salt, LEFT OUTER join on (key, salt). The
-    right side is deduplicated on ``key`` before replication — a
-    duplicate right key would otherwise duplicate left rows and corrupt
-    downstream counts, and the right side is tiny by contract (a
-    groupBy-derived hot set) so the dropDuplicates costs nothing. Each
-    left row therefore matches at most one replicated row — row-for-row
-    identical to a plain left join + IS NOT NULL flag.
-
-    Exists for the same AQE blind spot documented on
-    :func:`salted_left_anti_join`: the skew-split rule cannot reach a join
-    whose right child is an aggregate.
-    """
-    _require_salts(n_salts)
-    salted_left = left.withColumn(
-        "_salt", F.pmod(F.monotonically_increasing_id(), F.lit(n_salts))
-    )
-    salts = F.explode(
-        F.array(*[F.lit(i).cast("long") for i in range(n_salts)])
-    ).alias("_salt")
-    replicated_right = right.select(key).dropDuplicates([key]).select(
-        F.col(key), salts, F.lit(True).alias(mark_col)
-    )
-    out = salted_left.join(replicated_right, [key, "_salt"], "left")
-    return out.drop("_salt").withColumn(
-        mark_col, F.coalesce(mark_col, F.lit(False))
-    )

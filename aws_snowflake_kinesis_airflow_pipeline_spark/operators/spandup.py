@@ -22,13 +22,11 @@ Contract (deterministic, replayed in pure Python by tests/test_spandup.py):
 * A document position ``p`` is *duplicated* when the corpus contains the
   identical ``window``-token run at some other (doc, pos) — equality by
   64-bit rolling hash of the per-token xxhash64 sequence, passed through
-  a SplitMix64 finalizer by default (the raw rolling hash is linear in
-  the per-token hashes, so token sequences whose hash differences cancel
-  collide deterministically; the finalizer destroys that structure, and
-  the sf10 A/B measured it at <= 0% cost — ``finalize=False`` opts back
-  into the raw hash for replaying pre-round-8 runs; collision odds are
-  then ~n^2/2^64 for NON-ADVERSARIAL input only, and a collision removes
-  a non-duplicated span, never corrupts surviving text).
+  a SplitMix64 finalizer (the raw rolling hash is linear in the per-token
+  hashes, so token sequences whose hash differences cancel collide
+  deterministically; the finalizer destroys that structure, and the sf10
+  A/B measured it at <= 0% cost; a collision removes a non-duplicated
+  span, never corrupts surviving text).
 * The canonical occurrence of each distinct run — min (doc_id, pos) — is
   NOT removed. All other occurrences' windows are removed: per document,
   overlapping removed windows ``[p, p+window)`` merge into maximal spans,
@@ -78,6 +76,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
+from .dedup import _splitmix64
 from .spread import scaled_repartition as _scaled_repartition
 
 #: Rolling-hash base: odd (invertible mod 2^64), large, fixed — part of
@@ -95,40 +94,23 @@ def _inv_u64(b: np.uint64) -> np.uint64:
     return x
 
 
-def _splitmix64_finalize(z: np.ndarray) -> np.ndarray:
-    """SplitMix64 finalizer (public-domain constants): full-avalanche
-    64-bit mix. Equal inputs stay equal (it is a bijection), so applying
-    it to the window hashes changes nothing about which windows collide
-    BY CONSTRUCTION — only about which collide by accident."""
-    z = z ^ (z >> np.uint64(30))
-    z = z * np.uint64(0xBF58476D1CE4E5B9)
-    z = z ^ (z >> np.uint64(27))
-    z = z * np.uint64(0x94D049BB133111EB)
-    return z ^ (z >> np.uint64(31))
-
-
 def window_fingerprints(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     window: int = 50,
-    finalize: bool = True,
 ) -> DataFrame:
     """(id, pos, whash): the 64-bit rolling hash of each ``window``-token
     run. Documents with fewer than ``window`` tokens emit no rows.
 
-    ``finalize=True`` passes each window hash through a SplitMix64
-    finalizer before it leaves the kernel: the rolling hash is LINEAR in
-    the per-token hashes (see the module collision caveat), so an
-    adversary who controls the text can craft distinct runs whose hashes
-    cancel to equality; the finalizer is a bijection (identical runs
-    still collide, the operator's results on non-adversarial data are
-    the same distribution) but destroys the linear structure an attack
-    needs. ON by default since round 8: the design domain is web text —
-    the adversarial case — and the A/B at sf10 (500k docs, 4 interleaved
-    runs) measured the finalizer at <= 0% cost (14.2-15.1 s vs
-    17.8-22.4 s; the extra mix is free inside the memory-bound kernel).
-    ``finalize=False`` keeps the raw linear hash for replaying old runs."""
+    Each window hash passes through a SplitMix64 finalizer before it
+    leaves the kernel: the rolling hash is LINEAR in the per-token hashes
+    (see the module collision caveat), so an adversary who controls the
+    text can craft distinct runs whose hashes cancel to equality; the
+    finalizer is a bijection (identical runs still collide) but destroys
+    the linear structure an attack needs. The A/B at sf10 (500k docs, 4
+    interleaved runs) measured it at <= 0% cost (14.2-15.1 s vs
+    17.8-22.4 s; the extra mix is free inside the memory-bound kernel)."""
     if window < 2:
         raise ValueError("window_fingerprints: window must be >= 2")
     toks = tokens(F.coalesce(F.col(text_col), F.lit("")))
@@ -191,8 +173,7 @@ def window_fingerprints(
                             out=inv_pows[1:],
                         )
                     flat[out_off[i] : out_off[i + 1]] = diff * inv_pows
-                if finalize:
-                    flat = _splitmix64_finalize(flat)
+                flat = _splitmix64(flat)
                 pos_flat = np.concatenate(
                     [np.arange(c, dtype=np.int32) for c in n_win if c > 0]
                 ) if total else np.empty(0, dtype=np.int32)
@@ -221,13 +202,12 @@ def duplicate_spans(
     text_col: str = "text",
     window: int = 50,
     max_df: int = 1000,
-    finalize: bool = True,
 ) -> DataFrame:
     """(id, spans array<struct<start int, end int>>): per document, the
     merged maximal token spans covered by duplicated windows, excluding
     each distinct run's canonical (min (doc_id, pos)) occurrence. Only
     documents with at least one removed span appear."""
-    fp = window_fingerprints(docs, id_col, text_col, window, finalize)
+    fp = window_fingerprints(docs, id_col, text_col, window)
     # ONE corpus-volume exchange: df count + canonical arg-min in the same
     # grouped pass; only duplicated runs (boilerplate-volume) survive.
     # Auto-size the whash exchange to the corpus (spread.py): its final-
@@ -307,14 +287,11 @@ def remove_duplicate_spans(
     text_col: str = "text",
     window: int = 50,
     max_df: int = 1000,
-    finalize: bool = True,
 ) -> DataFrame:
     """One row per input document: (id, clean_text, n_tokens,
     n_removed_tokens, n_spans) with every non-canonical duplicated run
-    removed and the kept tokens re-joined with single spaces.
-    ``finalize``: harden the window hash against adversarially crafted
-    collisions (see window_fingerprints)."""
-    spans = duplicate_spans(docs, id_col, text_col, window, max_df, finalize)
+    removed and the kept tokens re-joined with single spaces."""
+    spans = duplicate_spans(docs, id_col, text_col, window, max_df)
     toks = tokens(F.coalesce(F.col(text_col), F.lit("")))
     base = docs.select(F.col(id_col), toks.alias("_t"))
     joined = base.join(spans, id_col, "left")

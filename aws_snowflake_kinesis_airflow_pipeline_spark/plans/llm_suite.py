@@ -2396,9 +2396,10 @@ def c26_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rolling-hash semantics by exact run STRING (equal windows hash
     equal by construction; the engine's 64-bit hash only diverges on a
     ~n^2/2^64 collision, which the fixture vocabulary cannot produce).
-    Each branch keeps the engine's corpus-volume budget: two equality
-    exchanges for lines, one grouped fingerprint exchange + boilerplate-
-    volume join-back for spans — no pair blowup anywhere."""
+    Each branch keeps the engine's corpus-volume budget: one narrow
+    fingerprint exchange + one text join-back for lines, one grouped
+    fingerprint exchange + boilerplate-volume join-back for spans — no
+    pair blowup anywhere."""
     from ..operators.linedup import drop_duplicate_lines
     from ..operators.spandup import remove_duplicate_spans
 
@@ -2418,12 +2419,6 @@ def c26_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     line_planted = spark.createDataFrame(
         _LINEDUP_PLANTED, "doc_id long, text string"
     ).repartition(1)  # tiny local frame: see the c15 needle note
-    # fingerprint_lines: the round-11 registered scale configuration —
-    # the df pass shuffles 16-byte line fingerprints instead of bodies
-    # and the text moves through exactly ONE exchange (50 M docs: 241.4 s
-    # text form vs 79.8 s fingerprint form, same sitting — BASELINE.md).
-    # Byte-identical output, so the byte-for-byte oracle is unchanged;
-    # the text form stays property-pinned row-identical in the fuzz suite.
     line_base = docs.unionByName(line_planted)
     if _pin_base:
         line_base = line_base.localCheckpoint(eager=False)
@@ -2433,7 +2428,6 @@ def c26_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         max_line_df=3,
         line_sep="\n",
-        fingerprint_lines=True,
     ).select(
         F.lit("line").alias("branch"),
         "doc_id",

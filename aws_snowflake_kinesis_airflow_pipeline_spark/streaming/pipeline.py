@@ -41,9 +41,11 @@ from pyspark.sql import types as T
 from ..operators.relational import (
     REQUIRED_EVENT_COLS,
     daily_event_summary,
+    duplicate_event_ids,
     insert_dedup_anti_join,
 )
 from ..sources.json_landing import PARTITION_COLS, read_landing_stream
+from ..sources.storage import table_absent
 
 #: The events table as ``process_batch`` appends it: the landing columns
 #: without ``_corrupt_record`` and the ``file_name`` lineage column,
@@ -108,24 +110,16 @@ class IngestPipeline:
 
     # -- table handles ----------------------------------------------------
 
-    @staticmethod
-    def _is_path_missing(exc: Exception) -> bool:
-        """True only for 'table effectively absent' — delegates to the
-        shared sources/storage.py marker set. Anything else must
-        propagate: swallowing it would hand the anti-join an empty dedup
-        target and re-insert the whole batch as duplicates."""
-        from ..sources.storage import table_absent
-
-        return table_absent(exc)
-
     def _read_events_table(self) -> DataFrame | None:
         """The events table, or None before the first insert. A torn first
         write (a directory with no data files) reads as an empty table
-        under the declared schema, so it cannot wedge ingestion."""
+        under the declared schema, so it cannot wedge ingestion. Any other
+        read failure propagates: swallowing it would hand the anti-join an
+        empty dedup target and re-insert the whole batch as duplicates."""
         try:
             return self.events_table()
         except Exception as exc:
-            if self._is_path_missing(exc):
+            if table_absent(exc):
                 return None
             raise
 
@@ -270,17 +264,13 @@ class IngestPipeline:
             events = self._read_events_table()
             n_dup = 0
             if events is not None and affected_dates:
-                n_dup = (
-                    # filter on the PARTITION column (event_date), not
-                    # to_date(ts): Catalyst can't derive the partition from
-                    # an expression over a data column, so the ts form would
-                    # scan the whole table and the pruning claim were false
+                # filter on the PARTITION column (event_date), not
+                # to_date(ts): Catalyst can't derive the partition from an
+                # expression over a data column, so the ts form would scan
+                # the whole table and the pruning claim were false
+                n_dup = duplicate_event_ids(
                     events.filter(F.col("event_date").isin(affected_dates))
-                    .groupBy("event_id")
-                    .agg(F.count("*").alias("n"))
-                    .filter(F.col("n") > 1)
-                    .count()
-                )
+                ).count()
                 if self.fail_on_dq and n_dup > 0:
                     raise ValueError(
                         f"DQ gate: {n_dup} duplicate event_ids in events table"
@@ -328,7 +318,7 @@ class IngestPipeline:
             # Only "summary doesn't exist yet" may fall back to new_part —
             # any other failure would overwrite the summary with just this
             # batch's dates, silently deleting every untouched date's rows.
-            if not self._is_path_missing(exc):
+            if not table_absent(exc):
                 raise
             out = new_part
         # Write-temp-and-swap instead of in-place overwrite: the plan reads

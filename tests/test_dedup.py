@@ -341,38 +341,42 @@ def test_simhash_128_exact_recall_and_low_word_identity(spark):
 
 
 def test_simhash_strategies_emit_identical_pairs(spark):
-    """combo and chunk candidate generation must produce the IDENTICAL
-    exact pair set (verification is exact; only the pigeonhole differs) —
-    on a richer corpus than make_docs so multi-block agreement patterns
-    actually vary. Also pins the invalid-combo guard."""
-    import pytest as _pytest
+    """Pigeonhole chunk candidates and an exhaustive all-pairs scan must
+    produce the IDENTICAL exact pair set (verification is exact; only the
+    candidate generation differs) — on a richer corpus than make_docs so
+    chunk agreement patterns actually vary, at both signature widths.
+    Exact copies agree on every chunk yet come out once, at hamming 0."""
+    import itertools
 
     rows = [(i, f"w{i % 7} common tokens here x{i} y{i % 3}") for i in range(40)]
     rows += [(100, rows[0][1]), (101, rows[1][1])]  # exact dups
     docs = spark.createDataFrame(rows, "doc_id long, text string")
+    mask = 2**64 - 1
     for mh, bits in ((3, 64), (6, 128)):
-        combo = {
-            (r["id1"], r["id2"], r["hamming"])
-            for r in dedup.simhash_near_dup_pairs(
-                docs, "doc_id", "text", mh, bits, strategy="combo"
+        sig = {
+            r["doc_id"]: (
+                r["simhash"] & mask,
+                (r["simhash_hi"] & mask) if bits == 128 else 0,
+            )
+            for r in dedup.simhash_signatures(
+                docs, "doc_id", "text", bits=bits
             ).collect()
         }
-        chunk = {
+        brute = {
+            (i, j, bin(sig[i][0] ^ sig[j][0]).count("1")
+             + bin(sig[i][1] ^ sig[j][1]).count("1"))
+            for i, j in itertools.combinations(sorted(sig), 2)
+        }
+        brute = {p for p in brute if p[2] <= mh}
+        got = [
             (r["id1"], r["id2"], r["hamming"])
             for r in dedup.simhash_near_dup_pairs(
-                docs, "doc_id", "text", mh, bits, strategy="chunk"
+                docs, "doc_id", "text", mh, bits
             ).collect()
-        }
-        assert combo == chunk, (mh, bits)
-        assert (0, 100, 0) in combo and (1, 101, 0) in combo
-    with _pytest.raises(ValueError, match="blocks >= 8 bits"):
-        dedup.simhash_near_dup_pairs(
-            docs, "doc_id", "text", 20, 64, strategy="combo"
-        )
-    with _pytest.raises(ValueError, match="unknown simhash strategy"):
-        dedup.simhash_near_dup_pairs(
-            docs, "doc_id", "text", strategy="banded"
-        )
+        ]
+        assert len(got) == len(set(got)), (mh, bits)
+        assert set(got) == brute, (mh, bits)
+        assert (0, 100, 0) in got and (1, 101, 0) in got, (mh, bits)
 
 
 def test_embedding_near_dups_planted(spark):
@@ -394,141 +398,57 @@ def test_embedding_near_dups_planted(spark):
     assert not any(3 in p for p in pairs)
 
 
-def test_prefix_filter_matches_exact_jaccard(spark, sf_dir):
-    """The prefix-filter strategy (row-local lexicographic prefix ->
-    capped posting emission -> exact set verification) is LOSSLESS: with
-    a cap no shingle reaches, its pair set and jaccard values equal the
-    uncapped exact join form — the prefix-filter theorem (a pair at
-    J >= t shares >= ceil(t*|A|) shingles, so both prefixes of length
-    |A| - ceil(t*|A|) + 1 contain the smallest common one) checked
-    end-to-end, fixture + randomized word soup."""
+def test_grouped_capped_path_matches_capped_join_form_on_skewed_corpora(
+    spark, sf_dir
+):
+    """Both grouped capped emissions — size-carrying postings with the
+    length filter (built from text) and plain postings (prebuilt index) —
+    must be BIT-IDENTICAL to the join form over the cap-filtered index:
+    same capped-Jaccard semantics (intersections over cool shingles, full
+    sizes). Fixture + a heavy-tailed corpus (many df=1 shingles) + a
+    boilerplate corpus where the cap actually bites."""
     import random
 
     from aws_snowflake_kinesis_airflow_pipeline_spark.catalog import load_table
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    for t in (0.8, 0.5):
-        exact = {
-            (r["id1"], r["id2"], r["jaccard"])
-            for r in dedup.ngram_jaccard_pairs(
-                docs, "doc_id", "text", threshold=t
-            ).collect()
-        }
-        pref = {
-            (r["id1"], r["id2"], r["jaccard"])
-            for r in dedup.ngram_jaccard_pairs(
-                docs,
-                "doc_id",
-                "text",
-                threshold=t,
-                max_doc_freq=10_000,
-                prefix_filter=True,
-            ).collect()
-        }
-        assert pref == exact
-    assert exact  # non-vacuous at t=0.5 on the fixture
+    def rows_of(out):
+        return sorted(tuple(r) for r in out.collect())
 
-    rng = random.Random(11)
-    vocab = [f"w{j}" for j in range(30)]
-    rows = [(i, " ".join(rng.choices(vocab, k=rng.randint(3, 15)))) for i in range(60)]
-    # plant a high-jaccard pair
-    rows.append((100, "alpha beta gamma delta epsilon zeta eta"))
-    rows.append((101, "alpha beta gamma delta epsilon zeta theta"))
-    soup = spark.createDataFrame(rows, "doc_id long, text string")
-    exact = {
-        (r["id1"], r["id2"], r["jaccard"])
-        for r in dedup.ngram_jaccard_pairs(
-            soup, "doc_id", "text", threshold=0.4
-        ).collect()
-    }
-    pref = {
-        (r["id1"], r["id2"], r["jaccard"])
-        for r in dedup.ngram_jaccard_pairs(
-            soup, "doc_id", "text", threshold=0.4, max_doc_freq=10_000,
-            prefix_filter=True,
-        ).collect()
-    }
-    assert pref == exact and (100, 101) in {p[:2] for p in pref}
-
-
-def test_prefix_filter_cap_is_recall_only(spark):
-    """With the cap engaged, the prefix path may MISS pairs (every common
-    prefix shingle hot) but never reports a distorted value: its output is
-    a subset of exact Jaccard with identical values — unlike the grouped
-    capped path, whose n_inter excludes hot shingles by design."""
-    import random
-
-    rng = random.Random(3)
-    vocab = [f"w{j}" for j in range(25)]
-    rows = [
-        (i, "boiler plate header " + " ".join(rng.choices(vocab, k=10)))
-        for i in range(30)
-    ]
-    # Planted mid-similarity pairs so `exact` is provably non-empty (the
-    # random rows alone produced zero pairs at the threshold, making the
-    # subset assertion vacuously true — set() <= set()).
-    rows += [
-        (100, "shared one two three four five six seven eight tail_a x"),
-        (101, "shared one two three four five six seven eight tail_b y"),
-        (102, "shared one two three four five six seven eight tail_a x"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    exact = {
-        (r["id1"], r["id2"], r["jaccard"])
-        for r in dedup.ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.3
-        ).collect()
-    }
-    assert exact, "fixture must produce pairs or the test is vacuous"
-    pref = {
-        (r["id1"], r["id2"], r["jaccard"])
-        for r in dedup.ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.3, max_doc_freq=5,
-            prefix_filter=True,
-        ).collect()
-    }
-    assert pref, "capped path found nothing — cap mis-sized for fixture"
-    assert pref <= exact  # subset with identical values
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        dedup.ngram_jaccard_pairs(
-            docs, "doc_id", "text", prefix_filter=True
+    def check(docs, threshold, cap):
+        idx = dedup.shingle_index(docs, "doc_id", "text")
+        sizes = dedup.doc_shingles(docs, "doc_id", "text").select(
+            "doc_id", F.size("hs").alias("n_sh")
         )
-
-
-def test_df_prefix_filter_matches_grouped_capped_path(spark, sf_dir):
-    """The frequency-ordered prefix strategy must be BIT-IDENTICAL to the
-    grouped capped path (c3's registered config shares its oracle): same
-    capped-Jaccard semantics — intersections over cool shingles, full
-    sizes — different candidate generation only. Fixture + a randomized
-    heavy-tailed corpus (many df=1 shingles, the regime the df ordering
-    exists for) + a boilerplate corpus where the cap actually bites."""
-    import random
-
-    from aws_snowflake_kinesis_airflow_pipeline_spark.catalog import load_table
-
-    def both(docs, threshold, cap):
-        g = sorted(
-            tuple(r)
-            for r in dedup.ngram_jaccard_pairs(
+        hot = (
+            idx.groupBy("shingle")
+            .agg(F.count("*").alias("df"))
+            .filter(F.col("df") > cap)
+            .select("shingle")
+        )
+        cool = idx.join(hot, "shingle", "left_anti")
+        ref = rows_of(
+            dedup.ngram_jaccard_pairs(
+                docs, "doc_id", "text", threshold=threshold,
+                index=cool, sizes=sizes,
+            )
+        )
+        sized = rows_of(
+            dedup.ngram_jaccard_pairs(
                 docs, "doc_id", "text", threshold=threshold,
                 max_doc_freq=cap,
-            ).collect()
+            )
         )
-        p = sorted(
-            tuple(r)
-            for r in dedup.ngram_jaccard_pairs(
+        plain = rows_of(
+            dedup.ngram_jaccard_pairs(
                 docs, "doc_id", "text", threshold=threshold,
-                max_doc_freq=cap, prefix_filter="df",
-            ).collect()
+                max_doc_freq=cap, index=idx, sizes=sizes,
+            )
         )
-        return g, p
+        assert sized == ref and plain == ref
+        return ref
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    g, p = both(docs, 0.8, 100)
-    assert g == p
+    assert check(docs, 0.8, 100)
 
     # heavy-tailed soup: a tiny shared core + mostly-unique long tails
     rng = random.Random(17)
@@ -540,18 +460,16 @@ def test_df_prefix_filter_matches_grouped_capped_path(spark, sf_dir):
     rows.append((200, "alpha beta gamma delta epsilon zeta eta theta"))
     rows.append((201, "alpha beta gamma delta epsilon zeta eta iota"))
     soup = spark.createDataFrame(rows, "doc_id long, text string")
-    g, p = both(soup, 0.4, 50)
-    assert g == p and (200, 201) in {x[:2] for x in g}
+    assert (200, 201) in {x[:2] for x in check(soup, 0.4, 50)}
 
-    # cap bites: hot boilerplate shingles excluded from both intersections
+    # cap bites: hot boilerplate shingles excluded from every intersection
     rows = [
         (i, "boiler plate header line " + " ".join(
             rng.choices([f"w{j}" for j in range(20)], k=8)))
         for i in range(40)
     ]
     hotdocs = spark.createDataFrame(rows, "doc_id long, text string")
-    g, p = both(hotdocs, 0.3, 5)
-    assert g == p
+    check(hotdocs, 0.3, 5)
 
 
 def test_length_filter_survives_int32_scale_documents(spark):

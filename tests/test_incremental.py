@@ -177,7 +177,7 @@ def test_probe_plan_broadcasts_batch_and_prunes_sets(
     sig = minhash_signatures(batch, "doc_id", "text", per_doc=per_doc)
     new_buckets = band_buckets(sig, "doc_id")
     cand = incremental._cross_candidates(
-        spark, new_buckets, index_path, "doc_id", broadcast_batch=True
+        spark, new_buckets, index_path, "doc_id"
     )
     cand.write.format("noop").mode("overwrite").save()
     cand_plan = cand._jdf.queryExecution().executedPlan().toString()
@@ -491,6 +491,29 @@ def test_meta_overwrite_drops_stale_part_files(spark, tmp_path):
     assert incremental._read_embedding_meta(spark, path) == {
         "n_bits": 9, "n_tables": 2, "dim": 4, "seed": 7,
     }
+
+
+def test_concurrent_overwrite_writes_inherit_job_group(spark, tmp_path):
+    """The overwrite build's two store writes run on worker threads; they
+    must inherit the caller's job group (and with it cancellation), so
+    none of their jobs lands outside it."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    df = spark.createDataFrame(
+        [(1, [1.0] * 4), (2, [0.5] * 4)], "vec_id long, embedding array<double>"
+    )
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("emb-index-build", "overwrite build")
+    try:
+        incremental.write_embedding_index(
+            df, "vec_id", "embedding", str(tmp_path / "emb_idx"), dim=4
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    assert tracker.getJobIdsForGroup("emb-index-build")
 
 
 def test_build_index_dir_is_fresh_per_invocation():

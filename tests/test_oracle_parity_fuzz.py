@@ -614,8 +614,7 @@ def test_line_dedup_matches_duckdb_on_random_corpus(spark):
     all-boilerplate documents, the EMPTY LINE as a hot line (blank lines
     repeat across most real documents), boilerplate at first/last
     position, and in-doc repeats of a below-threshold line (df counts
-    documents, not occurrences). Also pins the salted hot-join escape
-    path row-identical on the same corpus."""
+    documents, not occurrences)."""
     from aws_snowflake_kinesis_airflow_pipeline_spark.operators.linedup import (
         drop_duplicate_lines,
     )
@@ -650,23 +649,6 @@ def test_line_dedup_matches_duckdb_on_random_corpus(spark):
     got = {
         r.doc_id: (r.clean_text, r.n_lines, r.n_kept) for r in base.collect()
     }
-    salted = {
-        r.doc_id: (r.clean_text, r.n_lines, r.n_kept)
-        for r in drop_duplicate_lines(
-            sdf, "doc_id", "text", max_line_df=3, hot_join_salts=8
-        ).collect()
-    }
-    assert salted == got
-    # The fingerprint form (bodies never shuffle) must be row-identical
-    # on the same hostile corpus — same boilerplate, in-doc repeats,
-    # empty and NULL docs.
-    fp = {
-        r.doc_id: (r.clean_text, r.n_lines, r.n_kept)
-        for r in drop_duplicate_lines(
-            sdf, "doc_id", "text", max_line_df=3, fingerprint_lines=True
-        ).collect()
-    }
-    assert fp == got
 
     pdf = pd.DataFrame(
         {"doc_id": [i for i, _ in docs], "text": [t for _, t in docs]}

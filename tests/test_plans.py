@@ -318,30 +318,21 @@ def test_candidate_verify_joins_shuffle_not_broadcast(spark, sf_dir):
     ESTIMATE, the static planner once turned that optimistic guess into a
     BroadcastExchange of the whole pair set, and AQE cannot demote a
     statically-planned broadcast over a non-shuffle input — measured as a
-    driver OOM at sf10 on the prefix-filter strategy (candidate volume
-    ~1e8). Both query shapes that share the verification path are pinned:
-    the LSH flagship (c2) and the prefix-filter strategy itself.
+    driver OOM at sf10 (candidate volume ~1e8). Pinned on the LSH
+    flagship (c2).
     """
     from aws_snowflake_kinesis_airflow_pipeline_spark.catalog import load_table
     from aws_snowflake_kinesis_airflow_pipeline_spark.operators import dedup
 
     docs = load_table(spark, sf_dir, "documents")
-    for pairs in (
-        dedup.minhash_lsh_pairs(docs, "doc_id", "text"),
-        dedup.ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.8,
-            max_doc_freq=100, prefix_filter=True,
-        ),
-    ):
-        plan = pairs._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("ShuffledHashJoin") >= 2, plan
-        # The only BroadcastExchange allowed in the verify subtree is the
-        # candidate-id semi-join into the corpus scan (id volume, AQE-
-        # sized); the pair joins themselves must not broadcast. The pair
-        # joins are the only joins keyed on id1/id2, so no broadcast node
-        # may sit directly above a candidate-pair output.
-        for line in plan.splitlines():
-            if "BroadcastHashJoin" in line and (
-                "id1#" in line and "id2#" in line
-            ):
-                raise AssertionError(f"pair join broadcasts: {line}")
+    pairs = dedup.minhash_lsh_pairs(docs, "doc_id", "text")
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ShuffledHashJoin") >= 2, plan
+    # The only BroadcastExchange allowed in the verify subtree is the
+    # candidate-id semi-join into the corpus scan (id volume, AQE-sized);
+    # the pair joins themselves must not broadcast. The pair joins are
+    # the only joins keyed on id1/id2, so no broadcast node may sit
+    # directly above a candidate-pair output.
+    for line in plan.splitlines():
+        if "BroadcastHashJoin" in line and ("id1#" in line and "id2#" in line):
+            raise AssertionError(f"pair join broadcasts: {line}")

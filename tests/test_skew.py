@@ -266,21 +266,14 @@ def _boiler_docs(spark, n_docs):
     )
 
 
-def test_linedup_hot_mark_join_mitigation_matrix(spark):
-    """The first real-cluster skew incident shape: linedup's hot-line
-    marking join keys corpus line volume by line TEXT, and one viral
-    boilerplate line is a hot key. Pin the full mitigation story on the
-    PRODUCTION operator:
-
-    1. default path — the hot set BROADCASTS (no shuffle of the line
-       volume by line at all, so no skew hazard exists);
-    2. if broadcast is off the table, AQE's skew split CANNOT save this
-       join (the hot set is an aggregate, which breaks the rule's
-       sort-over-shuffle pattern match) — the documented reason the
-       salted path exists, pinned so a Spark upgrade that lifts the
-       limitation is noticed;
-    3. hot_join_salts > 0 — the salted mark join fans the hot key across
-       salt partitions with row-identical output."""
+def test_linedup_viral_line_hot_join_broadcasts(spark):
+    """The first real-cluster skew incident shape: one viral boilerplate
+    line in every document is a hot key. linedup keeps it off any
+    shuffle: the hot fingerprint set is aggregate-bounded and
+    BROADCASTS into the narrow (id, pos, fingerprint) projection, so no
+    exchange routes the line's occurrences by key. With broadcast
+    disabled the hot join shuffles by fingerprint instead and the output
+    is unchanged."""
     from aws_snowflake_kinesis_airflow_pipeline_spark.operators.linedup import (
         drop_duplicate_lines,
     )
@@ -294,54 +287,16 @@ def test_linedup_hot_mark_join_mitigation_matrix(spark):
         )
     )
 
-    # 1. Default path: broadcast left-outer mark join, no line-keyed
-    # shuffle of the corpus volume.
     out = drop_duplicate_lines(docs, "doc_id", "text", max_line_df=3)
-    rows_default = out.collect()
+    assert expect(out.collect())
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert expect(rows_default)
-    assert "BroadcastHashJoin" in plan and "LeftOuter" in plan, plan[:2000]
+    assert "BroadcastHashJoin" in plan, plan[:2000]
 
     with _with_tiny_skew_thresholds(spark):
-        # 2. Broadcast disabled: the mark join shuffles by line and AQE
-        # does NOT mark it skewed even with a planted hot key far past the
-        # tiny thresholds — the aggregate child defeats the pattern match.
         out2 = drop_duplicate_lines(docs, "doc_id", "text", max_line_df=3)
-        rows_smj = out2.collect()
+        assert expect(out2.collect())
         plan2 = out2._jdf.queryExecution().executedPlan().toString()
-        assert expect(rows_smj)
-        assert "LeftOuter" in plan2 and "BroadcastHashJoin" not in plan2
-        assert "skew=true" not in plan2  # AQE can't reach this shape
-
-        # 3. The wired mitigation: salted mark join, row-identical, joined
-        # on (line, salt) so the hot key fans out across salt partitions.
-        out3 = drop_duplicate_lines(
-            docs, "doc_id", "text", max_line_df=3, hot_join_salts=8
-        )
-        rows_salted = out3.collect()
-        plan3 = out3._jdf.queryExecution().executedPlan().toString()
-        assert expect(rows_salted)
-        assert "_salt" in plan3 and "LeftOuter" in plan3
-    assert sorted(map(tuple, rows_salted)) == sorted(map(tuple, rows_default))
-
-
-def test_salted_mark_join_matches_plain(spark):
-    df = skewed_df(spark)
-    right = df.filter(F.col("k") == "hot").select("k").distinct()
-    plain = sorted(
-        (r["k"], r["v"], r["_hot"])
-        for r in df.join(
-            right.withColumn("_hot", F.lit(True)), "k", "left"
-        )
-        .withColumn("_hot", F.coalesce("_hot", F.lit(False)))
-        .collect()
-    )
-    salted = sorted(
-        (r["k"], r["v"], r["_hot"])
-        for r in skew.salted_left_mark_join(df, right, "k").collect()
-    )
-    assert salted == plain
-    assert sum(1 for _, _, h in salted if h) == 900  # the hot key's rows
+        assert "BroadcastHashJoin" not in plan2, plan2[:2000]
 
 
 def test_nonpositive_salts_raise(spark):
@@ -357,22 +312,4 @@ def test_nonpositive_salts_raise(spark):
             skew.salted_inner_join(df, right, "k", n_salts=n)
         with pytest.raises(ValueError):
             skew.salted_left_anti_join(df, right, "k", n_salts=n)
-        # zero salts would mark every row False — same silent-corruption
-        # shape as the anti-join keeping everything.
-        with pytest.raises(ValueError):
-            skew.salted_left_mark_join(df, right, "k", n_salts=n)
 
-
-def test_mark_join_duplicate_right_keys_do_not_duplicate_left(spark):
-    """A duplicate key on the mark join's right side must not fan out
-    left rows (it would inflate linedup's n_lines/n_kept and corrupt
-    clean_text) — the operator dedups the right side before replication."""
-    df = skewed_df(spark)
-    dup_right = (
-        df.filter(F.col("k") == "hot").select("k").distinct().union(
-            df.filter(F.col("k") == "hot").select("k").distinct()
-        )
-    )
-    out = skew.salted_left_mark_join(df, dup_right, "k")
-    assert out.count() == df.count()
-    assert out.filter(F.col("_hot")).count() == 900

@@ -233,41 +233,52 @@ def test_registered_c26_span_branch_planted_cases(spark, sf_dir):
 
 
 def test_finalized_hash_same_results_different_hashes(spark):
-    """The SplitMix64 finalizer (default ON since round 8) is a bijection
-    of the window hash: identical runs still collide, so the operator's
-    OUTPUT is unchanged vs the raw linear form on ordinary data — while
-    the hashes themselves are fully mixed (different for every window)."""
+    """Each window hash is the SplitMix64-finalized rolling hash, replayed
+    here in pure Python from the per-token xxhash64s. The finalizer is a
+    bijection, so equal runs still hash equal and the output matches the
+    text-equality replay, while every hash differs from the raw linear
+    form."""
+    from aws_snowflake_kinesis_airflow_pipeline_spark.functions.text import (
+        tokens,
+    )
+
+    texts = {
+        1: "a b c d e f g h tail1",
+        2: "pre a b c d e f g h",
+        3: "x y z " + "a b c d e f g h " + "x y z",
+        4: "unique words only here now truly etc etc2 etc3",
+    }
     docs = spark.createDataFrame(
-        [
-            (1, "a b c d e f g h tail1"),
-            (2, "pre a b c d e f g h"),
-            (3, "x y z " + "a b c d e f g h " + "x y z"),
-            (4, "unique words only here now truly etc etc2 etc3"),
-        ],
-        "doc_id long, text string",
+        sorted(texts.items()), "doc_id long, text string"
     )
-    plain = sorted(
-        map(
-            tuple,
-            remove_duplicate_spans(docs, window=8, finalize=False).collect(),
-        )
-    )
-    hardened = sorted(
-        map(
-            tuple,
-            remove_duplicate_spans(docs, window=8, finalize=True).collect(),
-        )
-    )
-    assert hardened == plain
-    h_plain = {
+    mask, base = 2**64 - 1, 0x9E3779B97F4A7C15
+
+    def mix(z):
+        z ^= z >> 30
+        z = (z * 0xBF58476D1CE4E5B9) & mask
+        z ^= z >> 27
+        z = (z * 0x94D049BB133111EB) & mask
+        return z ^ (z >> 31)
+
+    def signed(z):
+        return z - 2**64 if z >= 2**63 else z
+
+    w = 8
+    raw, want = {}, {}
+    for r in docs.select(
+        "doc_id", F.transform(tokens("text"), lambda t: F.xxhash64(t)).alias("th")
+    ).collect():
+        th = [t & mask for t in r.th]
+        for p in range(len(th) - w + 1):
+            z = sum(th[p + j] * pow(base, j, 2**64) for j in range(w)) & mask
+            raw[(r.doc_id, p)] = signed(z)
+            want[(r.doc_id, p)] = signed(mix(z))
+    got = {
         (r.doc_id, r.pos): r.whash
-        for r in window_fingerprints(docs, window=8, finalize=False).collect()
+        for r in window_fingerprints(docs, window=w).collect()
     }
-    h_fin = {
-        (r.doc_id, r.pos): r.whash
-        for r in window_fingerprints(docs, window=8, finalize=True).collect()
-    }
-    assert set(h_plain) == set(h_fin)
-    assert all(h_plain[k] != h_fin[k] for k in h_plain)  # fully mixed
+    assert got == want
+    assert all(got[k] != raw[k] for k in got)  # fully mixed
     # equal runs still hash equal under the finalizer
-    assert h_fin[(1, 0)] == h_fin[(2, 1)] == h_fin[(3, 3)]
+    assert got[(1, 0)] == got[(2, 1)] == got[(3, 3)]
+    assert _run(spark, texts, w) == _py_remove(texts, w)

@@ -161,26 +161,37 @@ def test_scaled_repartition_satisfies_downstream_groupby(spark, sf_dir):
 
 
 def test_linedup_plan_has_two_scaled_exchanges(spark, sf_dir, monkeypatch):
-    """Pin the reworked line-dedup plan shape with the guard forced ON:
-    exactly TWO data-bearing exchanges — one hashpartitioning(line) that
-    serves BOTH the per-document distinct (subset-key rule) and the
-    line-df groupBy, and one hashpartitioning(doc_id) for the single-pass
-    reassembly — plus a broadcast of the small hot set. A third hash
-    exchange appearing here means one of the two aggregation stacks
-    stopped being served by its scaled exchange (the corpus-scale OOM
-    shape the guard exists to remove)."""
+    """Pin the line-dedup plan shape with the guard forced ON: the two
+    corpus-volume inputs each cross exactly ONE exchange, both at the
+    scaled count — one hashpartitioning(_fp0, _fp1) that serves BOTH the
+    per-document distinct (subset-key rule) and the line-df groupBy, and
+    one hashpartitioning on the scan's doc_id for the text side of the
+    join-back — plus a broadcast of the small hot set. A second exchange
+    on either input means an aggregation stack stopped being served by
+    its scaled exchange (the corpus-scale OOM shape the guard exists to
+    remove). The hot-occurrence side of the join-back is aggregate-
+    bounded and not counted."""
+    import re
+
     from aws_snowflake_kinesis_airflow_pipeline_spark.operators import linedup
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     monkeypatch.setattr(spread_mod, "_EXCHANGE_INPUT_BUDGET", 64)
     n = exchange_partitions(docs)
     assert n is not None
+    scan_id = docs._jdf.queryExecution().analyzed().output().apply(0).toString()
+    assert scan_id.startswith("doc_id#"), scan_id
     out = linedup.drop_duplicate_lines(docs, "doc_id", "text")
     plan = out._jdf.queryExecution().executedPlan().toString()
-    hash_exchanges = plan.count("Exchange hashpartitioning")
-    assert hash_exchanges == 2, plan[:4000]
-    assert plan.count(f", {n})") >= 2  # both at the scaled count
-    assert "BroadcastExchange" in plan or "BroadcastHashJoin" in plan
+    exchanges = [
+        [a.strip() for a in args.split(",")]
+        for args in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
+    ]
+    fp = [e for e in exchanges if e[0].startswith("_fp0#")]
+    text = [e for e in exchanges if e[:-1] == [scan_id]]
+    assert len(fp) == 1 and len(text) == 1, exchanges
+    assert fp[0][-1] == text[0][-1] == str(n), exchanges
+    assert "BroadcastExchange" in plan
 
 
 def test_scaled_exchanges_preserve_dedup_results(spark, sf_dir, monkeypatch):
@@ -396,9 +407,7 @@ def test_linedup_fingerprint_form_never_shuffles_line_bodies(
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     monkeypatch.setattr(spread_mod, "_EXCHANGE_INPUT_BUDGET", 64)
     n = exchange_partitions(docs)
-    out = linedup.drop_duplicate_lines(
-        docs, "doc_id", "text", fingerprint_lines=True
-    )
+    out = linedup.drop_duplicate_lines(docs, "doc_id", "text")
     plan = out._jdf.queryExecution().executedPlan().toString()
     # Parse each hash exchange's actual key list (last arg is the
     # partition count): every key must be a fingerprint word or the doc
@@ -413,3 +422,38 @@ def test_linedup_fingerprint_form_never_shuffles_line_bodies(
         assert keys <= {"_fp0", "_fp1", "doc_id"}, keys
     assert "_fp0" in plan
     assert f", {n})" in plan
+
+
+def test_plan_level_guards_match_oracle_at_scale(spark, sf_dir, monkeypatch):
+    """s1, b10 and c26 pin a shared base only while exchange_partitions
+    says the session default suffices; at real scale they keep the raw
+    scans instead. Forcing the guard ON (budget = 64 bytes) runs those
+    at-scale plans on the fixture, and each must still match its DuckDB
+    oracle under the driver-check comparison of tools/verify_local.py."""
+    import importlib.util
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    spec = importlib.util.spec_from_file_location(
+        "verify_local", root / "tools" / "verify_local.py"
+    )
+    vl = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(vl)  # also puts the repo root on sys.path
+    import __spark_entry__ as entry
+
+    monkeypatch.setattr(spread_mod, "_EXCHANGE_INPUT_BUDGET", 64)
+    assert exchange_partitions(load_table(spark, sf_dir, "events")) is not None
+    assert exchange_partitions(load_table(spark, sf_dir, "documents")) is not None
+    qs, oracles = entry.queries(), entry.oracle_sql()
+    con = vl.duck_con(sf_dir)
+    for name in ("s1_window_counts", "b10_json_array_pack", "c26_line_dedup"):
+        sdf = qs[name](spark, sf_dir)
+        s_rows, s_cols = vl.normalize([tuple(r) for r in sdf.collect()], sdf.columns)
+        cur = con.execute(oracles[name])
+        o_rows, o_cols = vl.normalize(
+            [tuple(r) for r in cur.fetchall()], [d[0] for d in cur.description]
+        )
+        assert s_cols == o_cols, name
+        assert len(s_rows) == len(o_rows), name
+        assert s_rows, name
+        assert vl.rows_equal(s_rows, o_rows), name

@@ -17,7 +17,7 @@ erratic 120-412 s at 64g). Right-sized partitions, not a bigger heap,
 are the scale knob — which is also the honest cluster story.
 
 Usage: python tools/bench_scale.py <dir> [op ...] [--reps N]
-       ops: c1 c2 c3 c4 c5 c8 c16 line linefp span tfidf encode chain
+       ops: c1 c2 c3 c4 c5 c8 c16 line span tfidf encode chain
             diversity ivf pq semdedup
             retention transition funnel tumbling session
        (default: c2 c16 span; c5 needs embeddings.parquet in the dir,
@@ -240,12 +240,6 @@ def _ops(spark, d):
         "c4": lambda: dedup.simhash_near_dup_pairs(
             docs(), "doc_id", "text", max_hamming=6, bits=128
         ),
-        # The pre-round-12 single-chunk pigeonhole, kept for same-sitting
-        # A/Bs against the combo default above.
-        "c4chunk": lambda: dedup.simhash_near_dup_pairs(
-            docs(), "doc_id", "text", max_hamming=6, bits=128,
-            strategy="chunk",
-        ),
         "c8": lambda: llm_suite.c8_text_features(spark, d),
         "c16": lambda: dedup.near_dup_dedup(docs(), "doc_id", "text", threshold=0.8),
         "c5": lambda: dedup.embedding_near_dup_pairs(
@@ -280,10 +274,6 @@ def _ops(spark, d):
         ),
         "line": lambda: drop_duplicate_lines(
             docs(), "doc_id", "text", max_line_df=3, line_sep="\n"
-        ),
-        "linefp": lambda: drop_duplicate_lines(
-            docs(), "doc_id", "text", max_line_df=3, line_sep="\n",
-            fingerprint_lines=True,
         ),
         "span": lambda: remove_duplicate_spans(
             docs(), "doc_id", "text", window=8, max_df=4
