@@ -30,39 +30,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import adaptive_shingles, tokens, word_shingles
-from .spread import exchange_partitions as _exchange_partitions
+from .spread import pin
 from .spread import scaled_repartition as _scaled_repartition
 from .spread import spread as _spread
-
-
-def _pin_or_scale(frame: DataFrame, *keys: str, source: DataFrame) -> DataFrame:
-    """Pin an expensive kernel's output that feeds a keyed aggregation.
-
-    At bench SFs (the exchange guard says the session default suffices):
-    ``localCheckpoint`` — materializes the kernel once so no re-plan can
-    replay it, the round-5 discipline, measured free at sf10. Lazy
-    (round-12, guide §2.6): the blocks still build exactly once — a lazy
-    local checkpoint is one RDD, computed and persisted by the first job
-    that touches it, and every later consumer (or re-plan) reads the
-    blocks — but the build folds into the first downstream action instead
-    of running as a standalone driver-waited job, so independent stages
-    overlap and per-job scheduling latency is paid once, not per pin.
-
-    When spread.exchange_partitions fires (input >> bench SF): a scaled
-    ``repartition`` on the aggregation keys INSTEAD of the checkpoint.
-    The exchange's shuffle files are the same pin (map output is written
-    once; downstream re-plans re-read files, never recompute), while the
-    checkpoint is actively harmful at this scale in two ways it was
-    measured to be: its blocks build at the SCAN's partition count (32
-    corpus-sized block builds in flight = the round-9 16 g OOM), and
-    Spark's LogicalRDD drops outputPartitioning (pinned in test_spread),
-    so a checkpoint above the exchange would force the groupBy to
-    re-shuffle the whole corpus a second time.
-    """
-    n = _exchange_partitions(source)
-    if n is None:
-        return frame.localCheckpoint(eager=False)
-    return frame.repartition(n, *keys)
 
 
 # --------------------------------------------------------------------------
@@ -805,12 +775,7 @@ def minhash_lsh_pairs(
     # re-plan, and A/B at sf10 measured the write+read of the 8M-row
     # triple as free (within host noise of streaming it). Same
     # discipline as embedding_near_dup_pairs' bucket triple.
-    # _pin_or_scale: checkpoint at bench SFs; at 1000x the bench SF the
-    # scaled banding exchange replaces it (its shuffle files are the same
-    # pin, with blocks and the final aggregation both sized to the data —
-    # see the helper's docstring for why checkpointing at that scale was
-    # itself the OOM).
-    buckets = _pin_or_scale(
+    buckets = pin(
         band_buckets(sig, id_col, num_hashes, bands),
         "band_id",
         "band_hash",
@@ -1018,11 +983,9 @@ def simhash_near_dup_pairs(
     ).select(
         id_col, *sig_cols, "ch.chunk_id", "ch.chunk_val"
     )
-    # _pin_or_scale: checkpoint at bench SFs; the scaled chunk exchange
-    # replaces it at corpus scale (docs x n_chunks signature-hauling rows
-    # checkpointed at the scan's partition count is the OOM — see
-    # minhash_lsh_pairs and the helper's docstring).
-    chunks = _pin_or_scale(chunks, "chunk_id", "chunk_val", source=df)
+    # Pinned like minhash_lsh_pairs' bucket triple: docs x n_chunks rows,
+    # each hauling the signature words, feed the chunk-keyed grouping.
+    chunks = pin(chunks, "chunk_id", "chunk_val", source=df)
 
     # Grouped pair emission (same trick as the banding candidates and
     # c3's postings): ONE exchange of the chunk table into per-

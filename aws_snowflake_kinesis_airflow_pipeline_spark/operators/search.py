@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.text import tokens
-from .spread import exchange_partitions as _exchange_partitions
+from .spread import pin
 from .spread import scaled_repartition as _scaled_repartition
 
 
@@ -214,43 +214,16 @@ def tf_idf_vectors(
     exploded = toks.select(id_col, F.explode("_toks").alias("term"))
     # (doc, term) tf — one shuffle over corpus tokens with map-side combine.
     # tf feeds BOTH the vocabulary df aggregate and the weighting join, so
-    # it needs a pin against double computation — but the pin MUST change
-    # shape with scale (the dedup-family `_pin_or_scale` discipline,
-    # operators/dedup.py:38):
-    #
-    # * Bench SFs (exchange guard says the session default suffices):
-    #   ``localCheckpoint`` — materializes the postings once; cheap when
-    #   the corpus is small.
-    # * At scale (guard fires): the term-keyed scaled exchange IS the pin
-    #   and the checkpoint is dropped. The exchange's shuffle files are
-    #   written once and ReuseExchange shares the map output between both
-    #   consumers, while a corpus-sized (doc, term, tf) localCheckpoint
-    #   builds its blocks at the AGGREGATION's partition count with whole
-    #   postings partitions pinned in block-manager memory — the
-    #   demonstrated 32 GiB OOM at the 50 M-document decade (BASELINE.md
-    #   round-10 table; round-11 fix). Dropping it costs one extra
-    #   reduce-side aggregation replay (the df-by-term consumer), never a
-    #   second scan/explode.
-    #
-    # The term-keyed exchange satisfies BOTH downstream clusterings by the
-    # subset-key rule: equal (id, term) implies equal term for the tf
-    # aggregation, and the df aggregate groups by term itself — so at
-    # scale the whole build is scan → explode → ONE exchange → two
-    # aggregations. Term-keyed partitioning concentrates a hot term's
-    # postings, which is acceptable here: the scaled count grows with the
-    # corpus while any one term's postings are bounded by N. On a cluster
-    # with a *repeated* indexing workload, persist tf bucketed by term
-    # instead (sources/storage.py). No-op at bench SFs.
+    # it is pinned. At scale the term-keyed exchange is the pin: it serves
+    # both aggregations by the subset-key rule (equal (id, term) implies
+    # equal term), while a corpus-sized (doc, term, tf) checkpoint was the
+    # 32 GiB OOM at the 50 M-document decade (BASELINE.md round 10).
     agged = (
         _scaled_repartition(exploded, "term", source=docs)
         .groupBy(id_col, "term")
         .agg(F.count("*").alias("tf"))
     )
-    tf = (
-        agged.localCheckpoint(eager=False)  # folds into the first consumer
-        if _exchange_partitions(docs) is None
-        else agged
-    )
+    tf = pin(agged, source=docs)
     # df per term, capped to the top-vocab_size by df (ties by term asc).
     df_tab = (
         tf.groupBy("term")

@@ -70,9 +70,7 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
 _EXCHANGE_INPUT_BUDGET = 5 * 2**19  # 2.5 MiB
 
 
-def exchange_partitions(
-    source: DataFrame, bytes_per_partition: int | None = None
-) -> int | None:
+def exchange_partitions(source: DataFrame) -> int | None:
     """Partition count for a corpus-volume exchange, derived from the
     source scan's file bytes — or None when the session default already
     suffices.
@@ -87,10 +85,6 @@ def exchange_partitions(
     operator-level default (thousands of shuffle partitions + AQE
     coalescing) is the right mechanism, and this guard must not fight it.
     """
-    if bytes_per_partition is None:
-        # Resolved at call time so tests can monkeypatch the module
-        # constant to force the guard at tiny fixtures.
-        bytes_per_partition = _EXCHANGE_INPUT_BUDGET
     spark = source.sparkSession
     try:
         session_parts = int(
@@ -109,15 +103,14 @@ def exchange_partitions(
     sizes = [_local_file_size(uri) for uri in files]
     if any(s is None for s in sizes):
         return None
-    n = math.ceil(sum(sizes) / max(bytes_per_partition, 1))
+    # The budget is read at call time so tests can monkeypatch it to force
+    # the guard at tiny fixtures.
+    n = math.ceil(sum(sizes) / max(_EXCHANGE_INPUT_BUDGET, 1))
     return n if n > session_parts else None
 
 
 def scaled_repartition(
-    df: DataFrame,
-    *cols: str,
-    source: DataFrame | None = None,
-    bytes_per_partition: int | None = None,
+    df: DataFrame, *cols: str, source: DataFrame | None = None
 ) -> DataFrame:
     """Repartition ``df`` on its upcoming exchange keys with a partition
     count scaled to ``source``'s input bytes (default: ``df`` itself —
@@ -133,12 +126,46 @@ def scaled_repartition(
     collect_list/pair-emission exchanges this guards (partials don't
     reduce list bytes, and grouped-emission pairs are ~1.1x duplicated at
     most)."""
-    n = exchange_partitions(
-        source if source is not None else df, bytes_per_partition
-    )
+    n = exchange_partitions(source if source is not None else df)
     if n is None:
         return df
     return df.repartition(n, *cols)
+
+
+def pin(
+    frame: DataFrame, *keys: str, source: DataFrame | None = None
+) -> DataFrame:
+    """Pin an intermediate that several consumers (or re-plans) read, in
+    the shape that is safe at the input's scale. ``source`` is the frame
+    whose scan bytes size the decision (default: ``frame`` itself).
+
+    At bench SFs (:func:`exchange_partitions` says the session default
+    suffices): ``localCheckpoint`` — materializes the intermediate once so
+    no re-plan can replay it, the round-5 discipline, measured free at
+    sf10. Lazy (round-12, guide §2.6): the blocks still build exactly once
+    — a lazy local checkpoint is one RDD, computed and persisted by the
+    first job that touches it, and every later consumer (or re-plan) reads
+    the blocks — but the build folds into the first downstream action
+    instead of running as a standalone driver-waited job, so independent
+    stages overlap and per-job scheduling latency is paid once, not per
+    pin.
+
+    When the guard fires (input >> bench SF) the checkpoint is dropped:
+    with ``keys``, a scaled ``repartition`` on the downstream aggregation
+    keys takes its place; without, ``frame`` is returned unchanged. The
+    exchange's shuffle files are the same pin (map output is written
+    once; downstream re-plans re-read files, never recompute), while the
+    checkpoint is actively harmful at this scale in two ways it was
+    measured to be: its blocks build at the SCAN's partition count (32
+    corpus-sized block builds in flight = the round-9 16 g OOM), and
+    Spark's LogicalRDD drops outputPartitioning (pinned in test_spread),
+    so a checkpoint above the exchange would force the groupBy to
+    re-shuffle the whole corpus a second time.
+    """
+    n = exchange_partitions(source if source is not None else frame)
+    if n is None:
+        return frame.localCheckpoint(eager=False)
+    return frame.repartition(n, *keys) if keys else frame
 
 
 def _bytes_conf(value: str) -> int:

@@ -2402,26 +2402,20 @@ def c26_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair blowup anywhere."""
     from ..operators.linedup import drop_duplicate_lines
     from ..operators.spandup import remove_duplicate_spans
-
-    from ..operators.spread import exchange_partitions
+    from ..operators.spread import pin
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     # Shared pinned bases (round-13, guide §2.4): each branch's operator
     # references its docs∪planted base 2-3 times (fingerprint pass, hot
     # occurrence pass, text rebuild join-back), so the un-pinned pack
     # re-scans parquet 12 times and re-spreads the text per appearance —
-    # 42 Exchanges. Pinning each branch's base once at bench SFs cut the
-    # plan to 18 Exchanges / 0 re-scans and exec 2.0 -> 1.4 s (same
-    # sitting, identical rows). At real scale pinning corpus text is the
-    # round-9 OOM; the raw form (re-scan per pass, pruned at the reader)
-    # is correct there, so the guard keeps it.
-    _pin_base = exchange_partitions(docs) is None
+    # 42 Exchanges. Pinning each branch's base once cut the plan to 18
+    # Exchanges / 0 re-scans and exec 2.0 -> 1.4 s (same sitting,
+    # identical rows).
     line_planted = spark.createDataFrame(
         _LINEDUP_PLANTED, "doc_id long, text string"
     ).repartition(1)  # tiny local frame: see the c15 needle note
-    line_base = docs.unionByName(line_planted)
-    if _pin_base:
-        line_base = line_base.localCheckpoint(eager=False)
+    line_base = pin(docs.unionByName(line_planted), source=docs)
     line = drop_duplicate_lines(
         line_base,
         "doc_id",
@@ -2439,9 +2433,7 @@ def c26_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     span_planted = spark.createDataFrame(
         _SPANDUP_PLANTED, "doc_id long, text string"
     ).repartition(1)  # tiny local frame: see the c15 needle note
-    span_base = docs.unionByName(span_planted)
-    if _pin_base:
-        span_base = span_base.localCheckpoint(eager=False)
+    span_base = pin(docs.unionByName(span_planted), source=docs)
     span = remove_duplicate_spans(
         span_base,
         "doc_id",

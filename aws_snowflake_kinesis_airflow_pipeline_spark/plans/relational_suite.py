@@ -733,19 +733,13 @@ def b10_json_array_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round-13 (guide §1.2/§2.4): the full exact count is this pack's own
     # declared computation, and it is consumed THREE times — the exact
     # top-20 branch, its struct-list copy for the hh comparison, and the
-    # heavy-hitter recount. At bench SFs pin it once (vocabulary-sized
-    # blocks) and hand it to top_k_tokens as ``exact_counts``, dropping a
-    # whole tokenize+explode+count pass over the corpus. At real scale
-    # (exchange_partitions fires) vocabulary-sized blocks are not safely
-    # pinnable, so keep the original shape: candidates-restricted recount
-    # over the raw data (aggregates only the candidate key domain).
+    # heavy-hitter recount. Pin it once (vocabulary-sized blocks) and hand
+    # it to top_k_tokens as ``exact_counts``, dropping a whole
+    # tokenize+explode+count pass over the corpus.
     from ..operators.sketches import top_k_tokens
-    from ..operators.spread import exchange_partitions
+    from ..operators.spread import pin
 
-    shared_counts = None
-    if exchange_partitions(docs) is None:
-        token_counts = token_counts.localCheckpoint(eager=False)
-        shared_counts = token_counts
+    token_counts = pin(token_counts, source=docs)
     exact_topk = token_counts.orderBy(
         F.col("n").desc(), F.col("token")
     ).limit(20)
@@ -762,7 +756,7 @@ def b10_json_array_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Compared in-plan as two sorted 20-row struct lists; the oracle pins
     # the boolean TRUE. The 1x1 crossJoin is the documented scalar-combine
     # precedent (operators/relational.py).
-    hh = top_k_tokens(docs, "text", k=20, capacity=4096, exact_counts=shared_counts)
+    hh = top_k_tokens(docs, "text", k=20, capacity=4096, exact_counts=token_counts)
     exact_list = exact_topk.agg(
         F.sort_array(F.collect_list(F.struct("token", "n"))).alias("_e")
     )

@@ -196,18 +196,12 @@ def s1_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Shared pinned base (round-13, guide §2.4/§5): the nine branches
     # reference the events scan 62 times in the un-pinned plan (funnel
     # steps, MAD passes, self-joins, and their broadcast copies each
-    # re-plan the scan). At bench SFs, pin ONE five-column projection so
-    # every branch reads the blocks instead of re-scanning parquet —
-    # measured 34 scans -> 0 with the mad pin below already in place. At
-    # real scale (exchange_partitions fires) pinning a corpus-sized table
-    # is the round-9 OOM, so keep the raw scan: per-branch column pruning
-    # at the parquet reader is the correct shape there.
-    from ..operators.spread import exchange_partitions
+    # re-plan the scan). Pinning ONE five-column projection lets every
+    # branch read the blocks instead of re-scanning parquet — measured
+    # 34 scans -> 0 with the mad pin below already in place.
+    from ..operators.spread import pin
 
-    if exchange_partitions(ev) is None:
-        ev = ev.select(
-            "user_id", "ts", "event_type", "event_id", "value"
-        ).localCheckpoint(eager=False)
+    ev = pin(ev.select("user_id", "ts", "event_type", "event_id", "value"), source=ev)
     tumbling = W.tumbling_counts(ev, streaming=False).select(
         F.lit("tumbling").alias("op"),
         "window_start",

@@ -12,6 +12,7 @@ from aws_snowflake_kinesis_airflow_pipeline_spark.operators import spread as spr
 from aws_snowflake_kinesis_airflow_pipeline_spark.operators.spread import (
     _bytes_conf,
     exchange_partitions,
+    pin,
     scaled_repartition,
     spread,
 )
@@ -124,33 +125,36 @@ def test_exchange_partitions_default_is_none_at_bench_sf(spark, sf_dir):
     assert "RepartitionByExpression" not in out._jdf.queryExecution().logical().toString()
 
 
-def test_exchange_partitions_scales_with_input_bytes(spark, sf_dir):
+def test_exchange_partitions_scales_with_input_bytes(spark, sf_dir, monkeypatch):
     import math
 
     docs = load_table(spark, sf_dir, "documents")
     total = _input_bytes(docs)
-    n = exchange_partitions(docs, bytes_per_partition=64)
+    monkeypatch.setattr(spread_mod, "_EXCHANGE_INPUT_BUDGET", 64)
+    n = exchange_partitions(docs)
     assert n == math.ceil(total / 64)
     assert n > int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
-def test_exchange_partitions_none_without_file_lineage(spark):
+def test_exchange_partitions_none_without_file_lineage(spark, monkeypatch):
     """In-memory inputs have no file metadata — trust the session default
     (on a real cluster that is thousands of partitions + AQE coalescing)."""
     df = spark.createDataFrame([(1, "a")], "id long, s string")
-    assert exchange_partitions(df, bytes_per_partition=1) is None
+    monkeypatch.setattr(spread_mod, "_EXCHANGE_INPUT_BUDGET", 1)
+    assert exchange_partitions(df) is None
 
 
-def test_scaled_repartition_satisfies_downstream_groupby(spark, sf_dir):
+def test_scaled_repartition_satisfies_downstream_groupby(spark, sf_dir, monkeypatch):
     """The explicit scaled exchange must SATISFY the downstream groupBy's
     clustering requirement: exactly ONE Exchange in the physical plan
     (hashpartitioning on the group keys at the scaled count), never a
     second exchange stacked on top — otherwise the guard would double
     every corpus-volume shuffle it is meant to protect."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    n = exchange_partitions(docs, bytes_per_partition=64)
+    monkeypatch.setattr(spread_mod, "_EXCHANGE_INPUT_BUDGET", 64)
+    n = exchange_partitions(docs)
     out = (
-        scaled_repartition(docs, "doc_id", bytes_per_partition=64)
+        scaled_repartition(docs, "doc_id")
         .groupBy("doc_id")
         .agg(F.count("*").alias("n"))
     )
@@ -223,11 +227,11 @@ def test_scaled_exchanges_preserve_dedup_results(spark, sf_dir, monkeypatch):
 
 
 def test_local_checkpoint_drops_partitioning(spark, sf_dir):
-    """Document the Spark behavior dedup._pin_or_scale is designed
-    around: localCheckpoint's LogicalRDD does NOT carry outputPartitioning
+    """Document the Spark behavior spread.pin is designed around:
+    localCheckpoint's LogicalRDD does NOT carry outputPartitioning
     forward, so an aggregation above a checkpointed exchange re-shuffles.
-    If a Spark upgrade ever makes this assertion fail, _pin_or_scale can
-    be simplified to repartition + checkpoint."""
+    If a Spark upgrade ever makes this assertion fail, spread.pin can be
+    simplified to repartition + checkpoint."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     ck = docs.repartition(7, "doc_id").localCheckpoint()
     out = ck.groupBy("doc_id").agg(F.count("*").alias("n"))
@@ -235,23 +239,24 @@ def test_local_checkpoint_drops_partitioning(spark, sf_dir):
     assert "Exchange" in plan
 
 
-def test_pin_or_scale_modes(spark, sf_dir, monkeypatch):
-    """_pin_or_scale: checkpoint at bench SFs (guard off); when the guard
+def test_pin_modes(spark, sf_dir, monkeypatch):
+    """spread.pin: checkpoint at bench SFs (guard off); when the guard
     fires, a scaled repartition whose downstream groupBy adds NO second
-    exchange — the corpus shuffles exactly once."""
-    from aws_snowflake_kinesis_airflow_pipeline_spark.operators.dedup import _pin_or_scale
-
+    exchange — the corpus shuffles exactly once — or, with no keys, the
+    frame itself."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    pinned = _pin_or_scale(docs, "doc_id", source=docs)
+    pinned = pin(docs, "doc_id", source=docs)
     assert "ExistingRDD" in pinned._jdf.queryExecution().executedPlan().toString()
 
     monkeypatch.setattr(spread_mod, "_EXCHANGE_INPUT_BUDGET", 64)
     n = exchange_partitions(docs)
-    scaled = _pin_or_scale(docs, "doc_id", source=docs)
+    scaled = pin(docs, "doc_id", source=docs)
     out = scaled.groupBy("doc_id").agg(F.count("*").alias("n"))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("+- Exchange") + plan.count(":- Exchange") == 1
     assert f", {n})" in plan
+    projected = docs.select("doc_id")
+    assert pin(projected, source=docs) is projected
 
 
 def test_scaled_exchange_preserves_embedding_pairs(spark, monkeypatch):
@@ -281,7 +286,7 @@ def test_scaled_exchange_preserves_embedding_pairs(spark, monkeypatch):
     assert pairs() == base
 
 
-def test_subset_key_exchange_satisfies_wider_groupby(spark, sf_dir):
+def test_subset_key_exchange_satisfies_wider_groupby(spark, sf_dir, monkeypatch):
     """tfidf_vectors' design fact: a hash exchange on a SUBSET of the
     group keys (term) satisfies a wider groupBy's clustering (id, term) —
     equal (id, term) implies equal term implies same partition. Exactly
@@ -290,8 +295,9 @@ def test_subset_key_exchange_satisfies_wider_groupby(spark, sf_dir):
     exploded = docs.select(
         "doc_id", F.explode(F.split(F.lower("text"), "\\s+")).alias("term")
     )
+    monkeypatch.setattr(spread_mod, "_EXCHANGE_INPUT_BUDGET", 64)
     out = (
-        scaled_repartition(exploded, "term", source=docs, bytes_per_partition=64)
+        scaled_repartition(exploded, "term", source=docs)
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
     )
@@ -425,11 +431,12 @@ def test_linedup_fingerprint_form_never_shuffles_line_bodies(
 
 
 def test_plan_level_guards_match_oracle_at_scale(spark, sf_dir, monkeypatch):
-    """s1, b10 and c26 pin a shared base only while exchange_partitions
-    says the session default suffices; at real scale they keep the raw
-    scans instead. Forcing the guard ON (budget = 64 bytes) runs those
-    at-scale plans on the fixture, and each must still match its DuckDB
-    oracle under the driver-check comparison of tools/verify_local.py."""
+    """Every registered query with exchange_partitions forced ON (budget =
+    64 bytes), so each spread.pin and scaled exchange takes its at-scale
+    shape on the fixture: no checkpoint, scaled repartitions instead. Each
+    result must still match its DuckDB oracle under the driver-check
+    comparison of tools/verify_local.py; a query with no oracle gets that
+    tool's rows-only run."""
     import importlib.util
     import pathlib
 
@@ -446,14 +453,22 @@ def test_plan_level_guards_match_oracle_at_scale(spark, sf_dir, monkeypatch):
     assert exchange_partitions(load_table(spark, sf_dir, "documents")) is not None
     qs, oracles = entry.queries(), entry.oracle_sql()
     con = vl.duck_con(sf_dir)
-    for name in ("s1_window_counts", "b10_json_array_pack", "c26_line_dedup"):
-        sdf = qs[name](spark, sf_dir)
-        s_rows, s_cols = vl.normalize([tuple(r) for r in sdf.collect()], sdf.columns)
+    mismatched = []
+    for name, fn in qs.items():
+        sdf = fn(spark, sf_dir)
+        rows = [tuple(r) for r in sdf.collect()]
+        if name not in oracles:
+            continue
+        s_rows, s_cols = vl.normalize(rows, sdf.columns)
         cur = con.execute(oracles[name])
         o_rows, o_cols = vl.normalize(
             [tuple(r) for r in cur.fetchall()], [d[0] for d in cur.description]
         )
-        assert s_cols == o_cols, name
-        assert len(s_rows) == len(o_rows), name
-        assert s_rows, name
-        assert vl.rows_equal(s_rows, o_rows), name
+        if not (
+            s_rows
+            and s_cols == o_cols
+            and len(s_rows) == len(o_rows)
+            and vl.rows_equal(s_rows, o_rows)
+        ):
+            mismatched.append(name)
+    assert not mismatched, mismatched
