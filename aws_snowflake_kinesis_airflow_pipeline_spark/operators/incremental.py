@@ -25,19 +25,6 @@ Persist the corpus's band buckets and shingle sets once
 Cost per increment: O(|batch| + |candidates|) shuffle + one narrow corpus
 scan. Nothing corpus-sized is shuffled, re-tokenized, or re-MinHashed —
 the property that makes daily ingest against a 100 TB corpus feasible.
-
-Semantics of :func:`incremental_dedup_insert` (the greedy incremental
-analogue of :func:`.dedup.near_dup_dedup`): a batch doc is dropped when it
-near-duplicates any indexed corpus doc; the remaining batch docs are
-clustered among themselves (connected components over batch-batch pairs)
-and the minimum id of each cluster survives. This is the fixpoint-free
-online policy — corpus docs are never revisited, so survivors are stable
-across increments. Re-ingesting a batch after appending its survivors
-drops every doc that near-duplicates a kept doc (the reference's
-idempotent NOT-IN re-ingest, lifted to near-dup granularity); a doc whose
-only links were transitive — through cluster members that themselves got
-dropped — is legitimately re-admitted, the standard behavior of greedy
-online dedup.
 """
 
 from __future__ import annotations
@@ -52,7 +39,6 @@ from .dedup import (
     _hyperplanes,
     _posting_pairs,
     band_buckets,
-    connected_components,
     cosine_pairs_udf,
     doc_shingles,
     hyperplane_buckets_udf,
@@ -80,8 +66,6 @@ def write_minhash_index(
     num_hashes: int = 64,
     bands: int = 16,
     k: int = 3,
-    mode: str = "overwrite",
-    exclude_set_ids: DataFrame | None = None,
 ) -> None:
     """Persist the two per-document artifacts incremental dedup needs:
 
@@ -96,25 +80,14 @@ def write_minhash_index(
       column lives here — pruning this scan is what matters).
 
     One pass over ``df``: shingle sets are computed once and reused for
-    both signatures and the set store. ``mode="append"`` is the
-    increment path (see :func:`append_to_index`).
+    both signatures and the set store.
 
-    APPEND WRITE ORDER IS THE CRASH CONTRACT: sets first, buckets second,
-    so a document visible in ``buckets`` is guaranteed verifiable in
-    ``sets`` — buckets is the commit marker. Recovery probes (and replay
-    guards) must therefore key on ``buckets``: a crash between the two
-    writes leaves orphan set rows, which re-appends skip via
-    ``exclude_set_ids`` (the probe surface never saw the doc, so it is
-    correctly re-processed; only its set row must not double).
-
-    Fresh ``overwrite`` builds run the two writes CONCURRENTLY (guide
-    §2.6): they are independent jobs sharing the pinned shingle pass, and
-    overlapping them lets the buckets job's tasks back-fill the sets
-    job's straggler tail (same-sitting A/B at sf0.1: 6.1–6.9 s serial →
-    3.7–4.3 s overlapped). The ordering contract above protects only the
-    append path — an overwrite crash leaves a store that needs a rebuild
-    whichever order the writes ran in (old buckets can reference ids the
-    new sets no longer carry), so no recovery guarantee is weakened.
+    The two writes run CONCURRENTLY (guide §2.6): they are independent
+    jobs sharing the pinned shingle pass, and overlapping them lets the
+    buckets job's tasks back-fill the sets job's straggler tail
+    (same-sitting A/B at sf0.1: 6.1–6.9 s serial → 3.7–4.3 s overlapped).
+    A crash leaves a store that needs a rebuild whichever order the
+    writes ran in.
     """
     per_doc = doc_shingles(df, id_col, text_col, k).localCheckpoint(
         eager=False  # materializes inside the sets write, reused by buckets
@@ -123,13 +96,11 @@ def write_minhash_index(
         df, id_col, text_col, num_hashes, k, per_doc=per_doc
     )
     sets = per_doc.select(id_col, "hs", _set_bucket(id_col))
-    if exclude_set_ids is not None:
-        sets = sets.join(exclude_set_ids, id_col, "left_anti")
 
     def _write_sets() -> None:
         (
             sets.repartition("set_bucket")  # one writer wave per directory
-            .write.mode(mode)
+            .write.mode("overwrite")
             .partitionBy("set_bucket")
             .parquet(f"{path}/sets")
         )
@@ -138,15 +109,11 @@ def write_minhash_index(
         (
             band_buckets(sig, id_col, num_hashes, bands)
             .sortWithinPartitions("band_id", "band_hash")
-            .write.mode(mode)
+            .write.mode("overwrite")
             .parquet(f"{path}/buckets")
         )
 
-    if mode == "overwrite":
-        _run_concurrently(df.sparkSession, _write_sets, _write_buckets)
-    else:
-        _write_sets()
-        _write_buckets()
+    _run_concurrently(df.sparkSession, _write_sets, _write_buckets)
 
 
 def _run_concurrently(spark: SparkSession, *writes) -> None:
@@ -166,35 +133,6 @@ def _run_concurrently(spark: SparkSession, *writes) -> None:
     for exc in [fut.exception() for fut in futures]:
         if exc is not None:
             raise exc
-
-
-def append_to_index(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    path: str,
-    num_hashes: int = 64,
-    bands: int = 16,
-    k: int = 3,
-    exclude_set_ids: DataFrame | None = None,
-) -> None:
-    """Add a batch's documents (normally :func:`incremental_dedup_insert`
-    survivors) to an existing index. Append-only: hive partition append
-    creates no conflicts, and bucketing by id keeps fetch pruning exact.
-    ``exclude_set_ids``: ids whose SET rows already exist (orphans from a
-    crash between the sets and buckets writes) — their sets are skipped,
-    their buckets still appended."""
-    write_minhash_index(
-        df,
-        id_col,
-        text_col,
-        path,
-        num_hashes,
-        bands,
-        k,
-        mode="append",
-        exclude_set_ids=exclude_set_ids,
-    )
 
 
 def _verify_cross_pairs(
@@ -278,8 +216,7 @@ def incremental_near_dup_pairs(
     Returns (id1, id2, jaccard, vs) with id1 < id2; ``vs`` is ``corpus``
     for batch-vs-index matches and ``batch`` for batch-internal matches.
     Batch docs re-submitted with an id already in the index match
-    themselves at Jaccard 1.0 (``vs='corpus'``) — the signal
-    :func:`incremental_dedup_insert` uses for idempotent re-ingest.
+    themselves at Jaccard 1.0 (``vs='corpus'``).
     """
     # Batch-sized artifacts, each read by 2+ downstream joins. All pins
     # here are LAZY local checkpoints (round-12): blocks still build
@@ -352,78 +289,6 @@ def incremental_near_dup_pairs(
     )
 
 
-def incremental_dedup_insert(
-    spark: SparkSession,
-    new_df: DataFrame,
-    id_col: str,
-    text_col: str,
-    index_path: str,
-    num_hashes: int = 64,
-    bands: int = 16,
-    k: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Surviving rows of a new batch under the greedy incremental policy:
-    drop batch docs that near-duplicate any indexed doc (including exact
-    id re-ingest), then keep one representative (minimum id) per
-    batch-internal near-dup cluster. The caller appends survivors with
-    :func:`append_to_index` after whatever downstream gate it runs — the
-    reference's DQ-gate-then-publish ordering
-    (airflow/dags/snowflake_data_pipeline.py:154-202)."""
-    pairs = incremental_near_dup_pairs(
-        spark,
-        new_df,
-        id_col,
-        text_col,
-        index_path,
-        num_hashes,
-        bands,
-        k,
-        threshold,
-    )
-    return _greedy_insert(new_df, pairs, id_col)
-
-
-def _greedy_insert(
-    new_df: DataFrame, pairs: DataFrame, id_col: str
-) -> DataFrame:
-    """Apply the greedy incremental policy to a tagged pair list (the
-    module-docstring semantics, shared by the text and embedding paths):
-    drop batch docs with any ``vs='corpus'`` pair, cluster the remaining
-    ``vs='batch'`` pairs, keep each cluster's minimum id."""
-    pairs = pairs.localCheckpoint(eager=False)  # read by both consumers
-
-    new_ids = new_df.select(id_col)
-    corpus_dupped = (
-        pairs.filter(F.col("vs") == "corpus")
-        .select(F.col("id1").alias(id_col))
-        .union(pairs.filter(F.col("vs") == "corpus").select(F.col("id2").alias(id_col)))
-        .join(new_ids, id_col, "left_semi")  # keep only the batch-side ids
-        .distinct()
-    )
-    remaining = new_df.join(corpus_dupped, id_col, "left_anti")
-
-    # Cluster batch-internal pairs among docs that survived the corpus
-    # check (a pair whose partner was corpus-dropped must not drag the
-    # survivor down with it).
-    batch_pairs = (
-        pairs.filter(F.col("vs") == "batch")
-        .join(
-            corpus_dupped.select(F.col(id_col).alias("id1")), "id1", "left_anti"
-        )
-        .join(
-            corpus_dupped.select(F.col(id_col).alias("id2")), "id2", "left_anti"
-        )
-        .select("id1", "id2")
-    )
-    comps = connected_components(batch_pairs)
-    keepers = comps.groupBy("component").agg(F.min("id").alias(id_col))
-    drop = comps.join(
-        keepers.select(F.col(id_col).alias("id")), "id", "left_anti"
-    ).select(F.col("id").alias(id_col))
-    return remaining.join(drop, id_col, "left_anti")
-
-
 # --------------------------------------------------------------------------
 # Embedding (cosine) incremental dedup — the same store/probe/verify shape
 # over hyperplane-LSH buckets instead of MinHash bands.
@@ -463,7 +328,6 @@ def write_embedding_index(
     n_tables: int = 4,
     dim: int = 64,
     seed: int = 42,
-    mode: str = "overwrite",
 ) -> None:
     """Persist an embedding corpus for incremental cosine near-dup checks:
 
@@ -487,7 +351,7 @@ def write_embedding_index(
         (
             _embedding_buckets(df, id_col, vec_col, n_bits, n_tables, dim, seed)
             .sortWithinPartitions("table_id", "bucket")
-            .write.mode(mode)
+            .write.mode("overwrite")
             .parquet(f"{path}/buckets")
         )
 
@@ -499,60 +363,39 @@ def write_embedding_index(
                 _set_bucket(id_col),
             )
             .repartition("set_bucket")
-            .write.mode(mode)
+            .write.mode("overwrite")
             .partitionBy("set_bucket")
             .parquet(f"{path}/vectors")
         )
 
-    if mode == "overwrite":
-        # Fresh build: the two store writes are independent jobs over the
-        # same input plan — overlap them so the second job's tasks
-        # back-fill the first's straggler tail (guide §2.6). Crash
-        # exposure is unchanged: a failed overwrite leaves a partial
-        # store whichever order the writes ran in, and the recovery path
-        # is a rebuild. Appends stay sequential — interleaved appends
-        # would let a crash publish bucket rows with no matching vector
-        # rows in a LIVE store, which the sequential order bounds.
-        _run_concurrently(spark, _write_buckets, _write_vectors)
-    else:
-        _write_buckets()
-        _write_vectors()
-    if mode == "overwrite":
-        # One 4-int JSON row: written driver-side through the Hadoop FS
-        # API instead of a Spark job — a createDataFrame + coalesce(1)
-        # .write.json of a single row measured ~5 s at sf0.1 (whole-job
-        # scheduling + local-collection round trip for four integers;
-        # guide §5: the driver should do almost no data work, and this IS
-        # driver work). spark.read.json reads the bare file identically.
-        # The meta dir goes first: a store written by older code holds its
-        # meta as part-*.json, which spark.read.json would read next to
-        # the new file and could return instead of it.
-        fs, meta_dir, _ = _fs_for(spark, f"{path}/meta")
-        fs.delete(meta_dir, True)
-        _write_json_file(
-            spark,
-            f"{path}/meta/meta.json",
-            {"n_bits": n_bits, "n_tables": n_tables, "dim": dim, "seed": seed},
-        )
-
-
-def append_to_embedding_index(
-    df: DataFrame, id_col: str, vec_col: str, path: str
-) -> None:
-    """Add vectors to an existing embedding index under ITS parameters
-    (read from the meta file — the caller cannot drift the bucketing)."""
-    meta = _read_embedding_meta(df.sparkSession, path)
-    write_embedding_index(
-        df,
-        id_col,
-        vec_col,
-        path,
-        meta["n_bits"],
-        meta["n_tables"],
-        meta["dim"],
-        meta["seed"],
-        mode="append",
+    # The two store writes are independent jobs over the same input plan:
+    # overlap them so the second job's tasks back-fill the first's
+    # straggler tail (guide §2.6). A failed build leaves a partial store
+    # whichever order the writes ran in, and the recovery path is a
+    # rebuild.
+    _run_concurrently(spark, _write_buckets, _write_vectors)
+    # One 4-int JSON row: written driver-side through the Hadoop FS API
+    # instead of a Spark job — a createDataFrame + coalesce(1)
+    # .write.json of a single row measured ~5 s at sf0.1 (whole-job
+    # scheduling + local-collection round trip for four integers; guide
+    # §5: the driver should do almost no data work, and this IS driver
+    # work). spark.read.json reads the bare file identically. The meta
+    # dir goes first: a store written by older code holds its meta as
+    # part-*.json, which spark.read.json would read next to the new file
+    # and could return instead of it.
+    fs, meta_dir, _ = _fs_for(spark, f"{path}/meta")
+    fs.delete(meta_dir, True)
+    _write_json_file(
+        spark,
+        f"{path}/meta/meta.json",
+        {"n_bits": n_bits, "n_tables": n_tables, "dim": dim, "seed": seed},
     )
+
+
+def _fs_for(spark: SparkSession, path: str):
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
 
 
 def _write_json_file(spark: SparkSession, path: str, payload: dict) -> None:
@@ -693,154 +536,3 @@ def incremental_embedding_near_dups(
     )
     return cross_pairs.unionByName(batch_pairs)
 
-
-def incremental_embedding_insert(
-    spark: SparkSession,
-    new_df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    index_path: str,
-    threshold: float = 0.9,
-) -> DataFrame:
-    """Greedy-insert survivors of a vector batch (policy of
-    :func:`incremental_dedup_insert`, pair source =
-    :func:`incremental_embedding_near_dups`)."""
-    pairs = incremental_embedding_near_dups(
-        spark, new_df, id_col, vec_col, index_path, threshold
-    )
-    return _greedy_insert(new_df, pairs, id_col)
-
-
-# ---------------------------------------------------------------------------
-# Index compaction — the small-files maintenance pass
-# ---------------------------------------------------------------------------
-#
-# Every append writes its own parquet files into the store; a daily
-# increment cadence therefore grows each directory by one file-wave per
-# day until probe scans are dominated by file-open overhead and footer
-# reads (the classic production small-files failure). Compaction rewrites
-# each store directory as one fresh write-wave — same layout, same sort,
-# same hive partitioning, byte-equivalent probe results — sized from FILE
-# METADATA (no data pre-pass).
-#
-# Crash contract (single-maintainer, offline — the same assumption as any
-# LSH index resize): the swap is rename-based and self-healing. The dance
-# is  write {dir}__compacting  ->  rename {dir} to {dir}__old  ->  rename
-# {dir}__compacting to {dir}  ->  delete {dir}__old.  A crash before the
-# first rename leaves the store untouched (stale __compacting is deleted
-# on the next run); a crash between the renames is repaired by
-# _heal_swap (restores __old); a crash before the final delete leaves a
-# stale __old that the next run clears. On object stores without atomic
-# rename (S3) the rename is copy-based and the offline window is longer —
-# the contract is unchanged.
-
-_COMPACT_TARGET_BYTES = 128 * 1024 * 1024  # one healthy parquet file
-
-
-def _fs_for(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
-
-
-def _dir_bytes(spark: SparkSession, path: str) -> int:
-    fs, hpath, _ = _fs_for(spark, path)
-    return fs.getContentSummary(hpath).getLength()
-
-
-def count_parquet_files(spark: SparkSession, path: str) -> int:
-    """Data files under ``path`` (recursive) — the compaction metric."""
-    fs, hpath, _ = _fs_for(spark, path)
-    it = fs.listFiles(hpath, True)
-    n = 0
-    while it.hasNext():
-        f = it.next()
-        if f.getPath().getName().endswith(".parquet"):
-            n += 1
-    return n
-
-
-def _heal_swap(spark: SparkSession, final_dir: str) -> None:
-    """Recover from a crash mid-swap: a lingering __old with no live dir
-    is restored; lingering work dirs are cleared."""
-    fs, hpath, jvm = _fs_for(spark, final_dir)
-    Path = jvm.org.apache.hadoop.fs.Path
-    old, tmp = Path(final_dir + "__old"), Path(final_dir + "__compacting")
-    if fs.exists(old) and not fs.exists(hpath):
-        fs.rename(old, hpath)
-    if fs.exists(tmp):
-        fs.delete(tmp, True)
-    if fs.exists(old):
-        fs.delete(old, True)
-
-
-def _swap_in(spark: SparkSession, final_dir: str) -> None:
-    fs, hpath, jvm = _fs_for(spark, final_dir)
-    Path = jvm.org.apache.hadoop.fs.Path
-    old, tmp = Path(final_dir + "__old"), Path(final_dir + "__compacting")
-    if not fs.rename(hpath, old):
-        raise IOError(f"compaction swap: cannot move {final_dir} aside")
-    if not fs.rename(tmp, hpath):
-        fs.rename(old, hpath)  # roll back
-        raise IOError(f"compaction swap: cannot install {final_dir}")
-    fs.delete(old, True)
-
-
-def _compact_dir(
-    spark: SparkSession,
-    dir_path: str,
-    sort_cols: list[str] | None = None,
-    partition_col: str | None = None,
-) -> None:
-    _heal_swap(spark, dir_path)
-    df = spark.read.parquet(dir_path)
-    tmp = dir_path + "__compacting"
-    if partition_col is not None:
-        # One task per hive bucket -> one file per directory (the
-        # original writer's wave pattern over the unioned data).
-        out = df.repartition(partition_col)
-        out.write.partitionBy(partition_col).mode("overwrite").parquet(tmp)
-    else:
-        n = max(1, -(-_dir_bytes(spark, dir_path) // _COMPACT_TARGET_BYTES))
-        out = df.repartition(n)
-        if sort_cols:
-            out = out.sortWithinPartitions(*sort_cols)
-        out.write.mode("overwrite").parquet(tmp)
-    _swap_in(spark, dir_path)
-
-
-def compact_minhash_index(spark: SparkSession, path: str) -> dict:
-    """Rewrite a text index's store directories as single write-waves;
-    probe results are unchanged (pinned by test). Returns per-directory
-    file counts before/after for the maintenance log."""
-    stats = {}
-    for sub, sort_cols, part in (
-        ("buckets", ["band_id", "band_hash"], None),
-        ("sets", None, "set_bucket"),
-    ):
-        d = f"{path}/{sub}"
-        before = count_parquet_files(spark, d)
-        _compact_dir(spark, d, sort_cols, part)
-        stats[sub] = {
-            "files_before": before,
-            "files_after": count_parquet_files(spark, d),
-        }
-    return stats
-
-
-def compact_embedding_index(spark: SparkSession, path: str) -> dict:
-    """:func:`compact_minhash_index` for the embedding store (meta file
-    untouched — parameters survive compaction by construction)."""
-    stats = {}
-    for sub, sort_cols, part in (
-        ("buckets", ["table_id", "bucket"], None),
-        ("vectors", None, "set_bucket"),
-    ):
-        d = f"{path}/{sub}"
-        before = count_parquet_files(spark, d)
-        _compact_dir(spark, d, sort_cols, part)
-        stats[sub] = {
-            "files_before": before,
-            "files_after": count_parquet_files(spark, d),
-        }
-    return stats

@@ -23,8 +23,8 @@ Scale shape (the whole point of the operator):
 At 100 TB the doc-length/statistics pass and the postings pass both stream
 the corpus once; everything else is broadcast-sized.  For a *repeated*
 query workload you would persist the (doc, term, tf) postings table
-bucketed by term (``sources/storage.py``) and skip the scan — the scoring
-math here is unchanged.
+bucketed by term (``DataFrameWriter.bucketBy``) and skip the scan — the
+scoring math here is unchanged.
 
 BM25 formulation (the Lucene one, always non-negative):
 

@@ -19,13 +19,7 @@ step is one action: the per-batch counts ride the writes as ``Observation``
 metrics, and both tables are read under declared schemas, so no read
 launches a schema-inference job.
 
-Storage: parquet directories managed by path (works everywhere). The
-pipeline's own insert step stays the partitioned anti-join append below
-(it owns event_date partitioning and the per-batch insert metrics);
-``sources.storage.merge_insert_new`` provides the same insert-if-absent
-contract for unpartitioned path-managed tables, upgrading to ACID Delta
-MERGE when the runtime has the jar (feature-detected; not available in
-this container).
+Storage: parquet directories managed by path (works everywhere).
 """
 
 from __future__ import annotations
@@ -45,7 +39,6 @@ from ..operators.relational import (
     insert_dedup_anti_join,
 )
 from ..sources.json_landing import PARTITION_COLS, read_landing_stream
-from ..sources.storage import table_absent
 
 #: The events table as ``process_batch`` appends it: the landing columns
 #: without ``_corrupt_record`` and the ``file_name`` lineage column,
@@ -73,6 +66,14 @@ SUMMARY_SCHEMA = T.StructType(
         T.StructField("last_event", T.TimestampNTZType()),
     ]
 )
+
+
+def _table_absent(exc: Exception) -> bool:
+    """True only when the table's path does not exist yet. Both tables are
+    read under declared schemas, so an empty or markers-only directory (a
+    torn first write) reads as an empty table instead of raising. Anything
+    else (transient FS failure, torn file, permissions) must propagate."""
+    return "PATH_NOT_FOUND" in str(exc)
 
 
 @dataclass
@@ -119,7 +120,7 @@ class IngestPipeline:
         try:
             return self.events_table()
         except Exception as exc:
-            if table_absent(exc):
+            if _table_absent(exc):
                 return None
             raise
 
@@ -318,7 +319,7 @@ class IngestPipeline:
             # Only "summary doesn't exist yet" may fall back to new_part —
             # any other failure would overwrite the summary with just this
             # batch's dates, silently deleting every untouched date's rows.
-            if not table_absent(exc):
+            if not _table_absent(exc):
                 raise
             out = new_part
         # Write-temp-and-swap instead of in-place overwrite: the plan reads

@@ -2,9 +2,8 @@
 
 The contract under test: probing a persisted index with a new batch finds
 EXACTLY the pairs the batch LSH operator finds on the union corpus
-(restricted to pairs touching the batch), the greedy insert policy is
-deterministic and idempotent, and the probe plan never shuffles the
-corpus-side bucket store.
+(restricted to pairs touching the batch), and the probe plan never
+shuffles the corpus-side bucket store.
 """
 
 from __future__ import annotations
@@ -75,84 +74,6 @@ def test_incremental_pairs_match_batch_operator_on_union(
     for r in got.collect():
         n_batch = (r["id1"] in batch_ids) + (r["id2"] in batch_ids)
         assert n_batch == (1 if r["vs"] == "corpus" else 2)
-
-
-def test_insert_policy_greedy_and_deterministic(
-    spark, corpus_and_batch, index_path
-):
-    """Survivors = batch minus corpus-dups, minus non-minimum members of
-    batch-internal clusters — recomputed independently from the pair list
-    in plain Python."""
-    _, _, batch = corpus_and_batch
-    pairs = incremental.incremental_near_dup_pairs(
-        spark, batch, "doc_id", "text", index_path
-    ).collect()
-    batch_ids = {r["doc_id"] for r in batch.select("doc_id").collect()}
-
-    corpus_dropped = set()
-    for r in pairs:
-        if r["vs"] == "corpus":
-            corpus_dropped |= {r["id1"], r["id2"]} & batch_ids
-
-    # Union-find over batch pairs among the corpus-survivors.
-    parent: dict[int, int] = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for r in pairs:
-        if r["vs"] == "batch" and not (
-            {r["id1"], r["id2"]} & corpus_dropped
-        ):
-            ra, rb = find(r["id1"]), find(r["id2"])
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-    cluster_dropped = {x for x in parent if find(x) != x}
-    want = batch_ids - corpus_dropped - cluster_dropped
-
-    got = incremental.incremental_dedup_insert(
-        spark, batch, "doc_id", "text", index_path
-    )
-    assert {r["doc_id"] for r in got.select("doc_id").collect()} == want
-    assert corpus_dropped and cluster_dropped  # policy non-vacuous
-
-
-def test_reingest_is_idempotent(spark, corpus_and_batch, tmp_path):
-    """Appending survivors then re-running the same batch drops every doc:
-    survivors self-match at jaccard 1.0 via the index, non-survivors still
-    match whatever dropped them — the reference's idempotent re-ingest
-    contract (NOT IN insert) at near-dup granularity."""
-    _, corpus, batch = corpus_and_batch
-    path = str(tmp_path / "idx")
-    incremental.write_minhash_index(corpus, "doc_id", "text", path)
-    survivors = incremental.incremental_dedup_insert(
-        spark, batch, "doc_id", "text", path
-    )
-    incremental.append_to_index(survivors, "doc_id", "text", path)
-
-    rerun = incremental.incremental_dedup_insert(
-        spark, batch, "doc_id", "text", path
-    )
-    assert rerun.isEmpty()
-
-
-def test_append_equals_bulk_index(spark, corpus_and_batch, tmp_path):
-    """index(corpus) + append(batch) stores exactly the rows of
-    index(corpus ∪ batch) — increments don't drift from a rebuild."""
-    docs, corpus, batch = corpus_and_batch
-    inc_path, bulk_path = str(tmp_path / "inc"), str(tmp_path / "bulk")
-    incremental.write_minhash_index(corpus, "doc_id", "text", inc_path)
-    incremental.append_to_index(batch, "doc_id", "text", inc_path)
-    incremental.write_minhash_index(docs, "doc_id", "text", bulk_path)
-
-    for sub in ("buckets", "sets"):
-        a = spark.read.parquet(f"{inc_path}/{sub}")
-        b = spark.read.parquet(f"{bulk_path}/{sub}")
-        assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
 
 
 def test_probe_plan_broadcasts_batch_and_prunes_sets(
@@ -283,38 +204,14 @@ def test_embedding_incremental_matches_batch_operator(
     }
 
 
-def test_embedding_insert_and_append_roundtrip(
-    spark, emb_corpus_and_batch, tmp_path
-):
-    """Insert survivors, append them, re-run: everything self-matches at
-    cosine 1.0 and nothing is re-admitted (meta-file parameters make the
-    rebucketing bit-identical)."""
-    _, corpus, batch = emb_corpus_and_batch
-    path = str(tmp_path / "idx")
-    incremental.write_embedding_index(
-        corpus, "vec_id", "embedding", path, n_bits=8, n_tables=4
-    )
-    survivors = incremental.incremental_embedding_insert(
-        spark, batch, "vec_id", "embedding", path
-    ).localCheckpoint()
-    n_surv = survivors.count()
-    assert 0 < n_surv < batch.count()  # policy non-vacuous
-
-    incremental.append_to_embedding_index(survivors, "vec_id", "embedding", path)
-    rerun = incremental.incremental_embedding_insert(
-        spark, batch, "vec_id", "embedding", path
-    )
-    assert rerun.isEmpty()
-
-
 @pytest.mark.parametrize("seed", [3, 8])
 def test_probe_matches_batch_on_random_corpus(spark, tmp_path, seed):
     """Off-fixture replay of the probe ≡ batch contract (the
     test_oracle_parity_fuzz discipline applied here): a random corpus
-    with perturbation-planted near-dups, a random modulus split, the
-    full insert → append → replay cycle. Catches anything the fixture's
-    particular duplicate structure can't reach (singleton batches,
-    duplicate-free buckets, batch-only clusters)."""
+    with perturbation-planted near-dups and a random modulus split.
+    Catches anything the fixture's particular duplicate structure can't
+    reach (singleton batches, duplicate-free buckets, batch-only
+    clusters)."""
     import random
 
     rng = random.Random(seed)
@@ -352,99 +249,6 @@ def test_probe_matches_batch_on_random_corpus(spark, tmp_path, seed):
         if p[0] in batch_ids or p[1] in batch_ids
     }
     assert got == want
-
-    survivors = incremental.incremental_dedup_insert(
-        spark, batch, "doc_id", "text", path
-    ).localCheckpoint()
-    incremental.append_to_index(survivors, "doc_id", "text", path)
-    assert incremental.incremental_dedup_insert(
-        spark, batch, "doc_id", "text", path
-    ).isEmpty()
-    assert incremental.incremental_dedup_insert(
-        spark, survivors, "doc_id", "text", path
-    ).isEmpty()
-
-
-def test_compaction_preserves_probes_and_merges_files(spark, tmp_path):
-    """Three append waves fragment the store; compaction rewrites each
-    directory as one write-wave with probe results byte-identical and
-    strictly fewer data files. The embedding store's meta file must
-    survive untouched (probes re-bucket with the index's parameters)."""
-    docs = load_table(spark, SF_DIR, "documents")
-    waves = [docs.filter(F.col("doc_id") % 4 == i) for i in range(4)]
-    path = str(tmp_path / "idx")
-    incremental.write_minhash_index(waves[0], "doc_id", "text", path)
-    for w in waves[1:]:
-        incremental.append_to_index(w, "doc_id", "text", path)
-
-    probe = waves[3].withColumn("doc_id", F.col("doc_id") + 100000)
-    before_pairs = _pair_set(
-        incremental.incremental_near_dup_pairs(
-            spark, probe, "doc_id", "text", path
-        )
-    )
-    assert before_pairs  # planted duplicates make the probe non-vacuous
-    before_files = incremental.count_parquet_files(spark, f"{path}/sets")
-    stats = incremental.compact_minhash_index(spark, path)
-    assert _pair_set(
-        incremental.incremental_near_dup_pairs(
-            spark, probe, "doc_id", "text", path
-        )
-    ) == before_pairs
-    assert stats["sets"]["files_before"] == before_files
-    for sub in ("buckets", "sets"):
-        assert stats[sub]["files_after"] < stats[sub]["files_before"]
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    ewaves = [emb.filter(F.col("vec_id") % 3 == i) for i in range(3)]
-    epath = str(tmp_path / "eidx")
-    incremental.write_embedding_index(
-        ewaves[0], "vec_id", "embedding", epath, n_bits=8, n_tables=4
-    )
-    for w in ewaves[1:]:
-        incremental.append_to_embedding_index(w, "vec_id", "embedding", epath)
-    eprobe = ewaves[2].withColumn("vec_id", F.col("vec_id") + 100000)
-
-    def _cos_set(df):
-        return {(r["id1"], r["id2"], r["cosine"]) for r in df.collect()}
-
-    ebefore = _cos_set(
-        incremental.incremental_embedding_near_dups(
-            spark, eprobe, "vec_id", "embedding", epath
-        )
-    )
-    assert ebefore  # shifted ids self-match at cosine 1.0
-    estats = incremental.compact_embedding_index(spark, epath)
-    assert _cos_set(
-        incremental.incremental_embedding_near_dups(
-            spark, eprobe, "vec_id", "embedding", epath
-        )
-    ) == ebefore
-    for sub in ("buckets", "vectors"):
-        assert estats[sub]["files_after"] < estats[sub]["files_before"]
-
-
-def test_compaction_swap_self_heals(spark, tmp_path):
-    """A crash between the two swap renames leaves {dir}__old and no live
-    dir; the next compaction (or probe-prep) restores it losslessly."""
-    import shutil
-
-    docs = load_table(spark, SF_DIR, "documents").limit(50)
-    path = str(tmp_path / "idx")
-    incremental.write_minhash_index(docs, "doc_id", "text", path)
-    rows_before = spark.read.parquet(f"{path}/buckets").count()
-
-    shutil.move(f"{path}/buckets", f"{path}/buckets__old")  # mid-swap crash
-    incremental._heal_swap(spark, f"{path}/buckets")
-    assert spark.read.parquet(f"{path}/buckets").count() == rows_before
-
-    # stale work dir from a pre-rename crash is cleared, store untouched
-    shutil.copytree(f"{path}/sets", f"{path}/sets__compacting")
-    incremental._heal_swap(spark, f"{path}/sets")
-    import os
-
-    assert not os.path.exists(f"{path}/sets__compacting")
-    assert spark.read.parquet(f"{path}/sets").count() > 0
 
 
 def test_meta_file_written_driver_side_round_trips(spark, tmp_path):

@@ -34,8 +34,14 @@ def test_generator_shapes_match_reference_producer(spark):
     assert r["event_type"] in rate_events.EVENT_TYPES
     assert r["user_id"].startswith("user_")
     assert '"product_id"' in r["data"] and '"price"' in r["data"]
-    keyed = rate_events.keyed_for_stream_sink(batch).first()
-    assert keyed["key"].startswith("user_")  # PartitionKey=user_id
+    # K1, the keyed put: the JSON body parses back to the event, and the
+    # partition key is the user id on every row.
+    decoded = rate_events.keyed_for_stream_sink(batch).select(
+        "key", F.from_json("value", batch.schema).alias("e")
+    )
+    got = decoded.select("e.*").collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, rows))
+    assert decoded.filter(F.col("key") != F.col("e.user_id")).isEmpty()
 
 
 def test_landing_roundtrip_hive_partitioned_gzip(spark, dirs):
@@ -505,18 +511,23 @@ def test_within_batch_duplicate_on_two_dates(spark, dirs):
 
 
 def test_torn_first_events_write_reads_as_empty_target(spark, dirs):
-    """A first events write that crashed before committing leaves a
-    directory with no parquet files. Under the declared schema it reads as
-    an empty table, so the retry inserts every valid row."""
+    """A first events or summary write that crashed before committing
+    leaves a directory with no parquet files. Under the declared schema it
+    reads as an empty table, so the retry inserts every valid row and
+    writes the whole summary."""
     from aws_snowflake_kinesis_airflow_pipeline_spark.streaming.pipeline import (
         EVENTS_SCHEMA,
+        SUMMARY_SCHEMA,
     )
 
     landing, warehouse = dirs
     pipe = IngestPipeline(spark, landing, warehouse)
     os.makedirs(os.path.join(pipe.events_path, "_temporary", "0"))
+    os.makedirs(os.path.join(pipe.summary_path, "_temporary", "0"))
     torn = pipe._read_events_table()
     assert torn is not None and torn.schema == EVENTS_SCHEMA and torn.isEmpty()
+    torn = pipe.summary_table()
+    assert torn.schema == SUMMARY_SCHEMA and torn.isEmpty()
 
     _land(landing, "a", [_event(i) for i in range(12)])
     pipe.run_once()
@@ -657,54 +668,6 @@ def test_session_stream_equals_batch_and_gaps_islands(spark, tmp_path):
     }
     assert {(s, u, n) for s, u, n in got} == gi
     assert len(gi) == 6  # 3 sessions x 2 users
-
-
-def test_stateful_running_totals_stream_equals_batch(spark, tmp_path):
-    """applyInPandasWithState custom operator: final per-user totals from the
-    stream must equal the batch aggregation."""
-    from aws_snowflake_kinesis_airflow_pipeline_spark.streaming import stateful
-
-    path = str(tmp_path / "ev_state")
-    df = spark.createDataFrame(
-        [
-            (1, 10.0, BASE_TS),
-            (1, 5.5, BASE_TS + dt.timedelta(minutes=1)),
-            (2, 7.0, BASE_TS + dt.timedelta(minutes=2)),
-            (1, 2.5, BASE_TS + dt.timedelta(minutes=3)),
-        ],
-        "user_id long, value double, ts timestamp_ntz",
-    )
-    df.write.mode("overwrite").parquet(path)
-    stream = spark.readStream.schema(df.schema).parquet(path)
-    q = (
-        stateful.running_user_totals_stream(stream)
-        .writeStream.format("memory")
-        .queryName("t_state")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # latest emission per user == the running total after all input
-    import pyspark.sql.functions as SF
-
-    latest = (
-        spark.table("t_state")
-        .groupBy("user_id")
-        .agg(
-            SF.max("n_events").alias("n_events"),
-            SF.max("total_value").alias("total_value"),
-        )
-    )
-    got = {
-        r["user_id"]: (r["n_events"], round(r["total_value"], 6))
-        for r in latest.collect()
-    }
-    want = {
-        r["user_id"]: (r["n_events"], round(r["total_value"], 6))
-        for r in stateful.running_user_totals_batch(df).collect()
-    }
-    assert got == want
 
 
 def test_session_boundary_exactly_at_gap(spark, tmp_path):
