@@ -25,37 +25,3 @@ def variant_get(col: Column | str, path: str, cast: str | None = None) -> Column
     c = F.get_json_object(F.col(col) if isinstance(col, str) else col, f"$.{path}")
     return c.cast(cast) if cast else c
 
-
-def variant_pack(*cols: str) -> Column:
-    """Inverse of :func:`variant_get`: pack columns into a JSON string, the
-    write-side serialization the reference does with ``json.dumps`` before
-    loading (kinesis_to_snowflake.py:88)."""
-    return F.to_json(F.struct(*cols))
-
-
-def variant_parse(col: Column | str) -> Column:
-    """JSON string -> Spark 4 native ``VariantType`` (the engine-internal
-    binary form Snowflake's VARIANT actually is). ``try_parse_json``:
-    malformed input -> NULL variant, matching the pipeline's
-    ON_ERROR=CONTINUE posture rather than failing the batch."""
-    return F.try_parse_json(F.col(col) if isinstance(col, str) else col)
-
-
-def variant_get_native(
-    col: Column | str, path: str, cast: str = "string"
-) -> Column:
-    """:func:`variant_get` on the SURVEY §1.3 'idiomatic upgrade' path:
-    ``variant_get(parse_json(col), '$.path', type)`` over Spark 4's
-    native VariantType — one binary parse feeding typed extraction
-    (whole-stage codegen, no Python) instead of re-parsing the JSON
-    string per extracted field the way stacked ``get_json_object`` calls
-    do. Missing path -> NULL, malformed JSON -> NULL; value parity with
-    the JSON-string form is pinned by tests/test_relational.py.
-
-    The registered queries keep the JSON-string form: its values are
-    byte-portable to the DuckDB oracle, and the fixture's props column is
-    a JSON string either way (SURVEY §1.3). This function is the
-    drop-in for engines/callers already on Spark 4 variant storage.
-    """
-    src = F.col(col) if isinstance(col, str) else col
-    return F.variant_get(F.try_parse_json(src), f"$.{path}", cast)

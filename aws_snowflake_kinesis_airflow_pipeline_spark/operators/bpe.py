@@ -4,10 +4,9 @@ Byte-pair encoding (Sennrich et al. 2016, "Neural Machine Translation of
 Rare Words with Subword Units", arXiv:1508.07909): start from characters,
 repeatedly merge the most frequent adjacent symbol pair, keep the ordered
 merge list as the tokenizer. This module trains that merge list over a
-Spark corpus and applies it back distributedly — the missing piece next
-to the word-level frequency-rank vocab of :mod:`.encoding` (B42), which
-cannot represent unseen words at all; a BPE vocab degrades gracefully to
-subwords instead of UNK.
+Spark corpus — the missing piece next to the word-level frequency-rank
+vocab of :mod:`.encoding` (B42), which cannot represent unseen words at
+all; a BPE vocab degrades gracefully to subwords instead of UNK.
 
 Scale shape (the k-means / bigram-LM fit discipline, similarity.py /
 lm.py): BPE's fit state is BOUNDED BY DESIGN — a word-frequency table of
@@ -24,11 +23,6 @@ word counts for the same reason). Corpus passes:
    only driver-side data state — same bounded-collect contract as
    lm.py's vocab and similarity.py's k-means sample).
 
-Everything downstream of the fit is distributed: :func:`bpe_encode`
-applies the learned merges corpus-wide in an Arrow-batched pandas_udf
-with a per-batch word cache (Zipf makes the cache hit rate ~the corpus'
-type/token ratio).
-
 Determinism contract: ties on pair count break by (left, right)
 lexicographic ascending, and the word table order cannot affect the
 result (counts are summed per pair before the argmax) — the same corpus
@@ -37,7 +31,6 @@ always yields the same merge list on any cluster shape.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -140,10 +133,7 @@ def induce_bpe_merges(
     if max_fit_docs is not None:
         fit_ids = (
             docs.select(F.col(id_col))
-            .orderBy(
-                shuffle_hash(F.col(id_col), fit_seed, portable=True),
-                F.col(id_col),
-            )
+            .orderBy(shuffle_hash(F.col(id_col), fit_seed), F.col(id_col))
             .limit(max_fit_docs)
             # Lazy: materializes inside the word-count collect below.
             .localCheckpoint(eager=False)
@@ -162,81 +152,3 @@ def induce_bpe_merges(
     return _bpe_fit_on_counts(
         [(r["_w"], r["_c"]) for r in counts], n_merges, end_of_word
     )
-
-
-def bpe_segment_word(
-    word: str,
-    ranks: dict[tuple[str, str], int],
-    end_of_word: str = END_OF_WORD,
-) -> list[str]:
-    """Segment one word with a trained merge table: repeatedly apply the
-    LOWEST-RANK applicable merge (the standard BPE encoder). Applying
-    merges in training order reproduces the training segmentation for
-    any word the fit saw, and degrades to characters for unseen words."""
-    syms = list(word) + [end_of_word]
-    while len(syms) > 1:
-        best_rank, best_i = None, -1
-        for i in range(len(syms) - 1):
-            r = ranks.get((syms[i], syms[i + 1]))
-            if r is not None and (best_rank is None or r < best_rank):
-                best_rank, best_i = r, i
-        if best_rank is None:
-            break
-        syms[best_i : best_i + 2] = [syms[best_i] + syms[best_i + 1]]
-    return syms
-
-
-def bpe_encode(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    out_col: str = "bpe_tokens",
-    end_of_word: str = END_OF_WORD,
-) -> DataFrame:
-    """Append ``out_col``: the document's BPE subword sequence under the
-    trained ``merges`` — one Arrow-batched pandas_udf pass, no shuffle.
-
-    The merge table rides into the workers inside the UDF closure (K
-    pairs — broadcast-sized by construction); a per-batch word→pieces
-    cache makes the per-token cost ~a dict hit for all but each batch's
-    first sighting of a type.
-    """
-    import re
-
-    from ..functions.text import WS_CLASS
-
-    ranks = {p: i for i, p in enumerate(merges)}
-    # The engine's pinned whitespace class, NOT str.split(): Python splits
-    # on \v and unicode spaces too, which would desynchronize this encoder
-    # from tokens()/the fit for documents containing them. WS_CLASS holds
-    # regex escape sequences, which Python's re reads identically to the
-    # JVM regex tokens() compiles.
-    split_re = re.compile("[" + WS_CLASS + "]+")
-
-    @F.pandas_udf("array<string>")
-    def _enc(texts: pd.Series) -> pd.Series:
-        cache: dict[str, list[str]] = {}
-
-        def enc_text(t):
-            if t is None:
-                return []
-            out: list[str] = []
-            for w in split_re.split(t):
-                if not w:
-                    continue
-                pieces = cache.get(w)
-                if pieces is None:
-                    pieces = bpe_segment_word(w, ranks, end_of_word)
-                    cache[w] = pieces
-                out.extend(pieces)
-            return out
-
-        return texts.map(enc_text)
-
-    # Case-fold in the JVM (F.lower), the SAME engine the fit's
-    # _lower_tokens uses — Python str.lower() diverges from java.lang on
-    # locale-sensitive code points (U+0130 İ lowers to 'i̇' in Python,
-    # 2 chars), which would segment differently at encode time than the
-    # fit saw. Whitespace parity is pinned the same way (WS_CLASS note
-    # above); case-fold parity is now structural, not assumed.
-    return docs.withColumn(out_col, _enc(F.lower(F.col(text_col))))

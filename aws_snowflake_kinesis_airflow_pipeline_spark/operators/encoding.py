@@ -3,9 +3,9 @@
 The step between corpus curation and the trainer: induce a bounded
 vocabulary from corpus frequencies, then rewrite every document as an
 ``array<int>`` of token ids (OOV → id 0). Downstream, sequences feed
-``operators/chunking`` (windows), ``operators/packing`` (FFD packing) and
-``operators/sharding`` (export) — this module closes that loop for
-word-level tokenization (a trained BPE would slot in at the same seam).
+``operators/chunking`` (windows) and ``operators/packing`` (FFD packing) —
+this module closes that loop for word-level tokenization (a trained BPE
+would slot in at the same seam).
 
 Scale shape — deliberately ALL JVM, no Python in the row path:
 

@@ -27,8 +27,8 @@ Model definition (deterministic, oracle-replayable):
   no bigrams: ``lm_bigrams = 0``, ``lm_logprob = NULL``.
 * ``max_fit_docs``: when set, the model (vocabulary AND bigram counts) is
   fit on a bounded deterministic document sample — the ``max_fit_docs``
-  smallest ids under the portable md5 permutation (``sampling.
-  shuffle_hash(portable=True)``, so the DuckDB oracle replays the exact
+  smallest ids under the portable md5 permutation
+  (``sampling.shuffle_hash``, so the DuckDB oracle replays the exact
   sample) — and the full corpus is scored against it. Bigrams/contexts
   the sample never saw score with count 0 under the same add-k smoothing
   (this is the standard CCNet shape: KenLM is fit on a Wikipedia-sized
@@ -122,10 +122,7 @@ def bigram_lm_scores(
         proj = docs.select(F.col(id_col), F.col(text_col))
         fit_ids = (
             docs.select(F.col(id_col))
-            .orderBy(
-                shuffle_hash(F.col(id_col), fit_seed, portable=True),
-                F.col(id_col),
-            )
+            .orderBy(shuffle_hash(F.col(id_col), fit_seed), F.col(id_col))
             .limit(max_fit_docs)
             # Lazy pins: both materialize inside the bounded vocab collect
             # below (their first action), not as standalone jobs.

@@ -90,15 +90,6 @@ def media_metadata(media: DataFrame) -> DataFrame:
     )
 
 
-def encode_ppm(pixels: np.ndarray) -> bytes:
-    """Encode an (H, W, 3) uint8 array as binary PPM (P6)."""
-    a = np.asarray(pixels, dtype=np.uint8)
-    if a.ndim != 3 or a.shape[2] != 3:
-        raise ValueError("encode_ppm: expected (H, W, 3) uint8 pixels")
-    h, w = a.shape[:2]
-    return b"P6\n%d %d\n255\n" % (w, h) + a.tobytes()
-
-
 def decode_ppm(payload: bytes) -> np.ndarray:
     """Decode binary PPM (P6) to an (H, W, 3) uint8 array.
 

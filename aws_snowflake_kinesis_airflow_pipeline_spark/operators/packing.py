@@ -47,7 +47,7 @@ def pack_sequences(
     any cluster shape. ``hash_fn="md5"`` swaps the part hash for the
     engine-portable md5 bucket (sampling.hash_bucket) so a DuckDB oracle
     can replay the identical partitioning — xxhash64 exists only in
-    Spark. Same trick as deterministic_shuffle's portable permutation.
+    Spark. Same trick as sampling.shuffle_hash's md5 permutation.
     """
 
     def pack_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -133,29 +133,3 @@ def dq_counts(events: DataFrame) -> DataFrame:
     back to back (reference airflow/dags/snowflake_data_pipeline.py:154-170).
     crossJoin combines two single-row aggregates (bounded 1x1)."""
     return duplicate_count(events).crossJoin(incomplete_count(events))
-
-
-def dq_gate(events: DataFrame) -> None:
-    """The reference's quality gate: raise if duplicates or incomplete rows
-    exist (reference airflow/dags/snowflake_data_pipeline.py:181-202).
-
-    Single job: both counts computed in one pass via conditional aggregation
-    rather than two separate actions.
-    """
-    dup = duplicate_count(events)
-    row = (
-        events.agg(
-            F.sum(F.when(incomplete_predicate(), 1).otherwise(0)).alias(
-                "incomplete"
-            )
-        )
-        .crossJoin(dup)
-        .first()
-    )
-    n_incomplete = row["incomplete"] or 0
-    n_dup = row["duplicate_count"] or 0
-    if n_dup > 0 or n_incomplete > 0:
-        raise ValueError(
-            f"Data quality check failed: {n_dup} duplicate event_ids, "
-            f"{n_incomplete} incomplete rows"
-        )

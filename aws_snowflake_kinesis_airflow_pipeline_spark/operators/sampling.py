@@ -46,41 +46,12 @@ def with_split(
     )
 
 
-def deterministic_sample(
-    df: DataFrame, key_col: str, fraction: float, buckets: int = 10000
-) -> DataFrame:
-    """Keep ~fraction of rows, chosen by content hash — stable across runs,
-    partitionings, and engines (unlike df.sample)."""
-    return df.filter(hash_bucket(key_col, buckets) < round(fraction * buckets))
-
-
-def stratified_deterministic_sample(
-    df: DataFrame, key_col: str, stratum_col: str, fractions: dict[str, float],
-    buckets: int = 10000,
-) -> DataFrame:
-    """Per-stratum deterministic sampling (e.g. downsample dominant
-    languages): fraction chosen per stratum value, selection still pure
-    content hash."""
-    b = hash_bucket(key_col, buckets)
-    cond = None
-    for stratum, frac in fractions.items():
-        p = (F.col(stratum_col) == stratum) & (b < round(frac * buckets))
-        cond = p if cond is None else (cond | p)
-    # NULL strata behave like unlisted ones (kept whole): `~isin` alone
-    # evaluates NULL for NULL values and filter() would silently drop them.
-    other = F.col(stratum_col).isNull() | ~F.col(stratum_col).isin(
-        list(fractions)
-    )
-    return df.filter(cond | other)
-
-
 def per_group_cap(
     df: DataFrame,
     key_col: str,
     group_col: str,
     cap: int,
     seed: int = 0,
-    portable: bool = False,
 ) -> DataFrame:
     """Keep at most ``cap`` rows per group, chosen deterministically.
 
@@ -100,9 +71,7 @@ def per_group_cap(
     from pyspark.sql.window import Window
 
     c = F.col(key_col)
-    w = Window.partitionBy(group_col).orderBy(
-        shuffle_hash(c, seed, portable), c
-    )
+    w = Window.partitionBy(group_col).orderBy(shuffle_hash(c, seed), c)
     return (
         df.withColumn("sample_rank", F.row_number().over(w))
         .filter(F.col("sample_rank") <= cap)
@@ -116,7 +85,6 @@ def per_group_weight_budget(
     weight_col: str,
     budget: int,
     seed: int = 0,
-    portable: bool = False,
 ) -> DataFrame:
     """Keep rows, in deterministic hash order, until each group's running
     weight total would exceed ``budget``.
@@ -138,7 +106,7 @@ def per_group_weight_budget(
     c = F.col(key_col)
     w = (
         Window.partitionBy(group_col)
-        .orderBy(shuffle_hash(c, seed, portable), c)
+        .orderBy(shuffle_hash(c, seed), c)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
@@ -149,43 +117,14 @@ def per_group_weight_budget(
     )
 
 
-def shuffle_hash(
-    col: Column | str, seed: int = 0, portable: bool = False
-) -> Column:
+def shuffle_hash(col: Column | str, seed: int = 0) -> Column:
     """The (seed, key) -> int64 hash whose sort order IS the training-order
-    permutation. Default xxhash64 (JVM-native, cheapest). ``portable=True``
-    derives the permutation from md5 instead — bit-identical in any engine
-    (the DuckDB oracle recomputes it), at ~3x the hash cost; use it where
-    an external system must reproduce the order."""
+    permutation: the first 8 hex chars of md5("seed:key") as an integer —
+    bit-identical in any engine, so the DuckDB oracle recomputes every
+    order it selects (xxhash64 is cheaper but JVM-only)."""
     c = F.col(col) if isinstance(col, str) else col
-    if portable:
-        h = F.md5(F.concat_ws(":", F.lit(seed), c.cast("string")))
-        return F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-    return F.xxhash64(F.lit(seed), c)
-
-
-def deterministic_shuffle(
-    df: DataFrame, key_col: str, seed: int = 0, portable: bool = False
-) -> DataFrame:
-    """Global pseudo-random training order as a pure function of (seed,
-    key): sort by shuffle_hash(seed, key). Reproducible on any cluster
-    shape — unlike orderBy(rand()) the order survives reruns, repartitions,
-    and speculative retries, and changing the seed gives an independent
-    epoch permutation.
-
-    At scale this is one range-partitioned sort (Spark samples hash bounds,
-    then each partition sorts locally); downstream sequence packing /
-    sharded writers consume the order partition-by-partition without any
-    further shuffle.
-
-    Contract: ``key_col`` must uniquely identify rows (a document id). The
-    sort key is (shuffle_hash(seed, key), key), which is total for unique
-    keys; rows *sharing* a key value tie on both components and their
-    relative order would again be partition-dependent — dedup first (this
-    module's neighbors exist for exactly that).
-    """
-    c = F.col(key_col)
-    return df.orderBy(shuffle_hash(c, seed, portable), c)
+    h = F.md5(F.concat_ws(":", F.lit(seed), c.cast("string")))
+    return F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
 
 
 def with_shuffle_rank(
@@ -193,21 +132,26 @@ def with_shuffle_rank(
     key_col: str,
     seed: int = 0,
     partition_by: list[str] | None = None,
-    portable: bool = False,
 ) -> DataFrame:
-    """Materialize the deterministic-shuffle position as a ``shuffle_rank``
-    column (1-based within each ``partition_by`` group, e.g. per split) —
-    the checkable form of :func:`deterministic_shuffle`'s ordering.
+    """Global pseudo-random training order as a pure function of (seed,
+    key), materialized as a ``shuffle_rank`` column (1-based within each
+    ``partition_by`` group, e.g. per split): the row's position in
+    (shuffle_hash(seed, key), key) order. Unlike orderBy(rand()) the order
+    survives reruns, repartitions and speculative retries, and changing
+    the seed gives an independent epoch permutation.
+
+    Contract: ``key_col`` must uniquely identify rows (a document id); rows
+    sharing a key tie on both sort components and their relative order
+    would again be partition-dependent — dedup first.
 
     ``partition_by`` is required in spirit at scale: an un-partitioned rank
     is a single-partition window. Feed trainers per-split / per-shard ranks
-    (bounded partitions) or use deterministic_shuffle's range sort, which
-    never materializes a global row number.
+    (bounded partitions).
     """
     from pyspark.sql.window import Window
 
     c = F.col(key_col)
-    order = [shuffle_hash(c, seed, portable), c]
+    order = [shuffle_hash(c, seed), c]
     w = (
         Window.partitionBy(*partition_by).orderBy(*order)
         if partition_by

@@ -66,30 +66,6 @@ def with_lsh_buckets(
     return _spread(df).withColumn("lsh_bucket", bucket_fn(v).getItem(0))
 
 
-def write_lsh_index(
-    df: DataFrame,
-    vec_col: str,
-    path: str,
-    n_bits: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-    mode: str = "overwrite",
-) -> None:
-    """Persist the corpus hive-partitioned by its LSH bucket — the storage
-    half of the ANN contract (SURVEY §7 partition discipline): index once,
-    then every probe is directory-level partition pruning instead of a
-    full scan + re-bucketing per query. ≤2^n_bits directories; at 8 bits
-    and 1000 files per bucket that is ~256k files — raise n_bits only
-    alongside a compaction policy."""
-    (
-        with_lsh_buckets(df, vec_col, n_bits, dim, seed)
-        .repartition("lsh_bucket")  # one writer wave per bucket, no tiny files
-        .write.mode(mode)
-        .partitionBy("lsh_bucket")
-        .parquet(path)
-    )
-
-
 def probe_buckets(
     query_vec: list[float],
     n_bits: int = 8,
@@ -98,7 +74,7 @@ def probe_buckets(
     probe_hamming: int = 1,
 ) -> list[int]:
     """The query's bucket plus all buckets within ``probe_hamming`` sign
-    flips — the probe set shared by lsh_topk and the persisted-index path."""
+    flips — the probe set :func:`lsh_topk` reads."""
     from itertools import combinations
 
     qb = _bucket_of(query_vec, n_bits, dim, seed)
@@ -110,30 +86,6 @@ def probe_buckets(
                 flip |= 1 << b
             probes.append(qb ^ flip)
     return probes
-
-
-def lsh_topk_indexed(
-    spark,
-    index_path: str,
-    vec_col: str,
-    id_col: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_bits: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-    probe_hamming: int = 1,
-    exclude_ids: list[int] | None = None,
-) -> DataFrame:
-    """Approximate top-k against a :func:`write_lsh_index` layout: the
-    bucket filter hits the partition column, so the scan reads only the
-    probed directories (asserted as a plan invariant in tests/test_plans.py)
-    — the at-scale form of :func:`lsh_topk`, which re-buckets the corpus on
-    every call."""
-    probes = probe_buckets(query_vec, n_bits, dim, seed, probe_hamming)
-    indexed = spark.read.parquet(index_path)
-    subset = indexed.filter(F.col("lsh_bucket").isin(probes))
-    return brute_force_topk(subset, vec_col, id_col, query_vec, k, exclude_ids)
 
 
 def _bucket_of(query_vec: list[float], n_bits: int, dim: int, seed: int) -> int:

@@ -135,7 +135,7 @@ def c1_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     v1 = docs.select("doc_id", "text")
     bucketed = v1.withColumn(
-        "_b", shuffle_hash(F.col("doc_id"), seed=_DIFF_SEED, portable=True) % 10
+        "_b", shuffle_hash(F.col("doc_id"), seed=_DIFF_SEED) % 10
     )
     v2 = (
         bucketed.filter(F.col("_b") != 0)
@@ -287,7 +287,7 @@ def c2_minhash_lsh_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("pairs").alias("branch"), "id1", "id2", "jaccard"
     )
 
-    half = shuffle_hash(F.col("doc_id"), seed=_INC_SEED, portable=True) % 2
+    half = shuffle_hash(F.col("doc_id"), seed=_INC_SEED) % 2
     indexed = docs.filter(half == 0)
     batch = docs.filter(half == 1)
     # Fresh per-invocation index (see _build_index_dir): the write→probe
@@ -504,7 +504,7 @@ def c5_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         all_v, "vec_id", "embedding", threshold=0.9
     ).select(F.lit("pairs").alias("branch"), "id1", "id2", "cosine")
 
-    half = shuffle_hash(F.col("vec_id"), seed=_INC_SEED, portable=True) % 2
+    half = shuffle_hash(F.col("vec_id"), seed=_INC_SEED) % 2
     corpus = all_v.filter(half == 0)
     batch = all_v.filter(half == 1)
     path = _build_index_dir(
@@ -1334,9 +1334,7 @@ def c17_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir)
     split_df = with_split(docs, "text", val_fraction=0.1)
-    ranked = with_shuffle_rank(
-        split_df, "doc_id", seed=7, partition_by=["split"], portable=True
-    )
+    ranked = with_shuffle_rank(split_df, "doc_id", seed=7, partition_by=["split"])
     plain = ranked.select(
         F.lit("plain").alias("branch"),
         "doc_id",
@@ -2176,16 +2174,14 @@ def c25_sample_caps_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).select(
         "doc_id", "source", TX.token_count("text").alias("n_tok")
     )
-    cap = per_group_cap(
-        docs, "doc_id", "source", cap=15, seed=5, portable=True
-    ).select(
+    cap = per_group_cap(docs, "doc_id", "source", cap=15, seed=5).select(
         F.lit("cap").alias("branch"),
         "source",
         "doc_id",
         F.col("sample_rank").cast("long").alias("pos"),
     )
     budget = per_group_weight_budget(
-        docs, "doc_id", "source", "n_tok", budget=700, seed=5, portable=True
+        docs, "doc_id", "source", "n_tok", budget=700, seed=5
     ).select(
         F.lit("budget").alias("branch"),
         "source",

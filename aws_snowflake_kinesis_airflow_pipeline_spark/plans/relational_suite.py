@@ -258,19 +258,6 @@ def b3_outer_semi_anti_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     return left_count.unionByName(semi).unionByName(anti)
 
 
-def b4_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """orderBy+limit compiles to TakeOrderedAndProject: each partition keeps
-    its local top-25, the driver merges k*numPartitions rows — no global
-    sort at any scale. (Unregistered: q3 and ref_raw_data_limit carry the
-    top-k driver check; this stays for the plan-shape test.)"""
-    return (
-        _t(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-        .limit(25)
-    )
-
-
 # --------------------------------------------------------------------------
 # B5 — window functions
 # --------------------------------------------------------------------------

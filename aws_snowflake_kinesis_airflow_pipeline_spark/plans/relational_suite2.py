@@ -1,6 +1,7 @@
-"""Additional relational shapes: simple-predicate aggregate (TPC-H Q6),
-pivot, scalar subquery, correlated-count filter, CTE — rounding out the SQL
-surface a Snowflake user would expect (SURVEY.md §2 Part B widening).
+"""Additional relational shapes: scalar subquery, correlated-count filter,
+as-of join, order-normalized collect, correlated EXISTS (TPC-H Q4), range
+join, CTE — rounding out the SQL surface a Snowflake user would expect
+(SURVEY.md §2 Part B widening).
 """
 
 from __future__ import annotations
@@ -14,48 +15,6 @@ from .registry import register
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
-
-
-def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6: all four predicates push to the parquet scan; the aggregate
-    is a single partial+final sum — pure scan throughput at any scale.
-    (Unregistered: q1 carries the scan-aggregate driver check; this stays
-    as a bench/plan-shape specimen.)"""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp_ntz"))
-            & F.col("l_discount").between(0.05, 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias(
-                "revenue"
-            )
-        )
-    )
-
-
-def b_pivot_status_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot with explicit values — explicit value lists keep the plan a
-    single pass (no distinct-values pre-query) and fix output columns.
-
-    Unregistered since round 5: the driver-checked pivot now lives in
-    ``b6_grouping_pack``'s 'pivot' branch (same operator, shared oracle);
-    the wide-output form stays here as a library/bench specimen."""
-    orders = _t(spark, sf_dir, "orders")
-    pivoted = (
-        orders.groupBy("o_orderpriority")
-        .pivot("o_orderstatus", ["O", "F", "P"])
-        .agg(F.count(F.lit(1)))  # pivot disallows the star form of count
-    )
-    return pivoted.select(
-        "o_orderpriority",
-        F.coalesce(F.col("O"), F.lit(0)).alias("n_open"),
-        F.coalesce(F.col("F"), F.lit(0)).alias("n_filled"),
-        F.coalesce(F.col("P"), F.lit(0)).alias("n_pending"),
-    )
 
 
 @register(

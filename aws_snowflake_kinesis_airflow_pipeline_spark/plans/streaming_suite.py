@@ -275,9 +275,7 @@ def s1_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # B44/B45 batch twins: cohort matrix keyed by its cohort week in
     # window_start (offset stringified into the type slot), transition
-    # counts keyed as 'from->to'. The rate/probability projections
-    # (retention_rates / transition_matrix) are trivial broadcasts over
-    # these counts, pinned by tests/test_retention.py / test_transitions.py.
+    # counts keyed as 'from->to'.
     retention = cohort_retention(ev, period="week").select(
         F.lit("retention").alias("op"),
         F.col("cohort").alias("window_start"),

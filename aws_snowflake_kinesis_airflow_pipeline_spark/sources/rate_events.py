@@ -1,6 +1,7 @@
-"""Synthetic event generator — the reference's producer re-expressed as a
-rate-source streaming query (reference scripts/kinesis_data_producer.py:17-37:
-uuid event_id, ISO timestamp, random type/user/product, keyed put).
+"""Synthetic event generator — the reference's producer re-expressed as
+column expressions over a rate-source-shaped (timestamp, value) frame
+(reference scripts/kinesis_data_producer.py:17-37: uuid event_id, ISO
+timestamp, random type/user/product, keyed put).
 
 One process, all column expressions JVM-side; the Kinesis partition key
 becomes an explicit ``key`` column (what a kafka/kinesis sink would hash).
@@ -56,18 +57,9 @@ def _event_columns(df: DataFrame) -> DataFrame:
     )
 
 
-def event_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    """Unbounded producer stream (reference emits 1/s; rate is a knob)."""
-    raw = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-    )
-    return _event_columns(raw)
-
-
 def event_batch(spark: SparkSession, n: int) -> DataFrame:
-    """Bounded equivalent for tests: same column pipeline over spark.range."""
+    """``n`` producer events: the column pipeline over spark.range, one
+    event per second from 2024-01-01 (the reference emits 1/s)."""
     raw = spark.range(n).withColumn(
         "timestamp",
         (F.lit("2024-01-01 00:00:00").cast("timestamp") + F.make_dt_interval(

@@ -16,8 +16,6 @@ from hypothesis import given, settings, strategies as st
 
 from aws_snowflake_kinesis_airflow_pipeline_spark.operators.bpe import (
     END_OF_WORD,
-    bpe_encode,
-    bpe_segment_word,
     induce_bpe_merges,
 )
 
@@ -62,7 +60,7 @@ def ref_bpe(word_counts, n_merges):
             nk = " ".join(out)
             new_vocab[nk] = new_vocab.get(nk, 0) + c
         vocab = new_vocab
-    return merges, vocab
+    return merges
 
 
 #: The classic subword corpus (low/lower/newest/widest). Hand derivation
@@ -96,7 +94,7 @@ def _corpus_df(spark, word_counts):
 def test_sennrich_fixture_matches_hand_derivation(spark):
     got = induce_bpe_merges(_corpus_df(spark, SENNRICH_COUNTS), n_merges=8)
     assert got == SENNRICH_MERGES_8
-    ref, _ = ref_bpe(SENNRICH_COUNTS, 8)
+    ref = ref_bpe(SENNRICH_COUNTS, 8)
     assert ref == SENNRICH_MERGES_8
 
 
@@ -116,67 +114,8 @@ def test_operator_matches_reference_replay(spark, wc, k):
     budget — including early stop when pair counts dry up."""
     # Collapse duplicate word entries the way a corpus would.
     got = induce_bpe_merges(_corpus_df(spark, wc), n_merges=k)
-    ref, _ = ref_bpe(wc, k)
+    ref = ref_bpe(wc, k)
     assert got == ref
-
-
-@given(wc=corpus)
-@SETTINGS
-def test_encoder_reproduces_training_segmentation(spark, wc):
-    """Rank-greedy encoding with the trained table must reproduce the
-    training-end segmentation of every fit word (the standard BPE
-    round-trip invariant), and each word's pieces must concatenate back
-    to word + sentinel (no token ever lost or fabricated)."""
-    merges = induce_bpe_merges(_corpus_df(spark, wc), n_merges=20)
-    _, final_vocab = ref_bpe(wc, 20)
-    training_seg = {
-        "".join(k.split(" ")).removesuffix(END_OF_WORD): k.split(" ")
-        for k in final_vocab
-    }
-    ranks = {p: i for i, p in enumerate(merges)}
-    for w, _ in wc:
-        seg = bpe_segment_word(w, ranks)
-        assert "".join(seg) == w + END_OF_WORD
-        assert seg == training_seg[w]
-
-
-def test_bpe_encode_dataframe_pass(spark):
-    merges = induce_bpe_merges(_corpus_df(spark, SENNRICH_COUNTS), n_merges=8)
-    df = spark.createDataFrame(
-        [(1, "newest lowest"), (2, None), (3, "")],
-        "doc_id long, text string",
-    )
-    rows = {
-        r["doc_id"]: r["bpe_tokens"]
-        for r in bpe_encode(df, merges).collect()
-    }
-    # 'newest' was fit: full word. 'lowest' was NOT fit: subword pieces
-    # 'low' + 'est</w>' — the graceful-degradation property word-level
-    # vocabs lack.
-    assert rows[1] == ["n" + "ewest" + END_OF_WORD, "low", "est" + END_OF_WORD]
-    assert rows[2] == [] and rows[3] == []
-
-
-def test_encode_case_folds_with_the_fit_engine(spark):
-    """Fit and encode must lowercase with the SAME engine (JVM F.lower on
-    both paths). U+0130 (İ) is the classic divergence: Python str.lower()
-    expands it to 'i' + U+0307 (2 chars) while java.lang.String keeps 1 —
-    a Python-side fold would segment fit-seen words differently at encode
-    time. The pin: encoding the corpus the fit saw reproduces the fit's
-    own segmentation, dotted capital I included."""
-    df = spark.createDataFrame(
-        [(i, "İstanbul İstanbul newest") for i in range(4)],
-        "doc_id long, text string",
-    )
-    merges = induce_bpe_merges(df, n_merges=12)
-    jvm_lower = df.selectExpr("lower('İstanbul') AS w").first()["w"]
-    ranks = {p: i for i, p in enumerate(merges)}
-    rows = bpe_encode(df.limit(1), merges).first()["bpe_tokens"]
-    seg = bpe_segment_word(jvm_lower, ranks)
-    # The encoded doc's first word is exactly the fit-engine segmentation
-    # of the JVM-lowered word, and the pieces round-trip to it.
-    assert rows[: len(seg)] == seg
-    assert "".join(seg) == jvm_lower + END_OF_WORD
 
 
 def test_bounded_sample_and_early_stop(spark):

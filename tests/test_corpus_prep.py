@@ -296,14 +296,12 @@ def test_group_caps_match_duckdb_on_random_corpus(spark):
     )
     got_cap = sorted(
         (r["source"], r["doc_id"], r["sample_rank"])
-        for r in per_group_cap(
-            docs, "doc_id", "source", cap=9, seed=5, portable=True
-        ).collect()
+        for r in per_group_cap(docs, "doc_id", "source", cap=9, seed=5).collect()
     )
     got_budget = sorted(
         (r["source"], r["doc_id"], r["cum_weight"])
         for r in per_group_weight_budget(
-            docs, "doc_id", "source", "n_tok", budget=120, seed=5, portable=True
+            docs, "doc_id", "source", "n_tok", budget=120, seed=5
         ).collect()
     )
     con = duckdb.connect()

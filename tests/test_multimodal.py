@@ -1,13 +1,24 @@
 """Multimodal plumbing tests: schema, Arrow batch shape, deterministic
-fake-decode kernel, frame-sample plan, stubbed real decoder."""
+fake-decode kernel, frame-sample plan, PPM decode and its rejections,
+nearest-neighbor resize, pixel stats."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from aws_snowflake_kinesis_airflow_pipeline_spark.catalog import load_table
 from aws_snowflake_kinesis_airflow_pipeline_spark.operators import multimodal
+
+
+def encode_ppm(pixels: np.ndarray) -> bytes:
+    """Encode an (H, W, 3) uint8 array as binary PPM (P6)."""
+    a = np.asarray(pixels, dtype=np.uint8)
+    if a.ndim != 3 or a.shape[2] != 3:
+        raise ValueError("encode_ppm: expected (H, W, 3) uint8 pixels")
+    h, w = a.shape[:2]
+    return b"P6\n%d %d\n255\n" % (w, h) + a.tobytes()
 
 
 def test_documents_as_media_schema(spark, sf_dir):
@@ -48,10 +59,8 @@ def test_frame_sample_plan(spark):
 
 
 def test_ppm_roundtrip_tiny_planted_image():
-    import numpy as np
-
     px = np.arange(2 * 3 * 3, dtype=np.uint8).reshape(2, 3, 3)
-    payload = multimodal.encode_ppm(px)
+    payload = encode_ppm(px)
     assert payload.startswith(b"P6\n3 2\n255\n")
     out = multimodal.decode_ppm(payload)
     assert out.shape == (2, 3, 3)
@@ -59,8 +68,6 @@ def test_ppm_roundtrip_tiny_planted_image():
 
 
 def test_ppm_header_comments_and_whitespace():
-    import numpy as np
-
     px = np.full((1, 2, 3), 7, dtype=np.uint8)
     payload = b"P6 # a comment\n# another\n 2\t1 \n255\n" + px.tobytes()
     out = multimodal.decode_ppm(payload)
@@ -89,8 +96,6 @@ def test_decode_image_rejects_malformed(payload):
 
 
 def test_resize_nearest():
-    import numpy as np
-
     px = np.array(
         [[[0, 0, 0], [10, 10, 10]], [[20, 20, 20], [30, 30, 30]]],
         dtype=np.uint8,
@@ -105,9 +110,7 @@ def test_resize_nearest():
 
 
 def test_extract_pixel_stats_real_decode_and_quarantine(spark):
-    import numpy as np
-
-    good = multimodal.encode_ppm(
+    good = encode_ppm(
         np.array([[[10, 20, 30], [50, 60, 70]]], dtype=np.uint8)
     )
     media = spark.createDataFrame(

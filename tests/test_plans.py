@@ -4,8 +4,6 @@ scans, bounded dims broadcast, top-k avoids global sorts."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from aws_snowflake_kinesis_airflow_pipeline_spark.plans.registry import QUERIES
@@ -35,17 +33,6 @@ def test_b2_dims_broadcast(spark, sf_dir):
 
 
 def test_topk_uses_take_ordered(spark, sf_dir):
-    from aws_snowflake_kinesis_airflow_pipeline_spark.plans.relational_suite import (
-        b4_topk_orders,
-    )
-
-    df = b4_topk_orders(spark, sf_dir)
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    assert "TakeOrderedAndProject" in plan
     assert "TakeOrderedAndProject" in plan_of(
         spark, "q3_shipping_priority", sf_dir
     )
@@ -152,25 +139,6 @@ def test_minhash_signatures_are_shuffle_free(spark, sf_dir):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
-def test_q6_all_predicates_push_to_scan(spark, sf_dir):
-    """TPC-H Q6 (unregistered bench specimen): all four predicates must
-    reach the parquet scan as pushed filters."""
-    from aws_snowflake_kinesis_airflow_pipeline_spark.plans.relational_suite2 import (
-        q6_forecast_revenue,
-    )
-
-    df = q6_forecast_revenue(spark, sf_dir)
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    pushed = plan.split("PushedFilters:", 1)[1].splitlines()[0]
-    assert "l_shipdate" in pushed
-    assert "l_discount" in pushed
-    assert "l_quantity" in pushed
-
-
 def test_events_column_pruning_through_ns_normalization(spark, sf_dir):
     """The catalog's ts-conversion projection must not defeat column
     pruning: a query not touching ts reads only its own columns."""
@@ -192,50 +160,6 @@ def test_events_column_pruning_through_ns_normalization(spark, sf_dir):
 def test_anti_join_is_join_not_subquery_scan(spark, sf_dir):
     plan = plan_of(spark, "ref_insert_dedup_anti_join", sf_dir)
     assert "LeftAnti" in plan
-
-
-def test_lsh_index_probe_prunes_partitions(spark, sf_dir, tmp_path):
-    """The persisted ANN index's contract: a probe against the
-    write_lsh_index layout must read ONLY the probed bucket directories
-    (partition pruning), never the whole corpus — and return exactly what
-    the scan-everything lsh_topk path returns for the same parameters."""
-    from aws_snowflake_kinesis_airflow_pipeline_spark.catalog import load_table
-    from aws_snowflake_kinesis_airflow_pipeline_spark.operators import similarity
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qvec = list(emb.filter("vec_id = 0").first()["embedding"])
-    path = str(tmp_path / "lsh_index")
-    similarity.write_lsh_index(emb, "embedding", path, n_bits=4)
-
-    probe = similarity.lsh_topk_indexed(
-        spark, path, "embedding", "vec_id", qvec,
-        k=10, n_bits=4, exclude_ids=[0],
-    )
-    plan = probe._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    part_filters = plan.split("PartitionFilters:", 1)[1].splitlines()[0]
-    assert "lsh_bucket" in part_filters  # filter hit the partition column
-
-    got = [tuple(r) for r in probe.collect()]
-    # pruning actually happened: the executed scan read only the probed
-    # bucket directories, not everything on disk (inputFiles() ignores
-    # partition filters, so read the scan node's own metrics)
-    scan = probe._jdf.queryExecution().executedPlan().collectLeaves().apply(0)
-    n_read = scan.metrics().apply("numPartitions").value()
-    n_on_disk = sum(
-        1 for d in os.listdir(path) if d.startswith("lsh_bucket=")
-    )
-    n_probes = len(similarity.probe_buckets(qvec, n_bits=4, probe_hamming=1))
-    assert n_read <= n_probes < n_on_disk
-
-    unindexed = similarity.lsh_topk(
-        emb, "embedding", "vec_id", qvec,
-        k=10, n_bits=4, exclude_ids=[0],
-    )
-    assert got == [tuple(r) for r in unindexed.collect()]
 
 
 def test_ivf_index_has_no_count_prepass(spark, monkeypatch):

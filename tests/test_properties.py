@@ -288,37 +288,6 @@ def test_redaction_leaves_no_residual_pii(spark, text):
 
 # --- round-5 operators -----------------------------------------------------
 
-shard_keys = st.lists(
-    st.text(st.characters(min_codepoint=33, max_codepoint=126), min_size=1, max_size=12),
-    min_size=1,
-    max_size=60,
-    unique=True,
-)
-
-
-@given(keys=shard_keys, n_shards=st.integers(1, 5), seed=st.integers(0, 3))
-@SETTINGS
-def test_shard_assignment_partitions_the_corpus(spark, keys, n_shards, seed):
-    """B37: shard assignment is a total function — every key lands in
-    exactly one shard in [0, N), invariant to input partitioning."""
-    from aws_snowflake_kinesis_airflow_pipeline_spark.operators.sharding import (
-        assign_shards,
-    )
-
-    df = spark.createDataFrame([(k,) for k in keys], "k string")
-    a = {
-        r["k"]: r["shard"]
-        for r in assign_shards(df.coalesce(1), "k", n_shards, seed).collect()
-    }
-    b = {
-        r["k"]: r["shard"]
-        for r in assign_shards(df.repartition(5), "k", n_shards, seed).collect()
-    }
-    assert a == b
-    assert set(a) == set(keys)
-    assert all(0 <= s < n_shards for s in a.values())
-
-
 doc_texts = st.lists(
     st.text(
         st.sampled_from("ab c\t\nXY.é中"),

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-import pytest
 from pyspark.sql import Row
 
 from aws_snowflake_kinesis_airflow_pipeline_spark.operators import relational
@@ -80,14 +79,6 @@ def test_duplicate_and_incomplete_counts(spark):
     assert [(r["event_id"], r["n"]) for r in dups] == [(1, 2)]
 
 
-def test_dq_gate_raises_on_violation(spark):
-    bad = make_events(spark, [(1, TS, "view", 1), (1, TS, "view", 2)])
-    with pytest.raises(ValueError, match="duplicate"):
-        relational.dq_gate(bad)
-    good = make_events(spark, [(1, TS, "view", 1), (2, TS, "view", 2)])
-    relational.dq_gate(good)  # no raise
-
-
 def test_user_events_view_extracts_variant(spark):
     df = spark.createDataFrame(
         [
@@ -122,42 +113,3 @@ def test_user_events_view_extracts_variant(spark):
     assert rows[1]["prop_k"] == 42
     assert rows[3]["prop_k"] is None  # missing path -> NULL (Snowflake semantics)
     assert rows[1]["price"] == 9.5
-
-
-def test_variant_native_parity_with_json_string_form(spark):
-    """Spark 4 VariantType path (variant_get_native) must agree value-for-
-    value with the registered JSON-string form: present paths (typed
-    casts), nested paths, missing paths (NULL), malformed JSON (NULL via
-    try_parse_json), NULL input."""
-    from pyspark.sql import functions as F
-
-    from aws_snowflake_kinesis_airflow_pipeline_spark.functions.variant import (
-        variant_get,
-        variant_get_native,
-    )
-
-    rows = [
-        ('{"product_id": "p1", "price": 9.5, "nest": {"k": "v"}}',),
-        ('{"price": "7"}',),   # numeric-as-string: both forms cast
-        ('{"other": 1}',),     # missing path
-        ("not json",),         # malformed
-        (None,),
-    ]
-    df = spark.createDataFrame(rows, "props string")
-    pairs = df.select(
-        variant_get("props", "price", "double").alias("a"),
-        variant_get_native("props", "price", "double").alias("b"),
-        variant_get("props", "nest.k").alias("c"),
-        variant_get_native("props", "nest.k").alias("d"),
-        variant_get("props", "product_id").alias("e"),
-        variant_get_native("props", "product_id").alias("f"),
-    ).collect()
-    for r in pairs:
-        assert r["a"] == r["b"] and r["c"] == r["d"] and r["e"] == r["f"], r
-    plan = (
-        df.select(variant_get_native("props", "price", "double"))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "variant_get" in plan and "Python" not in plan

@@ -1,5 +1,5 @@
 """Deterministic sampling/splitting: stability across repartitioning (the
-property randomSplit lacks), fraction accuracy, stratified behavior."""
+property randomSplit lacks), fraction accuracy, the seeded shuffle order."""
 
 from __future__ import annotations
 
@@ -37,61 +37,29 @@ def test_split_fractions_roughly_hold(spark, sf_dir):
     assert 0.1 < counts.get("val", 0) / total < 0.3
 
 
-def test_deterministic_sample_idempotent(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    s1 = {r["doc_id"] for r in sampling.deterministic_sample(docs, "text", 0.3).collect()}
-    s2 = {r["doc_id"] for r in sampling.deterministic_sample(docs, "text", 0.3).collect()}
-    assert s1 == s2 and 0 < len(s1) < docs.count()
-    # a larger fraction strictly contains the smaller one (nested samples)
-    s_big = {r["doc_id"] for r in sampling.deterministic_sample(docs, "text", 0.6).collect()}
-    assert s1 <= s_big
-
-
-def test_stratified_sample(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    before = {r["lang"]: r["n"] for r in docs.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    out = sampling.stratified_deterministic_sample(
-        docs, "text", "lang", {"en": 0.2}
-    )
-    after = {r["lang"]: r["n"] for r in out.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    assert after["en"] < before["en"] * 0.5  # en downsampled
-    for lang in before:
-        if lang != "en":
-            assert after[lang] == before[lang]  # other strata untouched
-
-
 def test_deterministic_shuffle_stable_and_seed_dependent(spark):
-    from aws_snowflake_kinesis_airflow_pipeline_spark.operators.sampling import (
-        deterministic_shuffle,
-    )
-
     df = spark.createDataFrame(
         [(i, f"doc {i}") for i in range(200)], "doc_id long, text string"
     )
-    order1 = [r["doc_id"] for r in deterministic_shuffle(df, "doc_id", seed=1).collect()]
+
+    def order(frame, seed):
+        ranked = sampling.with_shuffle_rank(frame, "doc_id", seed=seed)
+        return [r["doc_id"] for r in ranked.orderBy("shuffle_rank").collect()]
+
+    order1 = order(df, 1)
     # identical across reruns and partitioning changes
-    order1b = [
-        r["doc_id"]
-        for r in deterministic_shuffle(df.repartition(7), "doc_id", seed=1).collect()
-    ]
-    assert order1 == order1b
+    assert order1 == order(df.repartition(7), 1)
     # a permutation, not the identity, and seed-dependent
     assert sorted(order1) == list(range(200))
     assert order1 != list(range(200))
-    order2 = [r["doc_id"] for r in deterministic_shuffle(df, "doc_id", seed=2).collect()]
-    assert order2 != order1
+    assert order(df, 2) != order1
 
 
 def test_fraction_grid_is_round_not_truncate(spark):
     """0.57*10000 is 5699.999... in binary; int() kept one bucket fewer
     than the stated 1/buckets grid. round() honors the documented
     'exact to 1/buckets granularity' contract."""
-    from aws_snowflake_kinesis_airflow_pipeline_spark.operators.sampling import (
-        deterministic_sample,
-        hash_bucket,
-    )
-
     df = spark.createDataFrame([(i,) for i in range(5000)], "k long")
-    kept = deterministic_sample(df, "k", fraction=0.57, buckets=10000)
-    want = df.filter(hash_bucket("k", 10000) < 5700).count()
-    assert kept.count() == want
+    split = sampling.with_split(df, "k", val_fraction=0.57, buckets=10000)
+    want = df.filter(sampling.hash_bucket("k", 10000) < 5700).count()
+    assert split.filter(F.col("split") == "val").count() == want

@@ -1,10 +1,10 @@
-"""End-to-end last mile: curate → encode → pack → shard → verify.
+"""End-to-end last mile: curate → encode → pack → verify.
 
 Integration of the trainer-export seam the B-series builds piecewise:
-B42 token-ID encoding feeds B18 sequence packing feeds B37 shard export,
-with the B37 manifest verifying the result and B42's decoder auditing a
-sample. Every stage is deterministic, so the whole pipeline is too —
-pinned by running it twice and hashing the final shards.
+B42 token-ID encoding feeds B18 sequence packing, with B42's decoder
+auditing a sample of the packed rows. Every stage is deterministic, so
+the whole pipeline is too — pinned by running it twice and comparing the
+packed rows.
 """
 
 from __future__ import annotations
@@ -20,15 +20,9 @@ from aws_snowflake_kinesis_airflow_pipeline_spark.operators.encoding import (
 from aws_snowflake_kinesis_airflow_pipeline_spark.operators.packing import (
     pack_sequences,
 )
-from aws_snowflake_kinesis_airflow_pipeline_spark.operators.sharding import (
-    read_training_shard,
-    verify_shards,
-    write_training_shards,
-)
 
 N_DOCS = 120
 MAX_TOKENS = 48
-SHARDS = 3
 
 
 @pytest.fixture(scope="module")
@@ -44,25 +38,16 @@ def corpus(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def _run_pipeline(spark, corpus, path):
+def _run_pipeline(corpus):
     vocab = build_vocab(corpus, vocab_size=5)  # 6 words: one becomes OOV
     encoded = encode_documents(corpus, vocab)
     packed = pack_sequences(encoded, "doc_id", "n_tokens", MAX_TOKENS)
     rows = encoded.join(packed.select("doc_id", "pack_id", "pack_tokens"), "doc_id")
-    write_training_shards(rows, path, "doc_id", SHARDS, seed=11)
     return vocab, rows
 
 
-def test_encode_pack_shard_verify(spark, corpus, tmp_path):
-    path = str(tmp_path / "export")
-    vocab, rows = _run_pipeline(spark, corpus, path)
-
-    # Manifest verifies, shards union back to the corpus.
-    chk = verify_shards(spark, path, "doc_id").collect()
-    assert len(chk) == SHARDS and all(r["ok"] for r in chk)
-    back = [read_training_shard(spark, path, s) for s in range(SHARDS)]
-    ids = sorted(i for df in back for i in (r["doc_id"] for r in df.collect()))
-    assert ids == list(range(N_DOCS))
+def test_encode_pack_verify(spark, corpus):
+    vocab, rows = _run_pipeline(corpus)
 
     # Every pack respects the budget over the ACTUAL encoded lengths.
     pack_totals = (
@@ -76,8 +61,8 @@ def test_encode_pack_shard_verify(spark, corpus, tmp_path):
     ).first()
     assert 0 < oov["o"] < oov["t"]
 
-    # Decode audit on one shard: in-vocab tokens round-trip.
-    sample = read_training_shard(spark, path, 0).limit(5)
+    # Decode audit on a sample of packed rows: in-vocab tokens round-trip.
+    sample = rows.orderBy("doc_id").limit(5)
     dec = {
         r["doc_id"]: r["text"]
         for r in decode_ids(sample, vocab).collect()
@@ -86,6 +71,7 @@ def test_encode_pack_shard_verify(spark, corpus, tmp_path):
         r["doc_id"]: r["text"]
         for r in corpus.join(sample.select("doc_id"), "doc_id").collect()
     }
+    assert len(dec) == 5
     for i, text in dec.items():
         got = text.split()
         want = orig[i].split()
@@ -93,11 +79,10 @@ def test_encode_pack_shard_verify(spark, corpus, tmp_path):
         assert all(g == w or g == "<unk>" for g, w in zip(got, want))
 
 
-def test_pipeline_deterministic(spark, corpus, tmp_path):
-    p1, p2 = str(tmp_path / "e1"), str(tmp_path / "e2")
-    _run_pipeline(spark, corpus, p1)
-    _run_pipeline(spark, corpus, p2)
-    for s in range(SHARDS):
-        a = [tuple(r) for r in read_training_shard(spark, p1, s).collect()]
-        b = [tuple(r) for r in read_training_shard(spark, p2, s).collect()]
-        assert a == b and len(a) > 0
+def test_pipeline_deterministic(spark, corpus):
+    def packed(rows):
+        return sorted(tuple(r) for r in rows.collect())
+
+    a = packed(_run_pipeline(corpus)[1])
+    b = packed(_run_pipeline(corpus)[1])
+    assert a == b and len(a) == N_DOCS
