@@ -1,23 +1,20 @@
 """Configuration resolution (SURVEY.md §2 O9) — the reference resolves
 credentials/config from Secrets Manager with a yaml fallback
 (scripts/kinesis_to_snowflake.py:17-22,45-76). The engine needs no
-credentials locally; this module keeps the same resolution *shape*:
-explicit dict > environment > config file > defaults.
+credentials locally; the CLI's four settings resolve environment
+(``SPARK_GRAFT_<KEY>``) > defaults.
 """
 
 from __future__ import annotations
 
-import json
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 DEFAULTS = {
     "sf_dir": "/root/testdata/sf0.1",
     "cpus": 32,
     "landing_path": "/tmp/pipeline/landing",
     "warehouse_path": "/tmp/pipeline/warehouse",
-    "rows_per_second": 100,
-    "trigger_seconds": 300,  # Firehose buffer_interval parity
 }
 
 ENV_PREFIX = "SPARK_GRAFT_"
@@ -25,35 +22,17 @@ ENV_PREFIX = "SPARK_GRAFT_"
 
 @dataclass
 class PipelineConfig:
-    sf_dir: str = DEFAULTS["sf_dir"]
-    cpus: int = DEFAULTS["cpus"]
-    landing_path: str = DEFAULTS["landing_path"]
-    warehouse_path: str = DEFAULTS["warehouse_path"]
-    rows_per_second: int = DEFAULTS["rows_per_second"]
-    trigger_seconds: int = DEFAULTS["trigger_seconds"]
-    extra: dict = field(default_factory=dict)
+    sf_dir: str
+    cpus: int
+    landing_path: str
+    warehouse_path: str
 
 
-def load_config(
-    overrides: dict | None = None, config_file: str | None = None
-) -> PipelineConfig:
-    """dict > env (SPARK_GRAFT_*) > json file > defaults.
-
-    An explicitly named ``config_file`` that does not exist raises — a
-    typo'd path silently yielding defaults is the config bug operators
-    notice weeks later."""
-    merged = dict(DEFAULTS)
-    if config_file:
-        if not os.path.exists(config_file):
-            raise FileNotFoundError(
-                f"load_config: config_file {config_file!r} does not exist"
-            )
-        with open(config_file) as f:
-            merged.update(json.load(f))
-    for key in DEFAULTS:
-        env_val = os.environ.get(ENV_PREFIX + key.upper())
-        if env_val is not None:
-            merged[key] = type(DEFAULTS[key])(env_val)
-    merged.update(overrides or {})
-    known = {k: merged.pop(k) for k in list(DEFAULTS) if k in merged}
-    return PipelineConfig(**known, extra=merged)
+def load_config() -> PipelineConfig:
+    """env (SPARK_GRAFT_*) > defaults, read at call time."""
+    return PipelineConfig(
+        **{
+            key: type(default)(os.environ.get(ENV_PREFIX + key.upper(), default))
+            for key, default in DEFAULTS.items()
+        }
+    )

@@ -54,6 +54,14 @@ def tokens(col: Column | str) -> Column:
     return F.filter(F.split(c, TOKEN_SPLIT_RE), lambda t: t != F.lit(""))
 
 
+def lower_tokens(text_col: str) -> Column:
+    """Lowercased :func:`tokens`; NULL text gives an empty array, not NULL
+    (a NULL would fall out of avg(dl) and shift every BM25 length norm)."""
+    return F.coalesce(
+        tokens(F.lower(F.col(text_col))), F.array().cast("array<string>")
+    )
+
+
 def token_count(col: Column | str) -> Column:
     """Whitespace token count."""
     return F.size(tokens(col))

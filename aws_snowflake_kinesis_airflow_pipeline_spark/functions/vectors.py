@@ -1,8 +1,7 @@
-"""Embedding-vector column functions: normalization and int8 quantization.
+"""Embedding-vector column functions: L2 norm and int8 quantization.
 
-The storage-side half of an embedding pipeline: L2-normalize so cosine
-becomes a dot product, then symmetric per-vector int8 quantization
-(scale = max|x| / 127) — the standard 4× shrink applied before vectors are
+The storage-side half of an embedding pipeline: symmetric per-vector int8
+quantization (scale = max|x| / 127) — the standard 4× shrink applied before vectors are
 written to an ANN index or shipped to trainers. (North-star LLM-data
 operator, SURVEY.md §2 B28; composes with operators/similarity.py, whose
 indexes would store the quantized form at 100 TB.)
@@ -39,16 +38,6 @@ def l2_norm(col: Column | str) -> Column:
             F.lit(0.0),
             lambda acc, x: acc + x.cast("double") * x.cast("double"),
         )
-    )
-
-
-def l2_normalize(col: Column | str) -> Column:
-    """Unit-length copy of the vector (all-zero vectors pass through
-    unchanged rather than dividing by zero)."""
-    v = _c(col)
-    n = l2_norm(v)
-    return F.when(n == 0.0, v.cast("array<double>")).otherwise(
-        F.transform(v, lambda x: x.cast("double") / n)
     )
 
 

@@ -24,14 +24,13 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     payload_cols: list[str],
-    how: str = "left",
 ) -> DataFrame:
     """For every left row, attach ``payload_cols`` from the latest right row
     at-or-before its timestamp (per ``key``).
 
     Output columns: all of ``left``'s, then ``payload_cols``. Payload names
-    must not collide with left's columns. how='left' keeps unmatched left
-    rows (NULL payload); how='inner' drops them.
+    must not collide with left's columns. Unmatched left rows are kept
+    with a NULL payload (a left as-of join).
     """
     left_other = [c for c in left.columns if c != key]
     overlap = set(payload_cols) & set(left.columns)
@@ -91,10 +90,7 @@ def asof_join(
         F.last(F.col("_payload"), ignorenulls=True).over(w).alias("_payload"),
         *[F.col(c) for c in left_other],
     )
-    out = carried.filter(F.col("_is_left") == 1)
-    if how == "inner":
-        out = out.filter(F.col("_payload").isNotNull())
-    return out.select(
+    return carried.filter(F.col("_is_left") == 1).select(
         key,
         *left_other,
         *[F.col(f"_payload.{c}").alias(c) for c in payload_cols],

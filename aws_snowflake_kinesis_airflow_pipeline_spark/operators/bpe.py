@@ -9,19 +9,16 @@ vocab of :mod:`.encoding` (B42), which cannot represent unseen words at
 all; a BPE vocab degrades gracefully to subwords instead of UNK.
 
 Scale shape (the k-means / bigram-LM fit discipline, similarity.py /
-lm.py): BPE's fit state is BOUNDED BY DESIGN — a word-frequency table of
-a deterministic bounded sample — so the merge loop runs driver-side over
-that table instead of as ``n_merges`` sequential corpus-wide Spark jobs
-(merge r+1 depends on merge r, so a distributed loop is n_merges FULL
-scans that cannot pipeline; the published trainers are single-node over
-word counts for the same reason). Corpus passes:
-
-1. the portable-md5 sample draw (per-partition id top-k + broadcast
-   semi-join fetch — lm.py's two-phase form, no text through the driver),
-2. ONE tokenize + word-count aggregation, map-side combined to word
-   types, capped at ``max_word_types`` rows collected (the operator's
-   only driver-side data state — same bounded-collect contract as
-   lm.py's vocab and similarity.py's k-means sample).
+lm.py): BPE's fit state is BOUNDED BY DESIGN — a capped word-frequency
+table — so the merge loop runs driver-side over that table instead of as
+``n_merges`` sequential corpus-wide Spark jobs (merge r+1 depends on
+merge r, so a distributed loop is n_merges FULL scans that cannot
+pipeline; the published trainers are single-node over word counts for
+the same reason). The corpus pass is ONE tokenize + word-count
+aggregation, map-side combined to word types, capped at
+``max_word_types`` rows collected (the operator's only driver-side data
+state — same bounded-collect contract as lm.py's vocab and
+similarity.py's k-means sample).
 
 Determinism contract: ties on pair count break by (left, right)
 lexicographic ascending, and the word table order cannot affect the
@@ -31,23 +28,16 @@ always yields the same merge list on any cluster shape.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens
-from .sampling import shuffle_hash
+from ..functions.text import lower_tokens
 
 #: End-of-word sentinel symbol. Appended as its OWN symbol after the last
 #: character (the paper's convention) so merges can distinguish suffixes
 #: from in-word sequences ("est</w>" vs "est"); must not collide with any
 #: single character the tokenizer can emit.
 END_OF_WORD = "</w>"
-
-
-def _lower_tokens(text_col: str) -> Column:
-    return F.coalesce(
-        tokens(F.lower(F.col(text_col))), F.array().cast("array<string>")
-    )
 
 
 def _bpe_fit_on_counts(
@@ -102,47 +92,28 @@ def _bpe_fit_on_counts(
 
 def induce_bpe_merges(
     docs: DataFrame,
-    id_col: str = "doc_id",
     text_col: str = "text",
     n_merges: int = 100,
-    max_fit_docs: int | None = None,
     max_word_types: int = 100_000,
-    fit_seed: int = 0,
     end_of_word: str = END_OF_WORD,
 ) -> list[tuple[str, str]]:
     """Learn an ordered BPE merge list from the corpus.
 
     Returns ``[(left, right), ...]`` in merge order (rank 0 first) — at
-    most ``n_merges`` entries, fewer when the sample's pair counts dry up
+    most ``n_merges`` entries, fewer when the corpus' pair counts dry up
     (no adjacent pair left with count >= 2).
 
-    ``max_fit_docs``: fit on a bounded deterministic sample drawn by the
-    portable-md5 permutation of ``id_col`` (lm.py's two-phase draw: id
-    top-k per partition, broadcast semi-join text fetch) — the 100 TB
-    form; None fits on the full corpus' word table. ``max_word_types``
-    caps the (count desc, word asc) word table the fit collects; rare
-    types beyond the cap contribute no merges anyway under the count>=2
-    stop rule unless the corpus is pathologically flat.
+    ``max_word_types`` caps the (count desc, word asc) word table the fit
+    collects; rare types beyond the cap contribute no merges anyway under
+    the count>=2 stop rule unless the corpus is pathologically flat.
 
     Tokenization is the engine-wide lowercased whitespace tokenizer; each
     word contributes its characters plus the ``end_of_word`` sentinel.
     """
     if n_merges < 0:
         raise ValueError("induce_bpe_merges: n_merges must be >= 0")
-    src = docs
-    if max_fit_docs is not None:
-        fit_ids = (
-            docs.select(F.col(id_col))
-            .orderBy(shuffle_hash(F.col(id_col), fit_seed), F.col(id_col))
-            .limit(max_fit_docs)
-            # Lazy: materializes inside the word-count collect below.
-            .localCheckpoint(eager=False)
-        )
-        src = docs.select(id_col, text_col).join(
-            F.broadcast(fit_ids), id_col, "left_semi"
-        )
     counts = (
-        src.select(F.explode(_lower_tokens(text_col)).alias("_w"))
+        docs.select(F.explode(lower_tokens(text_col)).alias("_w"))
         .groupBy("_w")
         .agg(F.count("*").alias("_c"))
         .orderBy(F.col("_c").desc(), F.col("_w").asc())

@@ -292,22 +292,21 @@ def ngram_jaccard_pairs(
     scale is a hot-shingle cap (drop shingles appearing in > P docs; a
     shingle shared by thousands of docs carries no dedup signal anyway).
 
-    ``candidates``: optional (id1, id2) DataFrame to restrict verification
-    to (the LSH path); None verifies all co-shingled pairs.
-    ``index``: optional prebuilt (materialized) shingle index to reuse
-    across passes.
-    ``per_doc_sets``: optional per-doc shingle-hash ARRAYS (id, hs). With
-    ``candidates`` (and no ``max_doc_freq``) verification switches from
-    the exploded-index join — which shuffles the whole corpus-sized index
-    on (id2, shingle) however few candidates there are — to a
-    candidate-id semi-join that fetches only the candidate docs' sets,
-    then per-row ``size(array_intersect(...))``. Work becomes
-    candidate-volume, not corpus-volume (the same discipline as
-    embedding_near_dup_pairs' vector fetch); at bench SFs AQE broadcasts
-    the candidate-id side, so the corpus is never reshuffled at all.
-    ``sizes``: optional per-doc set sizes (id, n_sh) to go with ``index``;
-    without it (index supplied alone) sizes fall back to a groupBy over
-    the index.
+    ``candidates``, ``index`` and ``max_doc_freq`` each select a form;
+    pass at most one.
+
+    ``candidates``: (id1, id2) DataFrame to restrict verification to (the
+    LSH path). Verification is a candidate-id semi-join that fetches only
+    the candidate docs' shingle sets, then per-row
+    ``size(array_intersect(...))`` — candidate-volume work, not
+    corpus-volume (the same discipline as embedding_near_dup_pairs'
+    vector fetch); at bench SFs AQE broadcasts the candidate-id side, so
+    the corpus is never reshuffled at all. ``per_doc_sets``: optional
+    prebuilt per-doc shingle-hash ARRAYS (id, hs) for those sets;
+    without it they are derived from the candidate docs' text.
+    ``index``: a prebuilt (id, shingle) index for the uncapped join form;
+    ``sizes``: per-doc set sizes (id, n_sh) to go with it — without it
+    sizes fall back to a groupBy over the index.
     ``max_doc_freq``: the 100 TB blowup guard — drop shingles appearing in
     more than this many documents from the *pairing* side (a shingle shared
     by thousands of docs generates O(df^2) candidate pairs and carries no
@@ -315,115 +314,22 @@ def ngram_jaccard_pairs(
     estimated Jaccard for pairs whose sole overlap is boilerplate — by
     design. Default None preserves exact semantics (and oracle parity).
 
-    With the cap engaged (and no ``candidates``) the intersection switches
-    from the exploded-index equality self-join to grouped pair emission:
-    groupBy(shingle) -> sorted posting list (bounded by the cap) -> pairs
-    emitted row-locally -> count per pair. One index-sized exchange
-    instead of three; identical pair set.
+    With the cap engaged the intersection switches from the exploded-index
+    equality self-join to grouped pair emission: groupBy(shingle) ->
+    sorted posting list (bounded by the cap) -> pairs emitted row-locally
+    -> count per pair. One index-sized exchange instead of three.
 
     Prefix-filter candidate generation (lexicographic and
     document-frequency ordered) was retired by measurement: grouped 29 s
     vs df-prefix 47 s at sf10 (500k docs), and grouped is c3's registered
     configuration.
     """
-    array_path = (
-        candidates is not None
-        and max_doc_freq is None
-        and (per_doc_sets is not None or index is None)
-    )
-    per_doc_local = None
-    if not array_path:
-        if index is not None:
-            sh = index
-            # Row-local sizes aren't recoverable from an exploded index
-            # without re-aggregating.
-            if sizes is None:
-                sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-        else:
-            # localCheckpoint (not cache): materializes the per-doc shingle
-            # sets once for the sizes + pairing + verification passes,
-            # truncates lineage, and is released by the ContextCleaner when
-            # the result is GC'd — repeated suite runs in one session don't
-            # accumulate cache entries (cache() here re-registered an
-            # identical plan every call and warned).
-            per_doc = doc_shingles(df, id_col, text_col, k).localCheckpoint(
-                eager=False
-            )
-            per_doc_local = per_doc
-            sh = per_doc.select(id_col, F.explode("hs").alias("shingle"))
-            if sizes is None:
-                sizes = per_doc.select(id_col, F.size("hs").alias("n_sh"))
-        if max_doc_freq is not None and candidates is None:
-            # Grouped pair emission: ONE shuffle of the index (groupBy
-            # shingle -> sorted posting list), then pairs emitted
-            # row-locally and re-aggregated. The join formulation below
-            # costs three corpus-index-sized exchanges for the same
-            # result (df-count for the hot cap, anti-join, equality
-            # self-join); here the cap is a free filter on the posting
-            # list's size, and it is also the safety bound that makes
-            # collect_list safe — each group holds at most
-            # ``max_doc_freq`` ids, so a posting row is <= ~8B x cap and
-            # a group emits <= cap^2/2 pairs. (Without a cap a single
-            # boilerplate shingle could blow a row, which is why the
-            # uncapped exact path keeps the join form.)
-            if per_doc_local is not None:
-                # Size-carrying postings (n_sh rides the explode row-
-                # locally off the checkpointed per_doc — no extra join,
-                # no shingle recompute) let pair emission apply the
-                # LENGTH FILTER before the pair-count exchange: see
-                # _sized_posting_pairs. Identical result set; the pruned
-                # pairs are exactly those no Jaccard >= t can admit.
-                sh_sized = per_doc_local.select(
-                    F.col(id_col).alias("id"),
-                    F.size("hs").alias("n_sh"),
-                    F.explode("hs").alias("shingle"),
-                )
-                # Both corpus-volume exchanges here auto-size to the
-                # input (spread.py, the 5 M-doc lesson): the shingle
-                # index is docs x ~shingles rows, and the pair-count
-                # exchange below is candidate-volume (linear but ~25x
-                # the corpus row count on the bench fixture's dense
-                # vocabulary). source=df — sh_sized's lineage is the
-                # truncated per_doc checkpoint.
-                postings = (
-                    _scaled_repartition(sh_sized, "shingle", source=df)
-                    .groupBy("shingle")
-                    .agg(
-                        F.sort_array(
-                            F.collect_list(F.struct("n_sh", "id"))
-                        ).alias("ids")
-                    )
-                    .filter(
-                        (F.size("ids") >= 2) & (F.size("ids") <= max_doc_freq)
-                    )
-                )
-                pairs = _sized_posting_pairs(postings, threshold)
-            else:
-                postings = (
-                    _scaled_repartition(sh, "shingle", source=df)
-                    .groupBy("shingle")
-                    .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-                    .filter(
-                        (F.size("ids") >= 2) & (F.size("ids") <= max_doc_freq)
-                    )
-                )
-                pairs = _posting_pairs(postings)
-            inter = (
-                _scaled_repartition(pairs, "id1", "id2", source=df)
-                .groupBy("id1", "id2")
-                .agg(F.count("*").alias("n_inter"))
-            )
-            return _jaccard_from_inter(inter, sizes, id_col, threshold)
-        if max_doc_freq is not None:
-            hot = (
-                sh.groupBy("shingle")
-                .agg(F.count("*").alias("df"))
-                .filter(F.col("df") > max_doc_freq)
-                .select("shingle")
-            )
-            sh = sh.join(hot, "shingle", "left_anti")
-
-    if array_path:
+    if sum(x is not None for x in (candidates, index, max_doc_freq)) > 1:
+        raise ValueError(
+            "ngram_jaccard_pairs: pass at most one of candidates, index "
+            "and max_doc_freq"
+        )
+    if candidates is not None:
         # Candidate-set verification: fetch only the candidate docs'
         # shingle sets (semi-join on the candidate ids — AQE broadcasts
         # the id side when it is small), intersect per pair row-locally.
@@ -497,26 +403,76 @@ def ngram_jaccard_pairs(
             .filter(F.col("jaccard") >= threshold)
             .select("id1", "id2", "jaccard")
         )
+    if index is not None:
+        sh = index
+        # Row-local sizes aren't recoverable from an exploded index
+        # without re-aggregating.
+        if sizes is None:
+            sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
+    else:
+        # localCheckpoint (not cache): materializes the per-doc shingle
+        # sets once for the sizes + pairing + verification passes,
+        # truncates lineage, and is released by the ContextCleaner when
+        # the result is GC'd — repeated suite runs in one session don't
+        # accumulate cache entries (cache() here re-registered an
+        # identical plan every call and warned).
+        per_doc = doc_shingles(df, id_col, text_col, k).localCheckpoint(
+            eager=False
+        )
+        sh = per_doc.select(id_col, F.explode("hs").alias("shingle"))
+        if sizes is None:
+            sizes = per_doc.select(id_col, F.size("hs").alias("n_sh"))
+    if max_doc_freq is not None:
+        # Grouped pair emission: ONE shuffle of the index (groupBy
+        # shingle -> sorted posting list), then pairs emitted
+        # row-locally and re-aggregated. The join formulation below
+        # would cost three corpus-index-sized exchanges for the capped
+        # result (df-count for the hot cap, anti-join, equality
+        # self-join); here the cap is a free filter on the posting
+        # list's size, and it is also the safety bound that makes
+        # collect_list safe — each group holds at most
+        # ``max_doc_freq`` ids, so a posting row is <= ~8B x cap and
+        # a group emits <= cap^2/2 pairs. (Without a cap a single
+        # boilerplate shingle could blow a row, which is why the
+        # uncapped exact path keeps the join form.)
+        #
+        # Size-carrying postings (n_sh rides the explode row-locally off
+        # the checkpointed per_doc — no extra join, no shingle
+        # recompute) let pair emission apply the LENGTH FILTER before
+        # the pair-count exchange: see _sized_posting_pairs. The pruned
+        # pairs are exactly those no Jaccard >= t can admit.
+        sh_sized = per_doc.select(
+            F.col(id_col).alias("id"),
+            F.size("hs").alias("n_sh"),
+            F.explode("hs").alias("shingle"),
+        )
+        # Both corpus-volume exchanges here auto-size to the input
+        # (spread.py, the 5 M-doc lesson): the shingle index is docs x
+        # ~shingles rows, and the pair-count exchange below is
+        # candidate-volume (linear but ~25x the corpus row count on the
+        # bench fixture's dense vocabulary). source=df — sh_sized's
+        # lineage is the truncated per_doc checkpoint.
+        postings = (
+            _scaled_repartition(sh_sized, "shingle", source=df)
+            .groupBy("shingle")
+            .agg(F.sort_array(F.collect_list(F.struct("n_sh", "id"))).alias("ids"))
+            .filter((F.size("ids") >= 2) & (F.size("ids") <= max_doc_freq))
+        )
+        pairs = _sized_posting_pairs(postings, threshold)
+        inter = (
+            _scaled_repartition(pairs, "id1", "id2", source=df)
+            .groupBy("id1", "id2")
+            .agg(F.count("*").alias("n_inter"))
+        )
+        return _jaccard_from_inter(inter, sizes, id_col, threshold)
     a = sh.select(F.col(id_col).alias("id1"), "shingle")
     b = sh.select(F.col(id_col).alias("id2"), "shingle")
-    if candidates is not None:
-        # Candidate-driven intersection over the exploded index (the
-        # array-set fast path above needs per_doc_sets and no hot cap):
-        # expand each candidate pair by id1's shingles, then equality-join
-        # id2's shingles.
-        inter = (
-            candidates.join(a, "id1")
-            .join(b, ["id2", "shingle"])
-            .groupBy("id1", "id2")
-            .agg(F.count("*").alias("n_inter"))
-        )
-    else:
-        inter = (
-            a.join(b, "shingle")
-            .filter(F.col("id1") < F.col("id2"))
-            .groupBy("id1", "id2")
-            .agg(F.count("*").alias("n_inter"))
-        )
+    inter = (
+        a.join(b, "shingle")
+        .filter(F.col("id1") < F.col("id2"))
+        .groupBy("id1", "id2")
+        .agg(F.count("*").alias("n_inter"))
+    )
     return _jaccard_from_inter(inter, sizes, id_col, threshold)
 
 

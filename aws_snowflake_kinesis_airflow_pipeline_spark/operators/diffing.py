@@ -11,7 +11,6 @@ Semantics: rows are keyed by ``id_col``; row content is compared by a
 normalized content fingerprint (``functions/text.doc_fingerprint`` — md5
 of whitespace-normalized lowercased text), NOT raw equality, so
 formatting-only churn (re-wrapped whitespace) classifies as ``unchanged``.
-Pass ``raw=True`` to fingerprint the raw bytes instead.
 
 Scale shape: one full outer join on the id — both sides shuffled once on
 the key, the same budget as exact dedup. Each side is pre-projected to
@@ -27,15 +26,9 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions.text import doc_fingerprint
 
-STATUSES = ("added", "removed", "changed", "unchanged")
 
-
-def _prints(df: DataFrame, id_col: str, text_col: str, raw: bool) -> DataFrame:
-    fp = (
-        F.md5(F.coalesce(F.col(text_col), F.lit("\x00null\x00")))
-        if raw
-        else doc_fingerprint(F.coalesce(F.col(text_col), F.lit("\x00null\x00")))
-    )
+def _prints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    fp = doc_fingerprint(F.coalesce(F.col(text_col), F.lit("\x00null\x00")))
     return df.select(F.col(id_col), fp.alias("_fp"))
 
 
@@ -44,7 +37,6 @@ def corpus_diff(
     new: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    raw: bool = False,
 ) -> DataFrame:
     """(id_col, status) for every id present in either snapshot.
 
@@ -56,8 +48,8 @@ def corpus_diff(
     ``id_col`` must be unique within each snapshot (the corpus-key
     contract shared with the dedup family — run exact dedup first).
     """
-    o = _prints(old, id_col, text_col, raw).withColumnRenamed("_fp", "_fp_old")
-    n = _prints(new, id_col, text_col, raw).withColumnRenamed("_fp", "_fp_new")
+    o = _prints(old, id_col, text_col).withColumnRenamed("_fp", "_fp_old")
+    n = _prints(new, id_col, text_col).withColumnRenamed("_fp", "_fp_new")
     return o.join(n, id_col, "full_outer").select(
         id_col,
         F.when(F.col("_fp_old").isNull(), F.lit("added"))
@@ -67,23 +59,3 @@ def corpus_diff(
         .alias("status"),
     )
 
-
-def diff_summary(diff: DataFrame) -> DataFrame:
-    """Bounded (status, n) rollup of :func:`corpus_diff` — the audit line
-    a maintenance run logs before deciding whether the delta is sane
-    (e.g. 'changed' suddenly at 90% means the extractor broke, stop)."""
-    return diff.groupBy("status").agg(F.count("*").alias("n"))
-
-
-def delta_for_ingest(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """The rows of ``new`` that downstream incremental stages must see:
-    added + changed. One diff join plus one semi-join back to bodies."""
-    d = corpus_diff(old, new, id_col, text_col).filter(
-        F.col("status").isin("added", "changed")
-    )
-    return new.join(d.select(id_col), id_col, "left_semi")

@@ -36,7 +36,6 @@ def build_vocab(
     docs: DataFrame,
     text_col: str = "text",
     vocab_size: int = 4096,
-    min_count: int = 1,
 ) -> DataFrame:
     """(token, token_id, count): the ``vocab_size`` most frequent tokens
     (ties by token asc), ids 1..V in frequency-rank order. Lowercased
@@ -48,7 +47,6 @@ def build_vocab(
         docs.select(F.explode(t).alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("count"))
-        .filter(F.col("count") >= min_count)
         .orderBy(F.col("count").desc(), F.col("token").asc())
         .limit(vocab_size)
     )

@@ -56,13 +56,3 @@ def quality_funnel(
             f"stack({len(names)}, {stack_args}) AS (stage_idx, stage, survivors)"
         )
     )
-
-
-def apply_funnel(df: DataFrame, stages: list[tuple[str, Column]]) -> DataFrame:
-    """The corpus that falls out the bottom of the cascade — rows passing
-    every stage predicate. Same predicates as :func:`quality_funnel`, so
-    count(apply_funnel(...)) == the funnel's last ``survivors`` row."""
-    out = df
-    for _, pred in stages:
-        out = out.filter(pred)
-    return out

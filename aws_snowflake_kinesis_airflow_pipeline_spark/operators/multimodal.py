@@ -2,9 +2,8 @@
 metadata, processed by Arrow-batched pandas functions.
 
 Real pixel decode is implemented for binary PPM (P6) — a complete,
-dependency-free raster format — so the decode → stats → resize path runs
-on actual pixels end to end (``decode_image``/``extract_pixel_stats``/
-``resize_nearest``). Compressed formats (PNG/JPEG) need a codec library
+dependency-free raster format — so the decode → stats path runs on actual
+pixels end to end (``decode_image``/``extract_pixel_stats``). Compressed formats (PNG/JPEG) need a codec library
 the container doesn't ship; ``decode_image`` rejects them with a
 ValueError naming the dependency — a real partial-decoder contract, not a
 stub. The sha-derived ``_fake_feature`` kernel remains as the
@@ -156,16 +155,6 @@ def decode_image(payload: bytes) -> np.ndarray:
     )
 
 
-def resize_nearest(pixels: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbor resize of (H, W, C) pixels — the dependency-free
-    thumbnail op a feature kernel runs before embedding."""
-    a = np.asarray(pixels)
-    h, w = a.shape[:2]
-    ys = (np.arange(height) * h) // height
-    xs = (np.arange(width) * w) // width
-    return a[ys][:, xs]
-
-
 def _fake_feature(payload: bytes) -> list[float]:
     """Deterministic stand-in feature: FEATURE_DIM floats derived from the
     sha256 digest. Stable across runs/partitions — safe for tests."""
@@ -258,22 +247,3 @@ def extract_pixel_stats(media: DataFrame) -> DataFrame:
         kernel, schema=_PIXEL_STATS_SCHEMA
     )
 
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: one output row per planned frame via
-    sequence+explode on duration metadata. Decode of the actual frame is the
-    stubbed kernel; the row-explosion plumbing (the part Spark owns) is real.
-    """
-    return (
-        media.filter(F.col("meta.duration_ms").isNotNull())
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.col("meta.duration_ms"),
-                    F.lit(every_ms),
-                )
-            ).alias("frame_ts_ms"),
-        )
-    )

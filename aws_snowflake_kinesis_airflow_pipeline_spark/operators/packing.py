@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .sampling import hash_bucket
+
 _PACK_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -36,7 +38,6 @@ def pack_sequences(
     token_count_col: str,
     max_tokens: int,
     num_partitions: int | None = None,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Assign every document to a pack such that each pack's token total
     is <= max_tokens (documents longer than the budget get a singleton
@@ -44,10 +45,9 @@ def pack_sequences(
 
     Deterministic: partition assignment is a content hash of the id, and
     packing order inside a partition is sorted — same input, same packs,
-    any cluster shape. ``hash_fn="md5"`` swaps the part hash for the
-    engine-portable md5 bucket (sampling.hash_bucket) so a DuckDB oracle
-    can replay the identical partitioning — xxhash64 exists only in
-    Spark. Same trick as sampling.shuffle_hash's md5 permutation.
+    any cluster shape. The part hash is the engine-portable md5 bucket
+    (sampling.hash_bucket), so a DuckDB oracle can replay the identical
+    partitioning. Same trick as sampling.shuffle_hash's md5 permutation.
     """
 
     def pack_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -101,14 +101,7 @@ def pack_sequences(
             "(e.g. xxhash64) and join back after packing"
         )
     n_part = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    if hash_fn == "md5":
-        from .sampling import hash_bucket
-
-        part = hash_bucket(F.col(id_col).cast("string"), n_part)
-    elif hash_fn == "xxhash64":
-        part = F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(n_part))
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
+    part = hash_bucket(F.col(id_col).cast("string"), n_part)
     prepared = df.select(
         F.col(id_col).cast("long").alias("doc_id"),
         F.col(token_count_col).cast("long").alias("n_tokens"),
@@ -130,8 +123,6 @@ def mix_corpus(
     the binding source keeps 100%, others are deterministically sampled
     down via content hash. One tiny groupBy for counts + one filter pass.
     """
-    from .sampling import hash_bucket
-
     counts = {
         r[source_col]: r["n"]
         for r in df.groupBy(source_col).agg(F.count("*").alias("n")).collect()

@@ -1,7 +1,7 @@
 """Cohort retention — the second classic event-analytics matrix.
 
-Users are cohorted by the period of their FIRST event; retention[c][k] is
-how many of cohort c's users came back with any event k periods later.
+Users are cohorted by the week of their FIRST event; retention[c][k] is
+how many of cohort c's users came back with any event k weeks later.
 Together with ``operators/event_funnel`` this covers the two queries every
 event pipeline (the reference's domain) ultimately feeds.
 
@@ -16,64 +16,29 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-_TRUNCS = {"day", "week", "month"}
-
 
 def cohort_retention(
     events: DataFrame,
-    period: str = "week",
     user_col: str = "user_id",
     ts_col: str = "ts",
-    max_offset: int | None = None,
 ) -> DataFrame:
-    """(cohort timestamp, period_offset int, n_users long).
+    """(cohort timestamp, period_offset int, n_users long), by week.
 
-    ``period_offset`` counts whole periods between the user's cohort
-    period and the activity period (0 = the cohort period itself, so
-    retention[c][0] is the cohort size). Offsets beyond ``max_offset``
-    (if given) are dropped — the usual bounded retention matrix.
+    ``period_offset`` counts whole weeks between the user's cohort week
+    and the activity week (0 = the cohort week itself, so
+    retention[c][0] is the cohort size).
     """
-    if period not in _TRUNCS:
-        raise ValueError(f"period must be one of {sorted(_TRUNCS)}")
-    p = lambda c: F.date_trunc(period, c)
-    first = (
-        events.groupBy(user_col)
-        .agg(p(F.min(ts_col)).alias("_cohort"))
-    )
-    # Offset in whole periods: datediff over the truncated timestamps
-    # divided by the period length in days (week=7); month uses
-    # months_between on truncated bounds (exact integer by construction).
-    act = events.select(F.col(user_col), p(F.col(ts_col)).alias("_p"))
-    joined = act.join(first, user_col)
-    if period == "month":
-        off = F.round(F.months_between("_p", "_cohort")).cast("int")
-    else:
-        days = 7 if period == "week" else 1
-        off = (F.datediff("_p", "_cohort") / days).cast("int")
-    out = (
-        joined.select(
+    week = lambda c: F.date_trunc("week", c)
+    first = events.groupBy(user_col).agg(week(F.min(ts_col)).alias("_cohort"))
+    act = events.select(F.col(user_col), week(F.col(ts_col)).alias("_p"))
+    return (
+        act.join(first, user_col)
+        .select(
             F.col("_cohort").cast("timestamp_ntz").alias("cohort"),
-            off.alias("period_offset"),
+            (F.datediff("_p", "_cohort") / 7).cast("int").alias("period_offset"),
             F.col(user_col),
         )
         .distinct()
         .groupBy("cohort", "period_offset")
         .agg(F.count("*").alias("n_users"))
-    )
-    if max_offset is not None:
-        out = out.filter(F.col("period_offset") <= max_offset)
-    return out
-
-
-def retention_rates(retention: DataFrame) -> DataFrame:
-    """Add the rate column: n_users / cohort size (offset 0), rounded to
-    4 dp. One broadcast of the (cohort, size) table — ≤ |cohorts| rows."""
-    sizes = retention.filter(F.col("period_offset") == 0).select(
-        "cohort", F.col("n_users").alias("_size")
-    )
-    return retention.join(F.broadcast(sizes), "cohort").select(
-        "cohort",
-        "period_offset",
-        "n_users",
-        F.round(F.col("n_users") / F.col("_size"), 4).alias("rate"),
     )

@@ -130,11 +130,11 @@ def shuffle_hash(col: Column | str, seed: int = 0) -> Column:
 def with_shuffle_rank(
     df: DataFrame,
     key_col: str,
+    partition_by: list[str],
     seed: int = 0,
-    partition_by: list[str] | None = None,
 ) -> DataFrame:
-    """Global pseudo-random training order as a pure function of (seed,
-    key), materialized as a ``shuffle_rank`` column (1-based within each
+    """Pseudo-random training order as a pure function of (seed, key),
+    materialized as a ``shuffle_rank`` column (1-based within each
     ``partition_by`` group, e.g. per split): the row's position in
     (shuffle_hash(seed, key), key) order. Unlike orderBy(rand()) the order
     survives reruns, repartitions and speculative retries, and changing
@@ -144,17 +144,13 @@ def with_shuffle_rank(
     sharing a key tie on both sort components and their relative order
     would again be partition-dependent — dedup first.
 
-    ``partition_by`` is required in spirit at scale: an un-partitioned rank
-    is a single-partition window. Feed trainers per-split / per-shard ranks
+    ``partition_by`` is required: an un-partitioned rank would be a
+    single-partition window. Feed trainers per-split / per-shard ranks
     (bounded partitions).
     """
     from pyspark.sql.window import Window
 
     c = F.col(key_col)
     order = [shuffle_hash(c, seed), c]
-    w = (
-        Window.partitionBy(*partition_by).orderBy(*order)
-        if partition_by
-        else Window.orderBy(*order)
-    )
+    w = Window.partitionBy(*partition_by).orderBy(*order)
     return df.withColumn("shuffle_rank", F.row_number().over(w).cast("long"))

@@ -39,15 +39,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.text import tokens
+from ..functions.text import lower_tokens
 from .spread import pin
 from .spread import scaled_repartition as _scaled_repartition
-
-
-def _lower_tokens(text_col: str):
-    # NULL text → empty token array (NOT NULL): a NULL would fall out of
-    # avg(dl) and silently shift every document's BM25 length norm.
-    return F.coalesce(tokens(F.lower(F.col(text_col))), F.array().cast("array<string>"))
 
 
 def bm25_scores(
@@ -74,7 +68,7 @@ def bm25_scores(
     terms = sorted({t.lower() for t in query_terms})
 
     toks = docs.select(
-        F.col(id_col), _lower_tokens(text_col).alias("_toks")
+        F.col(id_col), lower_tokens(text_col).alias("_toks")
     )
     with_len = toks.select(id_col, "_toks", F.size("_toks").alias("_dl"))
 
@@ -206,7 +200,7 @@ def tf_idf_vectors(
     Two corpus passes (token stats, postings), one bounded broadcast, one
     (doc, term) shuffle — the standard inverted-index build shape.
     """
-    toks = docs.select(F.col(id_col), _lower_tokens(text_col).alias("_toks"))
+    toks = docs.select(F.col(id_col), lower_tokens(text_col).alias("_toks"))
     n_docs = toks.agg(F.count("*").alias("_n"))
 
     # Plain explode: empty docs contribute no postings by design

@@ -249,7 +249,6 @@ def ivf_index(
     n_clusters: int = 16,
     seed: int = 42,
     max_fit_rows: int = 100_000,
-    fit_fraction: float = 1.0,
 ):
     """IVF (inverted-file) index: k-means partitions the corpus into
     ``n_clusters`` cells; a query probes only the cells whose centroids are
@@ -267,8 +266,7 @@ def ivf_index(
     on-disk order is typically correlated with cluster structure —
     per-source, per-date — which would skew every centroid toward the
     prefix sources). orderBy+limit compiles to per-partition top-k plus
-    one k-row merge, not a full sort. ``fit_fraction`` < 1 pre-thins the
-    rows entering the top-k heaps.
+    one k-row merge, not a full sort.
 
     The Lloyd iterations run driver-side in numpy on the collected sample
     (<= max_fit_rows * dim doubles — ~50 MB at the defaults), replacing a
@@ -276,14 +274,12 @@ def ivf_index(
     overhead at any scale where the sample already fits one machine.
     Assignment back over the full corpus is one Arrow-batched pass.
     """
-    fit_df = df.select(
-        F.col(vec_col).cast("array<double>").alias("_v")
-    ).where(F.col("_v").isNotNull())
-    if fit_fraction < 1.0:
-        fit_df = fit_df.sample(fraction=fit_fraction, seed=seed)
-    fit_df = fit_df.orderBy(
-        F.xxhash64(F.col("_v"), F.lit(seed))
-    ).limit(max_fit_rows)
+    fit_df = (
+        df.select(F.col(vec_col).cast("array<double>").alias("_v"))
+        .where(F.col("_v").isNotNull())
+        .orderBy(F.xxhash64(F.col("_v"), F.lit(seed)))
+        .limit(max_fit_rows)
+    )
     rows = fit_df.toPandas()["_v"].tolist()
     # Wrong-length vectors (data corruption) would make the sample ragged
     # and kill np.asarray; fit on the majority dimension — assignment

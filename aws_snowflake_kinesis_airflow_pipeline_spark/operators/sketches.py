@@ -1,12 +1,8 @@
 """Distributed heavy hitters (B34): top-k most frequent values of a
-(possibly exploded) key column at corpus scale, without a full groupBy of
-the key domain.
-
-An exact ``groupBy(key).count().orderBy(desc).limit(k)`` shuffles the whole
-key domain — at 100 TB of tokens that is billions of distinct shingles
-through one exchange just to keep k of them. The classic two-phase
-alternative (Metwally et al., "Efficient Computation of Frequent and Top-k
-Elements in Data Streams", ICDT 2005):
+(possibly exploded) key column, with the candidates drawn from a bounded
+per-partition sketch rather than a sort of the whole key domain. The
+classic two-phase form (Metwally et al., "Efficient Computation of
+Frequent and Top-k Elements in Data Streams", ICDT 2005):
 
 1. **SpaceSaving partials, one pass, no shuffle**: each partition keeps a
    bounded counter table of ``capacity`` entries (evict-min with count
@@ -15,15 +11,16 @@ Elements in Data Streams", ICDT 2005):
    partition_total/capacity is present. Implemented as an Arrow-batched
    ``mapInPandas`` — the only Python in the operator, and it touches each
    row once.
-2. **Candidate union + exact recount**: the union of per-partition
+2. **Candidate union + exact lookup**: the union of per-partition
    summaries (≤ capacity × n_partitions rows, collected nowhere) is
-   grouped to candidate keys; the true counts of candidates ONLY are then
-   computed with a broadcast semi-join + groupBy — an aggregate whose key
-   domain is the candidate set, not the corpus.
+   grouped to candidate keys, and the caller's exact (key, n) counts are
+   restricted to those candidates with a broadcast semi-join. The one
+   caller (b10) already computes the full exact count for its own exact
+   top-k branch, so the operator adds no second pass over the raw data.
 
 Recovery guarantee: if capacity ≥ k · (heavy-tail skew factor), the true
 top-k all survive phase 1 on every partition where they matter; the final
-counts are EXACT (phase 2 recounts from the raw data), so the only
+counts are EXACT (phase 2 reads them from the exact counts), so the only
 approximation risk is a true top-k value missing from the candidate set —
 bounded by the SpaceSaving error n_p/capacity per partition. The test
 pins exact-top-k recovery on Zipfian data at modest capacity.
@@ -83,24 +80,16 @@ def top_k_frequent(
     col: str,
     k: int = 100,
     capacity: int = 4096,
-    exact_counts: DataFrame | None = None,
+    *,
+    exact_counts: DataFrame,
 ) -> DataFrame:
     """Exact counts of the candidate top-k values of ``col``.
 
     Returns (col, n) ordered by n desc, col asc — at most k rows. The
-    candidate set comes from per-partition SpaceSaving summaries; counts
-    are exact recounts over the raw data restricted to candidates.
-
-    ``exact_counts``: optional pre-computed exact (col, n) counts covering
-    at least every non-null value of ``col`` in ``df``. When a caller has
-    already paid for a full count (b10 computes one for its exact-top-k
-    branch), the recount pass over the raw data is a pure repeat — the
-    candidate semi-join over the given counts yields byte-identical
-    results (candidates are non-null, non-empty by construction) and the
-    operator drops from two raw-data passes to one (guide §1.2: don't
-    compute things twice). Standalone callers omit it and keep the
-    recount, which aggregates only the candidate key domain — the right
-    shape when no full count exists.
+    candidate set comes from per-partition SpaceSaving summaries of
+    ``df``; the counts are ``exact_counts`` (col, n) — covering at least
+    every non-null value of ``col`` in ``df`` — restricted to the
+    candidates by a broadcast semi-join.
     """
     src = df.select(col).where(F.col(col).isNotNull())
     partials = src.mapInPandas(
@@ -109,7 +98,7 @@ def top_k_frequent(
     )
     # keep the strongest candidates: sum of per-partition estimates is an
     # upper bound on the true count; cap the candidate set at a small
-    # multiple of k before the recount join
+    # multiple of k before the lookup join
     candidates = (
         partials.groupBy(col)
         .agg(F.sum("est").alias("_ub"))
@@ -117,15 +106,11 @@ def top_k_frequent(
         .limit(4 * k)
         .select(col)
     )
-    if exact_counts is not None:
-        exact = exact_counts.join(F.broadcast(candidates), col, "left_semi")
-    else:
-        exact = (
-            src.join(F.broadcast(candidates), col, "left_semi")
-            .groupBy(col)
-            .agg(F.count("*").alias("n"))
-        )
-    return exact.orderBy(F.col("n").desc(), F.col(col)).limit(k)
+    return (
+        exact_counts.join(F.broadcast(candidates), col, "left_semi")
+        .orderBy(F.col("n").desc(), F.col(col))
+        .limit(k)
+    )
 
 
 def top_k_tokens(
@@ -133,14 +118,15 @@ def top_k_tokens(
     text_col: str = "text",
     k: int = 100,
     capacity: int = 4096,
-    exact_counts: DataFrame | None = None,
+    *,
+    exact_counts: DataFrame,
 ) -> DataFrame:
     """Corpus vocabulary heavy hitters: whitespace tokens of ``text_col``
     (same tokenizer contract as functions/text.py) -> top-k by frequency.
-    ``exact_counts``: see :func:`top_k_frequent`."""
+    ``exact_counts``: (token, n), see :func:`top_k_frequent`."""
     from ..functions import text as TX
 
     toks = docs.select(
         F.explode(TX.tokens(F.col(text_col))).alias("token")
     ).where(F.col("token") != "")
-    return top_k_frequent(toks, "token", k, capacity, exact_counts)
+    return top_k_frequent(toks, "token", k, capacity, exact_counts=exact_counts)

@@ -1,8 +1,7 @@
 """Event-path transition counts — the Markov view of user journeys.
 
 For each user's time-ordered event sequence, count (from_type, to_type)
-transitions corpus-wide, with optional per-row normalization into an
-empirical transition matrix. The third event-analytics staple next to
+transitions corpus-wide. The third event-analytics staple next to
 ``event_funnel`` (ordered conversion) and ``retention`` (cohorts).
 
 Scale shape: one window (lead over the per-user time order — a single
@@ -39,15 +38,3 @@ def event_transitions(
         F.lead(type_col).over(w).alias("to_type"),
     ).where(F.col("to_type").isNotNull())
     return nxt.groupBy("from_type", "to_type").agg(F.count("*").alias("n"))
-
-
-def transition_matrix(transitions: DataFrame) -> DataFrame:
-    """Add p = n / Σ_to n (rounded 4 dp): the empirical Markov matrix.
-    The per-from totals are ≤ |event types| rows — broadcast."""
-    totals = transitions.groupBy("from_type").agg(F.sum("n").alias("_t"))
-    return transitions.join(F.broadcast(totals), "from_type").select(
-        "from_type",
-        "to_type",
-        "n",
-        F.round(F.col("n") / F.col("_t"), 4).alias("p"),
-    )

@@ -1374,8 +1374,8 @@ _FFD_IDX = "list_position(list_transform(f.caps, c -> c >= o.n_tokens), true)"
 
 
 def ffd_oracle_sql(docs_cte: str, n_part: int, budget: int) -> str:
-    """DuckDB replay of pack_sequences(hash_fn='md5'): ``docs_cte`` must
-    yield (doc_id, n_tokens). Exposed so fuzz tests can run the identical
+    """DuckDB replay of pack_sequences: ``docs_cte`` must yield
+    (doc_id, n_tokens). Exposed so fuzz tests can run the identical
     oracle over arbitrary generated corpora, not just the fixture."""
     return f"""
     WITH RECURSIVE docs AS ({docs_cte}),
@@ -1459,7 +1459,6 @@ def c18_sequence_packing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_tokens",
         max_tokens=_FFD_BUDGET,
         num_partitions=_FFD_PART,
-        hash_fn="md5",
     )
     return (
         packed.groupBy("pack_id")

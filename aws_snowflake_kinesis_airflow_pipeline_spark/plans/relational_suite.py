@@ -687,7 +687,7 @@ def b9_scalar_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2 B10 JSON path + keys over events.props ('json' branch) "
     "and array explode token frequency ('topk_tokens' branch), tagged + "
     "§2 B34 distributed heavy hitters ('hh_topk' branch: the SpaceSaving "
-    "candidate + exact-recount top-20 must EQUAL the exact top-20 the "
+    "candidates + exact-count top-20 must EQUAL the exact top-20 the "
     "'topk_tokens' branch computes in the same plan — the operator's "
     "recovery contract as a driver-checked boolean)",
 )
@@ -720,7 +720,7 @@ def b10_json_array_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round-13 (guide §1.2/§2.4): the full exact count is this pack's own
     # declared computation, and it is consumed THREE times — the exact
     # top-20 branch, its struct-list copy for the hh comparison, and the
-    # heavy-hitter recount. Pin it once (vocabulary-sized blocks) and hand
+    # heavy-hitter lookup. Pin it once (vocabulary-sized blocks) and hand
     # it to top_k_tokens as ``exact_counts``, dropping a whole
     # tokenize+explode+count pass over the corpus.
     from ..operators.sketches import top_k_tokens
@@ -736,7 +736,7 @@ def b10_json_array_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("string").alias("s"),
         "n",
     )
-    # B34 heavy hitters: the SpaceSaving-candidate + exact-recount top-20
+    # B34 heavy hitters: the SpaceSaving-candidate + exact-count top-20
     # must equal the exact top-20 above — both use the same deterministic
     # (n desc, token asc) cut, and the operator's contract is that the
     # candidate set never misses a true heavy hitter at this capacity.

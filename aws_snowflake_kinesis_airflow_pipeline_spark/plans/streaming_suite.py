@@ -276,7 +276,7 @@ def s1_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # B44/B45 batch twins: cohort matrix keyed by its cohort week in
     # window_start (offset stringified into the type slot), transition
     # counts keyed as 'from->to'.
-    retention = cohort_retention(ev, period="week").select(
+    retention = cohort_retention(ev).select(
         F.lit("retention").alias("op"),
         F.col("cohort").alias("window_start"),
         F.lit(None).cast("timestamp_ntz").alias("window_end"),

@@ -2,7 +2,8 @@
 
 Reference behavior re-expressed (SURVEY.md §3):
 
-- hourly DAG schedule            -> micro-batch trigger (or availableNow)
+- hourly DAG schedule            -> one ``run_once`` (Trigger.AvailableNow)
+                                    per scheduled tick
 - S3KeySensor partition poll     -> streaming file source discovery
 - COPY INTO staging (ON_ERROR)   -> PERMISSIVE read, corrupt-record column
 - INSERT..SELECT w/ NOT IN dedup -> not-null filter + left-anti join append
@@ -98,7 +99,6 @@ class IngestPipeline:
         spark: SparkSession,
         landing_path: str,
         warehouse_path: str,
-        fail_on_dq: bool = True,
     ):
         self.spark = spark
         self.landing_path = landing_path
@@ -106,7 +106,6 @@ class IngestPipeline:
         self.events_path = os.path.join(warehouse_path, "events")
         self.summary_path = os.path.join(warehouse_path, "daily_event_summary")
         self.checkpoint = os.path.join(warehouse_path, "_checkpoints", "ingest")
-        self.fail_on_dq = fail_on_dq
         self.stats = IngestStats()
 
     # -- table handles ----------------------------------------------------
@@ -272,7 +271,7 @@ class IngestPipeline:
                 n_dup = duplicate_event_ids(
                     events.filter(F.col("event_date").isin(affected_dates))
                 ).count()
-                if self.fail_on_dq and n_dup > 0:
+                if n_dup > 0:
                     raise ValueError(
                         f"DQ gate: {n_dup} duplicate event_ids in events table"
                     )
@@ -348,7 +347,7 @@ class IngestPipeline:
 
     # -- query lifecycle --------------------------------------------------
 
-    def start(self, available_now: bool = True, max_files_per_trigger=None):
+    def start(self, max_files_per_trigger=None):
         stream = (
             read_landing_stream(
                 self.spark, self.landing_path, max_files_per_trigger
@@ -358,21 +357,18 @@ class IngestPipeline:
             # in StreamingQueryProgress.observedMetrics without an extra job.
             .observe("ingest", F.count(F.lit(1)).alias("rows"))
         )
-        writer = (
+        return (
             stream.writeStream.foreachBatch(self.process_batch)
             .option("checkpointLocation", self.checkpoint)
             .outputMode("update")
+            .trigger(availableNow=True)
+            .start()
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        else:
-            writer = writer.trigger(processingTime="300 seconds")
-        return writer.start()
 
     def run_once(self):
         """Process everything currently in the landing zone, then stop —
-        the test/catch-up mode (Trigger.AvailableNow ↔ one DAG run).
-        Returns the terminated query (progress/observed metrics readable)."""
-        q = self.start(available_now=True)
+        one scheduled tick (Trigger.AvailableNow ↔ one DAG run). Returns
+        the terminated query (progress/observed metrics readable)."""
+        q = self.start()
         q.awaitTermination()
         return q

@@ -1,5 +1,5 @@
 """As-of join semantics on hand-built cases: before/at/after boundaries,
-no-match rows, multiple updates, inner mode."""
+no-match rows, multiple updates."""
 
 from __future__ import annotations
 
@@ -33,14 +33,6 @@ def test_asof_join_boundaries(spark):
         ).collect()
     }
     assert out == {"a": 100.0, "b": 150.0, "c": None, "d": None}
-
-    inner = {
-        r["tag"]
-        for r in asof_join(
-            left, right, "k", "lts", "rts", ["price"], how="inner"
-        ).collect()
-    }
-    assert inner == {"a", "b"}
 
 
 def test_asof_join_never_tears_rows(spark):

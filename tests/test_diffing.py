@@ -1,20 +1,16 @@
 """Corpus snapshot diff (operators/diffing.py).
 
 Pins: every status class on a hand-built pair of snapshots, the
-whitespace-normalization contract (re-wrapped text is unchanged; raw=True
-flags it), NULL text, delta_for_ingest membership, and the plan invariant
-that the diff exchange carries fingerprints instead of document bodies.
+whitespace-normalization contract (re-wrapped text is unchanged), NULL
+text, and the plan invariant that the diff exchange carries fingerprints
+instead of document bodies.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from aws_snowflake_kinesis_airflow_pipeline_spark.operators.diffing import (
-    corpus_diff,
-    delta_for_ingest,
-    diff_summary,
-)
+from aws_snowflake_kinesis_airflow_pipeline_spark.operators.diffing import corpus_diff
 
 OLD = [
     (1, "alpha beta gamma"),
@@ -52,31 +48,6 @@ def test_all_status_classes(spark, snaps):
         6: "unchanged",
         7: "added",
     }
-
-
-def test_raw_mode_flags_formatting(spark, snaps):
-    old, new = snaps
-    got = {
-        r["doc_id"]: r["status"]
-        for r in corpus_diff(old, new, raw=True).collect()
-    }
-    assert got[4] == "changed"  # raw bytes differ
-    assert got[1] == "unchanged" and got[7] == "added"
-
-
-def test_summary_counts(spark, snaps):
-    old, new = snaps
-    got = {
-        r["status"]: r["n"]
-        for r in diff_summary(corpus_diff(old, new)).collect()
-    }
-    assert got == {"unchanged": 4, "removed": 1, "changed": 1, "added": 1}
-
-
-def test_delta_for_ingest(spark, snaps):
-    old, new = snaps
-    delta = {r["doc_id"] for r in delta_for_ingest(old, new).collect()}
-    assert delta == {5, 7}
 
 
 def test_identity_diff_is_all_unchanged(spark, snaps):

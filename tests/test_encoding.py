@@ -2,7 +2,7 @@
 
 Pins: vocab rank order and tie-break, exact encoded sequences against a
 pure-Python reference, OOV handling, empty/NULL docs, decode round-trip
-(up to OOV + whitespace normalization), min_count, partition invariance,
+(up to OOV + whitespace normalization), partition invariance,
 and the JVM-only plan (no Python eval nodes).
 """
 
@@ -28,10 +28,10 @@ DOCS = [
 ]
 
 
-def _py_vocab(docs, vocab_size, min_count=1):
+def _py_vocab(docs, vocab_size):
     toks = [(t or "").lower().split() for _, t in docs]
     c = Counter(w for ts in toks for w in ts)
-    items = [(w, n) for w, n in c.items() if n >= min_count]
+    items = list(c.items())
     items.sort(key=lambda kv: (-kv[1], kv[0]))
     return {w: i + 1 for i, (w, _) in enumerate(items[:vocab_size])}
 
@@ -90,15 +90,6 @@ def test_decode_roundtrip(spark, docs_df):
     assert back[1] == "the cat sat on the mat"
     assert back[2] == "the cat ate a rare-token"  # lowercased
     assert back[3] == "" and back[4] == ""
-
-
-def test_min_count(spark, docs_df):
-    vocab = {
-        r["token"]
-        for r in build_vocab(docs_df, vocab_size=100, min_count=2).collect()
-    }
-    assert "the" in vocab and "cat" in vocab
-    assert "rare-token" not in vocab
 
 
 def test_partition_invariance(spark, docs_df):

@@ -1,6 +1,7 @@
 """Driver-contract smoke tests: entry() runs, every query runs at sf0.001,
-oracle_sql keys are a subset of queries keys, and every package module and
-top-level definition is reachable from an entry point."""
+oracle_sql keys are a subset of queries keys, every package module and
+top-level definition is reachable from an entry point, and every argument
+a test sets is also set outside the tests."""
 
 from __future__ import annotations
 
@@ -8,7 +9,8 @@ import ast
 import sys
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+_REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(_REPO))
 
 import __spark_entry__ as entry_mod
 
@@ -52,7 +54,6 @@ def _package_imports(path: Path, module: str, is_pkg: bool) -> set[str]:
     return names
 
 
-_REPO = Path(__file__).resolve().parents[1]
 _PKG = "aws_snowflake_kinesis_airflow_pipeline_spark"
 
 
@@ -134,16 +135,6 @@ _TEST_ONLY_KEPT = {
     "streaming.windows.dedup_within_watermark",
     # reference the registered grouped_mad_outliers_paired is tested against
     "operators.robust.grouped_mad_outliers",
-    # small companions of registered operators, each pinned by its own test;
-    # deleting them with their tests is ROADMAP item 4's last step
-    "functions.vectors.l2_normalize",        # B28 unit-norm step
-    "operators.funnel.apply_funnel",         # B27 funnel ≡ filtered corpus
-    "operators.diffing.diff_summary",        # B41 audit rollup
-    "operators.diffing.delta_for_ingest",    # B41 added+changed bodies
-    "operators.retention.retention_rates",   # B44 rates column
-    "operators.transitions.transition_matrix",  # B45 row-normalized matrix
-    "operators.multimodal.frame_sample_plan",   # video frame explode
-    "operators.multimodal.resize_nearest",      # thumbnail resize
 }
 
 
@@ -184,3 +175,185 @@ def test_every_package_definition_is_used_outside_tests():
         for q in used:
             live |= defs[q][1]
     assert unused == _TEST_ONLY_KEPT
+
+
+def _signatures(modules: dict[str, tuple[Path, bool]]) -> dict[str, list[str]]:
+    """Positional parameter names of every top-level function, class (its
+    ``__init__``, or a dataclass's annotated fields) and method of the
+    reachable package modules. ``self``/``cls`` are dropped: calls bind
+    the instance implicitly."""
+    def params(fn: ast.FunctionDef, method: bool) -> list[str]:
+        names = [p.arg for p in (*fn.args.posonlyargs, *fn.args.args)]
+        return names[1:] if method and names[:1] in (["self"], ["cls"]) else names
+
+    sigs: dict[str, list[str]] = {}
+    for mod in _reachable_modules(modules):
+        path = modules[mod][0]
+        rel = mod.removeprefix(_PKG + ".")
+        for node in ast.parse(path.read_text(), str(path)).body:
+            qual = f"{rel}.{node.name}" if hasattr(node, "name") else ""
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                sigs[qual] = params(node, False)
+            elif isinstance(node, ast.ClassDef):
+                sigs[qual] = [n.target.id for n in node.body
+                              if isinstance(n, ast.AnnAssign)
+                              and isinstance(n.target, ast.Name)]
+                for m in node.body:
+                    if isinstance(m, ast.FunctionDef):
+                        if m.name == "__init__":
+                            sigs[qual] = params(m, True)
+                        sigs[f"{qual}.{m.name}"] = params(m, True)
+    return sigs
+
+
+def _parameters_set(path: Path, module: str, is_pkg: bool,
+                    modules: dict, sigs: dict[str, list[str]]) -> set[tuple[str, str]]:
+    """(package callable, parameter) pairs that calls in ``path`` set, by
+    keyword or by position. Names resolve through imports (``as`` aliases
+    included), the module's own definitions, subclasses of package
+    classes, and variables assigned from a package constructor (plus
+    ``self`` inside a package class); ``<expr>.name(...)`` on an
+    unresolved receiver matches a package function the file imports as
+    ``name`` (a namespace of imports). Calls with ``**kw`` are skipped;
+    positional arguments stop mapping at the first ``*args``."""
+    tree = ast.parse(path.read_text(), str(path))
+    here = module.split(".") if is_pkg else module.split(".")[:-1]
+
+    def rel(name: str) -> str:
+        return name.removeprefix(_PKG + ".")
+
+    bound: dict[str, tuple[str, str]] = {}   # local name -> (kind, target)
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                parent = here[: len(here) - (node.level - 1)]
+                base = ".".join(parent + ([base] if base else []))
+            for a in node.names:
+                full = f"{base}.{a.name}"
+                if full in modules:
+                    bound[a.asname or a.name] = ("mod", full)
+                elif f"{rel(base)}.{a.name}" in sigs:
+                    bound[a.asname or a.name] = ("def", f"{rel(base)}.{a.name}")
+        elif isinstance(node, ast.Import):
+            for a in node.names:
+                if a.asname:
+                    bound[a.asname] = ("mod", a.name)
+                else:
+                    head = a.name.split(".")[0]
+                    bound[head] = ("mod", head)
+    if module in modules:
+        for node in tree.body:
+            if f"{rel(module)}.{getattr(node, 'name', '')}" in sigs:
+                bound[node.name] = ("def", f"{rel(module)}.{node.name}")
+
+    def resolve(func: ast.AST) -> str | None:
+        parts: list[str] = []
+        while isinstance(func, ast.Attribute):
+            parts.insert(0, func.attr)
+            func = func.value
+        if not isinstance(func, ast.Name) or func.id not in bound:
+            kind, target = bound.get(parts[-1] if len(parts) == 1 else "",
+                                     ("", ""))
+            return target if kind == "def" else None
+        kind, target = bound[func.id]
+        if kind == "mod":
+            dotted = [*target.split("."), *parts]
+            for i in range(len(dotted) - 1, 0, -1):
+                if ".".join(dotted[:i]) in modules:
+                    target = ".".join([rel(".".join(dotted[:i])), *dotted[i:]])
+                    break
+            else:
+                return None
+        elif parts:
+            target = ".".join([target, *parts])
+        return target if target in sigs else None
+
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ClassDef):
+            base = next(filter(None, map(resolve, node.bases)), None)
+            if base is not None:
+                bound[node.name] = ("def", base)
+    for node in ast.walk(tree):
+        if (isinstance(node, ast.Assign) and len(node.targets) == 1
+                and isinstance(node.targets[0], ast.Name)
+                and isinstance(node.value, ast.Call)):
+            cls = resolve(node.value.func)
+            if cls is not None and f"{cls}.__init__" in sigs:
+                bound[node.targets[0].id] = ("def", cls)
+
+    found: set[tuple[str, str]] = set()
+
+    def scan(scope: ast.AST) -> None:
+        for call in ast.walk(scope):
+            if not isinstance(call, ast.Call) or any(
+                    k.arg is None for k in call.keywords):
+                continue
+            target = resolve(call.func)
+            if target is None:
+                continue
+            names = sigs[target]
+            for i, arg in enumerate(call.args):
+                if isinstance(arg, ast.Starred) or i >= len(names):
+                    break
+                found.add((target, names[i]))
+            found.update((target, k.arg) for k in call.keywords)
+
+    for node in tree.body:
+        if isinstance(node, ast.ClassDef) and node.name in bound:
+            bound["self"] = bound[node.name]
+        scan(node)
+        bound.pop("self", None)
+    return found
+
+
+# (callable, parameter) pairs only tests set, each kept on purpose.
+_TEST_ONLY_PARAMS = {
+    # the uncapped join form over a cap-filtered index: the reference the
+    # capped grouped emission and the MinHash recall check compare against
+    ("operators.dedup.ngram_jaccard_pairs", "index"),
+    ("operators.dedup.ngram_jaccard_pairs", "sizes"),
+    # batch reference at the incremental store's LSH parameters
+    ("operators.dedup.embedding_near_dup_pairs", "n_bits"),
+    ("operators.dedup.embedding_near_dup_pairs", "n_tables"),
+    # k=2 lets the LSH ⊆ exact property run on two-token documents
+    ("operators.dedup.minhash_lsh_pairs", "k"),
+    # the store's meta round-trip and dimension check at small sizes
+    ("operators.incremental.write_embedding_index", "dim"),
+    ("operators.incremental.write_embedding_index", "n_bits"),
+    ("operators.incremental.write_embedding_index", "n_tables"),
+    ("operators.incremental.write_embedding_index", "seed"),
+    # hand-built near-dup pairs pin the split's component closure
+    ("operators.leakage.leakage_safe_split", "pairs"),
+    # the round-not-truncate rule needs a fine 1/buckets grid
+    ("operators.sampling.with_split", "buckets"),
+    # a small cell count keeps the fixture's cells populated
+    ("operators.semdedup.semantic_dedup", "n_clusters"),
+    # S1 one file per trigger: the multi-batch replay test
+    ("streaming.pipeline.IngestPipeline.start", "max_files_per_trigger"),
+}
+
+
+def test_every_keyword_a_test_passes_is_passed_outside_tests():
+    """A parameter that only tests set selects a branch no entry point
+    runs. Every (package callable, parameter) pair a test sets must also
+    be set by an entry point or by reachable package code, or be one of
+    the kept pairs; parameters of the kept test-only definitions are
+    exempt."""
+    modules = _package_modules()
+    sigs = _signatures(modules)
+    live: set[tuple[str, str]] = set()
+    for f in _roots():
+        live |= _parameters_set(f, f.stem, False, modules, sigs)
+    for mod in _reachable_modules(modules):
+        path, is_pkg = modules[mod]
+        live |= _parameters_set(path, mod, is_pkg, modules, sigs)
+    tested: set[tuple[str, str]] = set()
+    for f in [*sorted((_REPO / "tests").glob("*.py")),
+              *sorted((_REPO / "perfbench").glob("test_*.py"))]:
+        tested |= _parameters_set(f, f.stem, False, modules, sigs)
+    test_only = {
+        (fn, p) for fn, p in tested - live
+        if not any(fn == k or fn.startswith(k + ".") for k in _TEST_ONLY_KEPT)
+    }
+    assert test_only == _TEST_ONLY_PARAMS

@@ -1,6 +1,5 @@
 """Multimodal plumbing tests: schema, Arrow batch shape, deterministic
-fake-decode kernel, frame-sample plan, PPM decode and its rejections,
-nearest-neighbor resize, pixel stats."""
+fake-decode kernel, PPM decode and its rejections, pixel stats."""
 
 from __future__ import annotations
 
@@ -49,15 +48,6 @@ def test_extract_features_deterministic_batches(spark, sf_dir):
     assert all(0.0 <= x <= 1.0 for v in f1.values() for x in v)
 
 
-def test_frame_sample_plan(spark):
-    media = spark.createDataFrame(
-        [(1, b"x", ("video/mp4", None, None, 3500))],
-        multimodal.MEDIA_SCHEMA,
-    )
-    frames = multimodal.frame_sample_plan(media, every_ms=1000)
-    assert [r["frame_ts_ms"] for r in frames.collect()] == [0, 1000, 2000, 3000]
-
-
 def test_ppm_roundtrip_tiny_planted_image():
     px = np.arange(2 * 3 * 3, dtype=np.uint8).reshape(2, 3, 3)
     payload = encode_ppm(px)
@@ -93,20 +83,6 @@ def test_ppm_header_comments_and_whitespace():
 def test_decode_image_rejects_malformed(payload):
     with pytest.raises(ValueError):
         multimodal.decode_image(payload)
-
-
-def test_resize_nearest():
-    px = np.array(
-        [[[0, 0, 0], [10, 10, 10]], [[20, 20, 20], [30, 30, 30]]],
-        dtype=np.uint8,
-    )
-    up = multimodal.resize_nearest(px, 4, 4)
-    assert up.shape == (4, 4, 3)
-    # each source pixel becomes a 2x2 block under nearest-neighbor
-    assert (up[0:2, 0:2, 0] == 0).all() and (up[0:2, 2:4, 0] == 10).all()
-    assert (up[2:4, 0:2, 0] == 20).all() and (up[2:4, 2:4, 0] == 30).all()
-    down = multimodal.resize_nearest(up, 2, 2)
-    assert (down == px).all()
 
 
 def test_extract_pixel_stats_real_decode_and_quarantine(spark):

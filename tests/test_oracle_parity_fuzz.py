@@ -252,8 +252,8 @@ def test_lsh_pairs_match_exact_jaccard_on_random_corpus(spark):
 
 
 def test_ffd_packing_matches_duckdb_on_random_token_counts(spark):
-    """pack_sequences(hash_fn='md5') == the recursive-CTE FFD oracle on a
-    hostile random size distribution: zeros, budget-sized docs, oversize
+    """pack_sequences == the recursive-CTE FFD oracle on a hostile
+    random size distribution: zeros, budget-sized docs, oversize
     docs (> budget -> singleton pack with clamped capacity 0), ties on
     n_tokens (doc_id tiebreak), and a non-fixture partition count."""
     from aws_snowflake_kinesis_airflow_pipeline_spark.operators.packing import (
@@ -278,7 +278,6 @@ def test_ffd_packing_matches_duckdb_on_random_token_counts(spark):
         "n_tokens",
         max_tokens=budget,
         num_partitions=n_part,
-        hash_fn="md5",
     ).collect()
     from collections import defaultdict
 
@@ -727,7 +726,7 @@ def test_cohort_retention_matches_duckdb_on_random_events(spark):
     # other branches' TIMESTAMP window_start coerces it back)
     got = {
         (r.cohort.date(), r.period_offset): r.n_users
-        for r in cohort_retention(sdf, period="week").collect()
+        for r in cohort_retention(sdf).collect()
     }
 
     pdf = pd.DataFrame(rows, columns=["user_id", "ts"])

@@ -165,7 +165,7 @@ def test_anti_join_is_join_not_subquery_scan(spark, sf_dir):
 def test_ivf_index_has_no_count_prepass(spark, monkeypatch):
     """Index build must not run a counting job over the corpus just to size
     the KMeans fit sample — at 100 TB that is one extra all-data pass per
-    build. The fit set is bounded by sample+limit instead, which
+    build. The fit set is bounded by orderBy+limit instead, which
     short-circuits the scan."""
     import random as rnd
 
@@ -184,7 +184,7 @@ def test_ivf_index_has_no_count_prepass(spark, monkeypatch):
 
     monkeypatch.setattr(DataFrame, "count", no_count)
     model, indexed = similarity.ivf_index(
-        emb, "embedding", n_clusters=4, max_fit_rows=150, fit_fraction=0.9
+        emb, "embedding", n_clusters=4, max_fit_rows=150
     )
     assert len(model.clusterCenters()) == 4
     assert indexed.where("ivf_cluster IS NULL").isEmpty()

@@ -1,8 +1,7 @@
 """Cohort retention (operators/retention.py).
 
-Pins: the full matrix against a pure-Python replay on hand-built and
-randomized event sets (day and week periods), offset-0 == cohort size,
-monotone-ish sanity, rates, max_offset cut, and validation.
+Pins: the weekly matrix against a pure-Python replay on hand-built and
+randomized event sets, offset-0 == cohort size.
 """
 
 from __future__ import annotations
@@ -11,27 +10,19 @@ import datetime as dt
 import random
 from collections import defaultdict
 
-import pytest
-
 from aws_snowflake_kinesis_airflow_pipeline_spark.operators.retention import (
     cohort_retention,
-    retention_rates,
 )
 
 T0 = dt.datetime(2024, 1, 1)  # a Monday: week truncation lands here
 
 
-def _py_retention(rows, period):
+def _py_retention(rows):
     def trunc(ts):
         d = ts.date()
-        if period == "day":
-            return dt.datetime(d.year, d.month, d.day)
-        if period == "week":
-            m = d - dt.timedelta(days=d.weekday())
-            return dt.datetime(m.year, m.month, m.day)
-        raise AssertionError
+        m = d - dt.timedelta(days=d.weekday())
+        return dt.datetime(m.year, m.month, m.day)
 
-    days = 1 if period == "day" else 7
     first = {}
     for u, ts in rows:
         c = trunc(ts)
@@ -39,16 +30,16 @@ def _py_retention(rows, period):
             first[u] = c
     seen = defaultdict(set)
     for u, ts in rows:
-        off = (trunc(ts) - first[u]).days // days
+        off = (trunc(ts) - first[u]).days // 7
         seen[(first[u], off)].add(u)
     return {k: len(v) for k, v in seen.items()}
 
 
-def _run(spark, rows, period, **kw):
+def _run(spark, rows):
     df = spark.createDataFrame(rows, "user_id long, ts timestamp_ntz")
     return {
         (r["cohort"], r["period_offset"]): r["n_users"]
-        for r in cohort_retention(df, period, **kw).collect()
+        for r in cohort_retention(df).collect()
     }
 
 
@@ -61,7 +52,7 @@ HAND = [
 
 
 def test_hand_built_weeks(spark):
-    got = _run(spark, HAND, "week")
+    got = _run(spark, HAND)
     w0, w1 = T0, T0 + dt.timedelta(days=7)
     assert got == {
         (w0, 0): 3,  # users 1, 2, 4
@@ -78,25 +69,7 @@ def test_randomized_against_python(spark):
         for u in range(80)
         for _ in range(rng.randint(1, 8))
     ]
-    for period in ("day", "week"):
-        got = _run(spark, rows, period)
-        want = _py_retention(rows, period)
-        assert got == want and len(want) > 20
+    got = _run(spark, rows)
+    want = _py_retention(rows)
+    assert got == want and len(want) > 20
 
-
-def test_rates_and_max_offset(spark):
-    df = spark.createDataFrame(HAND, "user_id long, ts timestamp_ntz")
-    ret = cohort_retention(df, "week", max_offset=1)
-    assert max(r["period_offset"] for r in ret.collect()) <= 1
-    rates = {
-        (r["cohort"], r["period_offset"]): r["rate"]
-        for r in retention_rates(ret).collect()
-    }
-    assert rates[(T0, 0)] == 1.0
-    assert rates[(T0, 1)] == round(1 / 3, 4)
-
-
-def test_validation(spark):
-    df = spark.createDataFrame(HAND, "user_id long, ts timestamp_ntz")
-    with pytest.raises(ValueError):
-        cohort_retention(df, "fortnight")

@@ -39,11 +39,14 @@ def test_split_fractions_roughly_hold(spark, sf_dir):
 
 def test_deterministic_shuffle_stable_and_seed_dependent(spark):
     df = spark.createDataFrame(
-        [(i, f"doc {i}") for i in range(200)], "doc_id long, text string"
+        [(i, f"doc {i}", "train") for i in range(200)],
+        "doc_id long, text string, split string",
     )
 
     def order(frame, seed):
-        ranked = sampling.with_shuffle_rank(frame, "doc_id", seed=seed)
+        ranked = sampling.with_shuffle_rank(
+            frame, "doc_id", partition_by=["split"], seed=seed
+        )
         return [r["doc_id"] for r in ranked.orderBy("shuffle_rank").collect()]
 
     order1 = order(df, 1)

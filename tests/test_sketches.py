@@ -1,4 +1,4 @@
-"""Heavy-hitters tests (B34): SpaceSaving-candidate + exact-recount must
+"""Heavy-hitters tests (B34): SpaceSaving candidates + exact counts must
 recover the exact top-k on skewed data, across partition layouts, and the
 corpus tokenizer path must agree with a full exact count."""
 
@@ -11,6 +11,10 @@ from pyspark.sql import functions as F
 
 from aws_snowflake_kinesis_airflow_pipeline_spark.catalog import load_table
 from aws_snowflake_kinesis_airflow_pipeline_spark.operators import sketches
+
+
+def _counts(df, col):
+    return df.groupBy(col).agg(F.count("*").alias("n"))
 
 
 def _exact_topk(df, col, k):
@@ -28,8 +32,8 @@ def _exact_topk(df, col, k):
 def test_topk_exact_on_zipfian_fuzz(spark):
     """Zipf(1.2) over a 5000-word vocab, 60k draws, 16 partitions, modest
     capacity: the operator must return the EXACT top-20 (values and
-    counts) — phase 2 recounts, so any deviation means a candidate was
-    lost, which the SpaceSaving bound forbids at this skew."""
+    counts) — phase 2 reads exact counts, so any deviation means a
+    candidate was lost, which the SpaceSaving bound forbids at this skew."""
     rng = random.Random(42)
     vocab = [f"w{i:04d}" for i in range(5000)]
     weights = [1.0 / (i + 1) ** 1.2 for i in range(5000)]
@@ -39,7 +43,9 @@ def test_topk_exact_on_zipfian_fuzz(spark):
     ).repartition(16)
     got = [
         (r["word"], r["n"])
-        for r in sketches.top_k_frequent(df, "word", k=20, capacity=1024).collect()
+        for r in sketches.top_k_frequent(
+            df, "word", k=20, capacity=1024, exact_counts=_counts(df, "word")
+        ).collect()
     ]
     assert got == _exact_topk(df, "word", 20)
 
@@ -53,7 +59,9 @@ def test_topk_heavy_keys_survive_uniform_noise(spark):
     rows += [(f"noise{rng.randrange(200_000)}",) for _ in range(40_000)]
     rng.shuffle(rows)
     df = spark.createDataFrame(rows, "word string").repartition(32)
-    got = sketches.top_k_frequent(df, "word", k=3, capacity=2048).collect()
+    got = sketches.top_k_frequent(
+        df, "word", k=3, capacity=2048, exact_counts=_counts(df, "word")
+    ).collect()
     assert [(r["word"], r["n"]) for r in got] == [
         ("HEAVY_A", 3000),
         ("HEAVY_B", 2000),
@@ -66,39 +74,28 @@ def test_topk_nulls_ignored_and_k_truncates(spark):
         [("a",)] * 5 + [("b",)] * 3 + [(None,)] * 10 + [("c",)] * 1,
         "word string",
     )
-    got = [(r["word"], r["n"]) for r in sketches.top_k_frequent(df, "word", k=2).collect()]
+    got = [
+        (r["word"], r["n"])
+        for r in sketches.top_k_frequent(
+            df, "word", k=2, exact_counts=_counts(df, "word")
+        ).collect()
+    ]
     assert got == [("a", 5), ("b", 3)]
 
 
 def test_top_k_tokens_matches_exact_count_on_fixture(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    got = [
-        (r["token"], r["n"])
-        for r in sketches.top_k_tokens(docs, k=15, capacity=1024).collect()
-    ]
     from aws_snowflake_kinesis_airflow_pipeline_spark.functions import text as TX
 
+    docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(F.explode(TX.tokens(F.col("text"))).alias("token")).where(
         F.col("token") != ""
     )
+    got = [
+        (r["token"], r["n"])
+        for r in sketches.top_k_tokens(
+            docs, k=15, capacity=1024, exact_counts=_counts(toks, "token")
+        ).collect()
+    ]
     assert got == _exact_topk(toks, "token", 15)
     assert len(got) == 15 and got[0][1] >= got[-1][1]
 
-
-def test_exact_counts_path_matches_recount_path(spark, sf_dir):
-    """top_k_frequent(exact_counts=...) must return byte-identical rows to
-    the default recount path (round-13: b10 shares its full exact count
-    with the heavy-hitter recount instead of paying a second corpus
-    pass)."""
-    docs = load_table(spark, sf_dir, "documents")
-    from aws_snowflake_kinesis_airflow_pipeline_spark.functions import text as TX
-
-    toks = docs.select(F.explode(TX.tokens(F.col("text"))).alias("token")).where(
-        F.col("token") != ""
-    )
-    counts = toks.groupBy("token").agg(F.count("*").alias("n"))
-    base = sketches.top_k_tokens(docs, k=15, capacity=1024).collect()
-    shared = sketches.top_k_tokens(
-        docs, k=15, capacity=1024, exact_counts=counts
-    ).collect()
-    assert [tuple(r) for r in shared] == [tuple(r) for r in base]

@@ -257,7 +257,7 @@ def test_ingest_soak_many_microbatches_one_query(spark, dirs):
             summary_checks.append(batch_id)
 
     pipe = CheckedPipeline(spark, landing, warehouse)
-    q = pipe.start(available_now=True, max_files_per_trigger=1)
+    q = pipe.start(max_files_per_trigger=1)
     q.awaitTermination()
 
     assert pipe.stats.batches >= 5  # genuinely micro-batched, not one shot

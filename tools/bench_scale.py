@@ -248,7 +248,7 @@ def _ops(spark, d):
         "ivf": lambda: _ann_ivf(),
         "pq": lambda: _ann_pq(),
         "semdedup": lambda: _ann_semdedup(),
-        "retention": lambda: _evops().cohort_retention(ev(), period="week"),
+        "retention": lambda: _evops().cohort_retention(ev()),
         "transition": lambda: _evops().event_transitions(ev()),
         "funnel": lambda: _evops().funnel_conversion(
             ev(), ["view", "click", "purchase"], within="1 hour"
