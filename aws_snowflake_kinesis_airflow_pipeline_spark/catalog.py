@@ -32,8 +32,6 @@ TABLES = (
 # counts independent of fact-table scale (region=5, nation=25 at every SF).
 SMALL_DIMS = frozenset({"region", "nation"})
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")

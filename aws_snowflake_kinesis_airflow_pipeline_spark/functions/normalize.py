@@ -6,7 +6,7 @@ quotes, seven kinds of dash, zero-width joiners and stray control bytes;
 two byte-different strings that render identically MUST dedup together.
 The pack:
 
-* :func:`unicode_normalize` — NFC/NFKC/NFD/NFKD via ``unicodedata`` in an
+* :func:`unicode_normalize` — NFKC via ``unicodedata`` in an
   Arrow-batched ``pandas_udf`` (Spark SQL has no normalization builtin;
   this is the one genuinely non-JVM step, batched so the Python cost is
   per-Arrow-batch, and the kernel is a C-implemented stdlib call per row).
@@ -26,8 +26,6 @@ from pyspark.sql import Column, functions as F
 
 from .text import WS_CLASS
 
-_FORMS = ("NFC", "NFKC", "NFD", "NFKD")
-
 #: Curly/typographic punctuation -> ASCII. `translate` is a 1:1 char map —
 #: one JVM pass, no regex engine.
 _PUNCT_FROM = "‘’‚‛“”„‟–—―«»"
@@ -37,14 +35,11 @@ _PUNCT_TO = "''''\"\"\"\"---\"\""
 _CONTROL_RE = r"[\x00-\x08\x0b\x0c\x0e-\x1f\x7f\p{Cf}]"
 
 
-def unicode_normalize(col: Column | str, form: str = "NFKC") -> Column:
-    if form not in _FORMS:
-        raise ValueError(f"form must be one of {_FORMS}")
-
+def unicode_normalize(col: Column | str) -> Column:
     @F.pandas_udf("string")
     def _norm(s: pd.Series) -> pd.Series:
         return s.map(
-            lambda x: unicodedata.normalize(form, x) if x is not None else None
+            lambda x: unicodedata.normalize("NFKC", x) if x is not None else None
         )
 
     return _norm(F.col(col) if isinstance(col, str) else col)
@@ -71,9 +66,9 @@ def collapse_whitespace(col: Column | str) -> Column:
     return F.trim(F.regexp_replace(c, f"[{WS_CLASS}]+", " "))
 
 
-def normalize_text(col: Column | str, form: str = "NFKC") -> Column:
+def normalize_text(col: Column | str) -> Column:
     """The composed cleaning pass: unicode-normalize, strip control/format
     chars, unify typographic punctuation, collapse whitespace."""
     return collapse_whitespace(
-        standardize_punct(strip_control(unicode_normalize(col, form)))
+        standardize_punct(strip_control(unicode_normalize(col)))
     )

@@ -31,6 +31,9 @@ TOKEN_SPLIT_RE = f"[{WS_CLASS}]+"
 #: operators fall back to character n-grams (see char_shingles).
 NO_SPACE_SCRIPT_RE = r"[一-鿿぀-ヿ가-힣]"
 
+#: Character n-gram width of that fallback.
+CHAR_SHINGLE_K = 5
+
 #: BPE-ish lexer: words of alphanumerics OR single non-space punctuation —
 #: the classic pre-tokenization regex shape used by byte-pair encoders.
 #: Same WS_CLASS spelling as the tokenizer (RE2/Java ``\s`` parity).
@@ -113,14 +116,16 @@ def word_shingles(tokens_col: Column, k: int = 3) -> Column:
     )
 
 
-def char_shingles(col: Column | str, k: int = 5) -> Column:
-    """Character k-gram shingles of the normalized text (empty when the
-    text is shorter than k) — the shingle unit for no-space scripts, where
-    a word shingle would be one giant token and the document would silently
-    vanish from every dedup/similarity signal. Pure array expression
-    (sequence of offsets -> substr), no explode, no UDF."""
+def char_shingles(col: Column | str) -> Column:
+    """Character ``CHAR_SHINGLE_K``-gram shingles of the normalized text
+    (empty when the text is shorter than that) — the shingle unit for
+    no-space scripts, where a word shingle would be one giant token and
+    the document would silently vanish from every dedup/similarity
+    signal. Pure array expression (sequence of offsets -> substr), no
+    explode, no UDF."""
     c = fingerprint_normalize(col)
     n = F.length(c)
+    k = CHAR_SHINGLE_K
     grams = F.transform(
         F.sequence(F.lit(1), n - (k - 1)),
         lambda i: F.substr(c, i, F.lit(k)),
@@ -128,10 +133,8 @@ def char_shingles(col: Column | str, k: int = 5) -> Column:
     return F.when(n >= k, grams).otherwise(F.array().cast("array<string>"))
 
 
-def adaptive_shingles(
-    col: Column | str, k: int = 3, k_chars: int = 5
-) -> Column:
-    """Word k-gram shingles, falling back to character ``k_chars``-grams
+def adaptive_shingles(col: Column | str, k: int = 3) -> Column:
+    """Word k-gram shingles, falling back to :func:`char_shingles`
     for documents containing no-space-script codepoints (CJK) — the
     multilingual-honest shingle unit used by the dedup family. The branch
     is per-document and purely expression-level; corpora without CJK text
@@ -139,7 +142,7 @@ def adaptive_shingles(
     oracles)."""
     c = F.col(col) if isinstance(col, str) else col
     has_no_space_script = F.regexp_count(c, F.lit(NO_SPACE_SCRIPT_RE)) > 0
-    return F.when(has_no_space_script, char_shingles(c, k_chars)).otherwise(
+    return F.when(has_no_space_script, char_shingles(c)).otherwise(
         word_shingles(tokens(c), k)
     )
 
@@ -174,9 +177,9 @@ def punct_ratio(col: Column | str) -> Column:
     return (F.length(c) - F.length(stripped)) / F.greatest(F.length(c), F.lit(1))
 
 
-def stopword_ratio(col: Column | str, stopwords: list[str] | None = None) -> Column:
-    """Fraction of whitespace tokens that are stopwords."""
-    sw = F.array(*[F.lit(w) for w in (stopwords or ENGLISH_STOPWORDS)])
+def stopword_ratio(col: Column | str) -> Column:
+    """Fraction of whitespace tokens that are English stopwords."""
+    sw = F.array(*[F.lit(w) for w in ENGLISH_STOPWORDS])
     t = tokens(col)
     n_stop = F.size(F.filter(t, lambda x: F.array_contains(sw, x)))
     return n_stop / F.greatest(F.size(t), F.lit(1))

@@ -16,7 +16,7 @@ merge r, so a distributed loop is n_merges FULL scans that cannot
 pipeline; the published trainers are single-node over word counts for
 the same reason). The corpus pass is ONE tokenize + word-count
 aggregation, map-side combined to word types, capped at
-``max_word_types`` rows collected (the operator's only driver-side data
+``MAX_WORD_TYPES`` rows collected (the operator's only driver-side data
 state — same bounded-collect contract as lm.py's vocab and
 similarity.py's k-means sample).
 
@@ -39,11 +39,14 @@ from ..functions.text import lower_tokens
 #: single character the tokenizer can emit.
 END_OF_WORD = "</w>"
 
+#: Cap on the (count desc, word asc) word table the fit collects; rare
+#: types beyond it contribute no merges anyway under the count>=2 stop
+#: rule unless the corpus is pathologically flat.
+MAX_WORD_TYPES = 100_000
+
 
 def _bpe_fit_on_counts(
-    word_counts: list[tuple[str, int]],
-    n_merges: int,
-    end_of_word: str = END_OF_WORD,
+    word_counts: list[tuple[str, int]], n_merges: int
 ) -> list[tuple[str, str]]:
     """The driver-side merge loop over a (word, count) table.
 
@@ -54,7 +57,7 @@ def _bpe_fit_on_counts(
     """
     words: dict[tuple[str, ...], int] = {}
     for w, c in word_counts:
-        syms = tuple(w) + (end_of_word,)
+        syms = tuple(w) + (END_OF_WORD,)
         # Duplicate word rows (caller error) still sum, not overwrite.
         words[syms] = words.get(syms, 0) + c
 
@@ -90,36 +93,25 @@ def _bpe_fit_on_counts(
     return merges
 
 
-def induce_bpe_merges(
-    docs: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 100,
-    max_word_types: int = 100_000,
-    end_of_word: str = END_OF_WORD,
-) -> list[tuple[str, str]]:
+def induce_bpe_merges(docs: DataFrame, n_merges: int = 100) -> list[tuple[str, str]]:
     """Learn an ordered BPE merge list from the corpus.
 
     Returns ``[(left, right), ...]`` in merge order (rank 0 first) — at
     most ``n_merges`` entries, fewer when the corpus' pair counts dry up
     (no adjacent pair left with count >= 2).
 
-    ``max_word_types`` caps the (count desc, word asc) word table the fit
-    collects; rare types beyond the cap contribute no merges anyway under
-    the count>=2 stop rule unless the corpus is pathologically flat.
-
-    Tokenization is the engine-wide lowercased whitespace tokenizer; each
-    word contributes its characters plus the ``end_of_word`` sentinel.
+    Tokenization of ``text`` is the engine-wide lowercased whitespace
+    tokenizer; each word contributes its characters plus the
+    ``END_OF_WORD`` sentinel.
     """
     if n_merges < 0:
         raise ValueError("induce_bpe_merges: n_merges must be >= 0")
     counts = (
-        docs.select(F.explode(lower_tokens(text_col)).alias("_w"))
+        docs.select(F.explode(lower_tokens("text")).alias("_w"))
         .groupBy("_w")
         .agg(F.count("*").alias("_c"))
         .orderBy(F.col("_c").desc(), F.col("_w").asc())
-        .limit(max_word_types)
+        .limit(MAX_WORD_TYPES)
         .collect()
     )
-    return _bpe_fit_on_counts(
-        [(r["_w"], r["_c"]) for r in counts], n_merges, end_of_word
-    )
+    return _bpe_fit_on_counts([(r["_w"], r["_c"]) for r in counts], n_merges)

@@ -66,8 +66,6 @@ def benchmark_ngram_overlap(
 def decontaminate(
     corpus: DataFrame,
     benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 3,
     max_contamination: float = 0.1,
 ) -> DataFrame:
@@ -77,8 +75,8 @@ def decontaminate(
     broadcast-hash semi-join shape: the overlap stats never leave the
     cluster, and the surviving rows keep all their columns.
     """
-    flagged = benchmark_ngram_overlap(corpus, benchmark, id_col, text_col, k)
+    flagged = benchmark_ngram_overlap(corpus, benchmark, "doc_id", "text", k)
     drop = flagged.filter(
         F.col("contamination") > max_contamination
-    ).select(id_col)
-    return corpus.join(drop, id_col, "left_anti")
+    ).select("doc_id")
+    return corpus.join(drop, "doc_id", "left_anti")

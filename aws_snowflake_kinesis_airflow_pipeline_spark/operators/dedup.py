@@ -34,6 +34,13 @@ from .spread import pin
 from .spread import scaled_repartition as _scaled_repartition
 from .spread import spread as _spread
 
+#: MinHash LSH parameters of :func:`minhash_lsh_pairs` and of the persisted
+#: index (operators/incremental.py): a stored bucket collides with a batch
+#: bucket only when both were banded at the same values.
+MINHASH_HASHES = 64
+MINHASH_BANDS = 16
+MINHASH_K = 3
+
 
 # --------------------------------------------------------------------------
 # Exact dedup
@@ -158,11 +165,11 @@ def exact_dedup(
 
 
 def doc_shingles(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3, k_chars: int = 5
+    df: DataFrame, id_col: str, text_col: str, k: int = 3
 ) -> DataFrame:
     """Per-document hashed shingle set: (id, ``hs: array<long>``) where
     ``hs`` holds the xxhash64 of each distinct shingle — word k-grams
-    normally, character ``k_chars``-grams for no-space-script (CJK)
+    normally, character 5-grams for no-space-script (CJK)
     documents, where whitespace tokenization yields one giant token and
     the document would otherwise carry zero dedup signal.
 
@@ -178,7 +185,7 @@ def doc_shingles(
     return _spread(df.select(id_col, text_col), id_col).select(
         id_col,
         F.transform(
-            F.array_distinct(adaptive_shingles(text_col, k, k_chars)),
+            F.array_distinct(adaptive_shingles(text_col, k)),
             lambda s: F.xxhash64(s),
         ).alias("hs"),
     )
@@ -695,9 +702,7 @@ def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    num_hashes: int = 64,
-    bands: int = 16,
-    k: int = 3,
+    k: int = MINHASH_K,
     threshold: float = 0.8,
 ) -> DataFrame:
     """Near-duplicate pairs by MinHash LSH with exact-Jaccard verification.
@@ -722,7 +727,7 @@ def minhash_lsh_pairs(
     # the candidate docs; see ngram_jaccard_pairs).
     per_doc = doc_shingles(df, id_col, text_col, k)
     sig = minhash_signatures(
-        df, id_col, text_col, num_hashes, k, per_doc=per_doc
+        df, id_col, text_col, MINHASH_HASHES, k, per_doc=per_doc
     )
     # localCheckpoint the narrow (id, band_id, band_hash) triple: with
     # grouped emission it has a single consumer, so this is a pin, not a
@@ -732,7 +737,7 @@ def minhash_lsh_pairs(
     # triple as free (within host noise of streaming it). Same
     # discipline as embedding_near_dup_pairs' bucket triple.
     buckets = pin(
-        band_buckets(sig, id_col, num_hashes, bands),
+        band_buckets(sig, id_col, MINHASH_HASHES, MINHASH_BANDS),
         "band_id",
         "band_hash",
         source=df,
@@ -791,14 +796,14 @@ _SIMHASH_BITS = 64
 _SIMHASH_WORD_HEX_START = (9, 1, 25, 17)
 
 
-def _simhash_word_col(word: int, hex_col: str = "_md5") -> Column:
+def _simhash_word_col(word: int) -> Column:
     """Logical hash-word ``word`` (bits [32w, 32w+32)) of the md5 hex in
-    ``hex_col`` — hashed once per token in a prior projection, not once
+    ``_md5`` — hashed once per token in a prior projection, not once
     per word (guaranteed, rather than left to codegen subexpression
     elimination)."""
     start = _SIMHASH_WORD_HEX_START[word]
     return (
-        F.conv(F.substring(F.col(hex_col), start, 8), 16, 10)
+        F.conv(F.substring(F.col("_md5"), start, 8), 16, 10)
         .cast("long")
         .alias(f"w{word}")
     )
@@ -1104,20 +1109,14 @@ def connected_components(
 
 
 def near_dup_dedup(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float = 0.8,
-    **lsh_kwargs,
+    df: DataFrame, id_col: str, text_col: str, threshold: float = 0.8
 ) -> DataFrame:
     """The end-to-end near-dup *removal* operator: MinHash-LSH pairs ->
     connected components -> keep the minimum id of each cluster. Returns the
     surviving rows of ``df`` (every non-duplicate plus one canonical
     representative per near-dup cluster) — the operation an LLM-data
     pipeline actually ships."""
-    pairs = minhash_lsh_pairs(
-        df, id_col, text_col, threshold=threshold, **lsh_kwargs
-    )
+    pairs = minhash_lsh_pairs(df, id_col, text_col, threshold=threshold)
     comps = connected_components(pairs)
     keepers = comps.groupBy("component").agg(F.min("id").alias(id_col))
     drop = comps.join(
@@ -1262,8 +1261,6 @@ def embedding_near_dup_pairs(
     n_bits: int | None = None,
     n_tables: int = 4,
     dim: int = 64,
-    seed: int = 42,
-    target_occupancy: int = 32,
 ) -> DataFrame:
     """Pairs with cosine >= threshold via multi-table hyperplane LSH.
 
@@ -1272,11 +1269,11 @@ def embedding_near_dup_pairs(
     In-bucket pairs are verified with exact cosine, so precision is exact.
 
     ``n_bits=None`` auto-sizes the bucket resolution to the corpus:
-    ceil(log2(n / target_occupancy)), floored at 8. Verification cost is
+    ceil(log2(n / 32)), floored at 8. Verification cost is
     quadratic in bucket occupancy, so a FIXED resolution silently blows up
     at scale (measured: 10x the vectors at 8 bits -> ~100x the candidate
-    pairs). Auto-sizing keeps expected occupancy near ``target_occupancy``
-    — candidate volume then grows linearly with the corpus. Costs one
+    pairs). Auto-sizing keeps expected occupancy near 32 vectors per
+    bucket — candidate volume then grows linearly with the corpus. Costs one
     count() of the id column (columnar scan, no data movement), trivially
     amortized against the candidate join it prevents; callers who know
     their corpus size pass ``n_bits`` explicitly and skip it. Exact
@@ -1291,7 +1288,7 @@ def embedding_near_dup_pairs(
         # covers ~3e10 vectors at the default occupancy; beyond that, add
         # tables/probes rather than bits.
         n_bits = min(
-            30, max(8, math.ceil(math.log2(max(n / target_occupancy, 2))))
+            30, max(8, math.ceil(math.log2(max(n / 32, 2))))
         )
     v = F.col(vec_col).cast("array<double>")
     # _spread: the bucket projection is one Arrow round-trip + numpy matmul
@@ -1302,7 +1299,7 @@ def embedding_near_dup_pairs(
     # of the corpus regardless of table count (a union of per-table branches
     # would re-scan the input n_tables times).
     bucket_fn = hyperplane_buckets_udf(
-        [_hyperplanes(dim, n_bits, seed + t * 1000) for t in range(n_tables)]
+        [_hyperplanes(dim, n_bits, 42 + t * 1000) for t in range(n_tables)]
     )
     exploded = vecs.select(
         id_col,

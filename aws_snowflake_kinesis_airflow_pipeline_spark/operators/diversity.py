@@ -56,7 +56,6 @@ def ngram_column(text_col: str, k: int = 3) -> "F.Column":
 def corpus_diversity(
     docs: DataFrame,
     group_col: str = "source",
-    text_col: str = "text",
     k: int = 3,
 ) -> DataFrame:
     """One row per ``group_col`` value: ``(group_col, n_docs,
@@ -69,7 +68,7 @@ def corpus_diversity(
     group, matching SQL GROUP BY semantics.
     """
     grams = docs.select(
-        F.col(group_col), ngram_column(text_col, k).alias("_g")
+        F.col(group_col), ngram_column("text", k).alias("_g")
     )
     # Totals are row-local sizes — no n-gram ever leaves its row here, and
     # the per-group sum/count combine map-side to |groups| rows.

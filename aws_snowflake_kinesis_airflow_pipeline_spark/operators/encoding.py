@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.text import tokens
+from ..functions.text import lower_tokens
 from .spread import scaled_repartition as _scaled_repartition
 
 #: Reserved id for out-of-vocabulary tokens. Real tokens start at 1.
@@ -42,9 +42,8 @@ def build_vocab(
     engine-wide tokenizer (``functions/text.py``)."""
     if vocab_size < 1:
         raise ValueError("build_vocab: vocab_size must be >= 1")
-    t = tokens(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
     counts = (
-        docs.select(F.explode(t).alias("token"))
+        docs.select(F.explode(lower_tokens(text_col)).alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("count"))
         .orderBy(F.col("count").desc(), F.col("token").asc())
@@ -52,15 +51,8 @@ def build_vocab(
     )
     from pyspark.sql import Window
 
-    # Bounded by the .limit(vocab_size) above; partitioning by the
-    # constant count*0 (fold-proof — a bare lit(0) is stripped by
-    # EliminateWindowPartitions, col*0 can't fold under NULL semantics)
-    # keeps the identical single-partition execution but declares the
-    # partition so WindowExec stays silent — an unpartitioned-window
-    # warning in the logs should always mean a REAL unbounded global one.
-    w = Window.partitionBy(F.col("count") * F.lit(0)).orderBy(
-        F.col("count").desc(), F.col("token").asc()
-    )
+    # One global window, bounded by the .limit(vocab_size) above.
+    w = Window.orderBy(F.col("count").desc(), F.col("token").asc())
     return counts.select(
         "token",
         F.row_number().over(w).cast("int").alias("token_id"),
@@ -76,9 +68,8 @@ def encode_documents(
 ) -> DataFrame:
     """(id_col, token_ids array<int>, n_tokens int, n_oov int) — every
     input document exactly once; empty/NULL text → empty sequence."""
-    t = tokens(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
     exploded = docs.select(
-        F.col(id_col), F.posexplode(t).alias("_pos", "token")
+        F.col(id_col), F.posexplode(lower_tokens(text_col)).alias("_pos", "token")
     )
     # The reassembly exchange (corpus-token-volume rows collected into
     # per-doc id arrays) auto-sizes to the input (spread.py) — the same
@@ -125,14 +116,12 @@ def decode_ids(
     encoded: DataFrame,
     vocab: DataFrame,
     id_col: str = "doc_id",
-    ids_col: str = "token_ids",
-    unk_token: str = "<unk>",
 ) -> DataFrame:
     """(id_col, text): inverse of :func:`encode_documents` up to OOV loss
     and whitespace normalization — the audit path (spot-check that what
     the trainer sees detokenizes to the curated text)."""
     exploded = encoded.select(
-        F.col(id_col), F.posexplode(ids_col).alias("_pos", "token_id")
+        F.col(id_col), F.posexplode("token_ids").alias("_pos", "token_id")
     )
     # Same reassembly-exchange auto-sizing as encode_documents (no-op for
     # the registered audit path, which decodes a bounded in-memory sample).
@@ -143,7 +132,7 @@ def decode_ids(
             ).select(
                 id_col,
                 "_pos",
-                F.coalesce("token", F.lit(unk_token)).alias("_tok"),
+                F.coalesce("token", F.lit("<unk>")).alias("_tok"),
             ),
             id_col,
             source=encoded,

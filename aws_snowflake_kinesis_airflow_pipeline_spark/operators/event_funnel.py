@@ -26,54 +26,42 @@ from pyspark.sql import DataFrame, functions as F
 
 
 def funnel_completion_times(
-    events: DataFrame,
-    steps: list[str],
-    within: str = "1 hour",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
+    events: DataFrame, steps: list[str], within: str = "1 hour"
 ) -> DataFrame:
-    """Per-user completion times: (user_col, t1, t2, ... tk) with NULLs
+    """Per-user completion times: (user_id, t1, t2, ... tk) with NULLs
     from the first uncompleted step onward (users with no step-1 event are
     absent)."""
     if len(steps) < 2:
         raise ValueError("funnel needs >= 2 steps")
     deadline = F.expr(f"INTERVAL {within}")
     cur = (
-        events.filter(F.col(type_col) == steps[0])
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("t1"))
+        events.filter(F.col("event_type") == steps[0])
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("t1"))
     )
     for k, step in enumerate(steps[1:], start=2):
         nxt = (
-            events.filter(F.col(type_col) == step)
-            .select(user_col, F.col(ts_col).alias("_ts"))
-            .join(cur, user_col)
+            events.filter(F.col("event_type") == step)
+            .select("user_id", F.col("ts").alias("_ts"))
+            .join(cur, "user_id")
             .filter(
                 (F.col("_ts") > F.col(f"t{k-1}"))
                 & (F.col("_ts") <= F.col("t1") + deadline)
             )
-            .groupBy(user_col)
+            .groupBy("user_id")
             .agg(F.min("_ts").alias(f"t{k}"))
         )
-        cur = cur.join(nxt, user_col, "left")
+        cur = cur.join(nxt, "user_id", "left")
     return cur
 
 
 def funnel_conversion(
-    events: DataFrame,
-    steps: list[str],
-    within: str = "1 hour",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
+    events: DataFrame, steps: list[str], within: str = "1 hour"
 ) -> DataFrame:
     """(step, step_idx, n_users): users completing steps[0..idx] in order
     within the budget. n_users is non-increasing in step_idx by
     construction."""
-    times = funnel_completion_times(
-        events, steps, within, user_col, ts_col, type_col
-    )
+    times = funnel_completion_times(events, steps, within)
     counts = times.agg(
         *[
             F.count(F.col(f"t{k}")).cast("long").alias(f"n{k}")

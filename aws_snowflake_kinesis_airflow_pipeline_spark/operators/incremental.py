@@ -36,6 +36,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import (
+    MINHASH_BANDS,
+    MINHASH_HASHES,
+    MINHASH_K,
     _hyperplanes,
     _posting_pairs,
     band_buckets,
@@ -63,14 +66,11 @@ def write_minhash_index(
     id_col: str,
     text_col: str,
     path: str,
-    num_hashes: int = 64,
-    bands: int = 16,
-    k: int = 3,
 ) -> None:
     """Persist the two per-document artifacts incremental dedup needs:
 
     - ``{path}/buckets`` — (id, band_id, band_hash): the LSH probe
-      surface, ``bands`` narrow rows per doc, written sorted by
+      surface, ``MINHASH_BANDS`` narrow rows per doc, written sorted by
       (band_id, band_hash) within partitions so row-group min/max stats
       line up with probe keys.
     - ``{path}/sets`` — (id, hs): hashed shingle sets for exact-Jaccard
@@ -89,11 +89,11 @@ def write_minhash_index(
     A crash leaves a store that needs a rebuild whichever order the
     writes ran in.
     """
-    per_doc = doc_shingles(df, id_col, text_col, k).localCheckpoint(
+    per_doc = doc_shingles(df, id_col, text_col, MINHASH_K).localCheckpoint(
         eager=False  # materializes inside the sets write, reused by buckets
     )
     sig = minhash_signatures(
-        df, id_col, text_col, num_hashes, k, per_doc=per_doc
+        df, id_col, text_col, MINHASH_HASHES, MINHASH_K, per_doc=per_doc
     )
     sets = per_doc.select(id_col, "hs", _set_bucket(id_col))
 
@@ -107,7 +107,7 @@ def write_minhash_index(
 
     def _write_buckets() -> None:
         (
-            band_buckets(sig, id_col, num_hashes, bands)
+            band_buckets(sig, id_col, MINHASH_HASHES, MINHASH_BANDS)
             .sortWithinPartitions("band_id", "band_hash")
             .write.mode("overwrite")
             .parquet(f"{path}/buckets")
@@ -206,9 +206,6 @@ def incremental_near_dup_pairs(
     id_col: str,
     text_col: str,
     index_path: str,
-    num_hashes: int = 64,
-    bands: int = 16,
-    k: int = 3,
     threshold: float = 0.8,
 ) -> DataFrame:
     """Near-dup pairs between a new batch and (persisted corpus ∪ itself).
@@ -224,14 +221,14 @@ def incremental_near_dup_pairs(
     # bounded hit-bucket collect below — instead of as four standalone
     # driver-waited jobs, so the batch passes overlap as stages of one
     # job. (Guide §2.6; measured ~4 s of per-job latency at sf0.1.)
-    new_per_doc = doc_shingles(new_df, id_col, text_col, k).localCheckpoint(
-        eager=False
-    )
+    new_per_doc = doc_shingles(
+        new_df, id_col, text_col, MINHASH_K
+    ).localCheckpoint(eager=False)
     new_sig = minhash_signatures(
-        new_df, id_col, text_col, num_hashes, k, per_doc=new_per_doc
+        new_df, id_col, text_col, MINHASH_HASHES, MINHASH_K, per_doc=new_per_doc
     )
     new_buckets = band_buckets(
-        new_sig, id_col, num_hashes, bands
+        new_sig, id_col, MINHASH_HASHES, MINHASH_BANDS
     ).localCheckpoint(eager=False)
 
     # --- batch vs corpus: probe the persisted bucket store -------------
@@ -272,7 +269,7 @@ def incremental_near_dup_pairs(
         new_df,
         id_col,
         text_col,
-        k=k,
+        k=MINHASH_K,
         threshold=threshold,
         candidates=batch_cand,
         per_doc_sets=new_per_doc,

@@ -31,7 +31,6 @@ def leakage_safe_split(
     id_col: str = "doc_id",
     text_col: str = "text",
     val_fraction: float = 0.1,
-    test_fraction: float = 0.0,
     threshold: float = 0.8,
     pairs: DataFrame | None = None,
 ) -> DataFrame:
@@ -47,6 +46,4 @@ def leakage_safe_split(
     keyed = docs.join(comp, id_col, "left").withColumn(
         "split_key", F.coalesce(F.col("component"), F.col(id_col))
     ).drop("component")
-    return with_split(
-        keyed, "split_key", val_fraction=val_fraction, test_fraction=test_fraction
-    )
+    return with_split(keyed, "split_key", val_fraction=val_fraction)

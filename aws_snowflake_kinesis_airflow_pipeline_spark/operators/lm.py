@@ -25,8 +25,8 @@ Model definition (deterministic, oracle-replayable):
 * Document score: mean ln p over the document's bigrams, rounded to 4 dp
   (engine-wide float-parity convention).  Documents with < 2 tokens have
   no bigrams: ``lm_bigrams = 0``, ``lm_logprob = NULL``.
-* ``max_fit_docs``: when set, the model (vocabulary AND bigram counts) is
-  fit on a bounded deterministic document sample — the ``max_fit_docs``
+* ``max_fit_docs``: the model (vocabulary AND bigram counts) is fit on a
+  bounded deterministic document sample — the ``max_fit_docs``
   smallest ids under the portable md5 permutation
   (``sampling.shuffle_hash``, so the DuckDB oracle replays the exact
   sample) — and the full corpus is scored against it. Bigrams/contexts
@@ -36,15 +36,11 @@ Model definition (deterministic, oracle-replayable):
 
 Scale shape:
 
-* With ``max_fit_docs`` set (the 100 TB form), corpus passes collapse to
-  TWO: the sample draw (per-partition top-k under the portable
-  permutation — no full sort, no tokenize, ≤ max_fit_docs rows collected
-  to the driver, the ivf_index fit-sizing contract) and the scoring pass
-  — the corpus is tokenized exactly ONCE. The fit aggregations
+* Corpus passes are TWO: the sample draw (per-partition top-k under the
+  portable permutation — no full sort, no tokenize, ≤ max_fit_docs rows
+  collected to the driver, the ivf_index fit-sizing contract) and the
+  scoring pass — the corpus is tokenized exactly ONCE. The fit aggregations
   (unigrams, bigrams) run on the local sample-sized frame.
-  Full-corpus fit (``max_fit_docs=None``) keeps the exact-model form:
-  two aggregations over corpus bigrams, each a single exchange with
-  map-side combine carrying only (token(s), count) rows.
 * The UNK collapse bounds the model: ≤ (V+1)^2 bigram rows and ≤ V+1
   context rows REGARDLESS of corpus size, so both scoring joins are
   broadcast — scoring adds no exchange beyond the per-document aggregate.
@@ -60,80 +56,69 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.text import tokens
+from ..functions.text import lower_tokens
+from .sampling import shuffle_hash
 
 #: OOV sentinel. chr(1) survives whitespace tokenization unchanged in both
 #: engines (it is not whitespace), so Spark and the DuckDB oracle agree on
 #: the (documented) collision with a literal chr(1) corpus token.
 UNK = "\x01"
 
+#: Add-k smoothing constant of the bigram probability.
+ADD_K = 0.5
+
 
 def bigram_lm_scores(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    vocab_size: int = 64,
-    add_k: float = 0.5,
-    max_fit_docs: int | None = None,
-    fit_seed: int = 0,
+    docs: DataFrame, *, vocab_size: int = 64, max_fit_docs: int
 ) -> DataFrame:
     """Per-document mean bigram log-probability under the corpus LM.
 
     ``max_fit_docs``: fit the model on that many deterministically-sampled
-    documents (portable md5 draw, see module docstring) instead of the
-    full corpus — one corpus-token pass instead of three.
+    documents (portable md5 draw, see module docstring) — one corpus-token
+    pass instead of three.
 
     Returns one row per input document:
-    ``(id_col, lm_bigrams int, lm_logprob double | NULL)``.
+    ``(doc_id, lm_bigrams int, lm_logprob double | NULL)``.
     """
     if vocab_size < 1:
         raise ValueError("bigram_lm_scores: vocab_size must be >= 1")
 
     spark = docs.sparkSession
-    t = F.coalesce(
-        tokens(F.lower(F.coalesce(F.col(text_col), F.lit("")))),
-        F.array().cast("array<string>"),
+    t = lower_tokens("text")
+    toks = docs.select(F.col("doc_id"), t.alias("_t"))
+
+    # Two-phase draw, then the whole fit lineage (tokenize, unigrams,
+    # bigrams) runs on a materialized sample-sized frame — without
+    # this, every fit aggregation would re-scan the full corpus to
+    # re-derive a 0.001% sample. Phase 1 takes the top-k over IDS
+    # ONLY: the parquet scan prunes to the id column, each partition
+    # emits at most max_fit_docs 8-byte ids, and the k-row merge runs
+    # on an EXECUTOR (a top-k over (id, text) would merge that many
+    # TEXT rows per partition — 100k partitions x 200 docs x 1 KB of
+    # merge input at cluster scale). Phase 2 fetches the
+    # <= max_fit_docs matching texts with a broadcast semi join. Both
+    # phases pin via localCheckpoint: executor-resident, lineage
+    # truncated, and — unlike the collect()+createDataFrame round
+    # trip this replaced — no text row ever transits the driver.
+    # Trade-off: localCheckpoint blocks are NOT replicated and the
+    # truncated lineage cannot recompute them, so on a cluster with
+    # preemption/dynamic allocation an executor loss mid-query fails
+    # the job; deployments exposed to that should swap in reliable
+    # checkpoint() (spark.sparkContext.setCheckpointDir) or a
+    # replicated persist for these two sample-sized pins.
+    proj = docs.select(F.col("doc_id"), F.col("text"))
+    fit_ids = (
+        docs.select(F.col("doc_id"))
+        .orderBy(shuffle_hash(F.col("doc_id"), 0), F.col("doc_id"))
+        .limit(max_fit_docs)
+        # Lazy pins: both materialize inside the bounded vocab collect
+        # below (their first action), not as standalone jobs.
+        .localCheckpoint(eager=False)
     )
-    toks = docs.select(F.col(id_col), t.alias("_t"))
-
-    if max_fit_docs is not None:
-        from .sampling import shuffle_hash
-
-        # Two-phase draw, then the whole fit lineage (tokenize, unigrams,
-        # bigrams) runs on a materialized sample-sized frame — without
-        # this, every fit aggregation would re-scan the full corpus to
-        # re-derive a 0.001% sample. Phase 1 takes the top-k over IDS
-        # ONLY: the parquet scan prunes to the id column, each partition
-        # emits at most max_fit_docs 8-byte ids, and the k-row merge runs
-        # on an EXECUTOR (a top-k over (id, text) would merge that many
-        # TEXT rows per partition — 100k partitions x 200 docs x 1 KB of
-        # merge input at cluster scale). Phase 2 fetches the
-        # <= max_fit_docs matching texts with a broadcast semi join. Both
-        # phases pin via localCheckpoint: executor-resident, lineage
-        # truncated, and — unlike the collect()+createDataFrame round
-        # trip this replaced — no text row ever transits the driver.
-        # Trade-off: localCheckpoint blocks are NOT replicated and the
-        # truncated lineage cannot recompute them, so on a cluster with
-        # preemption/dynamic allocation an executor loss mid-query fails
-        # the job; deployments exposed to that should swap in reliable
-        # checkpoint() (spark.sparkContext.setCheckpointDir) or a
-        # replicated persist for these two sample-sized pins.
-        proj = docs.select(F.col(id_col), F.col(text_col))
-        fit_ids = (
-            docs.select(F.col(id_col))
-            .orderBy(shuffle_hash(F.col(id_col), fit_seed), F.col(id_col))
-            .limit(max_fit_docs)
-            # Lazy pins: both materialize inside the bounded vocab collect
-            # below (their first action), not as standalone jobs.
-            .localCheckpoint(eager=False)
-        )
-        fit_docs = proj.join(
-            F.broadcast(fit_ids), id_col, "left_semi"
-        ).localCheckpoint(eager=False)
-        fit_toks = fit_docs.select(F.col(id_col), t.alias("_t"))
-    else:
-        fit_toks = toks
+    fit_docs = proj.join(
+        F.broadcast(fit_ids), "doc_id", "left_semi"
+    ).localCheckpoint(eager=False)
+    fit_toks = fit_docs.select(F.col("doc_id"), t.alias("_t"))
 
     # Vocabulary: top-V unigrams of the FIT set, (count desc, token asc).
     # The collect is bounded by vocab_size — the operator's only
@@ -154,18 +139,13 @@ def bigram_lm_scores(
 
     # Row-local bigram pairs: zip the token array with its 1-shifted self,
     # then UNK-collapse via two broadcast left joins against the tiny
-    # vocab. Deliberately NOT materialized (full-fit mode runs the lineage
-    # for both the model and the scoring pass): both runs are streaming
-    # whole-stage-codegen passes, which beats checkpointing a
-    # corpus-token-sized intermediate to disk (measured 0.5-0.7 s faster
-    # at sf0.1, and at cluster scale the write amplification of a
-    # bigram-level checkpoint dwarfs a second columnar scan). In sampled
-    # mode the model side is sample-volume, so the corpus lineage runs
-    # exactly once — the scoring pass.
+    # vocab. Not materialized: the model side is sample-volume, so the
+    # corpus lineage runs exactly once — the scoring pass, a streaming
+    # whole-stage-codegen pass.
     def _mapped_pairs(tdf: DataFrame) -> DataFrame:
         n1 = F.greatest(F.size("_t") - 1, F.lit(0))
         pairs = tdf.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(
                 F.arrays_zip(
                     F.slice("_t", 1, n1).alias("w1"),
@@ -173,7 +153,7 @@ def bigram_lm_scores(
                 )
             ).alias("_b"),
         ).select(
-            id_col, F.col("_b.w1").alias("_w1"), F.col("_b.w2").alias("_w2")
+            "doc_id", F.col("_b.w1").alias("_w1"), F.col("_b.w2").alias("_w2")
         )
         return (
             pairs.join(F.broadcast(vdf.withColumnRenamed("_v", "_v1")),
@@ -181,14 +161,14 @@ def bigram_lm_scores(
             .join(F.broadcast(vdf.withColumnRenamed("_v", "_v2")),
                   F.col("_w2") == F.col("_v2"), "left")
             .select(
-                id_col,
+                "doc_id",
                 F.coalesce("_v1", F.lit(UNK)).alias("_w1"),
                 F.coalesce("_v2", F.lit(UNK)).alias("_w2"),
             )
         )
 
     mapped = _mapped_pairs(toks)
-    fit_mapped = mapped if max_fit_docs is None else _mapped_pairs(fit_toks)
+    fit_mapped = _mapped_pairs(fit_toks)
 
     # Model tables — UNK-bounded (≤ (V+1)^2 / ≤ V+1 rows), hence broadcast.
     # Context counts roll up from the bigram model (c1 = Σ_w2 c12), so the
@@ -196,22 +176,22 @@ def bigram_lm_scores(
     model = fit_mapped.groupBy("_w1", "_w2").agg(F.count("*").alias("_c12"))
     ctx = model.groupBy("_w1").agg(F.sum("_c12").alias("_c1"))
 
-    # LEFT joins + coalesce(0): under a sampled fit the corpus contains
-    # bigrams/contexts the sample never saw — they score with count 0
-    # under the same add-k smoothing. With a full-corpus fit every pair
-    # exists in the model and the coalesce never fires (inner-identical).
-    denom_k = float(add_k) * (n_vocab + 1)
+    # LEFT joins + coalesce(0): the corpus contains bigrams/contexts the
+    # sample never saw — they score with count 0 under the same add-k
+    # smoothing. When the sample covers the corpus every pair exists in
+    # the model and the coalesce never fires (inner-identical).
+    denom_k = ADD_K * (n_vocab + 1)
     scored = (
         mapped.join(F.broadcast(model), ["_w1", "_w2"], "left")
         .join(F.broadcast(ctx), ["_w1"], "left")
         .select(
-            id_col,
+            "doc_id",
             F.log(
-                (F.coalesce("_c12", F.lit(0)) + add_k)
+                (F.coalesce("_c12", F.lit(0)) + ADD_K)
                 / (F.coalesce("_c1", F.lit(0)) + denom_k)
             ).alias("_lp"),
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").cast("int").alias("lm_bigrams"),
             F.round(F.sum("_lp") / F.count("*"), 4).alias("lm_logprob"),
@@ -219,10 +199,10 @@ def bigram_lm_scores(
     )
 
     return (
-        docs.select(id_col)
-        .join(scored, id_col, "left")
+        docs.select("doc_id")
+        .join(scored, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("lm_bigrams", F.lit(0)).cast("int").alias("lm_bigrams"),
             "lm_logprob",
         )

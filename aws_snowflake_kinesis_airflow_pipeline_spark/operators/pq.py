@@ -59,7 +59,6 @@ def pq_fit(
     m: int = 16,
     n_codes: int = 16,
     dim: int = 64,
-    seed: int = 42,
     max_fit_rows: int = 100_000,
 ) -> PQModel:
     """Fit one k-means codebook per contiguous subspace of ``dim // m``
@@ -71,7 +70,7 @@ def pq_fit(
     fit_df = (
         df.select(F.col(vec_col).cast("array<double>").alias("_v"))
         .where(F.col("_v").isNotNull() & (F.size("_v") == dim))
-        .orderBy(F.xxhash64(F.col("_v"), F.lit(seed)))
+        .orderBy(F.xxhash64(F.col("_v"), F.lit(42)))
         .limit(max_fit_rows)
     )
     sample = np.asarray(fit_df.toPandas()["_v"].tolist(), dtype=np.float64)
@@ -80,7 +79,7 @@ def pq_fit(
     books = np.empty((m, n_codes, sub), dtype=np.float64)
     for j in range(m):
         books[j] = _kmeans_fit(
-            sample[:, j * sub : (j + 1) * sub], n_codes, seed + j
+            sample[:, j * sub : (j + 1) * sub], n_codes, 42 + j
         )
     return PQModel(books)
 
@@ -125,8 +124,8 @@ def _flat_lut(lut: "np.ndarray") -> F.Column:
     return F.array(*[F.lit(float(x)) for x in lut.ravel()])
 
 
-def pq_adc_cosine(model: PQModel, query_vec: list[float], codes_col: str = "pq_codes") -> F.Column:
-    """Approximate cosine(query, decoded(codes)) as a pure JVM expression.
+def pq_adc_cosine(model: PQModel, query_vec: list[float]) -> F.Column:
+    """Approximate cosine(query, decoded(pq_codes)) as a pure JVM expression.
 
     lut_dot[j][c] = <q_j, codebook[j][c]>;  lut_sq[j][c] = |codebook[j][c]|^2
     cosine ≈ Σ_j lut_dot[j][code_j] / (|q| · sqrt(Σ_j lut_sq[j][code_j]))
@@ -145,7 +144,7 @@ def pq_adc_cosine(model: PQModel, query_vec: list[float], codes_col: str = "pq_c
     def lookup(lit: F.Column) -> F.Column:
         # element_at is 1-based; index = j*n_codes + code + 1
         picked = F.transform(
-            F.col(codes_col),
+            F.col("pq_codes"),
             lambda c, j: F.element_at(lit, (j * n_codes + c + 1).cast("int")),
         )
         return F.aggregate(picked, F.lit(0.0), lambda a, x: a + x)
@@ -153,7 +152,7 @@ def pq_adc_cosine(model: PQModel, query_vec: list[float], codes_col: str = "pq_c
     dot = lookup(dot_lit)
     norm = F.sqrt(lookup(sq_lit))
     return F.when(
-        F.col(codes_col).isNotNull() & (norm * q_norm > 0),
+        F.col("pq_codes").isNotNull() & (norm * q_norm > 0),
         dot / (norm * F.lit(q_norm)),
     )
 
@@ -165,14 +164,13 @@ def pq_topk(
     query_vec: list[float],
     k: int = 10,
     exclude_ids: list[int] | None = None,
-    codes_col: str = "pq_codes",
 ) -> DataFrame:
-    """ADC top-k over the code column only — the scan never touches the
-    float vectors, so its bandwidth is m bytes/row instead of 4·dim.
-    Compiles to TakeOrderedAndProject like brute_force_topk."""
+    """ADC top-k over the ``pq_codes`` column only — the scan never
+    touches the float vectors, so its bandwidth is m bytes/row instead of
+    4·dim. Compiles to TakeOrderedAndProject like brute_force_topk."""
     out = encoded.select(
         F.col(id_col),
-        F.round(pq_adc_cosine(model, query_vec, codes_col), 4).alias("adc_cosine"),
+        F.round(pq_adc_cosine(model, query_vec), 4).alias("adc_cosine"),
     )
     if exclude_ids:
         out = out.filter(~F.col(id_col).isin(exclude_ids))

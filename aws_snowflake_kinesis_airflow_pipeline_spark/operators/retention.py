@@ -17,11 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def cohort_retention(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def cohort_retention(events: DataFrame) -> DataFrame:
     """(cohort timestamp, period_offset int, n_users long), by week.
 
     ``period_offset`` counts whole weeks between the user's cohort week
@@ -29,14 +25,14 @@ def cohort_retention(
     retention[c][0] is the cohort size).
     """
     week = lambda c: F.date_trunc("week", c)
-    first = events.groupBy(user_col).agg(week(F.min(ts_col)).alias("_cohort"))
-    act = events.select(F.col(user_col), week(F.col(ts_col)).alias("_p"))
+    first = events.groupBy("user_id").agg(week(F.min("ts")).alias("_cohort"))
+    act = events.select(F.col("user_id"), week(F.col("ts")).alias("_p"))
     return (
-        act.join(first, user_col)
+        act.join(first, "user_id")
         .select(
             F.col("_cohort").cast("timestamp_ntz").alias("cohort"),
             (F.datediff("_p", "_cohort") / 7).cast("int").alias("period_offset"),
-            F.col(user_col),
+            F.col("user_id"),
         )
         .distinct()
         .groupBy("cohort", "period_offset")

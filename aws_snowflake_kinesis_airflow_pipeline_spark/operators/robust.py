@@ -10,9 +10,9 @@ Shape: exact MAD is inherently two dependent aggregation passes (the
 median must exist before deviations from it can be ranked) plus one
 counting pass — three scans of the fact, each a single-exchange grouped
 aggregate, with the tiny per-group stats tables broadcast back between
-passes. The production path at corpus scale is ``approx=True``
-(``approx_percentile`` — Greenwald-Khanna digest: mergeable,
-memory-bounded by ``accuracy`` regardless of group cardinality); exact
+passes. The production path at corpus scale is ``approx_percentile``
+(Greenwald-Khanna digest: mergeable, memory-bounded by its accuracy
+regardless of group cardinality); exact
 ``F.percentile`` keeps unbounded per-group merge state and is reserved
 for oracle pairing and fixture-scale tests. The registered driver query
 carries both: the exact branch hash-checked against DuckDB
@@ -21,15 +21,16 @@ QUANTILE_CONT, and an approx branch checked as an error band (the
 
 Cross-engine determinism of the outlier COUNT: a strict ``>`` on computed
 doubles can flip on engine ulp differences when a point lands exactly on
-the threshold. Callers comparing against a DuckDB oracle pass ``eps`` =
-half the value grid (e.g. 0.0025 for 2-decimal money): deviations and
-thresholds both live on that grid, so every decision clears the boundary
-by ≥ eps, orders of magnitude above fp noise.
+the threshold — a value-grid hazard. The registered query counts on a
+continuous value column, where such a tie is measure-zero; the reference
+form's ``eps`` shows the guard for grid-valued columns.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+_ACCURACY = 10_000
 
 
 def grouped_mad_outliers(
@@ -39,7 +40,7 @@ def grouped_mad_outliers(
     z: float = 3.0,
     eps: float = 0.0,
     approx: bool = False,
-    accuracy: int = 10_000,
+    accuracy: int = _ACCURACY,
 ) -> DataFrame:
     """Per-group (median, mad, n_outliers) where an outlier is
     ``|x - median| > z * mad + eps``. NULL values are ignored (neither
@@ -96,8 +97,6 @@ def grouped_mad_outliers_paired(
     group_cols: list[str],
     value_col: str,
     z: float = 3.0,
-    eps: float = 0.0,
-    accuracy: int = 10_000,
 ) -> DataFrame:
     """Exact AND approx MAD outlier stats in the SAME three aggregation
     passes (plus the group size, folded into the counting pass):
@@ -108,12 +107,13 @@ def grouped_mad_outliers_paired(
     the fact; pairing the percentile expressions inside one aggregate per
     pass halves that — the shape for any caller that wants the exact
     answer checked against the memory-bounded plan (the s1 driver query's
-    error-band branch).
+    error-band branch). The approx side's GK digest runs at accuracy
+    ``_ACCURACY``.
     """
     v = F.col(value_col)
     med = df.groupBy(*group_cols).agg(
         F.percentile(v, F.lit(0.5)).alias("_med"),
-        F.approx_percentile(v, F.lit(0.5), F.lit(accuracy)).alias("_med_a"),
+        F.approx_percentile(v, F.lit(0.5), F.lit(_ACCURACY)).alias("_med_a"),
     )
     mad = (
         df.join(F.broadcast(med), group_cols)
@@ -121,7 +121,7 @@ def grouped_mad_outliers_paired(
         .agg(
             F.percentile(F.abs(v - F.col("_med")), F.lit(0.5)).alias("_mad"),
             F.approx_percentile(
-                F.abs(v - F.col("_med_a")), F.lit(0.5), F.lit(accuracy)
+                F.abs(v - F.col("_med_a")), F.lit(0.5), F.lit(_ACCURACY)
             ).alias("_mad_a"),
         )
     )
@@ -131,14 +131,12 @@ def grouped_mad_outliers_paired(
         .groupBy(*group_cols)
         .agg(
             F.count(
-                F.when(F.abs(v - F.col("_med")) > z * F.col("_mad") + eps, 1)
+                F.when(F.abs(v - F.col("_med")) > z * F.col("_mad"), 1)
             )
             .cast("long")
             .alias("n_outliers"),
             F.count(
-                F.when(
-                    F.abs(v - F.col("_med_a")) > z * F.col("_mad_a") + eps, 1
-                )
+                F.when(F.abs(v - F.col("_med_a")) > z * F.col("_mad_a"), 1)
             )
             .cast("long")
             .alias("n_outliers_approx"),

@@ -28,22 +28,15 @@ def with_split(
     df: DataFrame,
     key_col: str,
     val_fraction: float = 0.1,
-    test_fraction: float = 0.0,
     buckets: int = 1000,
 ) -> DataFrame:
-    """Attach a 'split' column ('train'/'val'/'test') keyed on content hash.
-    Fractions are exact to 1/buckets granularity (round, not int: the
+    """Attach a 'split' column ('train'/'val') keyed on content hash.
+    The fraction is exact to 1/buckets granularity (round, not int: the
     binary product 0.57*10000 is 5699.999..., and truncation would
     silently keep one bucket fewer than the stated grid value)."""
     b = hash_bucket(key_col, buckets)
     val_hi = round(val_fraction * buckets)
-    test_hi = val_hi + round(test_fraction * buckets)
-    return df.withColumn(
-        "split",
-        F.when(b < val_hi, "val")
-        .when(b < test_hi, "test")
-        .otherwise("train"),
-    )
+    return df.withColumn("split", F.when(b < val_hi, "val").otherwise("train"))
 
 
 def per_group_cap(

@@ -43,19 +43,15 @@ from ..functions.text import lower_tokens
 from .spread import pin
 from .spread import scaled_repartition as _scaled_repartition
 
+#: BM25 term-frequency saturation and length-normalization constants.
+K1 = 1.2
+B = 0.75
 
-def bm25_scores(
-    docs: DataFrame,
-    query_terms: list[str],
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
+
+def bm25_scores(docs: DataFrame, query_terms: list[str]) -> DataFrame:
     """Score every document containing ≥1 query term.
 
-    Returns (id_col, score double, n_terms int) — ``n_terms`` is how many
+    Returns (doc_id, score double, n_terms int) — ``n_terms`` is how many
     distinct query terms the document matched (useful as a coverage
     filter).  Documents matching no term are absent (their score is 0).
 
@@ -67,10 +63,8 @@ def bm25_scores(
         raise ValueError("bm25_scores: query_terms must be non-empty")
     terms = sorted({t.lower() for t in query_terms})
 
-    toks = docs.select(
-        F.col(id_col), lower_tokens(text_col).alias("_toks")
-    )
-    with_len = toks.select(id_col, "_toks", F.size("_toks").alias("_dl"))
+    toks = docs.select(F.col("doc_id"), lower_tokens("text").alias("_toks"))
+    with_len = toks.select("doc_id", "_toks", F.size("_toks").alias("_dl"))
 
     # One row: corpus size + average doc length. NULL-text docs tokenize
     # to [] (size 0) and still count toward N/avgdl, matching the oracle.
@@ -84,13 +78,13 @@ def bm25_scores(
     term_lit = F.array(*[F.lit(t) for t in terms])
     postings = (
         with_len.select(
-            id_col,
+            "doc_id",
             "_dl",
             F.explode(
                 F.filter("_toks", lambda t: F.array_contains(term_lit, t))
             ).alias("_term"),
         )
-        .groupBy(id_col, "_dl", "_term")
+        .groupBy("doc_id", "_dl", "_term")
         .agg(F.count("*").alias("_tf"))
         # Materialize: postings feed BOTH the df aggregate and the scoring
         # join; without this the corpus scan + explode runs twice (Catalyst
@@ -119,13 +113,13 @@ def bm25_scores(
         .withColumn(
             "_part",
             F.col("_idf")
-            * (F.col("_tf") * (k1 + 1.0))
+            * (F.col("_tf") * (K1 + 1.0))
             / (
                 F.col("_tf")
-                + k1 * (1.0 - b + b * F.col("_dl") / F.col("_avgdl"))
+                + K1 * (1.0 - B + B * F.col("_dl") / F.col("_avgdl"))
             ),
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.round(F.sum("_part"), 4).alias("score"),
             F.count("*").cast("int").alias("n_terms"),
@@ -134,61 +128,27 @@ def bm25_scores(
     return scored
 
 
-def bm25_topk(
-    docs: DataFrame,
-    query_terms: list[str],
-    k: int,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
+def bm25_topk(docs: DataFrame, query_terms: list[str], k: int) -> DataFrame:
     """Top-k documents by BM25 score for a bag-of-words query.
 
     Deterministic: ordered by (rounded score desc, id asc) so sub-4dp
     float drift between engines/runs cannot reorder the cut.  Executes as
     TakeOrderedAndProject — no global sort materializes.
     """
-    scored = bm25_scores(
-        docs, query_terms, id_col=id_col, text_col=text_col, k1=k1, b=b
-    )
-    return (
-        scored.orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
-        .withColumn("rank", F.row_number().over(_rank_window(id_col)))
-    )
-
-
-def _rank_window(id_col: str):
     from pyspark.sql import Window
 
-    # The window input is already .limit(k)'d (<= k rows), so a global
-    # window is safe — but an UNPARTITIONED one logs WindowExec's
-    # move-everything warning, which would mask a real unbounded global
-    # window introduced elsewhere. Partition by a fold-proof, TYPE-SAFE
-    # constant: length(cast(id as string)) * 0 wrapped in coalesce — a
-    # bare lit(0) is stripped by EliminateWindowPartitions, an arithmetic
-    # id*0 crashes under ANSI for string ids and NULL ids would split into
-    # a second partition; cast-to-string is valid for every type and the
-    # coalesce pins NULLs to the same single partition. Identical
-    # single-partition execution, partition declared, warning silent.
-    # Boundedness is pinned by test_rank_window_input_is_pre_limited.
-    const = F.coalesce(
-        F.length(F.col(id_col).cast("string")), F.lit(0)
-    ) * F.lit(0)
-    return Window.partitionBy(const).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
+    order = (F.col("score").desc(), F.col("doc_id").asc())
+    # One global window over the .limit(k)'d rows (<= k); boundedness is
+    # pinned by test_rank_window_input_is_pre_limited.
+    return (
+        bm25_scores(docs, query_terms)
+        .orderBy(*order)
+        .limit(k)
+        .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
     )
 
 
-def tf_idf_vectors(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    vocab_size: int = 1000,
-) -> DataFrame:
+def tf_idf_vectors(docs: DataFrame, *, vocab_size: int = 1000) -> DataFrame:
     """Sparse TF-IDF document vectors as (id, term, weight) triples.
 
     The batch-indexing counterpart of :func:`bm25_scores`: weights every
@@ -200,12 +160,12 @@ def tf_idf_vectors(
     Two corpus passes (token stats, postings), one bounded broadcast, one
     (doc, term) shuffle — the standard inverted-index build shape.
     """
-    toks = docs.select(F.col(id_col), lower_tokens(text_col).alias("_toks"))
+    toks = docs.select(F.col("doc_id"), lower_tokens("text").alias("_toks"))
     n_docs = toks.agg(F.count("*").alias("_n"))
 
     # Plain explode: empty docs contribute no postings by design
     # (explode_outer + isNotNull computed the same thing in two nodes).
-    exploded = toks.select(id_col, F.explode("_toks").alias("term"))
+    exploded = toks.select("doc_id", F.explode("_toks").alias("term"))
     # (doc, term) tf — one shuffle over corpus tokens with map-side combine.
     # tf feeds BOTH the vocabulary df aggregate and the weighting join, so
     # it is pinned. At scale the term-keyed exchange is the pin: it serves
@@ -214,7 +174,7 @@ def tf_idf_vectors(
     # 32 GiB OOM at the 50 M-document decade (BASELINE.md round 10).
     agged = (
         _scaled_repartition(exploded, "term", source=docs)
-        .groupBy(id_col, "term")
+        .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
     )
     tf = pin(agged, source=docs)
@@ -229,7 +189,7 @@ def tf_idf_vectors(
         tf.join(F.broadcast(df_tab), "term")
         .join(F.broadcast(n_docs))
         .select(
-            id_col,
+            "doc_id",
             "term",
             F.round(
                 F.col("tf") * F.log(F.col("_n") / F.col("df")), 4

@@ -108,7 +108,6 @@ def semantic_dedup_pairs(
     vec_col: str = "embedding",
     n_clusters: int = 16,
     threshold: float = 0.95,
-    seed: int = 42,
     max_cluster_rows: int = 100_000,
     max_fit_rows: int = 100_000,
     indexed: DataFrame | None = None,
@@ -136,8 +135,8 @@ def semantic_dedup_pairs(
     serves IVF probes from the same clustering pays one fit and one
     assignment pass instead of two (the ``pairs=`` passthrough precedent
     one level up). Must cover the same rows as ``df``; the clustering
-    granularity knobs (``n_clusters``/``seed``/``max_fit_rows``) are the
-    index's, not this call's.
+    granularity knobs (``n_clusters``/``max_fit_rows``) are the index's,
+    not this call's.
     """
     if not 0.0 < threshold <= 1.0:
         raise ValueError("semantic_dedup_pairs: threshold must be in (0, 1]")
@@ -146,7 +145,6 @@ def semantic_dedup_pairs(
             df.select(id_col, vec_col),
             vec_col,
             n_clusters,
-            seed=seed,
             max_fit_rows=max_fit_rows,
         )
 
@@ -235,12 +233,7 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_clusters: int = 16,
-    threshold: float = 0.95,
-    seed: int = 42,
-    max_cluster_rows: int = 100_000,
     pairs: DataFrame | None = None,
-    max_fit_rows: int = 100_000,
-    cell_cap: int = 4096,
 ) -> DataFrame:
     """SemDeDup survivors: one representative (min id) per duplicate
     component; rows in no duplicate pair survive untouched. Returns the
@@ -251,17 +244,7 @@ def semantic_dedup(
     instead of paying the per-cell pairwise pass twice; it must come
     from the same df/threshold or the survivor set is undefined."""
     if pairs is None:
-        pairs = semantic_dedup_pairs(
-            df,
-            id_col,
-            vec_col,
-            n_clusters,
-            threshold,
-            seed,
-            max_cluster_rows,
-            max_fit_rows,
-            cell_cap=cell_cap,
-        )
+        pairs = semantic_dedup_pairs(df, id_col, vec_col, n_clusters)
     comp = connected_components(pairs)
     dropped = (
         comp.groupBy("component")

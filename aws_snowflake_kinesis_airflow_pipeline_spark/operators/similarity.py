@@ -23,6 +23,10 @@ from pyspark.sql import functions as F
 
 from .dedup import _hyperplanes, _spread, cosine_col, hyperplane_buckets_udf
 
+#: Sign bits per LSH bucket and the hyperplane seed of the LSH index.
+LSH_BITS = 8
+LSH_SEED = 42
+
 
 def _query_array(query_vec: list[float]) -> F.Column:
     return F.array(*[F.lit(float(x)) for x in query_vec])
@@ -48,16 +52,10 @@ def brute_force_topk(
     return out.orderBy(F.col("cosine").desc(), F.col(id_col)).limit(k)
 
 
-def with_lsh_buckets(
-    df: DataFrame,
-    vec_col: str,
-    n_bits: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-) -> DataFrame:
+def with_lsh_buckets(df: DataFrame, vec_col: str, dim: int = 64) -> DataFrame:
     """Attach the hyperplane sign bucket — the indexing step. At scale this
     column becomes the table's bucketBy/partitionBy key so probes prune."""
-    planes = _hyperplanes(dim, n_bits, seed)
+    planes = _hyperplanes(dim, LSH_BITS, LSH_SEED)
     v = F.col(vec_col).cast("array<double>")
     # Bucket assignment is a numpy matmul per Arrow batch (see
     # hyperplane_buckets_udf); spread it across cores when the scan
@@ -67,20 +65,16 @@ def with_lsh_buckets(
 
 
 def probe_buckets(
-    query_vec: list[float],
-    n_bits: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-    probe_hamming: int = 1,
+    query_vec: list[float], dim: int = 64, probe_hamming: int = 1
 ) -> list[int]:
     """The query's bucket plus all buckets within ``probe_hamming`` sign
     flips — the probe set :func:`lsh_topk` reads."""
     from itertools import combinations
 
-    qb = _bucket_of(query_vec, n_bits, dim, seed)
+    qb = _bucket_of(query_vec, dim)
     probes = [qb]
     for h in range(1, probe_hamming + 1):
-        for bits in combinations(range(n_bits), h):
+        for bits in combinations(range(LSH_BITS), h):
             flip = 0
             for b in bits:
                 flip |= 1 << b
@@ -88,18 +82,18 @@ def probe_buckets(
     return probes
 
 
-def _bucket_of(query_vec: list[float], n_bits: int, dim: int, seed: int) -> int:
+def _bucket_of(query_vec: list[float], dim: int) -> int:
     """Query-side bucket, computed with the IDENTICAL numpy path (same
     matmul summation order, same bit packing) as hyperplane_buckets_udf —
     a sequential Python sum can land on the other side of 0 for dot
     products near zero, silently disagreeing with the stored bucket."""
-    planes = _hyperplanes(dim, n_bits, seed)
+    planes = _hyperplanes(dim, LSH_BITS, LSH_SEED)
     q = np.asarray(query_vec, dtype=np.float64)
     if q.shape != (dim,):
         return 0  # matches the UDF's wrong-length degradation
-    proj = np.asarray(planes, dtype=np.float64).T  # (dim, n_bits)
+    proj = np.asarray(planes, dtype=np.float64).T  # (dim, LSH_BITS)
     bits = (q[None, :] @ proj)[0] > 0
-    weights = 1 << np.arange(n_bits, dtype=np.int64)
+    weights = 1 << np.arange(LSH_BITS, dtype=np.int64)
     return int(bits @ weights)
 
 
@@ -131,7 +125,7 @@ def _dist_block_rows(k: int) -> int:
 
 
 def _kmeans_fit(
-    sample: "np.ndarray", k: int, seed: int, max_iter: int = 25
+    sample: "np.ndarray", k: int, seed: int
 ) -> "np.ndarray":
     """Plain Lloyd k-means with k-means++ seeding, all in numpy on the
     driver-side sample. Deterministic for a fixed (sample, seed). An
@@ -187,7 +181,7 @@ def _kmeans_fit(
     centers = np.asarray(centers, dtype=np.float64)
 
     d = sample.shape[1]
-    for _ in range(max_iter):
+    for _ in range(25):
         assign, own = assign_blocked(centers)
         # Vectorized centroid update: per-dimension weighted bincount
         # replaces a per-cluster boolean-mask mean (k mask scans per
@@ -247,7 +241,6 @@ def ivf_index(
     df: DataFrame,
     vec_col: str,
     n_clusters: int = 16,
-    seed: int = 42,
     max_fit_rows: int = 100_000,
 ):
     """IVF (inverted-file) index: k-means partitions the corpus into
@@ -277,7 +270,7 @@ def ivf_index(
     fit_df = (
         df.select(F.col(vec_col).cast("array<double>").alias("_v"))
         .where(F.col("_v").isNotNull())
-        .orderBy(F.xxhash64(F.col("_v"), F.lit(seed)))
+        .orderBy(F.xxhash64(F.col("_v"), F.lit(42)))
         .limit(max_fit_rows)
     )
     rows = fit_df.toPandas()["_v"].tolist()
@@ -289,7 +282,7 @@ def ivf_index(
         dim = Counter(lens).most_common(1)[0][0]
         rows = [v for v in rows if len(v) == dim]
     sample = np.asarray(rows, dtype=np.float64)
-    centers = _kmeans_fit(sample, n_clusters, seed)
+    centers = _kmeans_fit(sample, n_clusters, 42)
     assign = ivf_assign_udf(centers)
     indexed = df.withColumn(
         "ivf_cluster", assign(F.col(vec_col).cast("array<double>"))
@@ -328,19 +321,17 @@ def lsh_topk(
     id_col: str,
     query_vec: list[float],
     k: int = 10,
-    n_bits: int = 8,
     dim: int = 64,
-    seed: int = 42,
     probe_hamming: int = 1,
     exclude_ids: list[int] | None = None,
 ) -> DataFrame:
     """Approximate top-k: probe the query's bucket and neighbors within
     ``probe_hamming`` sign flips, exact cosine within the probed subset.
 
-    Probed fraction ≈ sum_{h<=H} C(n_bits,h) / 2^n_bits (e.g. 9/256 at
+    Probed fraction ≈ sum_{h<=H} C(LSH_BITS,h) / 2^LSH_BITS (9/256 at
     8 bits, H=1) — the scan-cost knob. Recall rises with more probes.
     """
-    probes = probe_buckets(query_vec, n_bits, dim, seed, probe_hamming)
-    bucketed = with_lsh_buckets(df, vec_col, n_bits, dim, seed)
+    probes = probe_buckets(query_vec, dim, probe_hamming)
+    bucketed = with_lsh_buckets(df, vec_col, dim)
     subset = bucketed.filter(F.col("lsh_bucket").isin(probes))
     return brute_force_topk(subset, vec_col, id_col, query_vec, k, exclude_ids)

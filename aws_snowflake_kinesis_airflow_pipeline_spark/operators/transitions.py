@@ -16,25 +16,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def event_transitions(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
+def event_transitions(events: DataFrame) -> DataFrame:
     """(from_type, to_type, n) over consecutive same-user events.
 
-    Tiebreak NULLs sort LAST: Spark's default asc is NULLS FIRST while the
+    Ties on (user_id, ts) order by event_id. Its NULLs sort LAST: Spark's default asc is NULLS FIRST while the
     ANSI engines this operator is replayed against (the s1 DuckDB oracle)
     default to NULLS LAST — pinning asc_nulls_last makes the tied-ts order
     engine-independent even on data with NULL tiebreak ids.
     """
-    w = Window.partitionBy(user_col).orderBy(
-        F.col(ts_col), F.col(tiebreak_col).asc_nulls_last()
+    w = Window.partitionBy("user_id").orderBy(
+        F.col("ts"), F.col("event_id").asc_nulls_last()
     )
     nxt = events.select(
-        F.col(type_col).alias("from_type"),
-        F.lead(type_col).over(w).alias("to_type"),
+        F.col("event_type").alias("from_type"),
+        F.lead("event_type").over(w).alias("to_type"),
     ).where(F.col("to_type").isNotNull())
     return nxt.groupBy("from_type", "to_type").agg(F.count("*").alias("n"))

@@ -202,21 +202,21 @@ def s1_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.spread import pin
 
     ev = pin(ev.select("user_id", "ts", "event_type", "event_id", "value"), source=ev)
-    tumbling = W.tumbling_counts(ev, streaming=False).select(
+    tumbling = W.tumbling_counts(ev).select(
         F.lit("tumbling").alias("op"),
         "window_start",
         "window_end",
         "event_type",
         "n",
     )
-    sliding = W.sliding_counts(ev, streaming=False).select(
+    sliding = W.sliding_counts(ev).select(
         F.lit("sliding").alias("op"),
         "window_start",
         "window_end",
         F.lit(None).cast("string").alias("event_type"),
         "n",
     )
-    joined = J.interval_join_hourly_counts(ev, streaming=False).select(
+    joined = J.interval_join_hourly_counts(ev).select(
         F.lit("interval_join").alias("op"),
         "window_start",
         "window_end",
@@ -336,7 +336,7 @@ def s1_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "with last+gap inclusive-end semantics)",
 )
 def s4_session_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return W.session_counts(_events(spark, sf_dir), streaming=False).orderBy(
+    return W.session_counts(_events(spark, sf_dir)).orderBy(
         "user_id", "session_start"
     )
 

@@ -49,9 +49,9 @@ EXTENDED_STAGING_SCHEMA = T.StructType(
 PARTITION_COLS = ("year", "month", "day", "hour")
 
 
-def with_hour_partitions(df: DataFrame, ts_col: str = "event_timestamp") -> DataFrame:
+def with_hour_partitions(df: DataFrame) -> DataFrame:
     """Derive the Firehose-style partition columns from the event time."""
-    c = F.col(ts_col)
+    c = F.col("event_timestamp")
     return (
         df.withColumn("year", F.year(c))
         .withColumn("month", F.month(c))
@@ -60,11 +60,11 @@ def with_hour_partitions(df: DataFrame, ts_col: str = "event_timestamp") -> Data
     )
 
 
-def write_landing_batch(df: DataFrame, path: str, mode: str = "append") -> None:
-    """Batch landing write: gzip JSON under year=/month=/day=/hour=."""
+def write_landing_batch(df: DataFrame, path: str) -> None:
+    """Batch landing write: gzip JSON appended under year=/month=/day=/hour=."""
     (
         with_hour_partitions(df)
-        .write.mode(mode)
+        .write.mode("append")
         .partitionBy(*PARTITION_COLS)
         .option("compression", "gzip")
         .json(path)

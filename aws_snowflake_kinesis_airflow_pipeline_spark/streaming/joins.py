@@ -6,18 +6,19 @@ Reference parity: the reference's pipeline lands clickstream-style events
 (``scripts/kinesis_data_producer.py:21-37`` emits page_view/click/purchase
 event types) and correlates them downstream in SQL; the streaming-native
 form of that correlation is Structured Streaming's watermarked interval
-join, which this module provides with an exact batch twin.
+join, which this module provides; the same function runs the exact batch
+join when its input is bounded.
 
 Semantics: for every *purchase* event, find the same user's *click* events
-in the half-open window ``(purchase_ts - max_lag, purchase_ts]``. The
+in the half-open window ``(purchase_ts - MAX_LAG, purchase_ts]``. The
 streaming form is an append-mode stream-stream inner self-join — supported
 since Spark 2.3 — whose state for each side is evicted once the watermark
-passes ``ts + max_lag``. The batch twin is the identical join on bounded
-frames; ``tests/test_streaming.py`` pins stream == batch and the registry's
+passes ``ts + MAX_LAG``. A bounded input gets the identical join as a
+batch plan; ``tests/test_streaming.py`` pins stream == batch and the registry's
 ``s1_window_counts`` pack pins the hourly rollup against DuckDB.
 
 Scale note: at cluster scale this is a shuffle on ``user_id`` for both
-sides plus per-key state bounded by ``watermark + max_lag`` of traffic —
+sides plus per-key state bounded by ``watermark + MAX_LAG`` of traffic —
 the canonical shape; no cross product exists because the equi-key is part
 of the join condition.
 """
@@ -27,45 +28,40 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .windows import _with_watermark
 
-def interval_join_pairs(
-    events: DataFrame,
-    left_type: str = "purchase",
-    right_type: str = "click",
-    max_lag: str = "30 minutes",
-    watermark: str = "10 minutes",
-    streaming: bool = True,
-) -> DataFrame:
-    """(left event, prior right event by same user within max_lag) pairs.
+#: The join's lag bound, as an INTERVAL literal and in seconds (the batch
+#: join's time-bucket width).
+MAX_LAG = "30 minutes"
+_MAX_LAG_S = 30 * 60
+
+
+def interval_join_pairs(events: DataFrame) -> DataFrame:
+    """(purchase event, prior click by the same user within MAX_LAG) pairs.
+    A streaming ``events`` gets the watermarked stream-stream join; a
+    bounded one the bucketed batch join.
 
     Returns columns: user_id, left_id, left_ts, right_id, right_ts.
     """
-    left = events.filter(F.col("event_type") == left_type).select(
+    left = events.filter(F.col("event_type") == "purchase").select(
         "user_id",
         F.col("event_id").alias("left_id"),
         F.col("ts").alias("left_ts"),
     )
-    right = events.filter(F.col("event_type") == right_type).select(
+    right = events.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("r_user_id"),
         F.col("event_id").alias("right_id"),
         F.col("ts").alias("right_ts"),
     )
-    if streaming:
-        # Watermarks require TIMESTAMP; the engine stores TIMESTAMP_NTZ
-        # (value-preserving cast under the pinned UTC session, same policy
-        # as windows._with_watermark).
-        left = left.withColumn(
-            "left_ts", F.col("left_ts").cast("timestamp")
-        ).withWatermark("left_ts", watermark)
-        right = right.withColumn(
-            "right_ts", F.col("right_ts").cast("timestamp")
-        ).withWatermark("right_ts", watermark)
+    if events.isStreaming:
+        left = _with_watermark(left, "left_ts")
+        right = _with_watermark(right, "right_ts")
         cond = (
             (left["user_id"] == right["r_user_id"])
             & (right["right_ts"] <= left["left_ts"])
             & (
                 right["right_ts"]
-                > left["left_ts"] - F.expr(f"INTERVAL {max_lag}")
+                > left["left_ts"] - F.expr(f"INTERVAL {MAX_LAG}")
             )
         )
         return left.join(right, cond, "inner").select(
@@ -83,9 +79,8 @@ def interval_join_pairs(
     # tags can't both equal the left bucket). Same results, one equi-join,
     # candidate volume O(events per user-bucket pair) instead of
     # O(events per user)^2.
-    lag_sec = _interval_seconds(max_lag)
-    lbucket = F.floor(F.unix_timestamp(left["left_ts"]) / lag_sec)
-    rbucket = F.floor(F.unix_timestamp(right["right_ts"]) / lag_sec)
+    lbucket = F.floor(F.unix_timestamp(left["left_ts"]) / _MAX_LAG_S)
+    rbucket = F.floor(F.unix_timestamp(right["right_ts"]) / _MAX_LAG_S)
     left_b = left.withColumn("_b", lbucket)
     right_b = right.withColumn(
         "_b", F.explode(F.array(rbucket, rbucket + 1))
@@ -96,7 +91,7 @@ def interval_join_pairs(
         & (right_b["right_ts"] <= left_b["left_ts"])
         & (
             right_b["right_ts"]
-            > left_b["left_ts"] - F.expr(f"INTERVAL {max_lag}")
+            > left_b["left_ts"] - F.expr(f"INTERVAL {MAX_LAG}")
         )
     )
     return left_b.join(right_b, cond, "inner").select(
@@ -104,32 +99,11 @@ def interval_join_pairs(
     )
 
 
-_UNITS = {"second": 1, "minute": 60, "hour": 3600, "day": 86400}
-
-
-def _interval_seconds(spec: str) -> int:
-    """'30 minutes' / '1 hour' -> seconds (the subset of INTERVAL syntax
-    the bucketing path supports)."""
-    n, unit = spec.strip().split()
-    # lower() BEFORE rstrip: '30 MINUTES'.rstrip('s') keeps the uppercase
-    # S and crashed the batch path while the streaming path's
-    # INTERVAL-expression twin accepted the same spec case-insensitively.
-    return int(n) * _UNITS[unit.lower().rstrip("s")]
-
-
-def interval_join_hourly_counts(
-    events: DataFrame,
-    left_type: str = "purchase",
-    right_type: str = "click",
-    max_lag: str = "30 minutes",
-    streaming: bool = False,
-) -> DataFrame:
+def interval_join_hourly_counts(events: DataFrame) -> DataFrame:
     """Hourly rollup of the interval join — matches per hour of the left
     event. Batch shape used by the registry pack; the streaming form of the
     rollup would add a windowed aggregate after the join (append mode)."""
-    pairs = interval_join_pairs(
-        events, left_type, right_type, max_lag, streaming=streaming
-    )
+    pairs = interval_join_pairs(events)
     hour = F.date_trunc("hour", F.col("left_ts"))
     return (
         pairs.groupBy(hour.alias("window_start"))

@@ -1,8 +1,9 @@
 """Streaming window operators (SURVEY.md §2 B14-B16) + batch equivalents.
 
-Each streaming operator has a batch twin computing identical results on a
-bounded frame — the test harness asserts stream(availableNow) == batch, and
-the batch twins double as oracle-checkable registry queries.
+Each window operator runs unchanged on a streaming or a bounded frame: the
+input's ``isStreaming`` decides whether the watermark goes on, so the test
+harness asserts stream(availableNow) == batch on one function, and the
+batch form doubles as an oracle-checkable registry query.
 
 Watermarks bound state: a tumbling/sliding agg keeps only windows newer than
 (max event time - watermark); dropDuplicatesWithinWatermark evicts seen-key
@@ -15,28 +16,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+WATERMARK = "10 minutes"
+SESSION_GAP_MINUTES = 30
 
-def _with_watermark(df: DataFrame, ts_col: str, watermark: str) -> DataFrame:
+
+def _with_watermark(df: DataFrame, ts_col: str) -> DataFrame:
     """Watermarks require TIMESTAMP; the engine stores TIMESTAMP_NTZ. Cast
     for state tracking (value-preserving under the pinned UTC session) —
-    outputs cast window bounds back to NTZ so stream == batch twins."""
+    outputs cast window bounds back to NTZ so stream == batch."""
     return df.withColumn(ts_col, F.col(ts_col).cast("timestamp")).withWatermark(
-        ts_col, watermark
+        ts_col, WATERMARK
     )
 
 
-def tumbling_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    window_size: str = "1 hour",
-    watermark: str = "10 minutes",
-    streaming: bool = True,
-) -> DataFrame:
-    """Per-(window, event_type) counts over tumbling windows; late rows
-    beyond the watermark are dropped (B14)."""
-    src = _with_watermark(events, ts_col, watermark) if streaming else events
+def tumbling_counts(events: DataFrame) -> DataFrame:
+    """Per-(hour window, event_type) counts over tumbling windows; on a
+    stream, late rows beyond the watermark are dropped (B14)."""
+    src = _with_watermark(events, "ts") if events.isStreaming else events
     return (
-        src.groupBy(F.window(ts_col, window_size).alias("w"), "event_type")
+        src.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n"))
         .select(
             F.col("w.start").cast("timestamp_ntz").alias("window_start"),
@@ -47,18 +45,12 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    window_size: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "10 minutes",
-    streaming: bool = True,
-) -> DataFrame:
-    """Sliding-window counts (each row lands in size/slide windows)."""
-    src = _with_watermark(events, ts_col, watermark) if streaming else events
+def sliding_counts(events: DataFrame) -> DataFrame:
+    """Counts over 1-hour windows sliding every 30 minutes (each row lands
+    in two windows)."""
+    src = _with_watermark(events, "ts") if events.isStreaming else events
     return (
-        src.groupBy(F.window(ts_col, window_size, slide).alias("w"))
+        src.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
         .agg(F.count("*").alias("n"))
         .select(
             F.col("w.start").cast("timestamp_ntz").alias("window_start"),
@@ -68,58 +60,43 @@ def sliding_counts(
     )
 
 
-def session_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-    key: str = "user_id",
-    watermark: str = "10 minutes",
-    streaming: bool = True,
-) -> DataFrame:
-    """Session windows per key: a session extends while consecutive events
-    arrive within ``gap`` (B15). Spark merges/expires session state using
-    the watermark; the batch twin uses the same session_window function."""
-    src = _with_watermark(events, ts_col, watermark) if streaming else events
+def session_counts(events: DataFrame) -> DataFrame:
+    """Session windows per user: a session extends while consecutive
+    events arrive within the gap (B15). On a stream Spark merges/expires
+    session state using the watermark; on a bounded frame the same
+    session_window function runs without it."""
+    src = _with_watermark(events, "ts") if events.isStreaming else events
+    gap = f"{SESSION_GAP_MINUTES} minutes"
     return (
-        src.groupBy(F.session_window(ts_col, gap).alias("w"), key)
+        src.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(F.count("*").alias("n"))
         .select(
             F.col("w.start").cast("timestamp_ntz").alias("session_start"),
             F.col("w.end").cast("timestamp_ntz").alias("session_end"),
-            key,
+            "user_id",
             "n",
         )
     )
 
 
-def keyed_sliding_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    window_size: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "10 minutes",
-    streaming: bool = True,
-) -> DataFrame:
-    """Per-(sliding window, key) counts — the state layer of trending
-    top-k (B38). Watermark-bounded like :func:`sliding_counts`; state is
-    one counter per live (window, key)."""
-    src = _with_watermark(events, ts_col, watermark) if streaming else events
+def keyed_sliding_counts(events: DataFrame) -> DataFrame:
+    """Per-(sliding window, event_type) counts — the state layer of
+    trending top-k (B38). Watermark-bounded on a stream like
+    :func:`sliding_counts`; state is one counter per live (window, key)."""
+    src = _with_watermark(events, "ts") if events.isStreaming else events
     return (
-        src.groupBy(F.window(ts_col, window_size, slide).alias("w"), key_col)
+        src.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
         .agg(F.count("*").alias("n"))
         .select(
             F.col("w.start").cast("timestamp_ntz").alias("window_start"),
             F.col("w.end").cast("timestamp_ntz").alias("window_end"),
-            key_col,
+            "event_type",
             "n",
         )
     )
 
 
-def rank_trending(
-    counts: DataFrame, k: int, key_col: str = "event_type"
-) -> DataFrame:
+def rank_trending(counts: DataFrame, k: int) -> DataFrame:
     """Top-k keys per window by (count desc, key asc) — the deterministic
     finisher of trending top-k (B38).
 
@@ -133,7 +110,7 @@ def rank_trending(
     from pyspark.sql import Window
 
     w = Window.partitionBy("window_start", "window_end").orderBy(
-        F.col("n").desc(), F.col(key_col).asc()
+        F.col("n").desc(), F.col("event_type").asc()
     )
     return (
         counts.withColumn("_rk", F.row_number().over(w))
@@ -142,53 +119,28 @@ def rank_trending(
     )
 
 
-def trending_topk(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    window_size: str = "1 hour",
-    slide: str = "30 minutes",
-    k: int = 3,
-) -> DataFrame:
-    """Batch twin of streaming trending top-k: the k most frequent keys in
-    every sliding window (B38). The streaming form is
-    ``keyed_sliding_counts(streaming=True)`` → :func:`rank_trending` over
-    each closed window."""
-    return rank_trending(
-        keyed_sliding_counts(
-            events,
-            ts_col,
-            key_col,
-            window_size,
-            slide,
-            streaming=False,
-        ),
-        k,
-        key_col,
-    )
+def trending_topk(events: DataFrame, k: int = 3) -> DataFrame:
+    """Batch trending top-k: the k most frequent event types in every
+    sliding window (B38). The streaming form is
+    :func:`keyed_sliding_counts` on the stream → :func:`rank_trending`
+    over each closed window."""
+    return rank_trending(keyed_sliding_counts(events), k)
 
 
-def dedup_within_watermark(
-    events: DataFrame,
-    key_cols: list[str],
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
+def dedup_within_watermark(events: DataFrame, key_cols: list[str]) -> DataFrame:
     """Stateful streaming dedup (B16): drop rows whose keys were already
     seen, with state evicted past the watermark horizon — the streaming
     form of the reference's NOT-IN insert filter (J1) with bounded memory.
 
-    ``ts_col`` is cast back to TIMESTAMP_NTZ on the way out (the
+    ``ts`` is cast back to TIMESTAMP_NTZ on the way out (the
     watermark needs the TZ-aware type for state tracking, but every
     consumer — the NTZ events table, unions with the batch twin — runs
     on the engine-wide NTZ contract; see the module note on window
     bounds)."""
-    deduped = _with_watermark(
-        events, ts_col, watermark
-    ).dropDuplicatesWithinWatermark(key_cols)
-    return deduped.withColumn(
-        ts_col, F.col(ts_col).cast("timestamp_ntz")
+    deduped = _with_watermark(events, "ts").dropDuplicatesWithinWatermark(
+        key_cols
     )
+    return deduped.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
 
 
 def batch_dedup_keep_first(
@@ -215,22 +167,17 @@ def batch_dedup_keep_first(
     )
 
 
-def batch_sessions_gaps_and_islands(
-    events: DataFrame,
-    ts_col: str = "ts",
-    gap_minutes: int = 30,
-    key: str = "user_id",
-) -> DataFrame:
+def batch_sessions_gaps_and_islands(events: DataFrame) -> DataFrame:
     """Batch session assignment by the classic gaps-and-islands window trick
     (lag -> new-session flag -> running sum as session id). Semantically the
     batch ground truth for :func:`session_counts`."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(key).orderBy(ts_col)
-    gap_expr = F.lit(gap_minutes * 60)
+    w = Window.partitionBy("user_id").orderBy("ts")
+    gap_expr = F.lit(SESSION_GAP_MINUTES * 60)
     # NTZ has no direct cast to long in Spark 4; route through TIMESTAMP
     # (value-preserving under the engine's pinned UTC session TZ).
-    epoch = F.col(ts_col).cast("timestamp").cast("long")
+    epoch = F.col("ts").cast("timestamp").cast("long")
     with_flag = events.withColumn(
         "new_session",
         # strict '>': session_window's end (last event + gap) is INCLUSIVE —
@@ -247,10 +194,10 @@ def batch_sessions_gaps_and_islands(
         ),
     )
     return (
-        with_id.groupBy(key, "session_id")
+        with_id.groupBy("user_id", "session_id")
         .agg(
-            F.min(ts_col).alias("session_start"),
-            F.max(ts_col).alias("session_last_event"),
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_last_event"),
             F.count("*").alias("n"),
         )
     )

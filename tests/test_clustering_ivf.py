@@ -6,6 +6,7 @@ from __future__ import annotations
 import random as rnd
 
 import numpy as np
+import pytest
 
 from aws_snowflake_kinesis_airflow_pipeline_spark.operators import dedup, similarity
 
@@ -21,6 +22,18 @@ def test_connected_components_merges_chains(spark):
     }
     assert comp[1] == comp[2] == comp[3] == 1
     assert comp[10] == comp[11] == 10
+
+
+def test_connected_components_raises_past_max_iterations(spark):
+    # A 10-node path needs 9 label-propagation rounds; a 4-round bound
+    # must raise, never return a split component.
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 10)], "id1 long, id2 long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 4 rounds"):
+        dedup.connected_components(pairs, max_iterations=4)
+    comp = {r["id"]: r["component"] for r in dedup.connected_components(pairs).collect()}
+    assert set(comp.values()) == {1} and len(comp) == 10
 
 
 def test_near_dup_dedup_keeps_one_per_cluster(spark):

@@ -1,7 +1,8 @@
 """Driver-contract smoke tests: entry() runs, every query runs at sf0.001,
 oracle_sql keys are a subset of queries keys, every package module and
-top-level definition is reachable from an entry point, and every argument
-a test sets is also set outside the tests."""
+top-level definition is reachable from an entry point, every argument a
+test sets is also set outside the tests, and every defaulted parameter is
+set by some call."""
 
 from __future__ import annotations
 
@@ -329,9 +330,20 @@ _TEST_ONLY_PARAMS = {
     ("operators.sampling.with_split", "buckets"),
     # a small cell count keeps the fixture's cells populated
     ("operators.semdedup.semantic_dedup", "n_clusters"),
+    # the per-cell memory guard and the in-kernel re-split need bounds
+    # smaller than the fixture's cells
+    ("operators.semdedup.semantic_dedup_pairs", "cell_cap"),
+    ("operators.semdedup.semantic_dedup_pairs", "max_cluster_rows"),
+    # the non-convergence raise needs a bound shorter than a test chain
+    ("operators.dedup.connected_components", "max_iterations"),
     # S1 one file per trigger: the multi-batch replay test
     ("streaming.pipeline.IngestPipeline.start", "max_files_per_trigger"),
 }
+
+
+def _test_files() -> list[Path]:
+    return [*sorted((_REPO / "tests").glob("*.py")),
+            *sorted((_REPO / "perfbench").glob("test_*.py"))]
 
 
 def test_every_keyword_a_test_passes_is_passed_outside_tests():
@@ -349,11 +361,79 @@ def test_every_keyword_a_test_passes_is_passed_outside_tests():
         path, is_pkg = modules[mod]
         live |= _parameters_set(path, mod, is_pkg, modules, sigs)
     tested: set[tuple[str, str]] = set()
-    for f in [*sorted((_REPO / "tests").glob("*.py")),
-              *sorted((_REPO / "perfbench").glob("test_*.py"))]:
+    for f in _test_files():
         tested |= _parameters_set(f, f.stem, False, modules, sigs)
     test_only = {
         (fn, p) for fn, p in tested - live
         if not any(fn == k or fn.startswith(k + ".") for k in _TEST_ONLY_KEPT)
     }
     assert test_only == _TEST_ONLY_PARAMS
+
+
+def _declared_defaults(modules: dict[str, tuple[Path, bool]]
+                       ) -> tuple[set[tuple[str, str]], set[str]]:
+    """(package callable, parameter) pairs whose parameter has a default,
+    over the callables :func:`_signatures` names (a class's ``__init__``
+    under the class's name too), and every reachable function, nested or
+    lambda included, that declares ``**kwargs``. A dataclass field's
+    default is the record's initial state, not a choice a caller makes,
+    so fields are not counted."""
+    defaulted: set[tuple[str, str]] = set()
+    var_kw: set[str] = set()
+    for mod in _reachable_modules(modules):
+        path = modules[mod][0]
+        rel = mod.removeprefix(_PKG + ".")
+        tree = ast.parse(path.read_text(), str(path))
+        var_kw |= {f"{rel}:{n.lineno}" for n in ast.walk(tree)
+                   if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                     ast.Lambda)) and n.args.kwarg}
+        for node in tree.body:
+            fns: list[tuple[str, ast.FunctionDef]] = []
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                fns.append((f"{rel}.{node.name}", node))
+            elif isinstance(node, ast.ClassDef):
+                for m in node.body:
+                    if isinstance(m, ast.FunctionDef):
+                        fns.append((f"{rel}.{node.name}.{m.name}", m))
+                        if m.name == "__init__":
+                            fns.append((f"{rel}.{node.name}", m))
+            for qual, fn in fns:
+                a = fn.args
+                pos = [*a.posonlyargs, *a.args]
+                named = pos[len(pos) - len(a.defaults):] + [
+                    p for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+                defaulted |= {(qual, p.arg) for p in named}
+    return defaulted, var_kw
+
+
+# Defaulted parameters no call sets, each kept on purpose.
+_UNSET_KEPT = {
+    # the CLI's own entry: argparse reads sys.argv when no list is passed
+    ("__main__.main", "argv"),
+    # a deployment setting (cluster URL), not a choice the engine makes
+    ("session.get_spark", "master"),
+    # the vectors' length, a property of the input
+    ("operators.dedup.embedding_near_dup_pairs", "dim"),
+    ("operators.similarity.lsh_topk", "dim"),
+}
+
+
+def test_every_defaulted_parameter_is_set_by_some_caller():
+    """A default no call overrides is a constant in a parameter's clothes,
+    and the branches only another value would select are dead. Every
+    defaulted (package callable, parameter) pair must be set by an entry
+    point, reachable package code or a test, or be one of the kept pairs.
+    ``**kwargs`` is banned outright: the scan cannot see through it."""
+    modules = _package_modules()
+    sigs = _signatures(modules)
+    defaulted, var_kw = _declared_defaults(modules)
+    assert var_kw == set()
+    set_somewhere: set[tuple[str, str]] = set()
+    for f in _roots():
+        set_somewhere |= _parameters_set(f, f.stem, False, modules, sigs)
+    for mod in _reachable_modules(modules):
+        path, is_pkg = modules[mod]
+        set_somewhere |= _parameters_set(path, mod, is_pkg, modules, sigs)
+    for f in _test_files():
+        set_somewhere |= _parameters_set(f, f.stem, False, modules, sigs)
+    assert defaulted - set_somewhere == _UNSET_KEPT

@@ -61,7 +61,10 @@ def _py_scores(docs, vocab_size, add_k=0.5):
 
 
 def _run(spark, docs, **kw):
+    """Scores with a covering fit sample (the full corpus) unless the
+    caller passes ``max_fit_docs``."""
     df = spark.createDataFrame(docs, "doc_id int, text string")
+    kw.setdefault("max_fit_docs", len(docs))
     rows = bigram_lm_scores(df, **kw).collect()
     return {r["doc_id"]: (r["lm_bigrams"], r["lm_logprob"]) for r in rows}
 
@@ -113,11 +116,13 @@ def test_partition_invariance(spark):
     df = spark.createDataFrame(DOCS, "doc_id int, text string")
     one = {
         r["doc_id"]: (r["lm_bigrams"], r["lm_logprob"])
-        for r in bigram_lm_scores(df.coalesce(1)).collect()
+        for r in bigram_lm_scores(df.coalesce(1), max_fit_docs=len(DOCS)).collect()
     }
     many = {
         r["doc_id"]: (r["lm_bigrams"], r["lm_logprob"])
-        for r in bigram_lm_scores(df.repartition(7)).collect()
+        for r in bigram_lm_scores(
+            df.repartition(7), max_fit_docs=len(DOCS)
+        ).collect()
     }
     assert one == many
 
@@ -125,7 +130,7 @@ def test_partition_invariance(spark):
 def test_plan_broadcasts_model_no_cartesian(spark):
     df = spark.createDataFrame(DOCS, "doc_id int, text string")
     plan = (
-        bigram_lm_scores(df)
+        bigram_lm_scores(df, max_fit_docs=len(DOCS))
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -138,7 +143,7 @@ def test_plan_broadcasts_model_no_cartesian(spark):
 def test_vocab_size_validation(spark):
     df = spark.createDataFrame(DOCS, "doc_id int, text string")
     with pytest.raises(ValueError):
-        bigram_lm_scores(df, vocab_size=0)
+        bigram_lm_scores(df, vocab_size=0, max_fit_docs=len(DOCS))
 
 
 def _py_scores_sampled(docs, vocab_size, max_fit_docs, fit_seed=0, add_k=0.5):
@@ -189,11 +194,11 @@ def _py_scores_sampled(docs, vocab_size, max_fit_docs, fit_seed=0, add_k=0.5):
 
 def test_sampled_fit_covering_sample_equals_full_fit(spark):
     """max_fit_docs >= corpus size: the sample IS the corpus, so the
-    sampled path must reproduce the full fit bit-for-bit (including that
-    no scoring coalesce fires — every pair is in the model)."""
-    full = _run(spark, DOCS, vocab_size=5)
-    sampled = _run(spark, DOCS, vocab_size=5, max_fit_docs=len(DOCS))
-    assert sampled == full
+    sampled path must reproduce the full-fit reference bit-for-bit
+    (including that no scoring coalesce fires — every pair is in the
+    model)."""
+    sampled = _run(spark, DOCS, vocab_size=5, max_fit_docs=len(DOCS) + 3)
+    assert sampled == _py_scores(DOCS, 5)
 
 
 def test_sampled_fit_matches_python_replay(spark):

@@ -11,9 +11,6 @@ from __future__ import annotations
 import random
 import unicodedata
 
-import pytest
-from pyspark.sql import functions as F
-
 from aws_snowflake_kinesis_airflow_pipeline_spark.functions.normalize import (
     normalize_text,
     unicode_normalize,
@@ -29,7 +26,7 @@ def _run_ordered(spark, texts, expr):
 
 def test_nfkc_folds_compatibility_forms(spark):
     texts = ["ﬁsh", "Ａｂｃ１２３", "café", None]
-    got = _run_ordered(spark, texts, lambda c: unicode_normalize(c, "NFKC"))
+    got = _run_ordered(spark, texts, unicode_normalize)
     assert got[0] == "fish"
     assert got[1] == "Abc123"
     assert got[2] == unicodedata.normalize("NFKC", "café")
@@ -69,8 +66,3 @@ def test_plan_arrow_batched(spark):
         .toString()
     )
     assert "ArrowEvalPython" in plan and "BatchEvalPython" not in plan
-
-
-def test_form_validation(spark):
-    with pytest.raises(ValueError):
-        unicode_normalize(F.lit("x"), "NFX")

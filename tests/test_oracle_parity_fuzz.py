@@ -356,8 +356,9 @@ def test_bigram_lm_matches_duckdb_on_random_strings(spark):
     pdf = pd.DataFrame({"doc_id": range(len(docs)), "text": docs})
     sdf = spark.createDataFrame(pdf)
     vocab_size = 12  # tiny on purpose: most tokens collapse to UNK
+    # A fit sample covering the corpus: the model the replay below fits.
     got = (
-        bigram_lm_scores(sdf, vocab_size=vocab_size)
+        bigram_lm_scores(sdf, vocab_size=vocab_size, max_fit_docs=len(docs))
         .toPandas()
         .set_index("doc_id")
         .sort_index()
@@ -510,7 +511,7 @@ def test_bucketed_interval_join_matches_naive_on_random_events(spark):
 
     bucketed = {
         (r["user_id"], r["left_id"], r["right_id"])
-        for r in interval_join_pairs(ev, streaming=False).collect()
+        for r in interval_join_pairs(ev).collect()
     }
     left = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("event_id").alias("left_id"), F.col("ts").alias("lts")

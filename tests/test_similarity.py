@@ -108,7 +108,7 @@ def test_query_bucket_matches_stored_bucket_for_every_row(spark, emb_df):
     ).collect()
     assert len(rows) > 0
     for r in rows:
-        qb = similarity._bucket_of(r["embedding"], n_bits=8, dim=64, seed=42)
+        qb = similarity._bucket_of(r["embedding"], dim=64)
         assert qb == r["lsh_bucket"], f"vec {r['vec_id']}: {qb} != {r['lsh_bucket']}"
 
 

@@ -581,7 +581,7 @@ def test_tumbling_stream_equals_batch(spark, tmp_path):
     }
     want = {
         (r["window_start"], r["event_type"], r["n"])
-        for r in W.tumbling_counts(batch_df, streaming=False).collect()
+        for r in W.tumbling_counts(batch_df).collect()
     }
     assert got == want and len(want) > 1
 
@@ -594,7 +594,7 @@ def test_sliding_stream_equals_batch(spark, tmp_path):
     }
     want = {
         (r["window_start"], r["n"])
-        for r in W.sliding_counts(batch_df, streaming=False).collect()
+        for r in W.sliding_counts(batch_df).collect()
     }
     assert got == want and len(want) > 2
 
@@ -628,7 +628,7 @@ def test_trending_topk_stream_equals_batch(spark, tmp_path):
     }
     want_counts = {
         (r["window_start"], r["event_type"], r["n"])
-        for r in W.keyed_sliding_counts(batch_df, streaming=False).collect()
+        for r in W.keyed_sliding_counts(batch_df).collect()
     }
     assert got_counts == want_counts and len(want_counts) > 4
 
@@ -658,7 +658,7 @@ def test_session_stream_equals_batch_and_gaps_islands(spark, tmp_path):
     }
     want = {
         (r["session_start"], r["user_id"], r["n"])
-        for r in W.session_counts(batch_df, streaming=False).collect()
+        for r in W.session_counts(batch_df).collect()
     }
     assert got == want
     # and the gaps-and-islands ground truth agrees on (start, key, count)
@@ -684,7 +684,7 @@ def test_session_boundary_exactly_at_gap(spark, tmp_path):
         (4, BASE_TS + dt.timedelta(minutes=30, seconds=1), 2, "view"),
     ]
     batch_df, _ = _streamable_events(spark, tmp_path, at_gap + past_gap)
-    sw = W.session_counts(batch_df, streaming=False).collect()
+    sw = W.session_counts(batch_df).collect()
     gi = W.batch_sessions_gaps_and_islands(batch_df).collect()
     sw_by_user = {}
     for r in sw:
@@ -752,7 +752,7 @@ def test_interval_join_stream_equals_batch(spark, tmp_path):
     }
     want = {
         (r["user_id"], r["left_id"], r["right_id"])
-        for r in J.interval_join_pairs(batch_df, streaming=False).collect()
+        for r in J.interval_join_pairs(batch_df).collect()
     }
     assert got == want
     # exact expected structure: per user, purchase@30 <- click@25 only

@@ -92,11 +92,11 @@ def test_tokenizer_is_whitespace_regex(spark):
 
 
 def test_char_shingles(spark):
-    assert one(spark, "abcdef", TX.char_shingles("text", 5)) == [
+    assert one(spark, "abcdef", TX.char_shingles("text")) == [
         "abcde",
         "bcdef",
     ]
-    assert one(spark, "abc", TX.char_shingles("text", 5)) == []
+    assert one(spark, "abc", TX.char_shingles("text")) == []
 
 
 def test_cjk_docs_carry_dedup_and_quality_signal(spark):
@@ -115,7 +115,7 @@ def test_cjk_docs_carry_dedup_and_quality_signal(spark):
         spark.createDataFrame([(zh1,)], "text string")
         .select(
             F.size(TX.word_shingles(TX.tokens("text"), 3)).alias("w"),
-            F.size(TX.adaptive_shingles("text", 3, 5)).alias("a"),
+            F.size(TX.adaptive_shingles("text", 3)).alias("a"),
             F.round(TX.punct_ratio("text"), 4).alias("p"),
             TX.lang_id("text").alias("lang"),
         )

@@ -253,7 +253,7 @@ def _ops(spark, d):
         "funnel": lambda: _evops().funnel_conversion(
             ev(), ["view", "click", "purchase"], within="1 hour"
         ),
-        "tumbling": lambda: _evops().tumbling_counts(ev(), streaming=False),
+        "tumbling": lambda: _evops().tumbling_counts(ev()),
         "session": lambda: _evops().batch_sessions_gaps_and_islands(ev()),
         "chain": lambda: _chain(spark, docs()),
         "tfidf": lambda: _searchops().tf_idf_vectors(docs(), vocab_size=1000),
