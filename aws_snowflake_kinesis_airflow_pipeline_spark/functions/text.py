@@ -57,17 +57,16 @@ def tokens(col: Column | str) -> Column:
     return F.filter(F.split(c, TOKEN_SPLIT_RE), lambda t: t != F.lit(""))
 
 
-def lower_tokens(text_col: str) -> Column:
-    """Lowercased :func:`tokens`; NULL text gives an empty array, not NULL
-    (a NULL would fall out of avg(dl) and shift every BM25 length norm)."""
-    return F.coalesce(
-        tokens(F.lower(F.col(text_col))), F.array().cast("array<string>")
-    )
+def lower_tokens() -> Column:
+    """Lowercased :func:`tokens` of ``text``; NULL text gives an empty
+    array, not NULL (a NULL would fall out of avg(dl) and shift every BM25
+    length norm)."""
+    return tokens(F.lower(F.coalesce(F.col("text"), F.lit(""))))
 
 
-def token_count(col: Column | str) -> Column:
-    """Whitespace token count."""
-    return F.size(tokens(col))
+def token_count() -> Column:
+    """Whitespace token count of ``text``."""
+    return F.size(tokens("text"))
 
 
 #: Every char the BPE lexer's SECOND branch must NOT match: deleting these
@@ -78,8 +77,8 @@ _BPE_ALNUM_WS = (
 )
 
 
-def bpe_token_count(col: Column | str) -> Column:
-    """BPE-ish token count — semantically ``regexp_count(BPE_TOKEN_RE)``
+def bpe_token_count() -> Column:
+    """BPE-ish token count of ``text`` — semantically ``regexp_count(BPE_TOKEN_RE)``
     but decomposed so the JVM never runs the alternation: total matches =
     (alnum RUNS, a single-class regex) + (chars that are neither alnum
     nor whitespace, counted by translate-delete, no regex at all). The
@@ -87,7 +86,7 @@ def bpe_token_count(col: Column | str) -> Column:
     measured 10.9 s vs 1.2 s for this form on sf10's 500k docs
     (BASELINE.md round-7 notes); values are identical, including NULL
     text -> NULL (no coalesce, exactly as regexp_count behaves)."""
-    c = F.col(col) if isinstance(col, str) else col
+    c = F.col("text")
     return F.regexp_count(c, F.lit("[a-zA-Z0-9]+")) + F.length(
         F.translate(c, _BPE_ALNUM_WS, "")
     )
@@ -133,14 +132,14 @@ def char_shingles(col: Column | str) -> Column:
     return F.when(n >= k, grams).otherwise(F.array().cast("array<string>"))
 
 
-def adaptive_shingles(col: Column | str, k: int = 3) -> Column:
-    """Word k-gram shingles, falling back to :func:`char_shingles`
+def adaptive_shingles(k: int = 3) -> Column:
+    """Word k-gram shingles of ``text``, falling back to :func:`char_shingles`
     for documents containing no-space-script codepoints (CJK) — the
     multilingual-honest shingle unit used by the dedup family. The branch
     is per-document and purely expression-level; corpora without CJK text
     take the word path everywhere (and match the word-shingle SQL
     oracles)."""
-    c = F.col(col) if isinstance(col, str) else col
+    c = F.col("text")
     has_no_space_script = F.regexp_count(c, F.lit(NO_SPACE_SCRIPT_RE)) > 0
     return F.when(has_no_space_script, char_shingles(c)).otherwise(
         word_shingles(tokens(c), k)
@@ -177,16 +176,16 @@ def punct_ratio(col: Column | str) -> Column:
     return (F.length(c) - F.length(stripped)) / F.greatest(F.length(c), F.lit(1))
 
 
-def stopword_ratio(col: Column | str) -> Column:
-    """Fraction of whitespace tokens that are English stopwords."""
+def stopword_ratio() -> Column:
+    """Fraction of ``text``'s whitespace tokens that are English stopwords."""
     sw = F.array(*[F.lit(w) for w in ENGLISH_STOPWORDS])
-    t = tokens(col)
+    t = tokens("text")
     n_stop = F.size(F.filter(t, lambda x: F.array_contains(sw, x)))
     return n_stop / F.greatest(F.size(t), F.lit(1))
 
 
-def dup_word_frac(col: Column | str) -> Column:
-    """Fraction of tokens that are repeats of an earlier token — the
+def dup_word_frac() -> Column:
+    """Fraction of ``text``'s tokens that are repeats of an earlier token — the
     Gopher/Dolma within-document repetition signal (their duplicate-line
     fraction, at word granularity for single-line corpora). 0 = all tokens
     distinct, →1 = one token repeated throughout.
@@ -195,20 +194,20 @@ def dup_word_frac(col: Column | str) -> Column:
     so separator runs and padding of any whitespace kind never fabricate
     empty-string "repeats"; empty documents score 0 here and are gated by
     the length component of quality_score instead."""
-    t = tokens(col)
+    t = tokens("text")
     return (F.size(t) - F.size(F.array_distinct(t))) / F.greatest(
         F.size(t), F.lit(1)
     )
 
 
-def top_word_frac(col: Column | str) -> Column:
-    """Fraction of tokens taken by the single most frequent token (Gopher's
+def top_word_frac() -> Column:
+    """Fraction of ``text``'s tokens taken by the single most frequent token (Gopher's
     top-n-gram character fraction, n=1, token-counted). Computed as the
     longest equal-run in the sorted token array — O(L log L) per row vs the
     naive distinct×filter O(L²), which dominated the sf1 text-feature scan
     (19 s → the token sort is the new ceiling). No shuffle, no explode;
     bounded by document length, not corpus size."""
-    t = tokens(col)
+    t = tokens("text")
     srt = F.array_sort(t)
     # fold: state = (prev token, current run length, best run length)
     state = F.aggregate(
@@ -237,15 +236,15 @@ def mean_token_len(col: Column | str) -> Column:
     return non_space_chars / F.greatest(F.size(t), F.lit(1))
 
 
-def quality_score(col: Column | str) -> Column:
-    """Composite document-quality heuristic in [0, 1].
+def quality_score() -> Column:
+    """Composite document-quality heuristic of ``text``, in [0, 1].
 
     Rewards: reasonable length (saturating at 200 chars), low punctuation
     density, moderate mean word length. The exact blend is a placeholder —
     the operator contract (pure column expression, SQL-expressible, cheap)
     is what the engine guarantees.
     """
-    c = F.col(col) if isinstance(col, str) else col
+    c = F.col("text")
     length_component = F.least(F.length(c) / F.lit(200.0), F.lit(1.0))
     punct_component = 1.0 - F.least(punct_ratio(c) * 5.0, F.lit(1.0))
     wordlen = mean_token_len(c)
@@ -255,14 +254,14 @@ def quality_score(col: Column | str) -> Column:
     )
 
 
-def lang_id(col: Column | str) -> Column:
-    """Marker-word language ID over {en, de, es, fr} + CJK detection for zh.
+def lang_id() -> Column:
+    """Marker-word language ID of ``text`` over {en, de, es, fr} + CJK detection for zh.
 
     Heuristic shape: tokenize, count marker hits per language, argmax with
     'und' (undetermined) fallback when nothing matches; any CJK codepoint
     short-circuits to 'zh'. All built-ins — scales as a scan.
     """
-    c = F.col(col) if isinstance(col, str) else col
+    c = F.col("text")
     t = F.split(F.lower(c), TOKEN_SPLIT_RE)
     def _marker_hits(markers: list[str]) -> Column:
         arr = F.array(*[F.lit(w) for w in markers])

@@ -16,12 +16,13 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def variant_get(col: Column | str, path: str, cast: str | None = None) -> Column:
-    """``col:path::cast`` — Snowflake VARIANT path extraction on a JSON string.
+def variant_get(path: str, cast: str | None = None) -> Column:
+    """``props:path::cast`` — Snowflake VARIANT path extraction on the
+    ``props`` JSON string.
 
     ``path`` is a dot path without the leading ``$.`` (e.g. ``"price"`` or
     ``"a.b"``). Returns NULL when the path is absent, like Snowflake.
     """
-    c = F.get_json_object(F.col(col) if isinstance(col, str) else col, f"$.{path}")
+    c = F.get_json_object(F.col("props"), f"$.{path}")
     return c.cast(cast) if cast else c
 

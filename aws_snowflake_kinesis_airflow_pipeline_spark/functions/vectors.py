@@ -29,12 +29,12 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def l2_norm(col: Column | str) -> Column:
-    """Euclidean norm: sqrt(sum x_i^2), sequential left fold."""
-    v = _c(col)
+def l2_norm() -> Column:
+    """Euclidean norm of ``embedding``: sqrt(sum x_i^2), sequential left
+    fold."""
     return F.sqrt(
         F.aggregate(
-            v,
+            F.col("embedding"),
             F.lit(0.0),
             lambda acc, x: acc + x.cast("double") * x.cast("double"),
         )

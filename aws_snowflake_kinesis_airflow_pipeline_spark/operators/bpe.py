@@ -107,7 +107,7 @@ def induce_bpe_merges(docs: DataFrame, n_merges: int = 100) -> list[tuple[str, s
     if n_merges < 0:
         raise ValueError("induce_bpe_merges: n_merges must be >= 0")
     counts = (
-        docs.select(F.explode(lower_tokens("text")).alias("_w"))
+        docs.select(F.explode(lower_tokens()).alias("_w"))
         .groupBy("_w")
         .agg(F.count("*").alias("_c"))
         .orderBy(F.col("_c").desc(), F.col("_w").asc())

@@ -32,14 +32,12 @@ from ..functions.text import tokens
 
 def chunk_documents(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     chunk_tokens: int = 64,
     overlap: int = 16,
 ) -> DataFrame:
-    """Explode each document into overlapping token-window chunks.
+    """Explode each ``text`` into overlapping token-window chunks.
 
-    Returns one row per chunk: ``(id_col, chunk_idx, chunk_start,
+    Returns one row per chunk: ``(doc_id, chunk_idx, chunk_start,
     chunk_n_tokens, chunk_fp)`` where ``chunk_idx`` is the 0-based window
     number, ``chunk_start`` the 0-based token offset, and ``chunk_fp`` the
     md5 of the space-rejoined window — the engine-portable fingerprint
@@ -49,7 +47,7 @@ def chunk_documents(
         raise ValueError("need 0 <= overlap < chunk_tokens")
     stride = chunk_tokens - overlap
 
-    toks = tokens(text_col)
+    toks = tokens("text")
     n = F.size(toks)
     # sequence() is inclusive of the stop bound, so stop at limit-1 to get
     # starts strictly below max(n - overlap, 1) — matching DuckDB's
@@ -60,9 +58,9 @@ def chunk_documents(
     windows = F.transform(starts, lambda s: F.slice(toks, s + 1, chunk_tokens))
     return (
         df.filter(n > 0)
-        .select(id_col, F.posexplode(windows).alias("chunk_idx", "w"))
+        .select("doc_id", F.posexplode(windows).alias("chunk_idx", "w"))
         .select(
-            id_col,
+            "doc_id",
             "chunk_idx",
             (F.col("chunk_idx") * stride).alias("chunk_start"),
             F.size("w").alias("chunk_n_tokens"),

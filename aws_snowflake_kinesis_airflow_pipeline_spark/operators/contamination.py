@@ -2,7 +2,7 @@
 
 Flags training documents that share word-k-gram shingles with an evaluation
 benchmark set — the n-gram-overlap decontamination rule of the GPT-3 / C4
-lineage (13-grams there; ``k`` is configurable and the fixtures use 3).
+lineage (13-grams there; 3-grams here).
 
 This extends the reference pipeline's data-quality-gate family
 (airflow/dags/snowflake_data_pipeline.py:154-202 — detect-and-reject bad
@@ -21,13 +21,10 @@ from .dedup import shingle_index
 def benchmark_ngram_overlap(
     corpus: DataFrame,
     benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
 ) -> DataFrame:
-    """Per-corpus-document benchmark-overlap stats.
+    """Per-corpus-document benchmark-overlap stats over word 3-grams.
 
-    Returns ``(id_col, n_shingles, n_contaminated, contamination)`` where
+    Returns ``(doc_id, n_shingles, n_contaminated, contamination)`` where
     ``n_shingles`` counts the document's distinct word-k-grams,
     ``n_contaminated`` counts those that also appear anywhere in the
     benchmark, and ``contamination`` is their ratio (rounded to 4 dp).
@@ -39,19 +36,19 @@ def benchmark_ngram_overlap(
     join, and one groupBy on the document id. The corpus-side inverted
     index is never self-joined, so there is no candidate-pair blowup to
     guard. Shingles travel as 64-bit hashes (see :func:`shingle_index`).
-    Documents with fewer than ``k`` tokens have no shingles and drop out
+    Documents with fewer than 3 tokens have no shingles and drop out
     (they cannot be contaminated).
     """
-    corpus_sh = shingle_index(corpus, id_col, text_col, k)
+    corpus_sh = shingle_index(corpus)
     bench_sh = (
-        shingle_index(benchmark, id_col, text_col, k)
+        shingle_index(benchmark)
         .select("shingle")
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
     return (
         corpus_sh.join(F.broadcast(bench_sh), "shingle", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_shingles"),
             F.count("_hit").alias("n_contaminated"),
@@ -66,7 +63,6 @@ def benchmark_ngram_overlap(
 def decontaminate(
     corpus: DataFrame,
     benchmark: DataFrame,
-    k: int = 3,
     max_contamination: float = 0.1,
 ) -> DataFrame:
     """The end-to-end action: drop every corpus row whose benchmark-shingle
@@ -75,7 +71,7 @@ def decontaminate(
     broadcast-hash semi-join shape: the overlap stats never leave the
     cluster, and the surviving rows keep all their columns.
     """
-    flagged = benchmark_ngram_overlap(corpus, benchmark, "doc_id", "text", k)
+    flagged = benchmark_ngram_overlap(corpus, benchmark)
     drop = flagged.filter(
         F.col("contamination") > max_contamination
     ).select("doc_id")

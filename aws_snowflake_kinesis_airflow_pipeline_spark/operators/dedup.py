@@ -29,16 +29,18 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import adaptive_shingles, tokens, word_shingles
+from ..functions.text import adaptive_shingles, tokens
 from .spread import pin
 from .spread import scaled_repartition as _scaled_repartition
 from .spread import spread as _spread
 
 #: MinHash LSH parameters of :func:`minhash_lsh_pairs` and of the persisted
 #: index (operators/incremental.py): a stored bucket collides with a batch
-#: bucket only when both were banded at the same values.
-MINHASH_HASHES = 64
+#: bucket only when both were banded at the same values. The hash count is
+#: bands x rows, so every signature position lands in exactly one band.
 MINHASH_BANDS = 16
+MINHASH_ROWS = 4
+MINHASH_HASHES = MINHASH_BANDS * MINHASH_ROWS
 MINHASH_K = 3
 
 
@@ -165,9 +167,10 @@ def exact_dedup(
 
 
 def doc_shingles(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3
+    df: DataFrame, k: int = 3
 ) -> DataFrame:
-    """Per-document hashed shingle set: (id, ``hs: array<long>``) where
+    """Per-document hashed shingle set of ``text``: (doc_id, ``hs:
+    array<long>``) where
     ``hs`` holds the xxhash64 of each distinct shingle — word k-grams
     normally, character 5-grams for no-space-script (CJK)
     documents, where whitespace tokenization yields one giant token and
@@ -182,22 +185,20 @@ def doc_shingles(
     8-byte longs from here on; cross-shingle hash collisions perturb
     Jaccard with probability ~|shingles|^2 / 2^64 (never observed at
     fixture scale; deterministic when they do occur)."""
-    return _spread(df.select(id_col, text_col), id_col).select(
-        id_col,
+    return _spread(df.select("doc_id", "text"), "doc_id").select(
+        "doc_id",
         F.transform(
-            F.array_distinct(adaptive_shingles(text_col, k)),
+            F.array_distinct(adaptive_shingles(k)),
             lambda s: F.xxhash64(s),
         ).alias("hs"),
     )
 
 
-def shingle_index(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3
-) -> DataFrame:
-    """(id, shingle) inverted index — one row per distinct word-k-gram per
-    document (see :func:`doc_shingles`; this is its exploded form)."""
-    return doc_shingles(df, id_col, text_col, k).select(
-        id_col, F.explode("hs").alias("shingle")
+def shingle_index(df: DataFrame) -> DataFrame:
+    """(doc_id, shingle) inverted index — one row per distinct word-3-gram
+    per document (see :func:`doc_shingles`; this is its exploded form)."""
+    return doc_shingles(df, 3).select(
+        "doc_id", F.explode("hs").alias("shingle")
     )
 
 
@@ -281,8 +282,6 @@ def _sized_posting_pairs(postings: DataFrame, threshold: float) -> DataFrame:
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    id_col: str,
-    text_col: str,
     k: int = 3,
     threshold: float = 0.8,
     candidates: DataFrame | None = None,
@@ -291,7 +290,8 @@ def ngram_jaccard_pairs(
     sizes: DataFrame | None = None,
     per_doc_sets: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact word-k-gram Jaccard >= threshold pairs (id1 < id2).
+    """Exact word-k-gram Jaccard >= threshold ``doc_id`` pairs (id1 < id2)
+    over ``text``.
 
     Inverted-index formulation: |A ∩ B| falls out of a shingle equality
     self-join + count, |A ∪ B| = |A| + |B| - |A ∩ B|. The self-join only
@@ -342,8 +342,8 @@ def ngram_jaccard_pairs(
         # the id side when it is small), intersect per pair row-locally.
         # No corpus-sized exchange anywhere: both joins below are sized by
         # |candidates|.
-        ids1 = candidates.select(F.col("id1").alias(id_col))
-        ids2 = candidates.select(F.col("id2").alias(id_col))
+        ids1 = candidates.select(F.col("id1").alias("doc_id"))
+        ids2 = candidates.select(F.col("id2").alias("doc_id"))
         ids = ids1.union(ids2).distinct()
         if per_doc_sets is None:
             # Derive sets for ONLY the candidate docs: the id semi-join
@@ -351,10 +351,10 @@ def ngram_jaccard_pairs(
             # candidate-volume too. localCheckpoint because both pair
             # joins below read it.
             cand_sets = doc_shingles(
-                df.join(ids, id_col, "left_semi"), id_col, text_col, k
+                df.join(ids, "doc_id", "left_semi"), k
             ).localCheckpoint(eager=False)
         else:
-            cand_sets = per_doc_sets.join(ids, id_col, "left_semi")
+            cand_sets = per_doc_sets.join(ids, "doc_id", "left_semi")
         # _scaled_repartition on the set-bearing sides: the SHJ below
         # BUILDS these rows (one shingle array per candidate doc) fully
         # in memory per partition, and at 50 M docs the session/AQE
@@ -367,14 +367,14 @@ def ngram_jaccard_pairs(
         # match. No-op at bench SFs (plans byte-identical).
         s1 = _scaled_repartition(
             cand_sets.select(
-                F.col(id_col).alias("id1"), F.col("hs").alias("hs1")
+                F.col("doc_id").alias("id1"), F.col("hs").alias("hs1")
             ),
             "id1",
             source=df,
         )
         s2 = _scaled_repartition(
             cand_sets.select(
-                F.col(id_col).alias("id2"), F.col("hs").alias("hs2")
+                F.col("doc_id").alias("id2"), F.col("hs").alias("hs2")
             ),
             "id2",
             source=df,
@@ -415,7 +415,7 @@ def ngram_jaccard_pairs(
         # Row-local sizes aren't recoverable from an exploded index
         # without re-aggregating.
         if sizes is None:
-            sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
+            sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     else:
         # localCheckpoint (not cache): materializes the per-doc shingle
         # sets once for the sizes + pairing + verification passes,
@@ -423,12 +423,12 @@ def ngram_jaccard_pairs(
         # the result is GC'd — repeated suite runs in one session don't
         # accumulate cache entries (cache() here re-registered an
         # identical plan every call and warned).
-        per_doc = doc_shingles(df, id_col, text_col, k).localCheckpoint(
+        per_doc = doc_shingles(df, k).localCheckpoint(
             eager=False
         )
-        sh = per_doc.select(id_col, F.explode("hs").alias("shingle"))
+        sh = per_doc.select("doc_id", F.explode("hs").alias("shingle"))
         if sizes is None:
-            sizes = per_doc.select(id_col, F.size("hs").alias("n_sh"))
+            sizes = per_doc.select("doc_id", F.size("hs").alias("n_sh"))
     if max_doc_freq is not None:
         # Grouped pair emission: ONE shuffle of the index (groupBy
         # shingle -> sorted posting list), then pairs emitted
@@ -449,7 +449,7 @@ def ngram_jaccard_pairs(
         # the pair-count exchange: see _sized_posting_pairs. The pruned
         # pairs are exactly those no Jaccard >= t can admit.
         sh_sized = per_doc.select(
-            F.col(id_col).alias("id"),
+            F.col("doc_id").alias("id"),
             F.size("hs").alias("n_sh"),
             F.explode("hs").alias("shingle"),
         )
@@ -471,25 +471,25 @@ def ngram_jaccard_pairs(
             .groupBy("id1", "id2")
             .agg(F.count("*").alias("n_inter"))
         )
-        return _jaccard_from_inter(inter, sizes, id_col, threshold)
-    a = sh.select(F.col(id_col).alias("id1"), "shingle")
-    b = sh.select(F.col(id_col).alias("id2"), "shingle")
+        return _jaccard_from_inter(inter, sizes, threshold)
+    a = sh.select(F.col("doc_id").alias("id1"), "shingle")
+    b = sh.select(F.col("doc_id").alias("id2"), "shingle")
     inter = (
         a.join(b, "shingle")
         .filter(F.col("id1") < F.col("id2"))
         .groupBy("id1", "id2")
         .agg(F.count("*").alias("n_inter"))
     )
-    return _jaccard_from_inter(inter, sizes, id_col, threshold)
+    return _jaccard_from_inter(inter, sizes, threshold)
 
 
 def _jaccard_from_inter(
-    inter: DataFrame, sizes: DataFrame, id_col: str, threshold: float
+    inter: DataFrame, sizes: DataFrame, threshold: float
 ) -> DataFrame:
     """Finalize (id1, id2, n_inter) + per-doc set sizes into thresholded
     Jaccard pairs: |A ∪ B| = |A| + |B| - |A ∩ B|."""
-    s1 = sizes.select(F.col(id_col).alias("id1"), F.col("n_sh").alias("n1"))
-    s2 = sizes.select(F.col(id_col).alias("id2"), F.col("n_sh").alias("n2"))
+    s1 = sizes.select(F.col("doc_id").alias("id1"), F.col("n_sh").alias("n1"))
+    s2 = sizes.select(F.col("doc_id").alias("id2"), F.col("n_sh").alias("n2"))
     return (
         inter.join(s1, "id1")
         .join(s2, "id2")
@@ -564,17 +564,15 @@ def _minhash_mins_core(
 
 def minhash_signatures(
     df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 64,
     k: int = 3,
     per_doc: DataFrame | None = None,
 ) -> DataFrame:
-    """Per-document MinHash signature as ``mins: array<long>`` —
-    shuffle-free: shingle sets are row-local (:func:`doc_shingles`) and
-    the ``num_hashes`` minima are one vectorized reduction per Arrow
-    batch. Docs with no shingles (< k tokens) are dropped, as the
-    previous groupBy formulation did implicitly.
+    """Per-``doc_id`` MinHash signature of ``text`` as ``mins:
+    array<long>`` — shuffle-free: shingle sets are row-local
+    (:func:`doc_shingles`) and the ``MINHASH_HASHES`` minima are one
+    vectorized reduction per Arrow batch. Docs with no shingles (< k
+    tokens) are dropped, as the previous groupBy formulation did
+    implicitly.
 
     The kernel is ``mapInArrow``, not a pandas_udf: the list column's
     values/offsets buffers are consumed and produced as flat numpy views
@@ -587,13 +585,13 @@ def minhash_signatures(
     src = (
         per_doc
         if per_doc is not None
-        else doc_shingles(df, id_col, text_col, k)
+        else doc_shingles(df, k)
     )
     seeds = _splitmix64(
-        (np.arange(1, num_hashes + 1, dtype=np.uint64) + np.uint64(1))
+        (np.arange(1, MINHASH_HASHES + 1, dtype=np.uint64) + np.uint64(1))
         * _SPLITMIX_GOLDEN
     )
-    id_type = src.schema[id_col].dataType.simpleString()
+    id_type = src.schema["doc_id"].dataType.simpleString()
 
     def _map(batches):
         for b in batches:
@@ -638,7 +636,7 @@ def minhash_signatures(
                 flat_out = mins.view(np.int64).reshape(-1)
             else:
                 flat_out = np.empty(0, dtype=np.int64)
-            counts = np.where(nonempty, num_hashes, 0)
+            counts = np.where(nonempty, MINHASH_HASHES, 0)
             offs = np.zeros(n + 1, dtype=np.int64)
             np.cumsum(counts, out=offs[1:])
             arr = pa.ListArray.from_arrays(
@@ -646,7 +644,7 @@ def minhash_signatures(
                 pa.array(flat_out, type=pa.int64()),
                 mask=pa.array(~nonempty),
             )
-            yield pa.RecordBatch.from_arrays([ids, arr], [id_col, "mins"])
+            yield pa.RecordBatch.from_arrays([ids, arr], ["doc_id", "mins"])
 
     # Drop no-shingle docs AFTER the kernel, on its NULL output: a
     # pre-filter on size(hs) gets the whole computed shingle expression
@@ -654,58 +652,45 @@ def minhash_signatures(
     # shingle array twice in the fused stage (measured ~2x the signature
     # pass on a streamed, non-checkpointed per_doc).
     return (
-        src.select(id_col, "hs")
-        .mapInArrow(_map, f"{id_col} {id_type}, mins array<bigint>")
+        src.select("doc_id", "hs")
+        .mapInArrow(_map, f"doc_id {id_type}, mins array<bigint>")
         .filter(F.col("mins").isNotNull())
     )
 
 
-def band_buckets(
-    sig: DataFrame, id_col: str, num_hashes: int = 64, bands: int = 16
-) -> DataFrame:
-    """Banded LSH buckets (id, band_id, band_hash) from MinHash signatures:
-    ``bands`` buckets per document, each hashing ``num_hashes/bands``
-    consecutive signature positions. The bucketing function must be
-    IDENTICAL everywhere buckets are compared — the batch self-join
-    (:func:`minhash_lsh_pairs`) and the persisted-index probe
+def band_buckets(sig: DataFrame) -> DataFrame:
+    """Banded LSH buckets (doc_id, band_id, band_hash) from MinHash
+    signatures: ``MINHASH_BANDS`` buckets per document, each hashing
+    ``MINHASH_ROWS`` consecutive signature positions. The bucketing
+    function must be IDENTICAL everywhere buckets are compared — the batch
+    self-join (:func:`minhash_lsh_pairs`) and the persisted-index probe
     (operators/incremental.py) both derive from this one definition, so an
     index written yesterday collides correctly with a batch bucketed
-    today. Divisibility is validated: silently truncating to
-    ``num_hashes // bands`` rows would drop trailing signature positions
-    and quietly replace the caller's intended S-curve with a different
-    one."""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"band_buckets: num_hashes={num_hashes} not divisible by "
-            f"bands={bands}; {num_hashes % bands} signature positions "
-            "would be silently ignored"
-        )
-    rows = num_hashes // bands
+    today."""
     band_structs = [
         F.struct(
             F.lit(b).alias("band_id"),
             F.xxhash64(
                 *[
-                    F.element_at("mins", b * rows + r + 1)
-                    for r in range(rows)
+                    F.element_at("mins", b * MINHASH_ROWS + r + 1)
+                    for r in range(MINHASH_ROWS)
                 ]
             ).alias("band_hash"),
         )
-        for b in range(bands)
+        for b in range(MINHASH_BANDS)
     ]
     return sig.select(
-        id_col, F.explode(F.array(*band_structs)).alias("band")
-    ).select(id_col, "band.band_id", "band.band_hash")
+        "doc_id", F.explode(F.array(*band_structs)).alias("band")
+    ).select("doc_id", "band.band_id", "band.band_hash")
 
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    id_col: str,
-    text_col: str,
     k: int = MINHASH_K,
     threshold: float = 0.8,
 ) -> DataFrame:
-    """Near-duplicate pairs by MinHash LSH with exact-Jaccard verification.
+    """Near-duplicate ``doc_id`` pairs over ``text`` by MinHash LSH with
+    exact-Jaccard verification.
 
     bands=16 x rows=4 over 64 hashes: detection probability at Jaccard s is
     1-(1-s^4)^16 (≈ 0.9998 at s=0.8) — the classic S-curve. Candidates come
@@ -725,10 +710,8 @@ def minhash_lsh_pairs(
     # full corpus's sets (~8 B x shingles x docs) bought nothing once
     # verification went candidate-filtered (it re-derives sets for only
     # the candidate docs; see ngram_jaccard_pairs).
-    per_doc = doc_shingles(df, id_col, text_col, k)
-    sig = minhash_signatures(
-        df, id_col, text_col, MINHASH_HASHES, k, per_doc=per_doc
-    )
+    per_doc = doc_shingles(df, k)
+    sig = minhash_signatures(df, k, per_doc=per_doc)
     # localCheckpoint the narrow (id, band_id, band_hash) triple: with
     # grouped emission it has a single consumer, so this is a pin, not a
     # dedup of compute — it keeps the signature kernel (the operator's
@@ -737,7 +720,7 @@ def minhash_lsh_pairs(
     # triple as free (within host noise of streaming it). Same
     # discipline as embedding_near_dup_pairs' bucket triple.
     buckets = pin(
-        band_buckets(sig, id_col, MINHASH_HASHES, MINHASH_BANDS),
+        band_buckets(sig),
         "band_id",
         "band_hash",
         source=df,
@@ -758,7 +741,7 @@ def minhash_lsh_pairs(
     # say) and they cannot exist.
     postings = (
         buckets.groupBy("band_id", "band_hash")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .filter(F.size("ids") >= 2)
     )
     # Checkpointed: candidate-sized (the S-curve keeps it linear in the
@@ -773,8 +756,6 @@ def minhash_lsh_pairs(
     )
     return ngram_jaccard_pairs(
         df,
-        id_col,
-        text_col,
         k=k,
         threshold=threshold,
         candidates=candidates,
@@ -826,11 +807,10 @@ def _assemble_sig(sum_cols: list[str]) -> Column:
     return F.expr(f"CAST({terms} AS BIGINT)")
 
 
-def simhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, bits: int = 64
-) -> DataFrame:
-    """SimHash per document: sum +/-1 per bit over token hashes (weighted
-    by term frequency via non-distinct explode), then take signs.
+def simhash_signatures(df: DataFrame, bits: int = 64) -> DataFrame:
+    """SimHash of each ``doc_id``'s ``text``: sum +/-1 per bit over token
+    hashes (weighted by term frequency via non-distinct explode), then take
+    signs.
 
     One conditional-sum aggregate per bit, all in one groupBy — a single
     shuffle regardless of width. ``bits=64`` (default) returns one signed
@@ -854,10 +834,10 @@ def simhash_signatures(
         raise ValueError(f"bits must be 64 or 128, got {bits}")
     n_words = bits // 32
     tok = (
-        _spread(df.select(id_col, text_col), id_col)
-        .select(id_col, F.explode(tokens(text_col)).alias("token"))
-        .select(id_col, F.md5(F.col("token")).alias("_md5"))
-        .select(id_col, *[_simhash_word_col(w) for w in range(n_words)])
+        _spread(df.select("doc_id", "text"), "doc_id")
+        .select("doc_id", F.explode(tokens("text")).alias("token"))
+        .select("doc_id", F.md5(F.col("token")).alias("_md5"))
+        .select("doc_id", *[_simhash_word_col(w) for w in range(n_words)])
     )
     # One parsed SQL expression per bit (see _assemble_sig: Column-chain
     # construction cost is py4j round trips, not execution).
@@ -868,9 +848,9 @@ def simhash_signatures(
         )
         for j in range(bits)
     ]
-    sums = tok.groupBy(id_col).agg(*bit_sums)
+    sums = tok.groupBy("doc_id").agg(*bit_sums)
     out = [
-        id_col,
+        "doc_id",
         _assemble_sig([f"s{j}" for j in range(64)]).alias("simhash"),
     ]
     if bits == 128:
@@ -898,12 +878,11 @@ def _sig_chunk(words: list[Column], offset: int, width: int) -> Column:
 
 def simhash_near_dup_pairs(
     df: DataFrame,
-    id_col: str,
-    text_col: str,
     max_hamming: int = 3,
     bits: int = 64,
 ) -> DataFrame:
-    """Pairs with SimHash Hamming distance <= max_hamming.
+    """``doc_id`` pairs whose ``text`` SimHash Hamming distance is <=
+    max_hamming.
 
     Pigeonhole bucketing: ``max_hamming + 1`` chunks — a pair within the
     Hamming budget must agree exactly on >= 1 chunk (a fixed chunk count
@@ -919,14 +898,14 @@ def simhash_near_dup_pairs(
     offsets = [sum(widths[:i]) for i in range(n_chunks)]
 
     sig_cols = ["simhash"] + (["simhash_hi"] if bits == 128 else [])
-    sig = simhash_signatures(df, id_col, text_col, bits=bits)
+    sig = simhash_signatures(df, bits=bits)
     words = [F.col(c) for c in sig_cols]
     # Pinned below (checkpoint or scaled exchange): the full signature
     # aggregation (explode + one conditional sum per bit over every token
     # — the operator's dominant compute) must never be replayed by a
     # downstream re-plan.
     chunks = sig.select(
-        id_col,
+        "doc_id",
         *sig_cols,
         F.explode(
             F.array(
@@ -941,9 +920,7 @@ def simhash_near_dup_pairs(
                 ]
             )
         ).alias("ch"),
-    ).select(
-        id_col, *sig_cols, "ch.chunk_id", "ch.chunk_val"
-    )
+    ).select("doc_id", *sig_cols, "ch.chunk_id", "ch.chunk_val")
     # Pinned like minhash_lsh_pairs' bucket triple: docs x n_chunks rows,
     # each hauling the signature words, feed the chunk-keyed grouping.
     chunks = pin(chunks, "chunk_id", "chunk_val", source=df)
@@ -958,9 +935,7 @@ def simhash_near_dup_pairs(
     # words) and ran the distinct over unverified candidates. sort_array
     # on the id-first struct gives id1 < id2 within each bucket; ids are
     # unique per bucket (one row per doc per chunk).
-    entry = F.struct(
-        F.col(id_col).alias("id"), *[F.col(c) for c in sig_cols]
-    )
+    entry = F.struct(F.col("doc_id").alias("id"), *[F.col(c) for c in sig_cols])
     postings = (
         chunks.groupBy("chunk_id", "chunk_val")
         .agg(F.sort_array(F.collect_list(entry)).alias("es"))
@@ -1108,21 +1083,19 @@ def connected_components(
     return labels
 
 
-def near_dup_dedup(
-    df: DataFrame, id_col: str, text_col: str, threshold: float = 0.8
-) -> DataFrame:
-    """The end-to-end near-dup *removal* operator: MinHash-LSH pairs ->
-    connected components -> keep the minimum id of each cluster. Returns the
-    surviving rows of ``df`` (every non-duplicate plus one canonical
-    representative per near-dup cluster) — the operation an LLM-data
-    pipeline actually ships."""
-    pairs = minhash_lsh_pairs(df, id_col, text_col, threshold=threshold)
+def near_dup_dedup(df: DataFrame, threshold: float = 0.8) -> DataFrame:
+    """The end-to-end near-dup *removal* operator: MinHash-LSH pairs over
+    ``text`` -> connected components -> keep the minimum ``doc_id`` of each
+    cluster. Returns the surviving rows of ``df`` (every non-duplicate plus
+    one canonical representative per near-dup cluster) — the operation an
+    LLM-data pipeline actually ships."""
+    pairs = minhash_lsh_pairs(df, threshold=threshold)
     comps = connected_components(pairs)
-    keepers = comps.groupBy("component").agg(F.min("id").alias(id_col))
+    keepers = comps.groupBy("component").agg(F.min("id").alias("doc_id"))
     drop = comps.join(
-        keepers.select(F.col(id_col).alias("id")), "id", "left_anti"
-    ).select(F.col("id").alias(id_col))
-    return df.join(drop, id_col, "left_anti")
+        keepers.select(F.col("doc_id").alias("id")), "id", "left_anti"
+    ).select(F.col("id").alias("doc_id"))
+    return df.join(drop, "doc_id", "left_anti")
 
 
 # --------------------------------------------------------------------------
@@ -1255,16 +1228,14 @@ def hyperplane_buckets_udf(planes_by_table: list[list[list[float]]]):
 
 def embedding_near_dup_pairs(
     df: DataFrame,
-    id_col: str,
-    vec_col: str,
     threshold: float = 0.9,
     n_bits: int | None = None,
-    n_tables: int = 4,
     dim: int = 64,
 ) -> DataFrame:
-    """Pairs with cosine >= threshold via multi-table hyperplane LSH.
+    """``vec_id`` pairs whose ``embedding`` cosine is >= threshold, via
+    multi-table hyperplane LSH.
 
-    n_tables independent ``n_bits``-bit sign buckets; a pair collides in a
+    Four independent ``n_bits``-bit sign buckets; a pair collides in a
     table with prob (1 - theta/pi)^n_bits — multiple tables push recall up.
     In-bucket pairs are verified with exact cosine, so precision is exact.
 
@@ -1282,7 +1253,7 @@ def embedding_near_dup_pairs(
     standard LSH trade — add tables to buy it back.
     """
     if n_bits is None:
-        n = df.select(id_col).count()
+        n = df.select("vec_id").count()
         # Cap at 30: bucket ids are int32 (hyperplane_buckets_udf packs
         # sign bits into np.int32), so >= 31 bits would wrap. 2^30 buckets
         # covers ~3e10 vectors at the default occupancy; beyond that, add
@@ -1290,25 +1261,25 @@ def embedding_near_dup_pairs(
         n_bits = min(
             30, max(8, math.ceil(math.log2(max(n / 32, 2))))
         )
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     # _spread: the bucket projection is one Arrow round-trip + numpy matmul
     # per batch; spread it when the scan arrives in fewer partitions than
     # cores so batches run on all of them.
-    vecs = _spread(df.select(F.col(id_col), v.alias("v")), id_col)
-    # All n_tables bucket ids in ONE projection + posexplode — a single scan
-    # of the corpus regardless of table count (a union of per-table branches
-    # would re-scan the input n_tables times).
+    vecs = _spread(df.select(F.col("vec_id"), v.alias("v")), "vec_id")
+    # All four bucket ids in ONE projection + posexplode — a single scan of
+    # the corpus regardless of table count (a union of per-table branches
+    # would re-scan the input once per table).
     bucket_fn = hyperplane_buckets_udf(
-        [_hyperplanes(dim, n_bits, 42 + t * 1000) for t in range(n_tables)]
+        [_hyperplanes(dim, n_bits, 42 + t * 1000) for t in range(4)]
     )
     exploded = vecs.select(
-        id_col,
+        "vec_id",
         "v",
         F.posexplode(bucket_fn(F.col("v"))).alias("table_id", "bucket"),
     )
     # In-bucket verification: group by (table, bucket) and score every
     # in-bucket pair with ONE normalized matmul per bucket. The corpus is
-    # shuffled exactly n_tables times (once per table, ~vector volume);
+    # shuffled exactly four times (once per table, ~vector volume);
     # the earlier candidate-join formulation materialized the pair list
     # and fetched both vectors per pair — at 15M candidates (sf10) that
     # shuffled ~2 x 512 B x pairs ≈ 15 GB and took 42 s where this takes
@@ -1320,7 +1291,7 @@ def embedding_near_dup_pairs(
 
     def _bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         out_i, out_j, out_c = [], [], []
-        ids_all = pdf[id_col].to_numpy()
+        ids_all = pdf["vec_id"].to_numpy()
         vs = pdf["v"]
         by_len: dict[int, list[int]] = {}
         for pos, vec in enumerate(vs):
@@ -1363,7 +1334,7 @@ def embedding_near_dup_pairs(
         )
 
     # Auto-size the bucket exchange to the input (spread.py): the
-    # exploded frame is vectors x n_tables rows EACH HAULING THE VECTOR,
+    # exploded frame is vectors x 4 rows EACH HAULING THE VECTOR,
     # so at 1000x the bench SF the session-default partition count turns
     # every applyInPandas task into a multi-hundred-MB Arrow stream. The
     # explicit hash exchange satisfies the grouping's clustering
@@ -1372,7 +1343,7 @@ def embedding_near_dup_pairs(
     pairs = exploded.groupBy("table_id", "bucket").applyInPandas(
         _bucket_pairs, schema="id1 long, id2 long, cosine double"
     )
-    # A pair can surface from up to n_tables buckets — identical inputs
+    # A pair can surface from up to four buckets — identical inputs
     # and arithmetic give an identical rounded cosine, so a plain distinct
     # (candidate-sized) dedupes across tables.
     return pairs.filter(F.col("id1") != F.col("id2")).distinct()

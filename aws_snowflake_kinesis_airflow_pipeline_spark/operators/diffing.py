@@ -7,7 +7,7 @@ new snapshot against the previous one and feeds only the delta to the
 incremental operators (``operators/incremental.py``) — and audits the
 takedowns actually landed.
 
-Semantics: rows are keyed by ``id_col``; row content is compared by a
+Semantics: rows are keyed by ``doc_id``; ``text`` is compared by a
 normalized content fingerprint (``functions/text.doc_fingerprint`` — md5
 of whitespace-normalized lowercased text), NOT raw equality, so
 formatting-only churn (re-wrapped whitespace) classifies as ``unchanged``.
@@ -27,31 +27,26 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions.text import doc_fingerprint
 
 
-def _prints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    fp = doc_fingerprint(F.coalesce(F.col(text_col), F.lit("\x00null\x00")))
-    return df.select(F.col(id_col), fp.alias("_fp"))
+def _prints(df: DataFrame) -> DataFrame:
+    fp = doc_fingerprint(F.coalesce(F.col("text"), F.lit("\x00null\x00")))
+    return df.select(F.col("doc_id"), fp.alias("_fp"))
 
 
-def corpus_diff(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id_col, status) for every id present in either snapshot.
+def corpus_diff(old: DataFrame, new: DataFrame) -> DataFrame:
+    """(doc_id, status) for every id present in either snapshot.
 
     ``added``     — id only in ``new``
     ``removed``   — id only in ``old``
     ``changed``   — id in both, fingerprints differ
     ``unchanged`` — id in both, fingerprints equal
 
-    ``id_col`` must be unique within each snapshot (the corpus-key
+    ``doc_id`` must be unique within each snapshot (the corpus-key
     contract shared with the dedup family — run exact dedup first).
     """
-    o = _prints(old, id_col, text_col).withColumnRenamed("_fp", "_fp_old")
-    n = _prints(new, id_col, text_col).withColumnRenamed("_fp", "_fp_new")
-    return o.join(n, id_col, "full_outer").select(
-        id_col,
+    o = _prints(old).withColumnRenamed("_fp", "_fp_old")
+    n = _prints(new).withColumnRenamed("_fp", "_fp_new")
+    return o.join(n, "doc_id", "full_outer").select(
+        "doc_id",
         F.when(F.col("_fp_old").isNull(), F.lit("added"))
         .when(F.col("_fp_new").isNull(), F.lit("removed"))
         .when(F.col("_fp_old") != F.col("_fp_new"), F.lit("changed"))

@@ -37,42 +37,34 @@ from ..functions.text import tokens
 from .spread import scaled_repartition as _scaled_repartition
 
 
-def ngram_column(text_col: str, k: int = 3) -> "F.Column":
-    """Whitespace-token ``k``-grams of ``text_col`` as an array of
-    space-joined strings, built row-locally (same token contract as the
-    Jaccard/c3 oracles: split on the pinned whitespace class, drop
-    empties; NULL text yields an empty array)."""
-    t = tokens(F.coalesce(F.col(text_col), F.lit("")))
-    n = F.greatest(F.size(t) - F.lit(k - 1), F.lit(0))
-    zipped = F.arrays_zip(
-        *[F.slice(t, i + 1, n).alias(f"w{i}") for i in range(k)]
-    )
+def ngram_column() -> "F.Column":
+    """Whitespace-token 3-grams of ``text`` as an array of space-joined
+    strings, built row-locally (same token contract as the Jaccard/c3
+    oracles: split on the pinned whitespace class, drop empties; NULL
+    text yields an empty array)."""
+    t = tokens(F.coalesce(F.col("text"), F.lit("")))
+    n = F.greatest(F.size(t) - F.lit(2), F.lit(0))
+    zipped = F.arrays_zip(*[F.slice(t, i + 1, n).alias(f"w{i}") for i in range(3)])
     return F.transform(
         zipped,
-        lambda s: F.concat_ws(" ", *[s[f"w{i}"] for i in range(k)]),
+        lambda s: F.concat_ws(" ", *[s[f"w{i}"] for i in range(3)]),
     )
 
 
-def corpus_diversity(
-    docs: DataFrame,
-    group_col: str = "source",
-    k: int = 3,
-) -> DataFrame:
-    """One row per ``group_col`` value: ``(group_col, n_docs,
-    total_ngrams, distinct_ngrams, ttr)``.
+def corpus_diversity(docs: DataFrame) -> DataFrame:
+    """One row per ``source`` value: ``(source, n_docs, total_ngrams,
+    distinct_ngrams, ttr)``.
 
-    ``total_ngrams`` counts every k-gram occurrence in the group,
-    ``distinct_ngrams`` counts k-gram types, ``ttr`` is their rounded
-    ratio (NULL for a group with no k-grams — e.g. every doc shorter than
-    k tokens). Groups with a NULL ``group_col`` are reported as a real
+    ``total_ngrams`` counts every 3-gram occurrence in the group,
+    ``distinct_ngrams`` counts 3-gram types, ``ttr`` is their rounded
+    ratio (NULL for a group with no 3-grams — e.g. every doc shorter than
+    3 tokens). Groups with a NULL ``source`` are reported as a real
     group, matching SQL GROUP BY semantics.
     """
-    grams = docs.select(
-        F.col(group_col), ngram_column("text", k).alias("_g")
-    )
+    grams = docs.select(F.col("source"), ngram_column().alias("_g"))
     # Totals are row-local sizes — no n-gram ever leaves its row here, and
     # the per-group sum/count combine map-side to |groups| rows.
-    totals = grams.groupBy(group_col).agg(
+    totals = grams.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum(F.size("_g")).alias("total_ngrams"),
     )
@@ -80,14 +72,14 @@ def corpus_diversity(
     # n-gram alone so it satisfies the distinct's (group, ngram)
     # clustering (subset-key rule) with ONE exchange; the count above it
     # combines map-side. No-op at bench SFs (spread.py).
-    exploded = grams.select(group_col, F.explode("_g").alias("_ng"))
+    exploded = grams.select("source", F.explode("_g").alias("_ng"))
     types = (
         _scaled_repartition(exploded, "_ng", source=docs)
         .distinct()
-        .groupBy(group_col)
+        .groupBy("source")
         .agg(F.count("*").alias("distinct_ngrams"))
     )
-    # Left join: a group whose documents have no k-grams at all produces
+    # Left join: a group whose documents have no 3-grams at all produces
     # no distinct rows but must still be reported (with 0 / NULL ttr).
     # NULL-safe on the group key: groupBy treats NULL as a real group but
     # a plain equi-join would drop it.
@@ -95,11 +87,11 @@ def corpus_diversity(
         totals.alias("t")
         .join(
             types.alias("d"),
-            F.col(f"t.{group_col}").eqNullSafe(F.col(f"d.{group_col}")),
+            F.col("t.source").eqNullSafe(F.col("d.source")),
             "left",
         )
         .select(
-            F.col(f"t.{group_col}").alias(group_col),
+            F.col("t.source").alias("source"),
             "n_docs",
             "total_ngrams",
             F.coalesce("distinct_ngrams", F.lit(0)).alias("distinct_ngrams"),

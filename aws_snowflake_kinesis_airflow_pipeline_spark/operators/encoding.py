@@ -32,18 +32,14 @@ from .spread import scaled_repartition as _scaled_repartition
 UNK_ID = 0
 
 
-def build_vocab(
-    docs: DataFrame,
-    text_col: str = "text",
-    vocab_size: int = 4096,
-) -> DataFrame:
-    """(token, token_id, count): the ``vocab_size`` most frequent tokens
-    (ties by token asc), ids 1..V in frequency-rank order. Lowercased
+def build_vocab(docs: DataFrame, vocab_size: int = 4096) -> DataFrame:
+    """(token, token_id, count): the ``vocab_size`` most frequent tokens of
+    ``text`` (ties by token asc), ids 1..V in frequency-rank order. Lowercased
     engine-wide tokenizer (``functions/text.py``)."""
     if vocab_size < 1:
         raise ValueError("build_vocab: vocab_size must be >= 1")
     counts = (
-        docs.select(F.explode(lower_tokens(text_col)).alias("token"))
+        docs.select(F.explode(lower_tokens()).alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("count"))
         .orderBy(F.col("count").desc(), F.col("token").asc())
@@ -60,16 +56,11 @@ def build_vocab(
     )
 
 
-def encode_documents(
-    docs: DataFrame,
-    vocab: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id_col, token_ids array<int>, n_tokens int, n_oov int) — every
+def encode_documents(docs: DataFrame, vocab: DataFrame) -> DataFrame:
+    """(doc_id, token_ids array<int>, n_tokens int, n_oov int) — every
     input document exactly once; empty/NULL text → empty sequence."""
     exploded = docs.select(
-        F.col(id_col), F.posexplode(lower_tokens(text_col)).alias("_pos", "token")
+        F.col("doc_id"), F.posexplode(lower_tokens()).alias("_pos", "token")
     )
     # The reassembly exchange (corpus-token-volume rows collected into
     # per-doc id arrays) auto-sizes to the input (spread.py) — the same
@@ -80,14 +71,14 @@ def encode_documents(
             exploded.join(
                 F.broadcast(vocab.select("token", "token_id")), "token", "left"
             ).select(
-                id_col,
+                "doc_id",
                 "_pos",
                 F.coalesce("token_id", F.lit(UNK_ID)).cast("int").alias("_tid"),
             ),
-            id_col,
+            "doc_id",
             source=docs,
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("_pos", "_tid"))),
@@ -101,10 +92,10 @@ def encode_documents(
     )
     empty = F.array().cast("array<int>")
     return (
-        docs.select(id_col)
-        .join(enc, id_col, "left")
+        docs.select("doc_id")
+        .join(enc, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("token_ids", empty).alias("token_ids"),
             F.coalesce("n_tokens", F.lit(0)).cast("int").alias("n_tokens"),
             F.coalesce("n_oov", F.lit(0)).cast("int").alias("n_oov"),
@@ -112,16 +103,12 @@ def encode_documents(
     )
 
 
-def decode_ids(
-    encoded: DataFrame,
-    vocab: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id_col, text): inverse of :func:`encode_documents` up to OOV loss
+def decode_ids(encoded: DataFrame, vocab: DataFrame) -> DataFrame:
+    """(doc_id, text): inverse of :func:`encode_documents` up to OOV loss
     and whitespace normalization — the audit path (spot-check that what
     the trainer sees detokenizes to the curated text)."""
     exploded = encoded.select(
-        F.col(id_col), F.posexplode("token_ids").alias("_pos", "token_id")
+        F.col("doc_id"), F.posexplode("token_ids").alias("_pos", "token_id")
     )
     # Same reassembly-exchange auto-sizing as encode_documents (no-op for
     # the registered audit path, which decodes a bounded in-memory sample).
@@ -130,14 +117,14 @@ def decode_ids(
             exploded.join(
                 F.broadcast(vocab.select("token", "token_id")), "token_id", "left"
             ).select(
-                id_col,
+                "doc_id",
                 "_pos",
                 F.coalesce("token", F.lit("<unk>")).alias("_tok"),
             ),
-            id_col,
+            "doc_id",
             source=encoded,
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.concat_ws(
                 " ",
@@ -149,7 +136,7 @@ def decode_ids(
         )
     )
     return (
-        encoded.select(id_col)
-        .join(dec, id_col, "left")
-        .select(id_col, F.coalesce("text", F.lit("")).alias("text"))
+        encoded.select("doc_id")
+        .join(dec, "doc_id", "left")
+        .select("doc_id", F.coalesce("text", F.lit("")).alias("text"))
     )

@@ -7,7 +7,7 @@ then step 3, in order, within a time budget of the first step?
 
 Semantics (deterministic, SQL-replayable): a user completes step k when
 they have an event of type ``steps[k]`` STRICTLY after their step-(k-1)
-completion time and no later than ``within`` after their step-1 time;
+completion time and no later than one hour after their step-1 time;
 each completion time is the EARLIEST qualifying event (greedy-earliest —
 the standard funnel definition; a user completing by some later path but
 not the earliest one does not count, which keeps the result a pure
@@ -25,15 +25,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def funnel_completion_times(
-    events: DataFrame, steps: list[str], within: str = "1 hour"
-) -> DataFrame:
-    """Per-user completion times: (user_id, t1, t2, ... tk) with NULLs
-    from the first uncompleted step onward (users with no step-1 event are
-    absent)."""
+def funnel_completion_times(events: DataFrame, steps: list[str]) -> DataFrame:
+    """Per-user completion times within one hour of step 1: (user_id, t1,
+    t2, ... tk) with NULLs from the first uncompleted step onward (users
+    with no step-1 event are absent)."""
     if len(steps) < 2:
         raise ValueError("funnel needs >= 2 steps")
-    deadline = F.expr(f"INTERVAL {within}")
+    deadline = F.expr("INTERVAL 1 hour")
     cur = (
         events.filter(F.col("event_type") == steps[0])
         .groupBy("user_id")
@@ -55,13 +53,11 @@ def funnel_completion_times(
     return cur
 
 
-def funnel_conversion(
-    events: DataFrame, steps: list[str], within: str = "1 hour"
-) -> DataFrame:
+def funnel_conversion(events: DataFrame, steps: list[str]) -> DataFrame:
     """(step, step_idx, n_users): users completing steps[0..idx] in order
-    within the budget. n_users is non-increasing in step_idx by
+    within one hour of step 1. n_users is non-increasing in step_idx by
     construction."""
-    times = funnel_completion_times(events, steps, within)
+    times = funnel_completion_times(events, steps)
     counts = times.agg(
         *[
             F.count(F.col(f"t{k}")).cast("long").alias(f"n{k}")

@@ -36,8 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import (
-    MINHASH_BANDS,
-    MINHASH_HASHES,
     MINHASH_K,
     _hyperplanes,
     _posting_pairs,
@@ -61,13 +59,9 @@ def _set_bucket(id_col: str):
     )
 
 
-def write_minhash_index(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    path: str,
-) -> None:
-    """Persist the two per-document artifacts incremental dedup needs:
+def write_minhash_index(df: DataFrame, path: str) -> None:
+    """Persist the two per-``doc_id`` artifacts of ``text`` that
+    incremental dedup needs:
 
     - ``{path}/buckets`` — (id, band_id, band_hash): the LSH probe
       surface, ``MINHASH_BANDS`` narrow rows per doc, written sorted by
@@ -89,13 +83,11 @@ def write_minhash_index(
     A crash leaves a store that needs a rebuild whichever order the
     writes ran in.
     """
-    per_doc = doc_shingles(df, id_col, text_col, MINHASH_K).localCheckpoint(
+    per_doc = doc_shingles(df, MINHASH_K).localCheckpoint(
         eager=False  # materializes inside the sets write, reused by buckets
     )
-    sig = minhash_signatures(
-        df, id_col, text_col, MINHASH_HASHES, MINHASH_K, per_doc=per_doc
-    )
-    sets = per_doc.select(id_col, "hs", _set_bucket(id_col))
+    sig = minhash_signatures(df, MINHASH_K, per_doc=per_doc)
+    sets = per_doc.select("doc_id", "hs", _set_bucket("doc_id"))
 
     def _write_sets() -> None:
         (
@@ -107,7 +99,7 @@ def write_minhash_index(
 
     def _write_buckets() -> None:
         (
-            band_buckets(sig, id_col, MINHASH_HASHES, MINHASH_BANDS)
+            band_buckets(sig)
             .sortWithinPartitions("band_id", "band_hash")
             .write.mode("overwrite")
             .parquet(f"{path}/buckets")
@@ -139,15 +131,13 @@ def _verify_cross_pairs(
     candidates: DataFrame,
     new_sets: DataFrame,
     old_sets: DataFrame,
-    id_col: str,
-    threshold: float,
 ) -> DataFrame:
-    """Exact Jaccard over (new_id, old_id) candidates, each side's shingle
+    """Exact Jaccard >= 0.8 over (new_id, old_id) candidates, each side's shingle
     sets from its own source — the same row-local array_intersect
     verification as ngram_jaccard_pairs' candidate path, which cannot be
     reused directly because its two sides come from one DataFrame."""
-    s1 = new_sets.select(F.col(id_col).alias("new_id"), F.col("hs").alias("hs1"))
-    s2 = old_sets.select(F.col(id_col).alias("old_id"), F.col("hs").alias("hs2"))
+    s1 = new_sets.select(F.col("doc_id").alias("new_id"), F.col("hs").alias("hs1"))
+    s2 = old_sets.select(F.col("doc_id").alias("old_id"), F.col("hs").alias("hs2"))
     # SHUFFLE_HASH for the same reason as ngram_jaccard_pairs' verify
     # joins: every side is batch/candidate volume, and a statically
     # mis-estimated broadcast of a checkpointed input cannot be demoted
@@ -170,7 +160,7 @@ def _verify_cross_pairs(
                 4,
             ),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= 0.8)
         .select("new_id", "old_id", "jaccard")
     )
 
@@ -179,7 +169,6 @@ def _cross_candidates(
     spark: SparkSession,
     new_buckets: DataFrame,
     index_path: str,
-    id_col: str,
 ) -> DataFrame:
     """(new_id, old_id) distinct band collisions between the batch's
     bucket triple and the persisted store. The batch side broadcasts, so
@@ -188,11 +177,11 @@ def _cross_candidates(
     tests/test_incremental.py on this un-checkpointed plan)."""
     corpus_buckets = spark.read.parquet(f"{index_path}/buckets")
     probe_side = F.broadcast(
-        new_buckets.select(F.col(id_col).alias("new_id"), "band_id", "band_hash")
+        new_buckets.select(F.col("doc_id").alias("new_id"), "band_id", "band_hash")
     )
     return (
         corpus_buckets.select(
-            F.col(id_col).alias("old_id"), "band_id", "band_hash"
+            F.col("doc_id").alias("old_id"), "band_id", "band_hash"
         )
         .join(probe_side, ["band_id", "band_hash"])
         .select("new_id", "old_id")
@@ -201,14 +190,10 @@ def _cross_candidates(
 
 
 def incremental_near_dup_pairs(
-    spark: SparkSession,
-    new_df: DataFrame,
-    id_col: str,
-    text_col: str,
-    index_path: str,
-    threshold: float = 0.8,
+    spark: SparkSession, new_df: DataFrame, index_path: str
 ) -> DataFrame:
-    """Near-dup pairs between a new batch and (persisted corpus ∪ itself).
+    """Near-dup ``doc_id`` pairs (``text`` Jaccard >= 0.8) between a new
+    batch and (persisted corpus ∪ itself).
 
     Returns (id1, id2, jaccard, vs) with id1 < id2; ``vs`` is ``corpus``
     for batch-vs-index matches and ``batch`` for batch-internal matches.
@@ -222,44 +207,40 @@ def incremental_near_dup_pairs(
     # driver-waited jobs, so the batch passes overlap as stages of one
     # job. (Guide §2.6; measured ~4 s of per-job latency at sf0.1.)
     new_per_doc = doc_shingles(
-        new_df, id_col, text_col, MINHASH_K
+        new_df, MINHASH_K
     ).localCheckpoint(eager=False)
-    new_sig = minhash_signatures(
-        new_df, id_col, text_col, MINHASH_HASHES, MINHASH_K, per_doc=new_per_doc
-    )
-    new_buckets = band_buckets(
-        new_sig, id_col, MINHASH_HASHES, MINHASH_BANDS
-    ).localCheckpoint(eager=False)
+    new_sig = minhash_signatures(new_df, MINHASH_K, per_doc=new_per_doc)
+    new_buckets = band_buckets(new_sig).localCheckpoint(eager=False)
 
     # --- batch vs corpus: probe the persisted bucket store -------------
     cross_cand = _cross_candidates(
-        spark, new_buckets, index_path, id_col
+        spark, new_buckets, index_path
     ).localCheckpoint(eager=False)  # candidate-volume; read by bucket collect + verify
 
     # Fetch ONLY candidate corpus docs' sets: directory pruning via the
     # id-hash partition key (driver-bounded collect: <= N_SET_BUCKETS
     # ints), then an id semi-join inside the surviving directories.
     cand_old_ids = cross_cand.select(
-        F.col("old_id").alias(id_col)
+        F.col("old_id").alias("doc_id")
     ).distinct()
     hit_buckets = [
         r["set_bucket"]
-        for r in cand_old_ids.select(_set_bucket(id_col)).distinct().collect()
+        for r in cand_old_ids.select(_set_bucket("doc_id")).distinct().collect()
     ]
     old_sets = (
         spark.read.parquet(f"{index_path}/sets")
         .filter(F.col("set_bucket").isin(hit_buckets or [-1]))
-        .join(cand_old_ids, id_col, "left_semi")
+        .join(cand_old_ids, "doc_id", "left_semi")
     )
     cross_pairs = _verify_cross_pairs(
-        cross_cand, new_per_doc, old_sets, id_col, threshold
+        cross_cand, new_per_doc, old_sets
     )
 
     # --- batch vs batch: grouped pair emission at batch size (same form
     # as minhash_lsh_pairs — one exchange, no candidate self-join) ------
     batch_postings = (
         new_buckets.groupBy("band_id", "band_hash")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .filter(F.size("ids") >= 2)
     )
     batch_cand = _posting_pairs(batch_postings).distinct().localCheckpoint(
@@ -267,10 +248,8 @@ def incremental_near_dup_pairs(
     )
     batch_pairs = ngram_jaccard_pairs(
         new_df,
-        id_col,
-        text_col,
         k=MINHASH_K,
-        threshold=threshold,
+        threshold=0.8,
         candidates=batch_cand,
         per_doc_sets=new_per_doc,
     )
@@ -294,14 +273,13 @@ def incremental_near_dup_pairs(
 
 def _embedding_buckets(
     df: DataFrame,
-    id_col: str,
     vec_col: str,
     n_bits: int,
     n_tables: int,
     dim: int,
     seed: int,
 ) -> DataFrame:
-    """(id, table_id, bucket) under the index's fixed hyperplanes — the
+    """(vec_id, table_id, bucket) under the index's fixed hyperplanes — the
     one bucketing definition both the store writer and every probe use
     (parameters travel in the index's meta file, so yesterday's store and
     today's batch can never disagree on resolution or seed)."""
@@ -309,7 +287,7 @@ def _embedding_buckets(
         [_hyperplanes(dim, n_bits, seed + t * 1000) for t in range(n_tables)]
     )
     return df.select(
-        id_col,
+        "vec_id",
         F.posexplode(bucket_fn(F.col(vec_col).cast("array<double>"))).alias(
             "table_id", "bucket"
         ),
@@ -318,15 +296,14 @@ def _embedding_buckets(
 
 def write_embedding_index(
     df: DataFrame,
-    id_col: str,
-    vec_col: str,
     path: str,
     n_bits: int = 8,
     n_tables: int = 4,
     dim: int = 64,
     seed: int = 42,
 ) -> None:
-    """Persist an embedding corpus for incremental cosine near-dup checks:
+    """Persist an embedding corpus (``vec_id``, ``embedding``) for
+    incremental cosine near-dup checks:
 
     - ``{path}/buckets`` — (id, table_id, bucket): n_tables narrow rows
       per vector, the probe surface.
@@ -346,7 +323,7 @@ def write_embedding_index(
 
     def _write_buckets() -> None:
         (
-            _embedding_buckets(df, id_col, vec_col, n_bits, n_tables, dim, seed)
+            _embedding_buckets(df, "embedding", n_bits, n_tables, dim, seed)
             .sortWithinPartitions("table_id", "bucket")
             .write.mode("overwrite")
             .parquet(f"{path}/buckets")
@@ -355,9 +332,9 @@ def write_embedding_index(
     def _write_vectors() -> None:
         (
             df.select(
-                id_col,
-                F.col(vec_col).cast("array<double>").alias("vec"),
-                _set_bucket(id_col),
+                "vec_id",
+                F.col("embedding").cast("array<double>").alias("vec"),
+                _set_bucket("vec_id"),
             )
             .repartition("set_bucket")
             .write.mode("overwrite")
@@ -427,15 +404,11 @@ def _read_embedding_meta(spark: SparkSession, path: str) -> dict:
 
 
 def incremental_embedding_near_dups(
-    spark: SparkSession,
-    new_df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    index_path: str,
-    threshold: float = 0.9,
+    spark: SparkSession, new_df: DataFrame, index_path: str
 ) -> DataFrame:
-    """Cosine near-dup pairs between a new vector batch and (persisted
-    corpus ∪ itself) — (id1, id2, cosine, vs) with id1 < id2, ``vs`` as in
+    """``vec_id`` pairs with ``embedding`` cosine >= 0.9 between a new
+    vector batch and (persisted corpus ∪ itself) — (id1, id2, cosine, vs)
+    with id1 < id2, ``vs`` as in
     :func:`incremental_near_dup_pairs`. Same shuffle discipline: the
     batch's buckets broadcast into the store probe (corpus scanned, never
     shuffled), verification is candidate-volume with the store's vector
@@ -446,11 +419,10 @@ def incremental_embedding_near_dups(
     # hit-bucket collect below materializes the whole batch chain as one
     # job instead of three.
     new_vecs = new_df.select(
-        id_col, F.col(vec_col).cast("array<double>").alias("vec")
+        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
     ).localCheckpoint(eager=False)
     new_buckets = _embedding_buckets(
         new_vecs,
-        id_col,
         "vec",
         meta["n_bits"],
         meta["n_tables"],
@@ -461,11 +433,11 @@ def incremental_embedding_near_dups(
     # Batch vs corpus: probe the store, batch side broadcast.
     corpus_buckets = spark.read.parquet(f"{index_path}/buckets")
     probe_side = F.broadcast(
-        new_buckets.select(F.col(id_col).alias("new_id"), "table_id", "bucket")
+        new_buckets.select(F.col("vec_id").alias("new_id"), "table_id", "bucket")
     )
     cross_cand = (
         corpus_buckets.select(
-            F.col(id_col).alias("old_id"), "table_id", "bucket"
+            F.col("vec_id").alias("old_id"), "table_id", "bucket"
         )
         .join(probe_side, ["table_id", "bucket"])
         .select("new_id", "old_id")
@@ -477,7 +449,7 @@ def incremental_embedding_near_dups(
     # exchange instead of a two-sided self-join; see minhash_lsh_pairs).
     batch_postings = (
         new_buckets.groupBy("table_id", "bucket")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
+        .agg(F.sort_array(F.collect_list("vec_id")).alias("ids"))
         .filter(F.size("ids") >= 2)
     )
     batch_cand = _posting_pairs(batch_postings).distinct()
@@ -485,25 +457,25 @@ def incremental_embedding_near_dups(
     # Verification: exact cosine at candidate volume. Old vectors come
     # from the store with directory pruning (same discipline as the text
     # set fetch); batch vectors are the checkpointed batch projection.
-    cand_old_ids = cross_cand.select(F.col("old_id").alias(id_col)).distinct()
+    cand_old_ids = cross_cand.select(F.col("old_id").alias("vec_id")).distinct()
     hit_buckets = [
         r["set_bucket"]
-        for r in cand_old_ids.select(_set_bucket(id_col)).distinct().collect()
+        for r in cand_old_ids.select(_set_bucket("vec_id")).distinct().collect()
     ]
     old_vecs = (
         spark.read.parquet(f"{index_path}/vectors")
         .filter(F.col("set_bucket").isin(hit_buckets or [-1]))
-        .join(cand_old_ids, id_col, "left_semi")
-        .select(id_col, "vec")
+        .join(cand_old_ids, "vec_id", "left_semi")
+        .select("vec_id", "vec")
     )
     cos = cosine_pairs_udf()
 
     def _verify(cand, ids, side_a, sets_a, side_b, sets_b):
         va = sets_a.select(
-            F.col(id_col).alias(side_a), F.col("vec").alias("v1")
+            F.col("vec_id").alias(side_a), F.col("vec").alias("v1")
         )
         vb = sets_b.select(
-            F.col(id_col).alias(side_b), F.col("vec").alias("v2")
+            F.col("vec_id").alias(side_b), F.col("vec").alias("v2")
         )
         # SHUFFLE_HASH: batch/candidate-volume sides; see
         # _verify_cross_pairs.
@@ -516,7 +488,7 @@ def incremental_embedding_near_dups(
             # (e.g. normalized dot 0.78125) the two would disagree by one
             # ulp of the 4-dp grid and break batch-vs-incremental parity.
             .withColumn("cosine", F.bround(cos("v1", "v2"), 4))
-            .filter(F.col("cosine") >= threshold)
+            .filter(F.col("cosine") >= 0.9)
             .select(
                 F.least(side_a, side_b).alias("id1"),
                 F.greatest(side_a, side_b).alias("id2"),

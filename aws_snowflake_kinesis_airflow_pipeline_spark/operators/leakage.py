@@ -28,22 +28,21 @@ from .sampling import with_split
 
 def leakage_safe_split(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     val_fraction: float = 0.1,
     threshold: float = 0.8,
     pairs: DataFrame | None = None,
 ) -> DataFrame:
-    """Input rows + ``split_key`` (the cluster-canonical id) + ``split``.
+    """Input rows + ``split_key`` (the cluster-canonical ``doc_id``) +
+    ``split``.
 
     ``pairs``: pre-computed (id1, id2) near-dup pairs; when omitted the
-    MinHash-LSH operator runs at ``threshold``. Guarantee (tested): no
+    MinHash-LSH operator runs over ``text`` at ``threshold``. Guarantee (tested): no
     pair's two documents ever receive different splits.
     """
     if pairs is None:
-        pairs = minhash_lsh_pairs(docs, id_col, text_col, threshold=threshold)
-    comp = connected_components(pairs).withColumnRenamed("id", id_col)
-    keyed = docs.join(comp, id_col, "left").withColumn(
-        "split_key", F.coalesce(F.col("component"), F.col(id_col))
+        pairs = minhash_lsh_pairs(docs, threshold=threshold)
+    comp = connected_components(pairs).withColumnRenamed("id", "doc_id")
+    keyed = docs.join(comp, "doc_id", "left").withColumn(
+        "split_key", F.coalesce(F.col("component"), F.col("doc_id"))
     ).drop("component")
     return with_split(keyed, "split_key", val_fraction=val_fraction)

@@ -44,25 +44,17 @@ Deliberately not taken.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .spread import scaled_repartition as _scaled_repartition
 
 
-def drop_duplicate_lines(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_line_df: int = 3,
-    line_sep: str = "\n",
-) -> DataFrame:
-    """Remove every line whose document frequency exceeds ``max_line_df``.
+def drop_duplicate_lines(df: DataFrame) -> DataFrame:
+    """Remove every line of ``text`` whose document frequency exceeds 3.
 
-    Returns one row per input document: ``(id_col, clean_text, n_lines,
-    n_kept)`` — the reassembled text (original line order, ``line_sep``
+    Returns one row per input document: ``(doc_id, clean_text, n_lines,
+    n_kept)`` — the reassembled text (original line order, newline
     rejoined; empty string when every line was boilerplate), the original
     line count, and the kept line count. A line's document frequency
     counts each document once however often the line repeats inside it.
@@ -71,33 +63,25 @@ def drop_duplicate_lines(
     # coalesce: split(NULL) is NULL and posexplode of NULL emits no rows,
     # which would drop NULL-text documents from the output entirely —
     # the contract is one row per input document, clean_text = ''.
-    # re.escape: F.split takes a Java REGEX while array_join below emits
-    # the separator literally; an unescaped metacharacter separator
-    # (e.g. '|' = empty alternation) would split at every character and
-    # reassemble garbage. Python's re.escape emits backslash-punctuation
-    # escapes Java regex accepts.
-    sep = F.lit(re.escape(line_sep))
-    arr_of = lambda c: F.split(  # noqa: E731 — local plan fragment
-        F.coalesce(c, F.lit("")), sep, -1
-    )
+    # F.split takes a Java regex: an escaped newline.
+    arr = F.split(F.coalesce(F.col("text"), F.lit("")), F.lit("\\\n"), -1)
     lines = df.select(
-        F.col(id_col),
-        F.posexplode(arr_of(F.col(text_col))).alias("pos", "_line"),
+        F.col("doc_id"), F.posexplode(arr).alias("pos", "_line")
     )
     fps = lines.select(
-        id_col,
+        "doc_id",
         "pos",
         F.xxhash64(F.lit(0), "_line").alias("_fp0"),
         F.xxhash64(F.lit(1), "_line").alias("_fp1"),
     )
     hot = (
         _scaled_repartition(
-            fps.select(id_col, "_fp0", "_fp1"), "_fp0", "_fp1", source=df
+            fps.select("doc_id", "_fp0", "_fp1"), "_fp0", "_fp1", source=df
         )
         .distinct()
         .groupBy("_fp0", "_fp1")
         .agg(F.count("*").alias("_line_df"))
-        .filter(F.col("_line_df") > max_line_df)
+        .filter(F.col("_line_df") > 3)
         .select("_fp0", "_fp1")
     )
     # Inner join: only hot OCCURRENCES survive (small — each document's
@@ -106,21 +90,20 @@ def drop_duplicate_lines(
     # narrow projection.
     hot_pos = (
         fps.join(hot, ["_fp0", "_fp1"])
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.sort_array(F.collect_list("pos")).alias("_hot_pos"))
     )
     # Join-back + row-local rebuild. Both join sides ride scaled id-keyed
     # exchanges (no-op at bench SFs): the text side is the operator's one
     # unavoidable text-volume exchange, the position side is small.
-    joined = _scaled_repartition(df, id_col, source=df).join(
-        _scaled_repartition(hot_pos, id_col, source=df), id_col, "left"
+    joined = _scaled_repartition(df, "doc_id", source=df).join(
+        _scaled_repartition(hot_pos, "doc_id", source=df), "doc_id", "left"
     )
-    arr = arr_of(F.col(text_col))
     hp = F.coalesce(F.col("_hot_pos"), F.array().cast("array<int>"))
     return joined.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.array_join(
-            F.filter(arr, lambda x, i: ~F.array_contains(hp, i)), line_sep
+            F.filter(arr, lambda x, i: ~F.array_contains(hp, i)), "\n"
         ).alias("clean_text"),
         F.size(arr).cast("long").alias("n_lines"),
         (F.size(arr) - F.size(hp)).cast("long").alias("n_kept"),

@@ -84,7 +84,7 @@ def bigram_lm_scores(
         raise ValueError("bigram_lm_scores: vocab_size must be >= 1")
 
     spark = docs.sparkSession
-    t = lower_tokens("text")
+    t = lower_tokens()
     toks = docs.select(F.col("doc_id"), t.alias("_t"))
 
     # Two-phase draw, then the whole fit lineage (tokenize, unigrams,

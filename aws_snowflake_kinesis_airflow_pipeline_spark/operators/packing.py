@@ -34,13 +34,11 @@ _PACK_SCHEMA = T.StructType(
 
 def pack_sequences(
     df: DataFrame,
-    id_col: str,
-    token_count_col: str,
     max_tokens: int,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Assign every document to a pack such that each pack's token total
-    is <= max_tokens (documents longer than the budget get a singleton
+    """Assign every ``doc_id`` to a pack such that each pack's
+    ``n_tokens`` total is <= max_tokens (documents longer than the budget get a singleton
     pack). Returns (doc_id, n_tokens, pack_id, pack_tokens).
 
     Deterministic: partition assignment is a content hash of the id, and
@@ -93,18 +91,18 @@ def pack_sequences(
     # Fail fast on non-integral ids: _PACK_SCHEMA carries doc_id as long,
     # and a silent cast would either kill the job under ANSI mode (string
     # UUIDs) or null out every returned doc_id — an unmappable packing.
-    id_kind = df.schema[id_col].dataType.typeName()
+    id_kind = df.schema["doc_id"].dataType.typeName()
     if id_kind not in ("long", "integer", "short", "byte"):
         raise TypeError(
-            f"pack_sequences: id_col {id_col!r} must be an integral type "
+            "pack_sequences: doc_id must be an integral type "
             f"(got {id_kind}); map string ids to a surrogate long first "
             "(e.g. xxhash64) and join back after packing"
         )
     n_part = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    part = hash_bucket(F.col(id_col).cast("string"), n_part)
+    part = hash_bucket(F.col("doc_id").cast("string"), n_part)
     prepared = df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.col(token_count_col).cast("long").alias("n_tokens"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col("n_tokens").cast("long").alias("n_tokens"),
         part.alias("part"),
     ).repartition(n_part, "part")
     return prepared.mapInPandas(
@@ -112,21 +110,17 @@ def pack_sequences(
     )
 
 
-def mix_corpus(
-    df: DataFrame,
-    key_col: str,
-    source_col: str,
-    weights: dict[str, float],
-) -> DataFrame:
-    """Downsample sources to match target mixing *weights* (relative
-    proportions). The largest feasible corpus honoring the weights is kept:
-    the binding source keeps 100%, others are deterministically sampled
-    down via content hash. One tiny groupBy for counts + one filter pass.
+def mix_corpus(df: DataFrame, weights: dict[str, float]) -> DataFrame:
+    """Downsample ``source`` values to match target mixing *weights*
+    (relative proportions). The largest feasible corpus honoring the
+    weights is kept: the binding source keeps 100%, others are
+    deterministically sampled down via a hash of ``text``. One tiny
+    groupBy for counts + one filter pass.
     """
     counts = {
-        r[source_col]: r["n"]
-        for r in df.groupBy(source_col).agg(F.count("*").alias("n")).collect()
-        if r[source_col] in weights
+        r["source"]: r["n"]
+        for r in df.groupBy("source").agg(F.count("*").alias("n")).collect()
+        if r["source"] in weights
     }
     # Weighted sources absent from the corpus contribute nothing and are
     # skipped (honoring their weight literally would force an empty mix);
@@ -140,9 +134,9 @@ def mix_corpus(
         s: min((present[s] * scale) / counts[s], 1.0) for s in present
     }
     buckets = 100000
-    b = hash_bucket(key_col, buckets)
+    b = hash_bucket("text", buckets)
     cond = None
     for s, frac in fractions.items():
-        p = (F.col(source_col) == s) & (b < round(frac * buckets))
+        p = (F.col("source") == s) & (b < round(frac * buckets))
         cond = p if cond is None else (cond | p)
     return df.filter(cond)

@@ -55,20 +55,19 @@ class PQModel:
 
 def pq_fit(
     df: DataFrame,
-    vec_col: str,
     m: int = 16,
     n_codes: int = 16,
     dim: int = 64,
     max_fit_rows: int = 100_000,
 ) -> PQModel:
     """Fit one k-means codebook per contiguous subspace of ``dim // m``
-    components, on a bounded deterministic sample (same draw discipline as
+    components of ``embedding``, on a bounded deterministic sample (same draw discipline as
     ``similarity.ivf_index``: xxhash64 order + limit, no count pre-pass)."""
     if dim % m:
         raise ValueError(f"dim={dim} not divisible by m={m}")
     sub = dim // m
     fit_df = (
-        df.select(F.col(vec_col).cast("array<double>").alias("_v"))
+        df.select(F.col("embedding").cast("array<double>").alias("_v"))
         .where(F.col("_v").isNotNull() & (F.size("_v") == dim))
         .orderBy(F.xxhash64(F.col("_v"), F.lit(42)))
         .limit(max_fit_rows)
@@ -113,10 +112,11 @@ def pq_encode_udf(model: PQModel):
     return _encode
 
 
-def pq_encode(df: DataFrame, vec_col: str, model: PQModel) -> DataFrame:
-    """Add a ``pq_codes`` array<int> column (length m) — the stored form."""
+def pq_encode(df: DataFrame, model: PQModel) -> DataFrame:
+    """Add a ``pq_codes`` array<int> column (length m) encoding
+    ``embedding`` — the stored form."""
     enc = pq_encode_udf(model)
-    return df.withColumn("pq_codes", enc(F.col(vec_col)))
+    return df.withColumn("pq_codes", enc(F.col("embedding")))
 
 
 def _flat_lut(lut: "np.ndarray") -> F.Column:
@@ -160,18 +160,17 @@ def pq_adc_cosine(model: PQModel, query_vec: list[float]) -> F.Column:
 def pq_topk(
     model: PQModel,
     encoded: DataFrame,
-    id_col: str,
     query_vec: list[float],
     k: int = 10,
     exclude_ids: list[int] | None = None,
 ) -> DataFrame:
-    """ADC top-k over the ``pq_codes`` column only — the scan never
+    """ADC top-k ``vec_id`` over the ``pq_codes`` column only — the scan never
     touches the float vectors, so its bandwidth is m bytes/row instead of
     4·dim. Compiles to TakeOrderedAndProject like brute_force_topk."""
     out = encoded.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.round(pq_adc_cosine(model, query_vec), 4).alias("adc_cosine"),
     )
     if exclude_ids:
-        out = out.filter(~F.col(id_col).isin(exclude_ids))
-    return out.orderBy(F.col("adc_cosine").desc(), F.col(id_col)).limit(k)
+        out = out.filter(~F.col("vec_id").isin(exclude_ids))
+    return out.orderBy(F.col("adc_cosine").desc(), F.col("vec_id")).limit(k)

@@ -62,7 +62,7 @@ def user_events_view(events: DataFrame) -> DataFrame:
         "event_id",
         "user_id",
         F.col("ts").alias("event_timestamp"),
-        variant_get("props", "k", "int").alias("prop_k"),
+        variant_get("k", "int").alias("prop_k"),
         F.col("value").alias("price"),
     )
 

@@ -96,9 +96,9 @@ def grouped_mad_outliers_paired(
     df: DataFrame,
     group_cols: list[str],
     value_col: str,
-    z: float = 3.0,
 ) -> DataFrame:
-    """Exact AND approx MAD outlier stats in the SAME three aggregation
+    """Exact AND approx MAD outlier stats (outlier: more than 3 MADs from
+    the median) in the SAME three aggregation
     passes (plus the group size, folded into the counting pass):
     ``(group_cols, median, mad, n_outliers, median_approx, mad_approx,
     n_outliers_approx, n_values)``.
@@ -131,12 +131,12 @@ def grouped_mad_outliers_paired(
         .groupBy(*group_cols)
         .agg(
             F.count(
-                F.when(F.abs(v - F.col("_med")) > z * F.col("_mad"), 1)
+                F.when(F.abs(v - F.col("_med")) > 3.0 * F.col("_mad"), 1)
             )
             .cast("long")
             .alias("n_outliers"),
             F.count(
-                F.when(F.abs(v - F.col("_med_a")) > z * F.col("_mad_a"), 1)
+                F.when(F.abs(v - F.col("_med_a")) > 3.0 * F.col("_mad_a"), 1)
             )
             .cast("long")
             .alias("n_outliers_approx"),

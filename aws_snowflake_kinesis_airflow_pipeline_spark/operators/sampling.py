@@ -120,30 +120,24 @@ def shuffle_hash(col: Column | str, seed: int = 0) -> Column:
     return F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
 
 
-def with_shuffle_rank(
-    df: DataFrame,
-    key_col: str,
-    partition_by: list[str],
-    seed: int = 0,
-) -> DataFrame:
-    """Pseudo-random training order as a pure function of (seed, key),
+def with_shuffle_rank(df: DataFrame, seed: int = 0) -> DataFrame:
+    """Pseudo-random training order as a pure function of (seed, doc_id),
     materialized as a ``shuffle_rank`` column (1-based within each
-    ``partition_by`` group, e.g. per split): the row's position in
-    (shuffle_hash(seed, key), key) order. Unlike orderBy(rand()) the order
+    ``split``): the row's position in (shuffle_hash(seed, doc_id), doc_id)
+    order. Unlike orderBy(rand()) the order
     survives reruns, repartitions and speculative retries, and changing
     the seed gives an independent epoch permutation.
 
-    Contract: ``key_col`` must uniquely identify rows (a document id); rows
-    sharing a key tie on both sort components and their relative order
-    would again be partition-dependent — dedup first.
+    Contract: ``doc_id`` must uniquely identify rows; rows sharing an id
+    tie on both sort components and their relative order would again be
+    partition-dependent — dedup first.
 
-    ``partition_by`` is required: an un-partitioned rank would be a
-    single-partition window. Feed trainers per-split / per-shard ranks
-    (bounded partitions).
+    The rank is per split: an un-partitioned rank would be a
+    single-partition window.
     """
     from pyspark.sql.window import Window
 
-    c = F.col(key_col)
+    c = F.col("doc_id")
     order = [shuffle_hash(c, seed), c]
-    w = Window.partitionBy(*partition_by).orderBy(*order)
+    w = Window.partitionBy("split").orderBy(*order)
     return df.withColumn("shuffle_rank", F.row_number().over(w).cast("long"))

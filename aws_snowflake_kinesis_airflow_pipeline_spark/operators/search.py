@@ -63,7 +63,7 @@ def bm25_scores(docs: DataFrame, query_terms: list[str]) -> DataFrame:
         raise ValueError("bm25_scores: query_terms must be non-empty")
     terms = sorted({t.lower() for t in query_terms})
 
-    toks = docs.select(F.col("doc_id"), lower_tokens("text").alias("_toks"))
+    toks = docs.select(F.col("doc_id"), lower_tokens().alias("_toks"))
     with_len = toks.select("doc_id", "_toks", F.size("_toks").alias("_dl"))
 
     # One row: corpus size + average doc length. NULL-text docs tokenize
@@ -160,7 +160,7 @@ def tf_idf_vectors(docs: DataFrame, *, vocab_size: int = 1000) -> DataFrame:
     Two corpus passes (token stats, postings), one bounded broadcast, one
     (doc, term) shuffle — the standard inverted-index build shape.
     """
-    toks = docs.select(F.col("doc_id"), lower_tokens("text").alias("_toks"))
+    toks = docs.select(F.col("doc_id"), lower_tokens().alias("_toks"))
     n_docs = toks.agg(F.count("*").alias("_n"))
 
     # Plain explode: empty docs contribute no postings by design

@@ -104,8 +104,6 @@ def _split_assign(vn_g: np.ndarray, k: int) -> np.ndarray:
 
 def semantic_dedup_pairs(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_clusters: int = 16,
     threshold: float = 0.95,
     max_cluster_rows: int = 100_000,
@@ -130,11 +128,11 @@ def semantic_dedup_pairs(
     Voronoi boundary — the method's documented recall trade-off, now at a
     granularity the engine controls instead of one the data skews.
 
-    ``indexed``: a pre-assigned frame (id_col, vec_col, ivf_cluster) from
+    ``indexed``: a pre-assigned frame (vec_id, embedding, ivf_cluster) from
     an ``ivf_index`` the caller already built — e.g. a plan that ALSO
     serves IVF probes from the same clustering pays one fit and one
-    assignment pass instead of two (the ``pairs=`` passthrough precedent
-    one level up). Must cover the same rows as ``df``; the clustering
+    assignment pass instead of two (as :func:`semantic_dedup` takes its
+    pairs from the caller). Must cover the same rows as ``df``; the clustering
     granularity knobs (``n_clusters``/``max_fit_rows``) are the index's,
     not this call's.
     """
@@ -142,8 +140,7 @@ def semantic_dedup_pairs(
         raise ValueError("semantic_dedup_pairs: threshold must be in (0, 1]")
     if indexed is None:
         _, indexed = ivf_index(
-            df.select(id_col, vec_col),
-            vec_col,
+            df.select("vec_id", "embedding"),
             n_clusters,
             max_fit_rows=max_fit_rows,
         )
@@ -161,9 +158,9 @@ def semantic_dedup_pairs(
         # Sort by id: pandas group row order is partition-dependent, and
         # the re-split below must be a pure function of the cell's CONTENT
         # (pinned by test_partition_invariance with a forcing cell_cap).
-        pdf = pdf.sort_values(id_col)
-        ids = pdf[id_col].to_numpy()
-        v = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+        pdf = pdf.sort_values("vec_id")
+        ids = pdf["vec_id"].to_numpy()
+        v = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
         norms = np.linalg.norm(v, axis=1)
         norms[norms == 0.0] = 1.0  # zero vectors match nothing (cos 0)
         vn = v / norms[:, None]
@@ -228,29 +225,20 @@ def semantic_dedup_pairs(
     )
 
 
-def semantic_dedup(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_clusters: int = 16,
-    pairs: DataFrame | None = None,
-) -> DataFrame:
-    """SemDeDup survivors: one representative (min id) per duplicate
-    component; rows in no duplicate pair survive untouched. Returns the
-    input rows minus dropped duplicates.
+def semantic_dedup(df: DataFrame, pairs: DataFrame) -> DataFrame:
+    """SemDeDup survivors: one representative (min ``vec_id``) per
+    duplicate component of ``pairs``; rows in no duplicate pair survive
+    untouched. Returns the input rows minus dropped duplicates.
 
-    ``pairs`` lets a caller that ALSO needs the pair set (audit,
-    precision recheck) hand in one :func:`semantic_dedup_pairs` result
-    instead of paying the per-cell pairwise pass twice; it must come
-    from the same df/threshold or the survivor set is undefined."""
-    if pairs is None:
-        pairs = semantic_dedup_pairs(df, id_col, vec_col, n_clusters)
+    ``pairs`` is a :func:`semantic_dedup_pairs` result over the same df,
+    so a caller that ALSO needs the pair set (audit, precision recheck)
+    pays the per-cell pairwise pass once."""
     comp = connected_components(pairs)
     dropped = (
         comp.groupBy("component")
         .agg(F.min("id").alias("_keep"))
         .join(comp, "component")
         .filter(F.col("id") != F.col("_keep"))
-        .select(F.col("id").alias(id_col))
+        .select(F.col("id").alias("vec_id"))
     )
-    return df.join(dropped, id_col, "left_anti")
+    return df.join(dropped, "vec_id", "left_anti")

@@ -34,29 +34,29 @@ def _query_array(query_vec: list[float]) -> F.Column:
 
 def brute_force_topk(
     df: DataFrame,
-    vec_col: str,
-    id_col: str,
     query_vec: list[float],
     k: int = 10,
     exclude_ids: list[int] | None = None,
 ) -> DataFrame:
-    """Exact cosine top-k: (id, cosine) ordered desc, id tiebreak."""
+    """Exact ``embedding`` cosine top-k: (vec_id, cosine) ordered desc,
+    vec_id tiebreak."""
     q = _query_array(query_vec)
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     out = df.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.round(cosine_col(v, q), 4).alias("cosine"),
     )
     if exclude_ids:
-        out = out.filter(~F.col(id_col).isin(exclude_ids))
-    return out.orderBy(F.col("cosine").desc(), F.col(id_col)).limit(k)
+        out = out.filter(~F.col("vec_id").isin(exclude_ids))
+    return out.orderBy(F.col("cosine").desc(), F.col("vec_id")).limit(k)
 
 
-def with_lsh_buckets(df: DataFrame, vec_col: str, dim: int = 64) -> DataFrame:
-    """Attach the hyperplane sign bucket — the indexing step. At scale this
-    column becomes the table's bucketBy/partitionBy key so probes prune."""
+def with_lsh_buckets(df: DataFrame, dim: int = 64) -> DataFrame:
+    """Attach the hyperplane sign bucket of ``embedding`` — the indexing
+    step. At scale this column becomes the table's bucketBy/partitionBy
+    key so probes prune."""
     planes = _hyperplanes(dim, LSH_BITS, LSH_SEED)
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     # Bucket assignment is a numpy matmul per Arrow batch (see
     # hyperplane_buckets_udf); spread it across cores when the scan
     # arrives under-partitioned.
@@ -239,13 +239,12 @@ def ivf_assign_udf(centers: "np.ndarray"):
 
 def ivf_index(
     df: DataFrame,
-    vec_col: str,
     n_clusters: int = 16,
     max_fit_rows: int = 100_000,
 ):
-    """IVF (inverted-file) index: k-means partitions the corpus into
-    ``n_clusters`` cells; a query probes only the cells whose centroids are
-    nearest. Returns (model, indexed_df) where indexed_df carries an
+    """IVF (inverted-file) index over ``embedding``: k-means partitions the
+    corpus into ``n_clusters`` cells; a query probes only the cells whose
+    centroids are nearest. Returns (model, indexed_df) where indexed_df carries an
     ``ivf_cluster`` column — at scale that column becomes the table's
     partition key so probes become partition pruning.
 
@@ -268,7 +267,7 @@ def ivf_index(
     Assignment back over the full corpus is one Arrow-batched pass.
     """
     fit_df = (
-        df.select(F.col(vec_col).cast("array<double>").alias("_v"))
+        df.select(F.col("embedding").cast("array<double>").alias("_v"))
         .where(F.col("_v").isNotNull())
         .orderBy(F.xxhash64(F.col("_v"), F.lit(42)))
         .limit(max_fit_rows)
@@ -285,7 +284,7 @@ def ivf_index(
     centers = _kmeans_fit(sample, n_clusters, 42)
     assign = ivf_assign_udf(centers)
     indexed = df.withColumn(
-        "ivf_cluster", assign(F.col(vec_col).cast("array<double>"))
+        "ivf_cluster", assign(F.col("embedding").cast("array<double>"))
     )
     return IVFModel(centers), indexed
 
@@ -293,14 +292,13 @@ def ivf_index(
 def ivf_topk(
     model,
     indexed: DataFrame,
-    vec_col: str,
-    id_col: str,
     query_vec: list[float],
     k: int = 10,
     n_probe: int = 2,
     exclude_ids: list[int] | None = None,
 ) -> DataFrame:
-    """Probe the ``n_probe`` nearest IVF cells, exact cosine within them.
+    """Probe the ``n_probe`` nearest IVF cells, exact cosine of
+    ``embedding`` within them.
     Scanned fraction ≈ n_probe / n_clusters.
 
     Center ranking is one numpy pass (k grows with the corpus under the
@@ -312,26 +310,24 @@ def ivf_topk(
     d2 = ((C - np.asarray(q, dtype=np.float64)) ** 2).sum(axis=1)
     probes = [int(i) for i in np.argsort(d2, kind="stable")[:n_probe]]
     subset = indexed.filter(F.col("ivf_cluster").isin(probes))
-    return brute_force_topk(subset, vec_col, id_col, q, k, exclude_ids)
+    return brute_force_topk(subset, q, k, exclude_ids)
 
 
 def lsh_topk(
     df: DataFrame,
-    vec_col: str,
-    id_col: str,
     query_vec: list[float],
-    k: int = 10,
     dim: int = 64,
     probe_hamming: int = 1,
     exclude_ids: list[int] | None = None,
 ) -> DataFrame:
-    """Approximate top-k: probe the query's bucket and neighbors within
-    ``probe_hamming`` sign flips, exact cosine within the probed subset.
+    """Approximate top-10 ``vec_id``: probe the query's bucket and
+    neighbors within ``probe_hamming`` sign flips, exact ``embedding``
+    cosine within the probed subset.
 
     Probed fraction ≈ sum_{h<=H} C(LSH_BITS,h) / 2^LSH_BITS (9/256 at
     8 bits, H=1) — the scan-cost knob. Recall rises with more probes.
     """
     probes = probe_buckets(query_vec, dim, probe_hamming)
-    bucketed = with_lsh_buckets(df, vec_col, dim)
+    bucketed = with_lsh_buckets(df, dim)
     subset = bucketed.filter(F.col("lsh_bucket").isin(probes))
-    return brute_force_topk(subset, vec_col, id_col, query_vec, k, exclude_ids)
+    return brute_force_topk(subset, query_vec, 10, exclude_ids)

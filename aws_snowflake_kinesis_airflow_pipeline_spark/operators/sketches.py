@@ -115,18 +115,17 @@ def top_k_frequent(
 
 def top_k_tokens(
     docs: DataFrame,
-    text_col: str = "text",
     k: int = 100,
     capacity: int = 4096,
     *,
     exact_counts: DataFrame,
 ) -> DataFrame:
-    """Corpus vocabulary heavy hitters: whitespace tokens of ``text_col``
+    """Corpus vocabulary heavy hitters: whitespace tokens of ``text``
     (same tokenizer contract as functions/text.py) -> top-k by frequency.
     ``exact_counts``: (token, n), see :func:`top_k_frequent`."""
     from ..functions import text as TX
 
     toks = docs.select(
-        F.explode(TX.tokens(F.col(text_col))).alias("token")
+        F.explode(TX.tokens(F.col("text"))).alias("token")
     ).where(F.col("token") != "")
     return top_k_frequent(toks, "token", k, capacity, exact_counts=exact_counts)

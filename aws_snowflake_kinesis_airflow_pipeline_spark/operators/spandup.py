@@ -84,24 +84,23 @@ from .spread import scaled_repartition as _scaled_repartition
 _BASE = np.uint64(0x9E3779B97F4A7C15)
 
 
-def _inv_u64(b: np.uint64) -> np.uint64:
-    """Modular inverse of odd b mod 2^64 (Newton iteration: x *= 2 - b*x
-    doubles correct bits each round; 6 rounds from the 3-bit seed)."""
-    x = b  # odd b: b*b ≡ 1 mod 8, so x=b is correct to 3 bits
+def _inv_u64() -> np.uint64:
+    """Modular inverse of the odd ``_BASE`` mod 2^64 (Newton iteration:
+    x *= 2 - b*x doubles correct bits each round; 6 rounds from the 3-bit
+    seed)."""
+    x = _BASE  # odd b: b*b ≡ 1 mod 8, so x=b is correct to 3 bits
     with np.errstate(over="ignore"):  # wraparound IS the modulus
         for _ in range(6):
-            x = x * (np.uint64(2) - b * x)
+            x = x * (np.uint64(2) - _BASE * x)
     return x
 
 
 def window_fingerprints(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     window: int = 50,
 ) -> DataFrame:
-    """(id, pos, whash): the 64-bit rolling hash of each ``window``-token
-    run. Documents with fewer than ``window`` tokens emit no rows.
+    """(doc_id, pos, whash): the 64-bit rolling hash of each
+    ``window``-token run of ``text``. Documents with fewer than ``window`` tokens emit no rows.
 
     Each window hash passes through a SplitMix64 finalizer before it
     leaves the kernel: the rolling hash is LINEAR in the per-token hashes
@@ -113,14 +112,14 @@ def window_fingerprints(
     17.8-22.4 s; the extra mix is free inside the memory-bound kernel)."""
     if window < 2:
         raise ValueError("window_fingerprints: window must be >= 2")
-    toks = tokens(F.coalesce(F.col(text_col), F.lit("")))
+    toks = tokens(F.coalesce(F.col("text"), F.lit("")))
     src = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.transform(toks, lambda t: F.xxhash64(t)).alias("th"),
     )
-    id_type = src.schema[id_col].dataType.simpleString()
+    id_type = src.schema["doc_id"].dataType.simpleString()
     w = window
-    binv = _inv_u64(_BASE)
+    binv = _inv_u64()
 
     def _map(batches):
         old = np.seterr(over="ignore")  # uint64 wraparound IS the modulus
@@ -186,28 +185,26 @@ def window_fingerprints(
                         pa.array(pos_flat, type=pa.int32()),
                         pa.array(flat.view(np.int64), type=pa.int64()),
                     ],
-                    [id_col, "pos", "whash"],
+                    ["doc_id", "pos", "whash"],
                 )
         finally:
             np.seterr(**old)
 
     return src.mapInArrow(
-        _map, f"{id_col} {id_type}, pos int, whash bigint"
+        _map, f"doc_id {id_type}, pos int, whash bigint"
     )
 
 
 def duplicate_spans(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     window: int = 50,
     max_df: int = 1000,
 ) -> DataFrame:
-    """(id, spans array<struct<start int, end int>>): per document, the
+    """(doc_id, spans array<struct<start int, end int>>): per document, the
     merged maximal token spans covered by duplicated windows, excluding
     each distinct run's canonical (min (doc_id, pos)) occurrence. Only
     documents with at least one removed span appear."""
-    fp = window_fingerprints(docs, id_col, text_col, window)
+    fp = window_fingerprints(docs, window)
     # ONE corpus-volume exchange: df count + canonical arg-min in the same
     # grouped pass; only duplicated runs (boilerplate-volume) survive.
     # Auto-size the whash exchange to the corpus (spread.py): its final-
@@ -221,7 +218,7 @@ def duplicate_spans(
         .groupBy("whash")
         .agg(
             F.count("*").alias("_df"),
-            F.min(F.struct(F.col(id_col), F.col("pos"))).alias("_canon"),
+            F.min(F.struct(F.col("doc_id"), F.col("pos"))).alias("_canon"),
         )
         .filter((F.col("_df") >= 2) & (F.col("_df") <= max_df))
     )
@@ -229,19 +226,19 @@ def duplicate_spans(
         fp.join(dup.hint("shuffle_hash"), "whash")
         .filter(
             ~(
-                (F.col(id_col) == F.col(f"_canon.{id_col}"))
+                (F.col("doc_id") == F.col("_canon.doc_id"))
                 & (F.col("pos") == F.col("_canon.pos"))
             )
         )
-        .select(id_col, "pos")
+        .select("doc_id", "pos")
     )
     w = window
     merged = (
-        _scaled_repartition(removed, id_col, source=docs)
-        .groupBy(id_col)
+        _scaled_repartition(removed, "doc_id", source=docs)
+        .groupBy("doc_id")
         .agg(F.array_sort(F.collect_list("pos")).alias("_ps"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             # Row-local span merge: fold sorted window starts into maximal
             # [start, end) spans ([p, p+w) overlapping or touching merge).
             F.aggregate(
@@ -283,18 +280,16 @@ def duplicate_spans(
 
 def remove_duplicate_spans(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     window: int = 50,
     max_df: int = 1000,
 ) -> DataFrame:
-    """One row per input document: (id, clean_text, n_tokens,
+    """One row per input document: (doc_id, clean_text, n_tokens,
     n_removed_tokens, n_spans) with every non-canonical duplicated run
     removed and the kept tokens re-joined with single spaces."""
-    spans = duplicate_spans(docs, id_col, text_col, window, max_df)
-    toks = tokens(F.coalesce(F.col(text_col), F.lit("")))
-    base = docs.select(F.col(id_col), toks.alias("_t"))
-    joined = base.join(spans, id_col, "left")
+    spans = duplicate_spans(docs, window, max_df)
+    toks = tokens(F.coalesce(F.col("text"), F.lit("")))
+    base = docs.select(F.col("doc_id"), toks.alias("_t"))
+    joined = base.join(spans, "doc_id", "left")
     covered = lambda i: F.exists(  # noqa: E731
         F.col("spans"), lambda s: (s["start"] <= i) & (i < s["end"])
     )
@@ -304,7 +299,7 @@ def remove_duplicate_spans(
         F.filter(F.col("_t"), lambda t, i: ~covered(i))
     )
     return joined.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.array_join(kept, " ").alias("clean_text"),
         F.size("_t").alias("n_tokens"),
         (F.size("_t") - F.size(kept)).alias("n_removed_tokens"),

@@ -153,7 +153,7 @@ def c1_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    diff = corpus_diff(v1, v2, "doc_id", "text").select(
+    diff = corpus_diff(v1, v2).select(
         F.lit("diff").alias("branch"),
         "doc_id",
         F.col("status").alias("payload"),
@@ -282,7 +282,7 @@ def c2_minhash_lsh_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import shuffle_hash
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    pairs = dedup.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.8)
+    pairs = dedup.minhash_lsh_pairs(docs, threshold=0.8)
     pairs_branch = pairs.select(
         F.lit("pairs").alias("branch"), "id1", "id2", "jaccard"
     )
@@ -296,11 +296,11 @@ def c2_minhash_lsh_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _build_index_dir(
         "c2",
         lambda p: incremental.write_minhash_index(
-            indexed, "doc_id", "text", p
+            indexed, p
         ),
     )
     inc = incremental.incremental_near_dup_pairs(
-        spark, batch, "doc_id", "text", path, threshold=0.8
+        spark, batch, path
     )
     inc_branch = inc.select(
         F.lit("incremental").alias("branch"), "id1", "id2", "jaccard"
@@ -349,7 +349,7 @@ def c3_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale configuration under the exactness check — not an unguarded
     oracle twin."""
     return dedup.ngram_jaccard_pairs(
-        _docs(spark, sf_dir), "doc_id", "text", k=3, threshold=0.8,
+        _docs(spark, sf_dir), k=3, threshold=0.8,
         max_doc_freq=100,
     )
 
@@ -438,7 +438,7 @@ def c4_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-bit signature suffers at corpus scale) drop ~512x."""
     return (
         dedup.simhash_near_dup_pairs(
-            _docs(spark, sf_dir), "doc_id", "text", max_hamming=6, bits=128
+            _docs(spark, sf_dir), max_hamming=6, bits=128
         )
         .withColumn("hamming", F.col("hamming").cast("int"))
         .orderBy("id1", "id2")
@@ -501,7 +501,7 @@ def c5_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     all_v = emb.unionByName(planted)
     pairs_branch = dedup.embedding_near_dup_pairs(
-        all_v, "vec_id", "embedding", threshold=0.9
+        all_v, threshold=0.9
     ).select(F.lit("pairs").alias("branch"), "id1", "id2", "cosine")
 
     half = shuffle_hash(F.col("vec_id"), seed=_INC_SEED) % 2
@@ -510,11 +510,11 @@ def c5_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _build_index_dir(
         "c5",
         lambda p: incremental.write_embedding_index(
-            corpus, "vec_id", "embedding", p
+            corpus, p
         ),
     )
     inc = incremental.incremental_embedding_near_dups(
-        spark, batch, "vec_id", "embedding", path, threshold=0.9
+        spark, batch, path
     )
     inc_branch = inc.select(
         F.lit("incremental").alias("branch"), "id1", "id2", "cosine"
@@ -615,14 +615,11 @@ def c6_cosine_topk_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
     qvec = emb.filter(F.col("vec_id") == _QUERY_VEC_ID).first()["embedding"]
     exact = similarity.brute_force_topk(
-        emb, "embedding", "vec_id", list(qvec), k=10, exclude_ids=[_QUERY_VEC_ID]
+        emb, list(qvec), k=10, exclude_ids=[_QUERY_VEC_ID]
     ).select(F.lit("exact").alias("branch"), "vec_id", "cosine")
     lsh = similarity.lsh_topk(
         emb,
-        "embedding",
-        "vec_id",
         list(qvec),
-        k=10,
         probe_hamming=1,
         exclude_ids=[_QUERY_VEC_ID],
     ).select(F.lit("lsh").alias("branch"), "vec_id", "cosine")
@@ -735,7 +732,7 @@ def c15_cosine_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 100k default made the two fits 23 s of a 27 s query (A/B in
     # BASELINE.md round-5 notes).
     model, indexed0 = similarity.ivf_index(
-        all_in, "embedding", n_clusters=n_clusters, max_fit_rows=20_000
+        all_in, n_clusters=n_clusters, max_fit_rows=20_000
     )
     # One assignment pass total: ivf probe and the semdedup per-cell
     # exchange both read these blocks. Lazy: the blocks build inside the
@@ -749,7 +746,7 @@ def c15_cosine_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pq_topk stay O(probed cells) and never compute an exact scan
     # (pinned by test_operator_api_never_triggers_exact_scan).
     exact = similarity.brute_force_topk(
-        all_in, "embedding", "vec_id", qvec, k=10, exclude_ids=exclude
+        all_in, qvec, k=10, exclude_ids=exclude
     ).select(F.col("vec_id").alias("exact_id"))
     # Probe the same fraction of the corpus the historical 3-of-8 setting
     # scanned, independent of the shared index's cell count.
@@ -757,8 +754,6 @@ def c15_cosine_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivf = similarity.ivf_topk(
         model,
         indexed,
-        "embedding",
-        "vec_id",
         qvec,
         k=10,
         n_probe=n_probe,
@@ -771,13 +766,12 @@ def c15_cosine_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ~F.col("vec_id").isin([pid for pid, _ in _SEM_PLANTS])
     ).select("vec_id", "embedding")
     pq_model = pq.pq_fit(
-        emb_ck, "embedding", m=16, n_codes=16, dim=64, max_fit_rows=20_000
+        emb_ck, m=16, n_codes=16, dim=64, max_fit_rows=20_000
     )
-    encoded = pq.pq_encode(emb_ck, "embedding", pq_model)
+    encoded = pq.pq_encode(emb_ck, pq_model)
     quant = pq.pq_topk(
         pq_model,
         encoded,
-        "vec_id",
         qvec,
         k=10,
         exclude_ids=exclude,
@@ -874,14 +868,10 @@ def _semdedup_branch(sem_in: DataFrame, indexed: DataFrame) -> DataFrame:
     # (an eager checkpoint here measured as one redundant extra job).
     pairs = semdedup.semantic_dedup_pairs(
         sem_in,
-        "vec_id",
-        "embedding",
         threshold=_SEM_THRESHOLD,
         indexed=indexed,
     ).localCheckpoint(eager=False)
-    survivors = semdedup.semantic_dedup(
-        sem_in, "vec_id", "embedding", pairs=pairs
-    )
+    survivors = semdedup.semantic_dedup(sem_in, pairs)
     planted_status = survivors.filter(
         F.col("vec_id").isin([pid for pid, _ in _SEM_PLANTS])
     ).agg(
@@ -955,7 +945,7 @@ def _semdedup_branch(sem_in: DataFrame, indexed: DataFrame) -> DataFrame:
 )
 def c16_near_dup_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
-    survivors = dedup.near_dup_dedup(docs, "doc_id", "text", threshold=0.8)
+    survivors = dedup.near_dup_dedup(docs, threshold=0.8)
     return survivors.select("doc_id", "lang").orderBy("doc_id")
 
 
@@ -1108,14 +1098,14 @@ def c8_text_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = docs.select(
         "doc_id",
         F.length("text").alias("n_chars"),
-        TX.token_count("text").alias("ws_tokens"),
-        TX.bpe_token_count("text").cast("int").alias("bpe_tokens"),
+        TX.token_count().alias("ws_tokens"),
+        TX.bpe_token_count().cast("int").alias("bpe_tokens"),
         TX.doc_fingerprint("text").alias("fingerprint"),
-        F.round(TX.dup_word_frac("text"), 4).alias("dup_word_frac"),
-        F.round(TX.top_word_frac("text"), 4).alias("top_word_frac"),
+        F.round(TX.dup_word_frac(), 4).alias("dup_word_frac"),
+        F.round(TX.top_word_frac(), 4).alias("top_word_frac"),
         F.round(TX.punct_ratio("text"), 4).alias("punct_ratio"),
-        F.round(TX.stopword_ratio("text"), 4).alias("stopword_ratio"),
-        TX.quality_score("text").alias("quality"),
+        F.round(TX.stopword_ratio(), 4).alias("stopword_ratio"),
+        TX.quality_score().alias("quality"),
         clean.alias("norm_clean"),
         F.length(clean).cast("int").alias("norm_clean_len"),
     )
@@ -1214,7 +1204,7 @@ def c11_lang_id_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("double").alias("ttr"),
     ]
     lang = (
-        docs.select(TX.lang_id("text").alias("pred_lang"))
+        docs.select(TX.lang_id().alias("pred_lang"))
         .groupBy("pred_lang")
         .agg(F.count("*").alias("n_docs"))
         .select(
@@ -1224,7 +1214,7 @@ def c11_lang_id_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             *nulls,
         )
     )
-    div = corpus_diversity(docs, group_col="source", k=3).select(
+    div = corpus_diversity(docs).select(
         F.lit("diversity").alias("branch"),
         F.col("source").alias("grp"),
         "n_docs",
@@ -1334,7 +1324,7 @@ def c17_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir)
     split_df = with_split(docs, "text", val_fraction=0.1)
-    ranked = with_shuffle_rank(split_df, "doc_id", seed=7, partition_by=["split"])
+    ranked = with_shuffle_rank(split_df, seed=7)
     plain = ranked.select(
         F.lit("plain").alias("branch"),
         "doc_id",
@@ -1348,7 +1338,7 @@ def c17_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).repartition(1)  # tiny local frame: see the c15 needle note
     corpus = docs.select("doc_id", "text", "lang").unionByName(planted)
     leak = leakage_safe_split(
-        corpus, "doc_id", "text", val_fraction=0.1, threshold=0.8
+        corpus, val_fraction=0.1, threshold=0.8
     ).select(
         F.lit("leakage").alias("branch"),
         "doc_id",
@@ -1451,12 +1441,10 @@ def c18_sequence_packing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.packing import pack_sequences
 
     docs = _docs(spark, sf_dir).select(
-        "doc_id", token_count("text").alias("n_tokens")
+        "doc_id", token_count().alias("n_tokens")
     )
     packed = pack_sequences(
         docs,
-        "doc_id",
-        "n_tokens",
         max_tokens=_FFD_BUDGET,
         num_partitions=_FFD_PART,
     )
@@ -1502,7 +1490,7 @@ def c19_corpus_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir)
     mixed = mix_corpus(
-        docs, "text", "source", {"src0": 1.0, "src1": 1.0, "src2": 2.0}
+        docs, {"src0": 1.0, "src1": 1.0, "src2": 2.0}
     )
     return (
         mixed.groupBy("source")
@@ -1692,7 +1680,7 @@ def c20_benchmark_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame
     docs = _docs(spark, sf_dir)
     bench = docs.filter(F.col("doc_id") % 97 == 0)
     corpus = docs.filter(F.col("doc_id") % 97 != 0)
-    return benchmark_ngram_overlap(corpus, bench, "doc_id", "text", k=3)
+    return benchmark_ngram_overlap(corpus, bench)
 
 
 # Planted PII rows (fixture documents are PII-free by construction); the
@@ -1884,7 +1872,7 @@ def c22_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir)
     chunks = chunk_documents(
-        docs, "doc_id", "text", chunk_tokens=24, overlap=8
+        docs, chunk_tokens=24, overlap=8
     ).select(
         F.lit("chunk").alias("op"),
         "doc_id",
@@ -1895,10 +1883,10 @@ def c22_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Bounded (64 rows) by construction; lineage truncation here is what
     # keeps this branch at ~2 corpus tokenize passes instead of 5.
-    vocab = build_vocab(docs, "text", vocab_size=64).localCheckpoint(
+    vocab = build_vocab(docs, vocab_size=64).localCheckpoint(
         eager=False  # bounded 64 rows; materializes at its first consumer
     )
-    enc = encode_documents(docs, vocab, id_col="doc_id", text_col="text")
+    enc = encode_documents(docs, vocab)
     # Round-trip audit sample: the 256 smallest portable-md5 doc ids —
     # ids-only top-k (executor merge) + broadcast semi fetch, the lm.py
     # draw pattern, replayed verbatim by the oracle's ORDER BY md5 LIMIT.
@@ -1915,15 +1903,10 @@ def c22_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs_audit = docs.select("doc_id", "text").join(
         F.broadcast(audit_ids), "doc_id", "left_semi"
     )
-    enc_audit = encode_documents(
-        docs_audit, vocab, id_col="doc_id", text_col="text"
+    enc_audit = encode_documents(docs_audit, vocab)
+    reenc = encode_documents(decode_ids(enc_audit, vocab), vocab).select(
+        "doc_id", F.col("token_ids").alias("_ids2")
     )
-    reenc = encode_documents(
-        decode_ids(enc_audit, vocab, id_col="doc_id"),
-        vocab,
-        id_col="doc_id",
-        text_col="text",
-    ).select("doc_id", F.col("token_ids").alias("_ids2"))
 
     def ids_str(c):
         return F.array_join(F.transform(c, lambda x: x.cast("string")), " ")
@@ -2054,10 +2037,10 @@ def c23_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir)
     stages = [
-        ("min_length", TX.token_count("text") >= 20),
-        ("lang_confident", TX.lang_id("text") != "und"),
-        ("not_repetitive", TX.dup_word_frac("text") <= 0.6),
-        ("quality", TX.quality_score("text") >= 0.8),
+        ("min_length", TX.token_count() >= 20),
+        ("lang_confident", TX.lang_id() != "und"),
+        ("not_repetitive", TX.dup_word_frac() <= 0.6),
+        ("quality", TX.quality_score() >= 0.8),
     ]
     return quality_funnel(docs, stages)
 
@@ -2112,7 +2095,7 @@ def c24_embedding_quant_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_q.select(
         "vec_id",
         F.size("embedding").alias("dim"),
-        F.round(VX.l2_norm("embedding"), 4).alias("l2_norm"),
+        F.round(VX.l2_norm(), 4).alias("l2_norm"),
         F.round("scale", 6).alias("scale_r6"),
         F.aggregate(
             "qv", F.lit(0).cast("long"), lambda a, x: a + x
@@ -2171,7 +2154,7 @@ def c25_sample_caps_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import per_group_cap, per_group_weight_budget
 
     docs = _docs(spark, sf_dir).select(
-        "doc_id", "source", TX.token_count("text").alias("n_tok")
+        "doc_id", "source", TX.token_count().alias("n_tok")
     )
     cap = per_group_cap(docs, "doc_id", "source", cap=15, seed=5).select(
         F.lit("cap").alias("branch"),
@@ -2413,10 +2396,6 @@ def c26_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     line_base = pin(docs.unionByName(line_planted), source=docs)
     line = drop_duplicate_lines(
         line_base,
-        "doc_id",
-        "text",
-        max_line_df=3,
-        line_sep="\n",
     ).select(
         F.lit("line").alias("branch"),
         "doc_id",
@@ -2431,8 +2410,6 @@ def c26_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     span_base = pin(docs.unionByName(span_planted), source=docs)
     span = remove_duplicate_spans(
         span_base,
-        "doc_id",
-        "text",
         window=_SPAN_W,
         max_df=_SPAN_MAX_DF,
     ).select(

@@ -16,10 +16,6 @@ from ..operators import relational
 from .registry import register
 
 
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "events")
-
-
 @register(
     "ref_daily_event_summary",
     oracle="""
@@ -34,7 +30,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2 G1/K4 (sql/create_snowflake_tables.sql:31-39)",
 )
 def ref_daily_event_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return relational.daily_event_summary(_events(spark, sf_dir))
+    return relational.daily_event_summary(load_table(spark, sf_dir, "events"))
 
 
 @register(
@@ -51,7 +47,7 @@ def ref_daily_event_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2 D2/P1/P2/P5 (sql/create_snowflake_tables.sql:18-28)",
 )
 def ref_user_events_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return relational.user_events_view(_events(spark, sf_dir))
+    return relational.user_events_view(load_table(spark, sf_dir, "events"))
 
 
 @register(
@@ -71,7 +67,7 @@ def ref_insert_dedup_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1 over a self-derived target: treat already-loaded EVENTS as the set
     of purchase events; staging is the full feed. Exercises the not-null
     filter + left-anti plan the engine uses for at-least-once dedup."""
-    events = _events(spark, sf_dir)
+    events = load_table(spark, sf_dir, "events")
     target = events.filter(F.col("event_type") == "purchase")
     deduped = relational.insert_dedup_anti_join(events, target)
     return deduped.select("event_id", "user_id", "event_type")
@@ -100,7 +96,7 @@ def ref_duplicate_event_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic 50-row replay slice — the fixture's event_ids are unique,
     so the unplanted check returns 0 rows and would verify nothing; the
     planted replay makes the HAVING filter produce 50 stable rows."""
-    events = _events(spark, sf_dir).select("event_id")
+    events = load_table(spark, sf_dir, "events").select("event_id")
     replay = (
         events.filter(F.col("event_id").isNotNull())
         .orderBy("event_id")
@@ -123,7 +119,7 @@ def ref_duplicate_event_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2 G3/P4 (airflow/dags/snowflake_data_pipeline.py:154-170)",
 )
 def ref_dq_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return relational.dq_counts(_events(spark, sf_dir))
+    return relational.dq_counts(load_table(spark, sf_dir, "events"))
 
 
 @register(
@@ -146,7 +142,7 @@ def ref_raw_data_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_ids (FIXTURES.md §1.4 edge case): Spark sorts NULLS FIRST,
     DuckDB NULLS LAST, and NULL-keyed rows tie arbitrarily."""
     return (
-        _events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .select("event_id", "user_id", "event_type", "value")
         .filter(F.col("event_id").isNotNull())
         .orderBy("event_id")
@@ -168,10 +164,10 @@ def ref_raw_data_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ref_variant_pack_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """VARIANT write/read fidelity: missing path -> NULL (Snowflake
     semantics), present path extracts + casts."""
-    events = _events(spark, sf_dir)
+    events = load_table(spark, sf_dir, "events")
     return events.filter(
-        variant_get("props", "missing").isNull()
+        variant_get("missing").isNull()
     ).select(
         "event_id",
-        variant_get("props", "k", "int").alias("prop_k"),
+        variant_get("k", "int").alias("prop_k"),
     )

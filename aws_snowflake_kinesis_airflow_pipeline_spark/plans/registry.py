@@ -53,6 +53,5 @@ def oracle_sql_map() -> dict[str, str]:
 # Importing the suites populates QUERIES via the @register decorator.
 from . import reference_suite  # noqa: E402,F401
 from . import relational_suite  # noqa: E402,F401
-from . import relational_suite2  # noqa: E402,F401
 from . import llm_suite  # noqa: E402,F401
 from . import streaming_suite  # noqa: E402,F401

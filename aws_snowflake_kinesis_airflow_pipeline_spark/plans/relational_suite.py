@@ -1,5 +1,8 @@
 """Part B relational queries (SURVEY.md §2 B1-B10, B13) over the TPC-H-ish
-star schema.
+star schema, then the widening shapes that round out the SQL surface a
+Snowflake user would expect: scalar subquery, correlated-count filter,
+as-of join, order-normalized collect, correlated EXISTS (TPC-H Q4), range
+join, CTE.
 
 Conventions for oracle parity (FIXTURES.md §3):
 - every computed column aliased identically in Spark and DuckDB SQL;
@@ -20,10 +23,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, register_views
 from .registry import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # --------------------------------------------------------------------------
@@ -53,7 +52,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pricing summary: single scan, partial+final hash aggregation on two
     low-cardinality keys — the canonical scan-bound aggregate. At 100 TB the
     shuffle carries 6 rows per input partition; scan dominates."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.filter(F.col("l_shipdate") <= F.lit("2000-12-01").cast("timestamp_ntz"))
@@ -91,8 +90,8 @@ def b1_join_revenue_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders⋈customer. Customer is |orders|/10 — below the broadcast
     threshold through mid SFs; at 100 TB AQE decides broadcast vs shuffle
     from runtime stats, so no hint is hard-coded here."""
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
     return (
         orders.join(customer, orders.o_custkey == customer.c_custkey, "inner")
         .groupBy("c_mktsegment")
@@ -125,14 +124,14 @@ def b2_multiway_join_revenue_by_nation(spark: SparkSession, sf_dir: str) -> Data
     at every SF — explicitly broadcast so the big sides never shuffle for
     them; the lineitem⋈orders join shuffles on orderkey (or goes broadcast
     under AQE when the filtered orders side is small)."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders").filter(
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
         & (F.col("o_orderdate") < F.lit("1999-01-01").cast("timestamp_ntz"))
     )
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    customer = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(customer, orders.o_custkey == customer.c_custkey)
@@ -166,11 +165,11 @@ def b2_multiway_join_revenue_by_nation(spark: SparkSession, sf_dir: str) -> Data
     survey_ref="§2 B2+B4 join + top-k (TPC-H Q3 shape)",
 )
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders").filter(
+    cust = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp_ntz")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1998-01-01").cast("timestamp_ntz")
     )
     return (
@@ -226,8 +225,8 @@ def b3_outer_semi_anti_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged: per-customer urgent-order counts (left outer, zeros preserved),
     big spenders (semi join), never-urgent customers (anti join). Each
     branch is one equi-join shuffle; the union is append-only."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     urgent = orders.filter(F.col("o_orderpriority") == "1-URGENT")
     big = orders.filter(F.col("o_totalprice") > 450000)
     left_count = (
@@ -303,7 +302,7 @@ def b5_window_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle. Column mapping (orders/brand_topn): grp = custkey-as-string /
     p_brand, item = o_orderkey / p_partkey, rnk = recency_rank / dense
     rank, v1 = prev_price / p_retailprice, v2 = running_spend / NULL."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     w_asc = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     w_desc = Window.partitionBy("o_custkey").orderBy(
         F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
@@ -323,7 +322,7 @@ def b5_window_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
             2,
         ).alias("v2"),
     )
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     w_brand = Window.partitionBy("p_brand").orderBy(
         F.col("p_retailprice").desc(), F.col("p_partkey")
     )
@@ -385,7 +384,7 @@ def b6_grouping_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     'pivot' branch runs a real groupBy().pivot() with an explicit value
     list (single pass, no distinct-values pre-query) and is unpivoted back
     to tagged rows only to share the pack schema."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     aggs = [
         F.count("*").alias("n"),
         F.round(F.sum("o_totalprice"), 2).alias("revenue"),
@@ -468,7 +467,7 @@ def b7_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     is SQL EXCEPT (set semantics): a row present in b is fully removed —
     exceptAll().distinct() would differ when a duplicated left row also
     appears in b. Each set op is one shuffle on the compared columns."""
-    cust = _t(spark, sf_dir, "customer")
+    cust = load_table(spark, sf_dir, "customer")
     a = cust.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
     b = cust.filter(F.col("c_acctbal") > 5000).select("c_custkey")
 
@@ -538,7 +537,7 @@ def b8_stats_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``percentile(col, array(0.5, 0.9))``): per-quantile calls build and
     merge a separate value->count map / digest per quantile — measured
     ~1.6x slower on the moments branch at sf1."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     distincts = li.groupBy("l_returnflag").agg(
         F.countDistinct("l_partkey").alias("n_parts"),
         F.countDistinct("l_suppkey").alias("n_supps"),
@@ -628,7 +627,7 @@ def b8_stats_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2 B9 string/date/math/conditional scalar functions",
 )
 def b9_scalar_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return orders.select(
         "o_orderkey",
         F.upper(F.expr("substring(o_orderpriority, 3)")).alias("priority_name"),
@@ -703,7 +702,7 @@ def b10_json_array_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = props.k value / token count."""
     from ..functions.text import tokens
 
-    events = _t(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events")
     m = F.from_json("props", "map<string,string>")
     json_branch = events.select(
         F.lit("json").alias("branch"),
@@ -711,7 +710,7 @@ def b10_json_array_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_join(F.map_keys(m), ",").alias("s"),
         m.getItem("k").cast("long").alias("n"),
     )
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
     token_counts = (
         docs.select(F.explode(tokens("text")).alias("token"))
         .groupBy("token")
@@ -743,7 +742,7 @@ def b10_json_array_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Compared in-plan as two sorted 20-row struct lists; the oracle pins
     # the boolean TRUE. The 1x1 crossJoin is the documented scalar-combine
     # precedent (operators/relational.py).
-    hh = top_k_tokens(docs, "text", k=20, capacity=4096, exact_counts=token_counts)
+    hh = top_k_tokens(docs, k=20, capacity=4096, exact_counts=token_counts)
     exact_list = exact_topk.agg(
         F.sort_array(F.collect_list(F.struct("token", "n"))).alias("_e")
     )
@@ -762,3 +761,255 @@ def b10_json_array_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 # B13 text statistics live in llm_suite (c8_text_features pack,
 # c11_lang_id_histogram) — the per-document text operators plus their
 # grouped aggregates, all oracle-paired there.
+
+
+# --------------------------------------------------------------------------
+# Widening shapes: scalar subquery, correlated-count filter, as-of join,
+# order-normalized collect, correlated EXISTS (TPC-H Q4), range join, CTE
+# --------------------------------------------------------------------------
+
+
+@register(
+    "b_subquery_filters",
+    oracle="""
+    SELECT c_custkey, c_name
+    FROM customer
+    WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM customer)
+      AND (SELECT COUNT(*) FROM orders
+           WHERE o_custkey = c_custkey
+             AND o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
+             AND o_orderdate <  TIMESTAMP '1998-01-01 00:00:00') >= 3
+    """,
+    survey_ref="§2 B3-adjacent uncorrelated scalar subquery + correlated "
+    "COUNT subquery in one filter",
+)
+def b_subquery_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Above-average-balance customers with >= 3 orders in 1997: the
+    uncorrelated scalar subquery plans as a broadcast one-row join; the
+    correlated COUNT is decorrelated by Catalyst into count-by-key + join —
+    no per-row subquery execution in either case."""
+    register_views(spark, sf_dir, only=("customer", "orders"))
+    return spark.sql(
+        """
+        SELECT c_custkey, c_name
+        FROM customer
+        WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM customer)
+          AND (SELECT COUNT(*) FROM orders
+               WHERE o_custkey = c_custkey
+                 AND o_orderdate >= TIMESTAMP_NTZ '1997-01-01 00:00:00'
+                 AND o_orderdate <  TIMESTAMP_NTZ '1998-01-01 00:00:00') >= 3
+        """
+    )
+
+
+@register(
+    "b_asof_join_last_view",
+    oracle="""
+    SELECT p.event_id, p.user_id, p.ts,
+           v.event_id AS view_event_id,
+           v.value    AS view_value
+    FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+    ASOF LEFT JOIN (
+      -- Pre-reduce same-(user, ts) ties to the MAX payload struct: the
+      -- Spark operator's documented deterministic tie-break. DuckDB's
+      -- native ASOF picks an unspecified row among equal-timestamp
+      -- matches, so without this the oracle is nondeterministic the day
+      -- a fixture carries tied view events.
+      SELECT user_id, ts,
+             (MAX(struct_pack(event_id := event_id, value := value)))
+               .event_id AS event_id,
+             (MAX(struct_pack(event_id := event_id, value := value)))
+               .value AS value
+      FROM events WHERE event_type = 'view' GROUP BY user_id, ts
+    ) v
+      ON p.user_id = v.user_id AND v.ts <= p.ts
+    """,
+    survey_ref="north-star as-of join (point-in-time enrichment; union+window "
+    "formulation, one shuffle, flat state; oracle pre-reduces tied "
+    "right rows to the operator's MAX-struct tie-break before DuckDB's "
+    "native ASOF)",
+)
+def b_asof_join_last_view(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each purchase enriched with the user's latest at-or-before view event
+    — checked against DuckDB's native ASOF JOIN."""
+    from ..operators.asof import asof_join
+
+    events = load_table(spark, sf_dir, "events")
+    purchases = events.filter(F.col("event_type") == "purchase").select(
+        "event_id", "user_id", "ts"
+    )
+    views = events.filter(F.col("event_type") == "view").select(
+        "user_id",
+        F.col("ts").alias("view_ts"),
+        F.col("event_id").alias("view_event_id"),
+        F.col("value").alias("view_value"),
+    )
+    return asof_join(
+        purchases,
+        views,
+        key="user_id",
+        left_ts="ts",
+        right_ts="view_ts",
+        payload_cols=["view_event_id", "view_value"],
+    )
+
+
+# GROUPING SETS is driver-checked inside relational_suite.b6_grouping_pack
+# (tagged union with rollup and cube over the same fact).
+
+
+@register(
+    "b_agg_collect_sorted",
+    oracle="""
+    SELECT r_name,
+           ARRAY_TO_STRING(LIST_SORT(LIST(n_name)), ',') AS nations
+    FROM nation JOIN region ON n_regionkey = r_regionkey
+    GROUP BY r_name
+    """,
+    survey_ref="§2 B8-adjacent collection aggregate (collect_list, "
+    "order-normalized for cross-engine determinism)",
+)
+def b_agg_collect_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """collect_list has nondeterministic order by contract — sort_array +
+    join makes the output comparable across engines and runs."""
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
+    return (
+        nation.join(region, nation.n_regionkey == region.r_regionkey)
+        .groupBy("r_name")
+        .agg(
+            F.array_join(F.sort_array(F.collect_list("n_name")), ",").alias(
+                "nations"
+            )
+        )
+    )
+
+
+# Percentiles and moment statistics are driver-checked inside
+# relational_suite.b8_stats_pack (one grouping over lineitem).
+
+
+@register(
+    "q4_order_priority_checking",
+    oracle="""
+    SELECT o_orderpriority, COUNT(*) AS order_count
+    FROM orders
+    WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
+      AND o_orderdate <  TIMESTAMP '1997-04-01 00:00:00'
+      AND EXISTS (
+        SELECT 1 FROM lineitem
+        WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate
+      )
+    GROUP BY o_orderpriority
+    """,
+    survey_ref="§2 B3 correlated EXISTS with cross-table predicate "
+    "(TPC-H Q4 shape — semi join on a derived condition)",
+)
+def q4_order_priority_checking(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Orders in 1997Q1 with at least one lineitem shipped after the order
+    date. The correlated EXISTS becomes a left-semi join whose extra
+    condition rides the join predicate — one shuffle, no subquery loop."""
+    orders = load_table(spark, sf_dir, "orders").filter(
+        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp_ntz"))
+        & (F.col("o_orderdate") < F.lit("1997-04-01").cast("timestamp_ntz"))
+    )
+    li = load_table(spark, sf_dir, "lineitem")
+    return (
+        orders.join(
+            li,
+            (orders.o_orderkey == li.l_orderkey)
+            & (li.l_shipdate > orders.o_orderdate),
+            "left_semi",
+        )
+        .groupBy("o_orderpriority")
+        .agg(F.count("*").alias("order_count"))
+    )
+
+
+@register(
+    "b_range_join_price_bands",
+    oracle="""
+    WITH bands(band, lo, hi) AS (
+      VALUES ('low', 0.0, 150000.0),
+             ('mid', 150000.0, 350000.0),
+             ('high', 350000.0, 1000000.0)
+    )
+    SELECT band, COUNT(*) AS n, ROUND(SUM(o_totalprice), 2) AS revenue
+    FROM orders JOIN bands ON o_totalprice >= lo AND o_totalprice < hi
+    GROUP BY band
+    """,
+    survey_ref="north-star range (non-equi) join — broadcast-nested-loop "
+    "against a bounded band dim",
+)
+def b_range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Banding via a range join. The band table is bounded by construction,
+    so the physical plan is a broadcast nested-loop — each fact row tests a
+    handful of ranges; no shuffle of the fact side, scales linearly."""
+    orders = load_table(spark, sf_dir, "orders")
+    bands = spark.createDataFrame(
+        [("low", 0.0, 150000.0), ("mid", 150000.0, 350000.0),
+         ("high", 350000.0, 1000000.0)],
+        "band string, lo double, hi double",
+    )
+    return (
+        orders.join(
+            F.broadcast(bands),
+            (F.col("o_totalprice") >= F.col("lo"))
+            & (F.col("o_totalprice") < F.col("hi")),
+        )
+        .groupBy("band")
+        .agg(
+            F.count("*").alias("n"),
+            F.round(F.sum("o_totalprice"), 2).alias("revenue"),
+        )
+    )
+
+
+@register(
+    "b_cte_region_share",
+    oracle="""
+    WITH nation_rev AS (
+      SELECT n_name, n_regionkey,
+             SUM(o_totalprice) AS rev
+      FROM orders
+      JOIN customer ON o_custkey = c_custkey
+      JOIN nation   ON c_nationkey = n_nationkey
+      GROUP BY n_name, n_regionkey
+    ),
+    region_rev AS (
+      SELECT n_regionkey, SUM(rev) AS region_total FROM nation_rev GROUP BY 1
+    )
+    SELECT r_name, n_name,
+           ROUND(rev, 2) AS nation_revenue,
+           ROUND(rev / region_total, 4) AS region_share
+    FROM nation_rev
+    JOIN region_rev USING (n_regionkey)
+    JOIN region ON n_regionkey = r_regionkey
+    """,
+    survey_ref="§2 B2/B5-adjacent CTE reuse (share-of-group)",
+)
+def b_cte_region_share(spark: SparkSession, sf_dir: str) -> DataFrame:
+    register_views(
+        spark, sf_dir, only=("orders", "customer", "nation", "region")
+    )
+    return spark.sql(
+        """
+        WITH nation_rev AS (
+          SELECT n_name, n_regionkey, SUM(o_totalprice) AS rev
+          FROM orders
+          JOIN customer ON o_custkey = c_custkey
+          JOIN nation   ON c_nationkey = n_nationkey
+          GROUP BY n_name, n_regionkey
+        ),
+        region_rev AS (
+          SELECT n_regionkey, SUM(rev) AS region_total
+          FROM nation_rev GROUP BY n_regionkey
+        )
+        SELECT r_name, n_name,
+               ROUND(rev, 2) AS nation_revenue,
+               ROUND(rev / region_total, 4) AS region_share
+        FROM nation_rev
+        JOIN region_rev USING (n_regionkey)
+        JOIN region ON n_regionkey = r_regionkey
+        """
+    )

@@ -20,10 +20,6 @@ from ..streaming import windows as W
 from .registry import register
 
 
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "events")
-
-
 @register(
     "s1_window_counts",
     oracle="""
@@ -192,7 +188,7 @@ def s1_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     error band: n=1 iff the approx outlier count lands within
     1%-of-group-size (+1) of the exact count, which the oracle asserts
     per event type — the same sketch-band pattern as b8_stats_pack."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     # Shared pinned base (round-13, guide §2.4/§5): the nine branches
     # reference the events scan 62 times in the un-pinned plan (funnel
     # steps, MAD passes, self-joins, and their broadcast copies each
@@ -223,7 +219,7 @@ def s1_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("purchase<-click").alias("event_type"),
         "n",
     )
-    trending = W.trending_topk(ev, k=2).select(
+    trending = W.trending_topk(ev).select(
         F.lit("trending").alias("op"),
         "window_start",
         "window_end",
@@ -243,7 +239,7 @@ def s1_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # for the pack, exec 1.5 -> ~0.95 s at sf0.1, identical rows. Tiny at
     # any scale (group-key cardinality), so no scale guard is needed.
     mad_stats = grouped_mad_outliers_paired(
-        ev, ["event_type"], "value", z=3.0
+        ev, ["event_type"], "value"
     ).localCheckpoint(eager=False)
     outliers = mad_stats.select(
         F.lit("mad_outliers").alias("op"),
@@ -265,7 +261,7 @@ def s1_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n"),
     )
     funnel = funnel_conversion(
-        ev, ["view", "click", "purchase"], within="1 hour"
+        ev, ["view", "click", "purchase"]
     ).select(
         F.lit("funnel").alias("op"),
         F.lit(None).cast("timestamp_ntz").alias("window_start"),
@@ -336,7 +332,7 @@ def s1_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "with last+gap inclusive-end semantics)",
 )
 def s4_session_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return W.session_counts(_events(spark, sf_dir)).orderBy(
+    return W.session_counts(load_table(spark, sf_dir, "events")).orderBy(
         "user_id", "session_start"
     )
 
@@ -371,9 +367,9 @@ def s5_dedup_within_watermark_twin(spark: SparkSession, sf_dir: str) -> DataFram
     Replay duplicates are exact row copies, so keep-first is deterministic
     and SQL-expressible."""
     ev = (
-        _events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .select("event_id", "user_id", "event_type", "ts", "value")
         .filter(F.col("event_id").isNotNull())
     )
     replay = ev.orderBy("event_id").limit(500)
-    return W.batch_dedup_keep_first(ev.unionByName(replay), ["event_id"], "ts")
+    return W.batch_dedup_keep_first(ev.unionByName(replay))

@@ -96,7 +96,7 @@ def keyed_sliding_counts(events: DataFrame) -> DataFrame:
     )
 
 
-def rank_trending(counts: DataFrame, k: int) -> DataFrame:
+def rank_trending(counts: DataFrame) -> DataFrame:
     """Top-k keys per window by (count desc, key asc) — the deterministic
     finisher of trending top-k (B38).
 
@@ -114,17 +114,17 @@ def rank_trending(counts: DataFrame, k: int) -> DataFrame:
     )
     return (
         counts.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
+        .filter(F.col("_rk") <= 2)
         .drop("_rk")
     )
 
 
-def trending_topk(events: DataFrame, k: int = 3) -> DataFrame:
-    """Batch trending top-k: the k most frequent event types in every
+def trending_topk(events: DataFrame) -> DataFrame:
+    """Batch trending top-2: the two most frequent event types in every
     sliding window (B38). The streaming form is
     :func:`keyed_sliding_counts` on the stream → :func:`rank_trending`
     over each closed window."""
-    return rank_trending(keyed_sliding_counts(events), k)
+    return rank_trending(keyed_sliding_counts(events))
 
 
 def dedup_within_watermark(events: DataFrame, key_cols: list[str]) -> DataFrame:
@@ -143,13 +143,9 @@ def dedup_within_watermark(events: DataFrame, key_cols: list[str]) -> DataFrame:
     return deduped.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
 
 
-def batch_dedup_keep_first(
-    events: DataFrame,
-    key_cols: list[str],
-    ts_col: str = "ts",
-) -> DataFrame:
+def batch_dedup_keep_first(events: DataFrame) -> DataFrame:
     """Batch twin of :func:`dedup_within_watermark`: keep the earliest row
-    per key (ROW_NUMBER over event time = 1) — what the streaming dedup
+    per ``event_id`` (ROW_NUMBER over ``ts`` = 1) — what the streaming dedup
     converges to on a bounded frame where every duplicate arrives inside
     the watermark. One shuffle on the keys; per-key state is one row.
 
@@ -159,7 +155,7 @@ def batch_dedup_keep_first(
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(*key_cols).orderBy(ts_col)
+    w = Window.partitionBy("event_id").orderBy("ts")
     return (
         events.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)

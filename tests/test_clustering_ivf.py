@@ -53,7 +53,7 @@ def test_near_dup_dedup_keeps_one_per_cluster(spark):
     )
     survivors = sorted(
         r["doc_id"]
-        for r in dedup.near_dup_dedup(docs, "doc_id", "text", threshold=0.5).collect()
+        for r in dedup.near_dup_dedup(docs, threshold=0.5).collect()
     )
     assert survivors == [1, 4]  # min-id survivor of {1,2,3}, plus unique 4
 
@@ -68,7 +68,7 @@ def test_ivf_topk_recall_on_clusters(spark):
             rows.append((vid, [x + rng.gauss(0, 0.05) for x in c]))
             vid += 1
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    model, indexed = similarity.ivf_index(emb, "embedding", n_clusters=4)
+    model, indexed = similarity.ivf_index(emb, n_clusters=4)
     indexed = indexed.cache()
 
     E = np.array([r[1] for r in rows])
@@ -85,7 +85,7 @@ def test_ivf_topk_recall_on_clusters(spark):
     got = [
         r["vec_id"]
         for r in similarity.ivf_topk(
-            model, indexed, "embedding", "vec_id", q,
+            model, indexed, q,
             k=10, n_probe=1, exclude_ids=[0],
         ).collect()
     ]
@@ -124,9 +124,9 @@ def test_operator_api_never_triggers_exact_scan(spark, monkeypatch):
         return real(df, *a, **k)
 
     monkeypatch.setattr(similarity, "brute_force_topk", _spy)
-    model, indexed = similarity.ivf_index(emb, "embedding", n_clusters=4)
+    model, indexed = similarity.ivf_index(emb, n_clusters=4)
     got_ivf = similarity.ivf_topk(
-        model, indexed, "embedding", "vec_id", q, k=5, n_probe=2,
+        model, indexed, q, k=5, n_probe=2,
         exclude_ids=[0],
     ).collect()
     assert len(got_ivf) == 5
@@ -138,9 +138,9 @@ def test_operator_api_never_triggers_exact_scan(spark, monkeypatch):
         raise AssertionError("pq_topk invoked an exact scan")
 
     monkeypatch.setattr(similarity, "brute_force_topk", _poisoned)
-    pq_model = pq.pq_fit(emb, "embedding", m=4, n_codes=8, dim=16)
-    encoded = pq.pq_encode(emb, "embedding", pq_model)
+    pq_model = pq.pq_fit(emb, m=4, n_codes=8, dim=16)
+    encoded = pq.pq_encode(emb, pq_model)
     got_pq = pq.pq_topk(
-        pq_model, encoded, "vec_id", q, k=5, exclude_ids=[0]
+        pq_model, encoded, q, k=5, exclude_ids=[0]
     ).collect()
     assert len(got_pq) == 5

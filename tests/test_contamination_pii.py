@@ -26,7 +26,7 @@ def test_exact_benchmark_copy_is_fully_contaminated(spark):
     )
     out = {
         r["doc_id"]: r
-        for r in benchmark_ngram_overlap(corpus, bench, k=3).collect()
+        for r in benchmark_ngram_overlap(corpus, bench).collect()
     }
     assert out[10]["contamination"] == 1.0
     assert out[11]["n_contaminated"] == 0
@@ -39,7 +39,7 @@ def test_exact_benchmark_copy_is_fully_contaminated(spark):
 def test_short_docs_produce_no_shingles(spark):
     bench = _df(spark, [(1, "alpha beta gamma")])
     corpus = _df(spark, [(10, "alpha beta")])  # < k tokens
-    assert benchmark_ngram_overlap(corpus, bench, k=3).count() == 0
+    assert benchmark_ngram_overlap(corpus, bench).count() == 0
 
 
 def test_pii_counts_and_redaction(spark):
@@ -84,7 +84,7 @@ def test_contamination_plan_broadcasts_benchmark(spark):
     bench = _df(spark, [(1, "alpha beta gamma delta")])
     corpus = _df(spark, [(10, "alpha beta gamma epsilon")])
     plan = (
-        benchmark_ngram_overlap(corpus, bench, k=3)
+        benchmark_ngram_overlap(corpus, bench)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -275,7 +275,7 @@ def test_group_caps_match_duckdb_on_random_corpus(spark):
     rows = _fuzz_docs(300, seed=23)
     pdf = pd.DataFrame(rows, columns=["doc_id", "text", "source"])
     docs = spark.createDataFrame(pdf).select(
-        "doc_id", "source", token_count("text").alias("n_tok")
+        "doc_id", "source", token_count().alias("n_tok")
     )
     got_cap = sorted(
         (r["source"], r["doc_id"], r["sample_rank"])
@@ -421,7 +421,6 @@ def test_corpus_diversity_counts_types_and_tokens(spark):
                 spark.createDataFrame(
                     rows, "doc_id long, text string, source string"
                 ),
-                group_col="source",
             ).collect()
         )
     }
@@ -438,7 +437,6 @@ def test_corpus_diversity_all_subk_group_reports_null_ttr(spark):
     rows = [(1, "one two", "tiny"), (2, "", "tiny")]
     (r,) = corpus_diversity(
         spark.createDataFrame(rows, "doc_id long, text string, source string"),
-        group_col="source",
     ).collect()
     assert (r["n_docs"], r["total_ngrams"], r["distinct_ngrams"], r["ttr"]) == (
         2, 0, 0, None,
@@ -458,7 +456,6 @@ def test_line_dedup_strips_hot_lines_preserves_order(spark):
         r["doc_id"]: r
         for r in drop_duplicate_lines(
             spark.createDataFrame(rows, "doc_id long, text string"),
-            max_line_df=3,
         ).collect()
     }
     assert len(out) == 6  # every input doc survives as a row
@@ -480,7 +477,6 @@ def test_line_dedup_df_counts_docs_not_occurrences(spark):
         r["doc_id"]: r["clean_text"]
         for r in drop_duplicate_lines(
             spark.createDataFrame(rows, "doc_id long, text string"),
-            max_line_df=3,
         ).collect()
     }
     assert out[1] == "x\nx\nx\nx\nx"
@@ -500,7 +496,6 @@ def test_line_dedup_null_text_survives_as_empty_doc(spark):
         r["doc_id"]: r
         for r in drop_duplicate_lines(
             spark.createDataFrame(rows, "doc_id long, text string"),
-            max_line_df=3,
         ).collect()
     }
     assert set(out) == {1, 2}

@@ -126,10 +126,10 @@ def _run_chain(spark):
         "doc_id", F.col("clean_text").alias("text")
     )
     # 4. near-dup dedup (min-id canonical per cluster)
-    neared = near_dup_dedup(spanless, "doc_id", "text", threshold=0.8)
+    neared = near_dup_dedup(spanless, threshold=0.8)
     # 5. quality gate
     gated = neared.filter(
-        (token_count("text") >= 8) & (stopword_ratio("text") >= 0.05)
+        (token_count() >= 8) & (stopword_ratio() >= 0.05)
     )
     # 6. PII redaction (rewrite, not drop)
     redacted = gated.select(
@@ -138,7 +138,7 @@ def _run_chain(spark):
     # 7. benchmark decontamination
     bench = spark.createDataFrame([(0, EVAL_Q)], "doc_id long, text string")
     cleaned = decontaminate(
-        redacted, bench, k=3, max_contamination=0.3
+        redacted, bench, max_contamination=0.3
     )
     # 8. leakage-safe split (pairs recomputed on the cleaned corpus)
     # Split threshold BELOW the dedup threshold: pairs in (0.5, 0.8)

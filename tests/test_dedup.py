@@ -37,7 +37,7 @@ def test_ngram_jaccard_finds_planted_pair(spark):
     pairs = {
         (r["id1"], r["id2"]): r["jaccard"]
         for r in dedup.ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.5
+            docs, threshold=0.5
         ).collect()
     }
     assert (1, 4) in pairs and pairs[(1, 4)] == 1.0  # exact dup
@@ -50,7 +50,7 @@ def test_minhash_lsh_recalls_planted_pairs(spark):
     got = {
         (r["id1"], r["id2"])
         for r in dedup.minhash_lsh_pairs(
-            docs, "doc_id", "text", threshold=0.5
+            docs, threshold=0.5
         ).collect()
     }
     assert (1, 4) in got and (1, 2) in got
@@ -65,13 +65,13 @@ def test_minhash_matches_exact_jaccard_on_fixture(spark, sf_dir):
     exact = {
         (r["id1"], r["id2"])
         for r in dedup.ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.8
+            docs, threshold=0.8
         ).collect()
     }
     lsh = {
         (r["id1"], r["id2"])
         for r in dedup.minhash_lsh_pairs(
-            docs, "doc_id", "text", threshold=0.8
+            docs, threshold=0.8
         ).collect()
     }
     assert lsh == exact
@@ -84,7 +84,7 @@ def test_ngram_jaccard_hot_shingle_cap(spark):
     pairs = {
         (r["id1"], r["id2"])
         for r in dedup.ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.5, max_doc_freq=3
+            docs, threshold=0.5, max_doc_freq=3
         ).collect()
     }
     assert (1, 4) in pairs and (1, 2) in pairs
@@ -105,10 +105,10 @@ def test_hot_shingle_cap_bounds_pair_blowup(spark):
     # threshold=0 surfaces every generated pair, so the counts below measure
     # candidate generation itself, not the jaccard filter.
     unguarded = dedup.ngram_jaccard_pairs(
-        docs, "doc_id", "text", threshold=0.0
+        docs, threshold=0.0
     ).count()
     guarded = dedup.ngram_jaccard_pairs(
-        docs, "doc_id", "text", threshold=0.0, max_doc_freq=10
+        docs, threshold=0.0, max_doc_freq=10
     ).count()
     assert unguarded == n * (n - 1) // 2  # the quadratic clique
     assert guarded == 0  # hot shingle dropped from pairing
@@ -140,12 +140,12 @@ def test_capped_grouped_emission_matches_join_form(spark):
     capped = {
         (r["id1"], r["id2"], r["jaccard"])
         for r in dedup.ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.0, max_doc_freq=cap
+            docs, threshold=0.0, max_doc_freq=cap
         ).collect()
     }
     # Reference: join form with the cap applied via its own (pre-refactor)
     # anti-join semantics — reconstructed from the uncapped index.
-    idx = dedup.shingle_index(docs, "doc_id", "text")
+    idx = dedup.shingle_index(docs)
     hot = (
         idx.groupBy("shingle")
         .agg(F.count("*").alias("df"))
@@ -153,13 +153,13 @@ def test_capped_grouped_emission_matches_join_form(spark):
         .select("shingle")
     )
     cool = idx.join(hot, "shingle", "left_anti")
-    sizes = dedup.doc_shingles(docs, "doc_id", "text").select(
+    sizes = dedup.doc_shingles(docs).select(
         "doc_id", F.size("hs").alias("n_sh")
     )
     expected = {
         (r["id1"], r["id2"], r["jaccard"])
         for r in dedup.ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.0, index=cool, sizes=sizes
+            docs, threshold=0.0, index=cool, sizes=sizes
         ).collect()
     }
     assert capped == expected
@@ -171,13 +171,13 @@ def test_simhash_near_dups(spark):
     docs = make_docs(spark)
     sig = {
         r["doc_id"]: r["simhash"]
-        for r in dedup.simhash_signatures(docs, "doc_id", "text").collect()
+        for r in dedup.simhash_signatures(docs).collect()
     }
     assert sig[1] == sig[4]  # identical text -> identical signature
     pairs = {
         (r["id1"], r["id2"]): r["hamming"]
         for r in dedup.simhash_near_dup_pairs(
-            docs, "doc_id", "text", max_hamming=10
+            docs, max_hamming=10
         ).collect()
     }
     assert pairs[(1, 4)] == 0
@@ -198,7 +198,7 @@ def test_zero_vector_cosine_is_null_not_nan(spark):
     pairs = {
         (r["id1"], r["id2"])
         for r in dedup.embedding_near_dup_pairs(
-            emb, "vec_id", "embedding", threshold=0.9
+            emb, threshold=0.9
         ).collect()
     }
     assert (1, 2) in pairs
@@ -282,13 +282,13 @@ def test_simhash_pigeonhole_holds_above_three(spark):
     docs = make_docs(spark)
     sig = {
         r["doc_id"]: r["simhash"]
-        for r in dedup.simhash_signatures(docs, "doc_id", "text").collect()
+        for r in dedup.simhash_signatures(docs).collect()
     }
     h12 = bin(sig[1] ^ sig[2]).count("1")
     pairs = {
         (r["id1"], r["id2"])
         for r in dedup.simhash_near_dup_pairs(
-            docs, "doc_id", "text", max_hamming=max(h12, 4)
+            docs, max_hamming=max(h12, 4)
         ).collect()
     }
     assert (1, 2) in pairs  # found at its exact hamming distance
@@ -308,12 +308,12 @@ def test_simhash_128_exact_recall_and_low_word_identity(spark):
     docs = make_docs(spark)
     s64 = {
         r["doc_id"]: r["simhash"]
-        for r in dedup.simhash_signatures(docs, "doc_id", "text").collect()
+        for r in dedup.simhash_signatures(docs).collect()
     }
     s128 = {
         r["doc_id"]: (r["simhash"], r["simhash_hi"])
         for r in dedup.simhash_signatures(
-            docs, "doc_id", "text", bits=128
+            docs, bits=128
         ).collect()
     }
     assert {k: v[0] for k, v in s128.items()} == s64
@@ -332,7 +332,7 @@ def test_simhash_128_exact_recall_and_low_word_identity(spark):
         got = {
             (r["id1"], r["id2"]): r["hamming"]
             for r in dedup.simhash_near_dup_pairs(
-                docs, "doc_id", "text", max_hamming=mh, bits=128
+                docs, max_hamming=mh, bits=128
             ).collect()
         }
         assert set(got) == brute, f"mh={mh}"
@@ -359,7 +359,7 @@ def test_simhash_strategies_emit_identical_pairs(spark):
                 (r["simhash_hi"] & mask) if bits == 128 else 0,
             )
             for r in dedup.simhash_signatures(
-                docs, "doc_id", "text", bits=bits
+                docs, bits=bits
             ).collect()
         }
         brute = {
@@ -371,7 +371,7 @@ def test_simhash_strategies_emit_identical_pairs(spark):
         got = [
             (r["id1"], r["id2"], r["hamming"])
             for r in dedup.simhash_near_dup_pairs(
-                docs, "doc_id", "text", mh, bits
+                docs, mh, bits
             ).collect()
         ]
         assert len(got) == len(set(got)), (mh, bits)
@@ -391,7 +391,7 @@ def test_embedding_near_dups_planted(spark):
     pairs = {
         (r["id1"], r["id2"]): r["cosine"]
         for r in dedup.embedding_near_dup_pairs(
-            emb, "vec_id", "embedding", threshold=0.95
+            emb, threshold=0.95
         ).collect()
     }
     assert (1, 2) in pairs and pairs[(1, 2)] > 0.99
@@ -414,8 +414,8 @@ def test_grouped_capped_path_matches_capped_join_form_on_skewed_corpora(
         return sorted(tuple(r) for r in out.collect())
 
     def check(docs, threshold, cap):
-        idx = dedup.shingle_index(docs, "doc_id", "text")
-        sizes = dedup.doc_shingles(docs, "doc_id", "text").select(
+        idx = dedup.shingle_index(docs)
+        sizes = dedup.doc_shingles(docs).select(
             "doc_id", F.size("hs").alias("n_sh")
         )
         hot = (
@@ -427,13 +427,13 @@ def test_grouped_capped_path_matches_capped_join_form_on_skewed_corpora(
         cool = idx.join(hot, "shingle", "left_anti")
         ref = rows_of(
             dedup.ngram_jaccard_pairs(
-                docs, "doc_id", "text", threshold=threshold,
+                docs, threshold=threshold,
                 index=cool, sizes=sizes,
             )
         )
         sized = rows_of(
             dedup.ngram_jaccard_pairs(
-                docs, "doc_id", "text", threshold=threshold,
+                docs, threshold=threshold,
                 max_doc_freq=cap,
             )
         )
@@ -478,8 +478,6 @@ def test_length_filter_survives_int32_scale_documents(spark):
     ]
     out = dedup.ngram_jaccard_pairs(
         spark.createDataFrame(rows, "doc_id long, text string"),
-        "doc_id",
-        "text",
         threshold=0.8,
         max_doc_freq=100,
     ).collect()
@@ -499,10 +497,3 @@ def test_exact_dedup_distinguishes_null_placement(spark):
     got = sorted((r["id"], r["k1"], r["k2"]) for r in out.collect())
     assert got == [(1, "a", None), (2, None, "a")]
 
-
-def test_band_buckets_rejects_indivisible_bands(spark):
-    import pytest as _pytest
-
-    sig = spark.createDataFrame([(1, [0] * 64)], "doc_id long, mins array<long>")
-    with _pytest.raises(ValueError, match="not divisible"):
-        dedup.band_buckets(sig, "doc_id", num_hashes=64, bands=12)

@@ -128,3 +128,12 @@ def test_vocab_rank_window_input_is_pre_limited(spark, docs_df):
     )
     w = plan.index("Window")
     assert "GlobalLimit 7" in plan[w:], plan
+    # NULL text coalesces to '' BEFORE tokenizing, so token elements are
+    # non-nullable and the vocab join needs no isnotnull(token) filter.
+    enc_plan = (
+        encode_documents(docs_df, build_vocab(docs_df, vocab_size=7))
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    assert "isnotnull(token" not in plan + enc_plan, enc_plan

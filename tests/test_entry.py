@@ -1,12 +1,13 @@
 """Driver-contract smoke tests: entry() runs, every query runs at sf0.001,
 oracle_sql keys are a subset of queries keys, every package module and
 top-level definition is reachable from an entry point, every argument a
-test sets is also set outside the tests, and every defaulted parameter is
-set by some call."""
+test sets is also set outside the tests, and no parameter takes one
+constant at every call."""
 
 from __future__ import annotations
 
 import ast
+import re
 import sys
 from pathlib import Path
 
@@ -179,13 +180,19 @@ def test_every_package_definition_is_used_outside_tests():
 
 
 def _signatures(modules: dict[str, tuple[Path, bool]]) -> dict[str, list[str]]:
-    """Positional parameter names of every top-level function, class (its
+    """Parameter names of every top-level function, class (its
     ``__init__``, or a dataclass's annotated fields) and method of the
     reachable package modules. ``self``/``cls`` are dropped: calls bind
-    the instance implicitly."""
+    the instance implicitly. Keyword-only names follow a ``*`` entry
+    (``*args`` for a star parameter), where positional binding stops."""
     def params(fn: ast.FunctionDef, method: bool) -> list[str]:
-        names = [p.arg for p in (*fn.args.posonlyargs, *fn.args.args)]
-        return names[1:] if method and names[:1] in (["self"], ["cls"]) else names
+        a = fn.args
+        names = [p.arg for p in (*a.posonlyargs, *a.args)]
+        if method and names[:1] in (["self"], ["cls"]):
+            names = names[1:]
+        if a.vararg or a.kwonlyargs:
+            names.append("*" + (a.vararg.arg if a.vararg else ""))
+        return names + [p.arg for p in a.kwonlyargs]
 
     sigs: dict[str, list[str]] = {}
     for mod in _reachable_modules(modules):
@@ -207,16 +214,19 @@ def _signatures(modules: dict[str, tuple[Path, bool]]) -> dict[str, list[str]]:
     return sigs
 
 
-def _parameters_set(path: Path, module: str, is_pkg: bool,
-                    modules: dict, sigs: dict[str, list[str]]) -> set[tuple[str, str]]:
-    """(package callable, parameter) pairs that calls in ``path`` set, by
-    keyword or by position. Names resolve through imports (``as`` aliases
-    included), the module's own definitions, subclasses of package
-    classes, and variables assigned from a package constructor (plus
-    ``self`` inside a package class); ``<expr>.name(...)`` on an
-    unresolved receiver matches a package function the file imports as
-    ``name`` (a namespace of imports). Calls with ``**kw`` are skipped;
-    positional arguments stop mapping at the first ``*args``."""
+def _parameters_set(path: Path, module: str, is_pkg: bool, modules: dict,
+                    sigs: dict[str, list[str]]) -> set[tuple[str, str, str | None]]:
+    """(package callable, parameter, argument source) for every argument
+    calls in ``path`` pass, by keyword or by position, and (callable,
+    parameter, None) for each parameter a call leaves out. Names resolve
+    through imports (``as`` aliases included), the module's own
+    definitions, subclasses of package classes, and variables assigned
+    from a package constructor (plus ``self`` inside a package class);
+    ``<expr>.name(...)`` on an unresolved receiver matches a package
+    function the file imports as ``name`` (a namespace of imports). A
+    call the scan cannot bind in full yields (callable, "", None): one
+    with ``**kw`` yields nothing else, one with ``*args`` yields the
+    arguments before it and its keywords."""
     tree = ast.parse(path.read_text(), str(path))
     here = module.split(".") if is_pkg else module.split(".")[:-1]
 
@@ -283,22 +293,29 @@ def _parameters_set(path: Path, module: str, is_pkg: bool,
             if cls is not None and f"{cls}.__init__" in sigs:
                 bound[node.targets[0].id] = ("def", cls)
 
-    found: set[tuple[str, str]] = set()
+    found: set[tuple[str, str, str | None]] = set()
 
     def scan(scope: ast.AST) -> None:
         for call in ast.walk(scope):
-            if not isinstance(call, ast.Call) or any(
-                    k.arg is None for k in call.keywords):
-                continue
-            target = resolve(call.func)
+            target = resolve(call.func) if isinstance(call, ast.Call) else None
             if target is None:
                 continue
+            if any(k.arg is None for k in call.keywords):
+                found.add((target, "", None))
+                continue
             names = sigs[target]
-            for i, arg in enumerate(call.args):
-                if isinstance(arg, ast.Starred) or i >= len(names):
+            given: dict[str, ast.expr] = {}
+            for name, arg in zip(names, call.args):
+                if isinstance(arg, ast.Starred) or name.startswith("*"):
                     break
-                found.add((target, names[i]))
-            found.update((target, k.arg) for k in call.keywords)
+                given[name] = arg
+            given.update((k.arg, k.value) for k in call.keywords)
+            found.update((target, n, ast.unparse(v)) for n, v in given.items())
+            if any(isinstance(a, ast.Starred) for a in call.args):
+                found.add((target, "", None))
+            else:
+                found.update((target, n, None) for n in names
+                             if n not in given and not n.startswith("*"))
 
     for node in tree.body:
         if isinstance(node, ast.ClassDef) and node.name in bound:
@@ -316,7 +333,6 @@ _TEST_ONLY_PARAMS = {
     ("operators.dedup.ngram_jaccard_pairs", "sizes"),
     # batch reference at the incremental store's LSH parameters
     ("operators.dedup.embedding_near_dup_pairs", "n_bits"),
-    ("operators.dedup.embedding_near_dup_pairs", "n_tables"),
     # k=2 lets the LSH ⊆ exact property run on two-token documents
     ("operators.dedup.minhash_lsh_pairs", "k"),
     # the store's meta round-trip and dimension check at small sizes
@@ -328,8 +344,6 @@ _TEST_ONLY_PARAMS = {
     ("operators.leakage.leakage_safe_split", "pairs"),
     # the round-not-truncate rule needs a fine 1/buckets grid
     ("operators.sampling.with_split", "buckets"),
-    # a small cell count keeps the fixture's cells populated
-    ("operators.semdedup.semantic_dedup", "n_clusters"),
     # the per-cell memory guard and the in-kernel re-split need bounds
     # smaller than the fixture's cells
     ("operators.semdedup.semantic_dedup_pairs", "cell_cap"),
@@ -346,6 +360,31 @@ def _test_files() -> list[Path]:
             *sorted((_REPO / "perfbench").glob("test_*.py"))]
 
 
+def _live_calls(modules: dict, sigs: dict[str, list[str]]
+                ) -> set[tuple[str, str, str | None]]:
+    """What :func:`_parameters_set` finds in the entry points and the
+    reachable package modules."""
+    found = set()
+    for f in _roots():
+        found |= _parameters_set(f, f.stem, False, modules, sigs)
+    for mod in _reachable_modules(modules):
+        path, is_pkg = modules[mod]
+        found |= _parameters_set(path, mod, is_pkg, modules, sigs)
+    return found
+
+
+def _test_calls(modules: dict, sigs: dict[str, list[str]]
+                ) -> set[tuple[str, str, str | None]]:
+    found = set()
+    for f in _test_files():
+        found |= _parameters_set(f, f.stem, False, modules, sigs)
+    return found
+
+
+def _is_kept_test_only(fn: str) -> bool:
+    return any(fn == k or fn.startswith(k + ".") for k in _TEST_ONLY_KEPT)
+
+
 def test_every_keyword_a_test_passes_is_passed_outside_tests():
     """A parameter that only tests set selects a branch no entry point
     runs. Every (package callable, parameter) pair a test sets must also
@@ -354,32 +393,25 @@ def test_every_keyword_a_test_passes_is_passed_outside_tests():
     exempt."""
     modules = _package_modules()
     sigs = _signatures(modules)
-    live: set[tuple[str, str]] = set()
-    for f in _roots():
-        live |= _parameters_set(f, f.stem, False, modules, sigs)
-    for mod in _reachable_modules(modules):
-        path, is_pkg = modules[mod]
-        live |= _parameters_set(path, mod, is_pkg, modules, sigs)
-    tested: set[tuple[str, str]] = set()
-    for f in _test_files():
-        tested |= _parameters_set(f, f.stem, False, modules, sigs)
-    test_only = {
-        (fn, p) for fn, p in tested - live
-        if not any(fn == k or fn.startswith(k + ".") for k in _TEST_ONLY_KEPT)
-    }
+    live = {(fn, p) for fn, p, src in _live_calls(modules, sigs) if src}
+    tested = {(fn, p) for fn, p, src in _test_calls(modules, sigs) if src}
+    test_only = {(fn, p) for fn, p in tested - live
+                 if not _is_kept_test_only(fn)}
     assert test_only == _TEST_ONLY_PARAMS
 
 
 def _declared_defaults(modules: dict[str, tuple[Path, bool]]
-                       ) -> tuple[set[tuple[str, str]], set[str]]:
-    """(package callable, parameter) pairs whose parameter has a default,
+                       ) -> tuple[dict[tuple[str, str], str], set[str], set[str]]:
+    """The source of each default, keyed by (package callable, parameter)
     over the callables :func:`_signatures` names (a class's ``__init__``
-    under the class's name too), and every reachable function, nested or
-    lambda included, that declares ``**kwargs``. A dataclass field's
-    default is the record's initial state, not a choice a caller makes,
-    so fields are not counted."""
-    defaulted: set[tuple[str, str]] = set()
+    under the class's name); every reachable function, nested or lambda
+    included, that declares ``**kwargs``; and the top-level
+    ``pandas_udf`` functions. A dataclass field's default is the
+    record's initial state, not a choice a caller makes, so fields are
+    not counted."""
+    defaults: dict[tuple[str, str], str] = {}
     var_kw: set[str] = set()
+    udfs: set[str] = set()
     for mod in _reachable_modules(modules):
         path = modules[mod][0]
         rel = mod.removeprefix(_PKG + ".")
@@ -391,23 +423,35 @@ def _declared_defaults(modules: dict[str, tuple[Path, bool]]
             fns: list[tuple[str, ast.FunctionDef]] = []
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 fns.append((f"{rel}.{node.name}", node))
+                if any(ast.unparse(getattr(d, "func", d)).endswith("pandas_udf")
+                       for d in node.decorator_list):
+                    udfs.add(f"{rel}.{node.name}")
             elif isinstance(node, ast.ClassDef):
                 for m in node.body:
                     if isinstance(m, ast.FunctionDef):
-                        fns.append((f"{rel}.{node.name}.{m.name}", m))
-                        if m.name == "__init__":
-                            fns.append((f"{rel}.{node.name}", m))
+                        fns.append((f"{rel}.{node.name}" if m.name == "__init__"
+                                    else f"{rel}.{node.name}.{m.name}", m))
             for qual, fn in fns:
                 a = fn.args
                 pos = [*a.posonlyargs, *a.args]
-                named = pos[len(pos) - len(a.defaults):] + [
-                    p for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
-                defaulted |= {(qual, p.arg) for p in named}
-    return defaulted, var_kw
+                named = [*zip(pos[len(pos) - len(a.defaults):], a.defaults),
+                         *((p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                           if d is not None)]
+                defaults |= {(qual, p.arg): ast.unparse(d) for p, d in named}
+    return defaults, var_kw, udfs
 
 
-# Defaulted parameters no call sets, each kept on purpose.
-_UNSET_KEPT = {
+def _is_constant(src: str) -> bool:
+    """A literal, or an ALL-CAPS module constant, bare or as an attribute."""
+    try:
+        ast.literal_eval(src)
+    except (ValueError, TypeError, SyntaxError):
+        return re.fullmatch(r"(\w+\.)*_*[A-Z][A-Z0-9_]*", src) is not None
+    return True
+
+
+# Parameters that take one constant at every call, each kept on purpose.
+_ONE_VALUED_KEPT = {
     # the CLI's own entry: argparse reads sys.argv when no list is passed
     ("__main__.main", "argv"),
     # a deployment setting (cluster URL), not a choice the engine makes
@@ -418,22 +462,33 @@ _UNSET_KEPT = {
 }
 
 
-def test_every_defaulted_parameter_is_set_by_some_caller():
-    """A default no call overrides is a constant in a parameter's clothes,
-    and the branches only another value would select are dead. Every
-    defaulted (package callable, parameter) pair must be set by an entry
-    point, reachable package code or a test, or be one of the kept pairs.
-    ``**kwargs`` is banned outright: the scan cannot see through it."""
+def test_no_parameter_takes_one_constant_at_every_call():
+    """A parameter every call sets to the same constant is a constant in a
+    parameter's clothes, and the branches only another value would select
+    are dead. Over the calls of the entry points, reachable package code
+    and the tests, an omitted argument counts as its default, so a
+    callable nothing calls contributes its defaults and a default no call
+    overrides is one-valued. No pair may take one constant (a literal or
+    an ALL-CAPS module constant) at every call, except the kept pairs.
+    Exempt: the kept test-only definitions, ``pandas_udf`` functions
+    (their parameter is the data batch) and any callable with a call the
+    scan cannot bind. ``**kwargs`` is banned outright: the scan cannot
+    see through it."""
     modules = _package_modules()
     sigs = _signatures(modules)
-    defaulted, var_kw = _declared_defaults(modules)
+    defaults, var_kw, udfs = _declared_defaults(modules)
     assert var_kw == set()
-    set_somewhere: set[tuple[str, str]] = set()
-    for f in _roots():
-        set_somewhere |= _parameters_set(f, f.stem, False, modules, sigs)
-    for mod in _reachable_modules(modules):
-        path, is_pkg = modules[mod]
-        set_somewhere |= _parameters_set(path, mod, is_pkg, modules, sigs)
-    for f in _test_files():
-        set_somewhere |= _parameters_set(f, f.stem, False, modules, sigs)
-    assert defaulted - set_somewhere == _UNSET_KEPT
+    calls = _live_calls(modules, sigs) | _test_calls(modules, sigs)
+    called = {fn for fn, _, _ in calls}
+    values: dict[tuple[str, str], set[str | None]] = {
+        pair: {d} for pair, d in defaults.items() if pair[0] not in called}
+    for fn, p, src in calls:
+        if p:
+            values.setdefault((fn, p), set()).add(
+                defaults.get((fn, p)) if src is None else src)
+    exempt = udfs | {fn for fn, p, _ in calls if not p}
+    one_valued = {
+        (fn, p) for (fn, p), vs in values.items()
+        if len(vs) == 1 and None not in vs and _is_constant(*vs)
+        and fn not in exempt and not _is_kept_test_only(fn)}
+    assert one_valued == _ONE_VALUED_KEPT

@@ -53,7 +53,7 @@ def events(spark):
 def test_hand_built_journeys(spark, events):
     times = {
         r["user_id"]: (r["t1"], r["t2"], r["t3"])
-        for r in funnel_completion_times(events, STEPS, "1 hour").collect()
+        for r in funnel_completion_times(events, STEPS).collect()
     }
     assert set(times) == {1, 2, 3, 4, 6}
     assert times[1][2] is not None
@@ -64,7 +64,7 @@ def test_hand_built_journeys(spark, events):
 
     conv = {
         r["step"]: r["n_users"]
-        for r in funnel_conversion(events, STEPS, "1 hour").collect()
+        for r in funnel_conversion(events, STEPS).collect()
     }
     assert conv == {"view": 5, "click": 3, "purchase": 2}
 
@@ -105,7 +105,7 @@ def test_randomized_against_python(spark):
     )
     got = {
         r["step"]: r["n_users"]
-        for r in funnel_conversion(ev, STEPS, "1 hour").collect()
+        for r in funnel_conversion(ev, STEPS).collect()
     }
     want = _py_funnel(rows, STEPS, 60)
     assert got == want

@@ -38,7 +38,7 @@ def corpus_and_batch(spark):
 def index_path(spark, corpus_and_batch, tmp_path_factory):
     _, corpus, _ = corpus_and_batch
     path = str(tmp_path_factory.mktemp("mh_index") / "idx")
-    incremental.write_minhash_index(corpus, "doc_id", "text", path)
+    incremental.write_minhash_index(corpus, path)
     return path
 
 
@@ -54,11 +54,11 @@ def test_incremental_pairs_match_batch_operator_on_union(
     the pair sets (and jaccard values) must be identical."""
     docs, corpus, batch = corpus_and_batch
     got = incremental.incremental_near_dup_pairs(
-        spark, batch, "doc_id", "text", index_path
+        spark, batch, index_path
     )
 
     batch_ids = {r["doc_id"] for r in batch.select("doc_id").collect()}
-    union_pairs = minhash_lsh_pairs(docs, "doc_id", "text")
+    union_pairs = minhash_lsh_pairs(docs)
     want = {
         (r["id1"], r["id2"], r["jaccard"])
         for r in union_pairs.collect()
@@ -94,11 +94,11 @@ def test_probe_plan_broadcasts_batch_and_prunes_sets(
 
     # (1) Probe shape, on the un-checkpointed candidate join (the
     # operator checkpoints it, which hides the join from later plans).
-    per_doc = doc_shingles(batch, "doc_id", "text")
-    sig = minhash_signatures(batch, "doc_id", "text", per_doc=per_doc)
-    new_buckets = band_buckets(sig, "doc_id")
+    per_doc = doc_shingles(batch)
+    sig = minhash_signatures(batch, per_doc=per_doc)
+    new_buckets = band_buckets(sig)
     cand = incremental._cross_candidates(
-        spark, new_buckets, index_path, "doc_id"
+        spark, new_buckets, index_path
     )
     cand.write.format("noop").mode("overwrite").save()
     cand_plan = cand._jdf.queryExecution().executedPlan().toString()
@@ -112,7 +112,7 @@ def test_probe_plan_broadcasts_batch_and_prunes_sets(
     # carries a partition filter (isin over the collected candidate
     # buckets) — candidate directories are read, not the whole store.
     pairs = incremental.incremental_near_dup_pairs(
-        spark, batch, "doc_id", "text", index_path
+        spark, batch, index_path
     )
     pairs.write.format("noop").mode("overwrite").save()
     plan = pairs._jdf.queryExecution().executedPlan().toString()
@@ -164,7 +164,7 @@ def emb_index_path(spark, emb_corpus_and_batch, tmp_path_factory):
     _, corpus, _ = emb_corpus_and_batch
     path = str(tmp_path_factory.mktemp("emb_index") / "idx")
     incremental.write_embedding_index(
-        corpus, "vec_id", "embedding", path, n_bits=8, n_tables=4
+        corpus, path, n_bits=8, n_tables=4
     )
     return path
 
@@ -182,11 +182,11 @@ def test_embedding_incremental_matches_batch_operator(
 
     emb, _, batch = emb_corpus_and_batch
     got = incremental.incremental_embedding_near_dups(
-        spark, batch, "vec_id", "embedding", emb_index_path, threshold=0.9
+        spark, batch, emb_index_path
     )
     batch_ids = {r["vec_id"] for r in batch.select("vec_id").collect()}
     union_pairs = embedding_near_dup_pairs(
-        emb, "vec_id", "embedding", threshold=0.9, n_bits=8, n_tables=4
+        emb, threshold=0.9, n_bits=8
     )
     want = {
         (r["id1"], r["id2"], r["cosine"])
@@ -235,17 +235,17 @@ def test_probe_matches_batch_on_random_corpus(spark, tmp_path, seed):
     corpus = docs.filter(F.col("doc_id") % m != 0)
     batch = docs.filter(F.col("doc_id") % m == 0)
     path = str(tmp_path / "idx")
-    incremental.write_minhash_index(corpus, "doc_id", "text", path)
+    incremental.write_minhash_index(corpus, path)
 
     got = _pair_set(
         incremental.incremental_near_dup_pairs(
-            spark, batch, "doc_id", "text", path
+            spark, batch, path
         )
     )
     batch_ids = {r["doc_id"] for r in batch.select("doc_id").collect()}
     want = {
         p
-        for p in _pair_set(minhash_lsh_pairs(docs, "doc_id", "text"))
+        for p in _pair_set(minhash_lsh_pairs(docs))
         if p[0] in batch_ids or p[1] in batch_ids
     }
     assert got == want
@@ -260,7 +260,7 @@ def test_meta_file_written_driver_side_round_trips(spark, tmp_path):
     )
     path = str(tmp_path / "emb_idx")
     incremental.write_embedding_index(
-        df, "vec_id", "embedding", path, n_bits=9, n_tables=2, dim=4, seed=7
+        df, path, n_bits=9, n_tables=2, dim=4, seed=7
     )
     meta = incremental._read_embedding_meta(spark, path)
     assert meta == {"n_bits": 9, "n_tables": 2, "dim": 4, "seed": 7}
@@ -287,7 +287,7 @@ def test_meta_overwrite_drops_stale_part_files(spark, tmp_path):
     assert any(f.startswith("part-") for f in os.listdir(f"{path}/meta"))
 
     incremental.write_embedding_index(
-        df, "vec_id", "embedding", path, n_bits=9, n_tables=2, dim=4, seed=7
+        df, path, n_bits=9, n_tables=2, dim=4, seed=7
     )
     files = os.listdir(f"{path}/meta")
     assert [f for f in files if not f.endswith(".crc")] == ["meta.json"]
@@ -295,6 +295,59 @@ def test_meta_overwrite_drops_stale_part_files(spark, tmp_path):
     assert incremental._read_embedding_meta(spark, path) == {
         "n_bits": 9, "n_tables": 2, "dim": 4, "seed": 7,
     }
+
+
+@pytest.mark.parametrize("crash_at", ["delete", "rename"])
+def test_meta_write_crash_leaves_old_file_or_none(
+    spark, tmp_path, monkeypatch, crash_at
+):
+    """Crash matrix of the meta file's temp-then-rename write. Interrupted
+    after the temp write (the old file's delete never runs) the complete
+    old ``meta.json`` stays; interrupted after the delete (the rename never
+    runs) ``meta.json`` is absent. Either way the reader never returns the
+    dot-prefixed temp file's payload."""
+    import json
+    import os
+
+    from pyspark.errors import AnalysisException
+
+    path = str(tmp_path / "emb_idx")
+    meta_file = f"{path}/meta/meta.json"
+    old = {"n_bits": 3, "n_tables": 1, "dim": 4, "seed": 1}
+    incremental._write_json_file(spark, meta_file, old)
+
+    class Crash(Exception):
+        pass
+
+    fs_for = incremental._fs_for
+
+    def crashing_fs_for(spark, p):
+        fs, hpath, jvm = fs_for(spark, p)
+
+        class CrashingFS:
+            def __getattr__(self, name):
+                if name == crash_at:
+                    raise Crash(name)
+                return getattr(fs, name)
+
+        return CrashingFS(), hpath, jvm
+
+    monkeypatch.setattr(incremental, "_fs_for", crashing_fs_for)
+    with pytest.raises(Crash):
+        incremental._write_json_file(
+            spark, meta_file, {"n_bits": 9, "n_tables": 2, "dim": 4, "seed": 7}
+        )
+    monkeypatch.undo()
+
+    assert os.path.exists(f"{path}/meta/.meta.json.tmp")
+    if crash_at == "delete":
+        with open(meta_file) as f:
+            assert json.load(f) == old
+        assert incremental._read_embedding_meta(spark, path) == old
+    else:
+        assert not os.path.exists(meta_file)
+        with pytest.raises(AnalysisException):
+            incremental._read_embedding_meta(spark, path)
 
 
 def test_concurrent_overwrite_writes_inherit_job_group(spark, tmp_path):
@@ -311,7 +364,7 @@ def test_concurrent_overwrite_writes_inherit_job_group(spark, tmp_path):
     sc.setJobGroup("emb-index-build", "overwrite build")
     try:
         incremental.write_embedding_index(
-            df, "vec_id", "embedding", str(tmp_path / "emb_idx"), dim=4
+            df, str(tmp_path / "emb_idx"), dim=4
         )
     finally:
         sc._jsc.clearJobGroup()

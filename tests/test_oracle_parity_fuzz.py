@@ -56,13 +56,13 @@ def test_text_feature_pack_matches_duckdb_on_random_strings(spark):
         sdf.select(
             "doc_id",
             F.length("text").alias("n_chars"),
-            TX.token_count("text").alias("ws_tokens"),
-            TX.bpe_token_count("text").cast("int").alias("bpe_tokens"),
+            TX.token_count().alias("ws_tokens"),
+            TX.bpe_token_count().cast("int").alias("bpe_tokens"),
             TX.doc_fingerprint("text").alias("fingerprint"),
-            F.round(TX.dup_word_frac("text"), 4).alias("dup_word_frac"),
-            F.round(TX.top_word_frac("text"), 4).alias("top_word_frac"),
+            F.round(TX.dup_word_frac(), 4).alias("dup_word_frac"),
+            F.round(TX.top_word_frac(), 4).alias("top_word_frac"),
             F.round(TX.punct_ratio("text"), 4).alias("punct_ratio"),
-            F.round(TX.stopword_ratio("text"), 4).alias("stopword_ratio"),
+            F.round(TX.stopword_ratio(), 4).alias("stopword_ratio"),
         )
         .toPandas()
         .set_index("doc_id")
@@ -125,7 +125,7 @@ def test_simhash_signatures_match_duckdb_on_random_strings(spark):
     pdf = pd.DataFrame({"doc_id": range(len(docs)), "text": docs})
     got = (
         dedup.simhash_signatures(
-            spark.createDataFrame(pdf), "doc_id", "text"
+            spark.createDataFrame(pdf)
         )
         .toPandas()
         .set_index("doc_id")["simhash"]
@@ -175,7 +175,7 @@ def test_simhash_128_signatures_match_duckdb_on_random_strings(spark):
     pdf = pd.DataFrame({"doc_id": range(len(docs)), "text": docs})
     got = (
         dedup.simhash_signatures(
-            spark.createDataFrame(pdf), "doc_id", "text", bits=128
+            spark.createDataFrame(pdf), bits=128
         )
         .toPandas()
         .set_index("doc_id")
@@ -232,7 +232,7 @@ def test_lsh_pairs_match_exact_jaccard_on_random_corpus(spark):
     got = {
         (r["id1"], r["id2"])
         for r in dedup.minhash_lsh_pairs(
-            spark.createDataFrame(pdf), "doc_id", "text", threshold=0.8
+            spark.createDataFrame(pdf), threshold=0.8
         ).collect()
     }
 
@@ -274,8 +274,6 @@ def test_ffd_packing_matches_duckdb_on_random_token_counts(spark):
     )
     packed = pack_sequences(
         spark.createDataFrame(pdf),
-        "doc_id",
-        "n_tokens",
         max_tokens=budget,
         num_partitions=n_part,
     ).collect()
@@ -329,8 +327,8 @@ def test_lsh_ann_topk_matches_duckdb_on_random_vectors(spark):
     got = [
         (r["vec_id"], r["cosine"])
         for r in similarity.lsh_topk(
-            sdf, "embedding", "vec_id", list(map(float, vecs[0])),
-            k=10, probe_hamming=1, exclude_ids=[0],
+            sdf, list(map(float, vecs[0])),
+            probe_hamming=1, exclude_ids=[0],
         ).collect()
     ]
 
@@ -573,7 +571,7 @@ def test_span_dedup_matches_duckdb_on_random_corpus(spark):
     got = {
         r.doc_id: (r.clean_text, r.n_tokens, r.n_removed_tokens, r.n_spans)
         for r in remove_duplicate_spans(
-            sdf, "doc_id", "text", window=window, max_df=max_df
+            sdf, window=window, max_df=max_df
         ).collect()
     }
 
@@ -645,7 +643,7 @@ def test_line_dedup_matches_duckdb_on_random_corpus(spark):
     docs.append((1000, None))                     # NULL text -> ''
 
     sdf = spark.createDataFrame(docs, "doc_id long, text string")
-    base = drop_duplicate_lines(sdf, "doc_id", "text", max_line_df=3)
+    base = drop_duplicate_lines(sdf)
     got = {
         r.doc_id: (r.clean_text, r.n_lines, r.n_kept) for r in base.collect()
     }

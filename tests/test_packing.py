@@ -11,14 +11,14 @@ from aws_snowflake_kinesis_airflow_pipeline_spark.operators import packing
 
 def docs_with_tokens(spark, sf_dir):
     return load_table(spark, sf_dir, "documents").select(
-        "doc_id", token_count("text").alias("n_tokens")
+        "doc_id", token_count().alias("n_tokens")
     )
 
 
 def test_packing_respects_budget_and_covers_all(spark, sf_dir):
     docs = docs_with_tokens(spark, sf_dir)
     max_tokens = 200
-    packed = packing.pack_sequences(docs, "doc_id", "n_tokens", max_tokens).cache()
+    packed = packing.pack_sequences(docs, max_tokens).cache()
     assert packed.count() == docs.count()  # every doc assigned exactly once
     over = (
         packed.groupBy("pack_id")
@@ -35,12 +35,12 @@ def test_packing_deterministic_across_runs(spark, sf_dir):
     docs = docs_with_tokens(spark, sf_dir)
     a = {
         (r["doc_id"], r["pack_id"])
-        for r in packing.pack_sequences(docs, "doc_id", "n_tokens", 300).collect()
+        for r in packing.pack_sequences(docs, 300).collect()
     }
     b = {
         (r["doc_id"], r["pack_id"])
         for r in packing.pack_sequences(
-            docs.repartition(7), "doc_id", "n_tokens", 300
+            docs.repartition(7), 300
         ).collect()
     }
     assert a == b
@@ -50,7 +50,7 @@ def test_oversized_doc_gets_singleton_pack(spark):
     docs = spark.createDataFrame(
         [(1, 500), (2, 50), (3, 60)], "doc_id long, n_tokens long"
     )
-    packed = {r["doc_id"]: r for r in packing.pack_sequences(docs, "doc_id", "n_tokens", 100).collect()}
+    packed = {r["doc_id"]: r for r in packing.pack_sequences(docs, 100).collect()}
     assert packed[1]["pack_tokens"] == 500  # alone in its pack
     assert packed[2]["pack_id"] != packed[1]["pack_id"]
 
@@ -58,7 +58,7 @@ def test_oversized_doc_gets_singleton_pack(spark):
 def test_mix_corpus_skips_absent_sources(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     mixed = packing.mix_corpus(
-        docs, "text", "source", {"src0": 1.0, "no_such_source": 1.0}
+        docs, {"src0": 1.0, "no_such_source": 1.0}
     )
     counts = {
         r["source"]
@@ -70,7 +70,7 @@ def test_mix_corpus_skips_absent_sources(spark, sf_dir):
 def test_mix_corpus_hits_weights(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     mixed = packing.mix_corpus(
-        docs, "text", "source", {"src0": 1.0, "src1": 1.0, "src2": 2.0}
+        docs, {"src0": 1.0, "src1": 1.0, "src2": 2.0}
     )
     counts = {
         r["source"]: r["n"]

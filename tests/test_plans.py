@@ -101,7 +101,7 @@ def test_shingle_index_is_shuffle_free(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     plan = (
-        shingle_index(docs, "doc_id", "text", 3)
+        shingle_index(docs)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -123,7 +123,7 @@ def test_minhash_signatures_are_shuffle_free(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     plan = (
-        minhash_signatures(docs, "doc_id", "text")
+        minhash_signatures(docs)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -184,7 +184,7 @@ def test_ivf_index_has_no_count_prepass(spark, monkeypatch):
 
     monkeypatch.setattr(DataFrame, "count", no_count)
     model, indexed = similarity.ivf_index(
-        emb, "embedding", n_clusters=4, max_fit_rows=150
+        emb, n_clusters=4, max_fit_rows=150
     )
     assert len(model.clusterCenters()) == 4
     assert indexed.where("ivf_cluster IS NULL").isEmpty()
@@ -249,7 +249,7 @@ def test_candidate_verify_joins_shuffle_not_broadcast(spark, sf_dir):
     from aws_snowflake_kinesis_airflow_pipeline_spark.operators import dedup
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_pairs(docs, "doc_id", "text")
+    pairs = dedup.minhash_lsh_pairs(docs)
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ShuffledHashJoin") >= 2, plan
     # The only BroadcastExchange allowed in the verify subtree is the

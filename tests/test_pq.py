@@ -34,18 +34,18 @@ def _clustered(spark, n_clusters=5, per=40, dim=64, noise=0.05, seed=7):
 
 
 def test_pq_encode_contract(spark, emb_df):
-    model = pq.pq_fit(emb_df, "embedding", m=16, n_codes=16, dim=64)
-    enc = pq.pq_encode(emb_df, "embedding", model)
+    model = pq.pq_fit(emb_df, m=16, n_codes=16, dim=64)
+    enc = pq.pq_encode(emb_df, model)
     rows = enc.select("vec_id", "pq_codes").collect()
     assert all(len(r["pq_codes"]) == 16 for r in rows)
     assert all(
         0 <= c < 16 for r in rows for c in r["pq_codes"]
     )
     # deterministic: second fit+encode produces identical codes
-    model2 = pq.pq_fit(emb_df, "embedding", m=16, n_codes=16, dim=64)
+    model2 = pq.pq_fit(emb_df, m=16, n_codes=16, dim=64)
     rows2 = {
         r["vec_id"]: r["pq_codes"]
-        for r in pq.pq_encode(emb_df, "embedding", model2).collect()
+        for r in pq.pq_encode(emb_df, model2).collect()
     }
     assert all(rows2[r["vec_id"]] == r["pq_codes"] for r in rows)
 
@@ -59,10 +59,10 @@ def test_pq_encode_null_and_wrong_length(spark):
         [(i, [float(i + j) for j in range(64)]) for i in range(20)],
         "vec_id long, embedding array<double>",
     )
-    model = pq.pq_fit(fit_src, "embedding", m=8, n_codes=4, dim=64)
+    model = pq.pq_fit(fit_src, m=8, n_codes=4, dim=64)
     got = {
         r["vec_id"]: r["pq_codes"]
-        for r in pq.pq_encode(df, "embedding", model).collect()
+        for r in pq.pq_encode(df, model).collect()
     }
     assert got[1] is not None and len(got[1]) == 8
     assert got[2] is None and got[3] is None
@@ -77,10 +77,10 @@ def test_pq_topk_neighborhood_recall_on_clustered_data(spark):
     within-cluster cosine."""
     emb, E = _clustered(spark)
     qvec = list(E[0])
-    model = pq.pq_fit(emb, "embedding", m=16, n_codes=16, dim=64)
-    enc = pq.pq_encode(emb, "embedding", model)
+    model = pq.pq_fit(emb, m=16, n_codes=16, dim=64)
+    enc = pq.pq_encode(emb, model)
     got = pq.pq_topk(
-        model, enc, "vec_id", qvec, k=10, exclude_ids=[0]
+        model, enc, qvec, k=10, exclude_ids=[0]
     ).collect()
     assert len(got) == 10
     # cluster 0 is ids 0..39
@@ -92,16 +92,16 @@ def test_pq_topk_on_uniform_fixture_returns_valid_topk(spark, emb_df):
     """Near-uniform fixture: valid ordered top-k with nontrivial overlap
     against exact (deterministic fit => pinned floor, measured 0.6)."""
     qvec = [float(x) for x in emb_df.filter("vec_id = 7").first()["embedding"]]
-    model = pq.pq_fit(emb_df, "embedding", m=16, n_codes=16, dim=64)
-    enc = pq.pq_encode(emb_df, "embedding", model)
-    got = pq.pq_topk(model, enc, "vec_id", qvec, k=10, exclude_ids=[7]).collect()
+    model = pq.pq_fit(emb_df, m=16, n_codes=16, dim=64)
+    enc = pq.pq_encode(emb_df, model)
+    got = pq.pq_topk(model, enc, qvec, k=10, exclude_ids=[7]).collect()
     assert len(got) == 10
     scores = [r["adc_cosine"] for r in got]
     assert scores == sorted(scores, reverse=True)
     exact = [
         r["vec_id"]
         for r in similarity.brute_force_topk(
-            emb_df, "embedding", "vec_id", qvec, k=10, exclude_ids=[7]
+            emb_df, qvec, k=10, exclude_ids=[7]
         ).collect()
     ]
     overlap = len({r["vec_id"] for r in got} & set(exact)) / 10
@@ -112,8 +112,8 @@ def test_adc_scoring_is_jvm_only(spark, emb_df):
     """The scoring scan must not contain a Python eval node: materialize the
     codes first, then assert the ADC top-k plan is UDF-free and compiles to
     TakeOrderedAndProject."""
-    model = pq.pq_fit(emb_df, "embedding", m=16, n_codes=16, dim=64)
-    enc_rows = pq.pq_encode(emb_df, "embedding", model).select(
+    model = pq.pq_fit(emb_df, m=16, n_codes=16, dim=64)
+    enc_rows = pq.pq_encode(emb_df, model).select(
         "vec_id", "pq_codes"
     )
     stored = spark.createDataFrame(
@@ -121,7 +121,7 @@ def test_adc_scoring_is_jvm_only(spark, emb_df):
     )
     qvec = [float(x) for x in emb_df.filter("vec_id = 7").first()["embedding"]]
     plan = (
-        pq.pq_topk(model, stored, "vec_id", qvec, k=10)
+        pq.pq_topk(model, stored, qvec, k=10)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -135,9 +135,9 @@ def test_ivf_pq_composition(spark):
     index returns the cluster neighborhood of the query."""
     emb, E = _clustered(spark)
     qvec = list(E[0])
-    model_ivf, indexed = similarity.ivf_index(emb, "embedding", n_clusters=5)
-    model_pq = pq.pq_fit(emb, "embedding", m=16, n_codes=16, dim=64)
-    enc = pq.pq_encode(indexed, "embedding", model_pq)
+    model_ivf, indexed = similarity.ivf_index(emb, n_clusters=5)
+    model_pq = pq.pq_fit(emb, m=16, n_codes=16, dim=64)
+    enc = pq.pq_encode(indexed, model_pq)
     import math
 
     dists = sorted(
@@ -152,7 +152,7 @@ def test_ivf_pq_composition(spark):
     got = [
         r["vec_id"]
         for r in pq.pq_topk(
-            model_pq, subset, "vec_id", qvec, k=10, exclude_ids=[0]
+            model_pq, subset, qvec, k=10, exclude_ids=[0]
         ).collect()
     ]
     # all results come from the query's own planted cluster (ids 0..39)
@@ -177,10 +177,10 @@ def test_pq_fuzz_codes_and_adc_match_numpy(spark):
         )
     rows.append((120, [0.0] * dim))  # zero vector: norm 0 -> NULL score
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    model = pq.pq_fit(emb, "embedding", m=m, n_codes=n_codes, dim=dim)
+    model = pq.pq_fit(emb, m=m, n_codes=n_codes, dim=dim)
     enc = {
         r["vec_id"]: r["pq_codes"]
-        for r in pq.pq_encode(emb, "embedding", model).collect()
+        for r in pq.pq_encode(emb, model).collect()
     }
     cb = model.codebooks
     sub = dim // m
@@ -201,8 +201,7 @@ def test_pq_fuzz_codes_and_adc_match_numpy(spark):
         r["vec_id"]: r["adc_cosine"]
         for r in pq.pq_topk(
             model,
-            pq.pq_encode(emb, "embedding", model),
-            "vec_id",
+            pq.pq_encode(emb, model),
             qvec,
             k=121,
         ).collect()

@@ -187,13 +187,13 @@ def test_lsh_pairs_subset_of_exact_with_exact_copy_recall(spark, texts):
     lsh = {
         (r["id1"], r["id2"])
         for r in minhash_lsh_pairs(
-            df, "doc_id", "text", k=2, threshold=0.5
+            df, k=2, threshold=0.5
         ).collect()
     }
     exact = {
         (r["id1"], r["id2"])
         for r in ngram_jaccard_pairs(
-            df, "doc_id", "text", k=2, threshold=0.5
+            df, k=2, threshold=0.5
         ).collect()
     }
     assert lsh <= exact

@@ -44,9 +44,7 @@ def test_deterministic_shuffle_stable_and_seed_dependent(spark):
     )
 
     def order(frame, seed):
-        ranked = sampling.with_shuffle_rank(
-            frame, "doc_id", partition_by=["split"], seed=seed
-        )
+        ranked = sampling.with_shuffle_rank(frame, seed=seed)
         return [r["doc_id"] for r in ranked.orderBy("shuffle_rank").collect()]
 
     order1 = order(df, 1)

@@ -92,9 +92,8 @@ def test_exact_duplicate_recall_is_structural(spark, emb):
 
 
 def test_survivors_min_id_per_component(spark, emb):
-    kept = {
-        r["vec_id"] for r in semantic_dedup(emb, n_clusters=4).collect()
-    }
+    pairs = semantic_dedup_pairs(emb, n_clusters=4)
+    kept = {r["vec_id"] for r in semantic_dedup(emb, pairs).collect()}
     all_ids = {i for i, _ in _fixture_vectors()}
     want_dropped = set()
     comp = {}
@@ -106,18 +105,6 @@ def test_survivors_min_id_per_component(spark, emb):
             want_dropped.add(i)
     assert kept == all_ids - want_dropped
     assert {101, 201, 202, 301} <= want_dropped
-
-
-def test_precomputed_pairs_give_identical_survivors(spark, emb):
-    """The pairs= escape hatch (one kernel pass shared by survivor
-    derivation and audit consumers) must be behavior-identical to the
-    internal computation it replaces."""
-    own = {r["vec_id"] for r in semantic_dedup(emb, n_clusters=4).collect()}
-    pre = semantic_dedup_pairs(emb, n_clusters=4)
-    given = {
-        r["vec_id"] for r in semantic_dedup(emb, pairs=pre).collect()
-    }
-    assert given == own
 
 
 def test_zero_vector_matches_nothing(spark, emb):

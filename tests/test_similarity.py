@@ -42,7 +42,7 @@ def test_brute_force_matches_numpy(spark, emb_df, emb_np):
     got = [
         (r["vec_id"], r["cosine"])
         for r in similarity.brute_force_topk(
-            emb_df, "embedding", "vec_id", qvec, k=10, exclude_ids=[0]
+            emb_df, qvec, k=10, exclude_ids=[0]
         ).collect()
     ]
     assert got == expected
@@ -73,8 +73,7 @@ def test_lsh_topk_high_recall_on_clustered_data(spark):
     got = [
         r["vec_id"]
         for r in similarity.lsh_topk(
-            emb, "embedding", "vec_id", qvec, k=10,
-            probe_hamming=1, exclude_ids=[0],
+            emb, qvec, probe_hamming=1, exclude_ids=[0],
         ).collect()
     ]
     recall = len(set(got) & set(exact)) / 10
@@ -88,8 +87,7 @@ def test_lsh_topk_on_uniform_fixture_returns_valid_topk(spark, emb_df, emb_np):
     ids, E = emb_np
     qvec = E[list(ids).index(0)].tolist()
     got = similarity.lsh_topk(
-        emb_df, "embedding", "vec_id", qvec, k=10,
-        probe_hamming=2, exclude_ids=[0],
+        emb_df, qvec, probe_hamming=2, exclude_ids=[0],
     ).collect()
     assert len(got) == 10
     cosines = [r["cosine"] for r in got]
@@ -103,7 +101,7 @@ def test_query_bucket_matches_stored_bucket_for_every_row(spark, emb_df):
     evaluation order, or near-zero dot products flip sides and recall
     silently drops. (Regression: _bucket_of once used a sequential Python
     sum while the index side used BLAS.)"""
-    rows = similarity.with_lsh_buckets(emb_df, "embedding").select(
+    rows = similarity.with_lsh_buckets(emb_df).select(
         "vec_id", "embedding", "lsh_bucket"
     ).collect()
     assert len(rows) > 0
@@ -115,10 +113,10 @@ def test_query_bucket_matches_stored_bucket_for_every_row(spark, emb_df):
 def test_lsh_buckets_deterministic(spark, emb_df):
     a = {
         (r["vec_id"], r["lsh_bucket"])
-        for r in similarity.with_lsh_buckets(emb_df, "embedding").collect()
+        for r in similarity.with_lsh_buckets(emb_df).collect()
     }
     b = {
         (r["vec_id"], r["lsh_bucket"])
-        for r in similarity.with_lsh_buckets(emb_df, "embedding").collect()
+        for r in similarity.with_lsh_buckets(emb_df).collect()
     }
     assert a == b

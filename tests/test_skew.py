@@ -103,13 +103,13 @@ def test_linedup_viral_line_hot_join_broadcasts(spark):
         )
     )
 
-    out = drop_duplicate_lines(docs, "doc_id", "text", max_line_df=3)
+    out = drop_duplicate_lines(docs)
     assert expect(out.collect())
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan[:2000]
 
     with _with_tiny_skew_thresholds(spark):
-        out2 = drop_duplicate_lines(docs, "doc_id", "text", max_line_df=3)
+        out2 = drop_duplicate_lines(docs)
         assert expect(out2.collect())
         plan2 = out2._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" not in plan2, plan2[:2000]

@@ -93,7 +93,7 @@ def test_no_inferred_generate_filter_below_exchange(spark, sf_dir):
         load_table(spark, sf_dir, "documents").select("doc_id", "text"),
         "doc_id",
     )
-    exploded = doc_shingles(docs, "doc_id", "text", 3).select(
+    exploded = doc_shingles(docs, 3).select(
         "doc_id", F.explode("hs").alias("s")
     )
     plan = exploded._jdf.queryExecution().optimizedPlan().toString()
@@ -185,7 +185,7 @@ def test_linedup_plan_has_two_scaled_exchanges(spark, sf_dir, monkeypatch):
     assert n is not None
     scan_id = docs._jdf.queryExecution().analyzed().output().apply(0).toString()
     assert scan_id.startswith("doc_id#"), scan_id
-    out = linedup.drop_duplicate_lines(docs, "doc_id", "text")
+    out = linedup.drop_duplicate_lines(docs)
     plan = out._jdf.queryExecution().executedPlan().toString()
     exchanges = [
         [a.strip() for a in args.split(",")]
@@ -210,12 +210,12 @@ def test_scaled_exchanges_preserve_dedup_results(spark, sf_dir, monkeypatch):
     )
 
     def snapshot():
-        mh = dedup.minhash_lsh_pairs(docs, "doc_id", "text").collect()
+        mh = dedup.minhash_lsh_pairs(docs).collect()
         jc = dedup.ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.8, max_doc_freq=64
+            docs, threshold=0.8, max_doc_freq=64
         ).collect()
         sx = dedup.exact_dedup(docs, ["text"], "doc_id").collect()
-        ln = linedup.drop_duplicate_lines(docs, "doc_id", "text").collect()
+        ln = linedup.drop_duplicate_lines(docs).collect()
         sp = spandup.duplicate_spans(docs, window=8, max_df=16).collect()
         key = lambda r: tuple(str(v) for v in r)
         return [sorted(rows, key=key) for rows in (mh, jc, sx, ln, sp)]
@@ -276,7 +276,7 @@ def test_scaled_exchange_preserves_embedding_pairs(spark, monkeypatch):
 
     def pairs():
         rows = dedup.embedding_near_dup_pairs(
-            src, "vec_id", "embedding", threshold=0.9
+            src, threshold=0.9
         ).collect()
         return sorted((r["id1"], r["id2"], r["cosine"]) for r in rows)
 
@@ -413,7 +413,7 @@ def test_linedup_fingerprint_form_never_shuffles_line_bodies(
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     monkeypatch.setattr(spread_mod, "_EXCHANGE_INPUT_BUDGET", 64)
     n = exchange_partitions(docs)
-    out = linedup.drop_duplicate_lines(docs, "doc_id", "text")
+    out = linedup.drop_duplicate_lines(docs)
     plan = out._jdf.queryExecution().executedPlan().toString()
     # Parse each hash exchange's actual key list (last arg is the
     # partition count): every key must be a fingerprint word or the doc

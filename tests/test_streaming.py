@@ -634,11 +634,11 @@ def test_trending_topk_stream_equals_batch(spark, tmp_path):
 
     got_topk = {
         (r["window_start"], r["event_type"], r["n"])
-        for r in W.rank_trending(counts_stream, k=2).collect()
+        for r in W.rank_trending(counts_stream).collect()
     }
     want_topk = {
         (r["window_start"], r["event_type"], r["n"])
-        for r in W.trending_topk(batch_df, k=2).collect()
+        for r in W.trending_topk(batch_df).collect()
     }
     assert got_topk == want_topk
     # The cut is engaged: fewer ranked rows than raw (window, key) counts.

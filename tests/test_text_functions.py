@@ -15,8 +15,8 @@ def one(spark, s, col):
 
 
 def test_token_counts(spark):
-    assert one(spark, "a b c", TX.token_count("text")) == 3
-    assert one(spark, "hello, world!", TX.bpe_token_count("text")) == 4
+    assert one(spark, "a b c", TX.token_count()) == 3
+    assert one(spark, "hello, world!", TX.bpe_token_count()) == 4
 
 
 def test_word_shingles(spark):
@@ -41,15 +41,15 @@ def test_lang_id_on_real_samples(spark):
         "这是一个中文句子": "zh",
     }
     for text_val, expect in samples.items():
-        assert one(spark, text_val, TX.lang_id("text")) == expect, text_val
-    assert one(spark, "zzz qqq xxx", TX.lang_id("text")) == "und"
+        assert one(spark, text_val, TX.lang_id()) == expect, text_val
+    assert one(spark, "zzz qqq xxx", TX.lang_id()) == "und"
 
 
 def test_quality_components(spark):
     assert one(spark, "a,b!c?", TX.punct_ratio("text")) == 0.5
-    sw = one(spark, "the dog and the cat", TX.stopword_ratio("text"))
+    sw = one(spark, "the dog and the cat", TX.stopword_ratio())
     assert abs(sw - 0.6) < 1e-9
-    q = one(spark, "the quick brown fox jumps over the lazy dog", TX.quality_score("text"))
+    q = one(spark, "the quick brown fox jumps over the lazy dog", TX.quality_score())
     assert 0.0 <= q <= 1.0
 
 
@@ -69,8 +69,8 @@ def test_repetition_signals(spark):
         for r in spark.createDataFrame(rows, "i long, text string")
         .select(
             "i",
-            dup_word_frac("text").alias("d"),
-            top_word_frac("text").alias("t"),
+            dup_word_frac().alias("d"),
+            top_word_frac().alias("t"),
         )
         .collect()
     }
@@ -82,13 +82,13 @@ def test_repetition_signals(spark):
 def test_tokenizer_is_whitespace_regex(spark):
     """trim + \\s+ split: tabs/newlines/runs of spaces separate tokens and
     padding never fabricates empty-string tokens."""
-    assert one(spark, "a\tb\n  c", TX.token_count("text")) == 3
+    assert one(spark, "a\tb\n  c", TX.token_count()) == 3
     assert one(spark, "  padded  doc  ", TX.tokens("text")) == ["padded", "doc"]
     # empty text -> zero tokens (empty-token filter; oracle-matching via
     # LIST_FILTER on the SQL side)
-    assert one(spark, "", TX.token_count("text")) == 0
+    assert one(spark, "", TX.token_count()) == 0
     # padding no longer scores as repetition
-    assert one(spark, "  a  b  ", TX.dup_word_frac("text")) == 0.0
+    assert one(spark, "  a  b  ", TX.dup_word_frac()) == 0.0
 
 
 def test_char_shingles(spark):
@@ -115,9 +115,9 @@ def test_cjk_docs_carry_dedup_and_quality_signal(spark):
         spark.createDataFrame([(zh1,)], "text string")
         .select(
             F.size(TX.word_shingles(TX.tokens("text"), 3)).alias("w"),
-            F.size(TX.adaptive_shingles("text", 3)).alias("a"),
+            F.size(TX.adaptive_shingles(3)).alias("a"),
             F.round(TX.punct_ratio("text"), 4).alias("p"),
-            TX.lang_id("text").alias("lang"),
+            TX.lang_id().alias("lang"),
         )
         .first()
     )
@@ -132,7 +132,7 @@ def test_cjk_docs_carry_dedup_and_quality_signal(spark):
     pairs = {
         (r["id1"], r["id2"])
         for r in ngram_jaccard_pairs(
-            df, "doc_id", "text", k=3, threshold=0.5
+            df, k=3, threshold=0.5
         ).collect()
     }
     assert pairs == {(1, 2)}  # near-identical CJK docs pair; unrelated doesn't
@@ -159,7 +159,7 @@ def test_top_word_frac_matches_naive_definition(spark):
     got = {
         r["i"]: r["f"]
         for r in df.select(
-            "i", F.round(TX.top_word_frac("text"), 6).alias("f")
+            "i", F.round(TX.top_word_frac(), 6).alias("f")
         ).collect()
     }
     for i, d in enumerate(docs):
@@ -193,9 +193,9 @@ def test_tokenizer_contract_on_hostile_whitespace(spark):
     )
     rows = df.select(
         "i",
-        TX.token_count("text").alias("n"),
+        TX.token_count().alias("n"),
         pd_token_count("text").alias("pd_n"),
-        F.round(TX.dup_word_frac("text"), 4).alias("dup"),
+        F.round(TX.dup_word_frac(), 4).alias("dup"),
     ).collect()
     got = {r["i"]: r for r in rows}
     for i, exp in enumerate(expected):

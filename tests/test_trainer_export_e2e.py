@@ -41,7 +41,7 @@ def corpus(spark):
 def _run_pipeline(corpus):
     vocab = build_vocab(corpus, vocab_size=5)  # 6 words: one becomes OOV
     encoded = encode_documents(corpus, vocab)
-    packed = pack_sequences(encoded, "doc_id", "n_tokens", MAX_TOKENS)
+    packed = pack_sequences(encoded, MAX_TOKENS)
     rows = encoded.join(packed.select("doc_id", "pack_id", "pack_tokens"), "doc_id")
     return vocab, rows
 

@@ -94,14 +94,14 @@ def main() -> None:
         if os.path.isdir(path):
             shutil.rmtree(path)
         t0 = time.perf_counter()
-        incremental.write_minhash_index(docs, "doc_id", "text", path)
+        incremental.write_minhash_index(docs, path)
         print(f"build  {time.perf_counter() - t0:8.1f} s", flush=True)
 
     walls = []
     for _ in range(reps):
         t0 = time.perf_counter()
         incremental.incremental_near_dup_pairs(
-            spark, batch, "doc_id", "text", path, threshold=0.8
+            spark, batch, path
         ).write.format("noop").mode("overwrite").save()
         walls.append(time.perf_counter() - t0)
         print(f"probe rep {walls[-1]:8.1f} s", flush=True)

@@ -106,13 +106,13 @@ def _ops(spark, d):
         spanless = remove_duplicate_spans(exact, window=8, max_df=4).select(
             "doc_id", F.col("clean_text").alias("text")
         )
-        neared = dedup.near_dup_dedup(spanless, "doc_id", "text", threshold=0.8)
+        neared = dedup.near_dup_dedup(spanless, threshold=0.8)
         gated = neared.filter(
-            (token_count("text") >= 8) & (top_word_frac("text") <= 0.8)
+            (token_count() >= 8) & (top_word_frac() <= 0.8)
         )
         redacted = gated.select("doc_id", redact_pii("text").alias("text"))
         bench_set = docs.limit(100).select("doc_id", "text")
-        cleaned = decontaminate(redacted, bench_set, k=3, max_contamination=0.3)
+        cleaned = decontaminate(redacted, bench_set, max_contamination=0.3)
         return leakage_safe_split(cleaned, val_fraction=0.1, threshold=0.8)
 
     def _searchops():
@@ -189,13 +189,11 @@ def _ops(spark, d):
         e = emb()
         n_clusters = _ann_cells(e)
         model, indexed = similarity.ivf_index(
-            e, "embedding", n_clusters=n_clusters, max_fit_rows=20_000
+            e, n_clusters=n_clusters, max_fit_rows=20_000
         )
         return similarity.ivf_topk(
             model,
             indexed,
-            "embedding",
-            "vec_id",
             _ann_qvec(e),
             k=10,
             n_probe=max(3, round(n_clusters * 3 / 8)),
@@ -206,10 +204,10 @@ def _ops(spark, d):
 
         e = emb()
         model = pq.pq_fit(
-            e, "embedding", m=16, n_codes=16, dim=64, max_fit_rows=20_000
+            e, m=16, n_codes=16, dim=64, max_fit_rows=20_000
         )
-        encoded = pq.pq_encode(e, "embedding", model)
-        return pq.pq_topk(model, encoded, "vec_id", _ann_qvec(e), k=10)
+        encoded = pq.pq_encode(e, model)
+        return pq.pq_topk(model, encoded, _ann_qvec(e), k=10)
 
     def _ann_semdedup():
         from aws_snowflake_kinesis_airflow_pipeline_spark.operators.semdedup import (
@@ -219,8 +217,6 @@ def _ops(spark, d):
         e = emb()
         return semantic_dedup_pairs(
             e,
-            "vec_id",
-            "embedding",
             n_clusters=_ann_cells(e),
             threshold=0.95,
             max_fit_rows=20_000,
@@ -233,17 +229,17 @@ def _ops(spark, d):
         "c1": lambda: dedup.exact_dedup(
             docs(), ["text"], "doc_id", unique_ids=True
         ),
-        "c2": lambda: dedup.minhash_lsh_pairs(docs(), "doc_id", "text"),
+        "c2": lambda: dedup.minhash_lsh_pairs(docs()),
         "c3": lambda: dedup.ngram_jaccard_pairs(
-            docs(), "doc_id", "text", k=3, threshold=0.8, max_doc_freq=100
+            docs(), k=3, threshold=0.8, max_doc_freq=100
         ),
         "c4": lambda: dedup.simhash_near_dup_pairs(
-            docs(), "doc_id", "text", max_hamming=6, bits=128
+            docs(), max_hamming=6, bits=128
         ),
         "c8": lambda: llm_suite.c8_text_features(spark, d),
-        "c16": lambda: dedup.near_dup_dedup(docs(), "doc_id", "text", threshold=0.8),
+        "c16": lambda: dedup.near_dup_dedup(docs(), threshold=0.8),
         "c5": lambda: dedup.embedding_near_dup_pairs(
-            emb(), "vec_id", "embedding", threshold=0.9
+            emb(), threshold=0.9
         ),
         "ivf": lambda: _ann_ivf(),
         "pq": lambda: _ann_pq(),
@@ -251,7 +247,7 @@ def _ops(spark, d):
         "retention": lambda: _evops().cohort_retention(ev()),
         "transition": lambda: _evops().event_transitions(ev()),
         "funnel": lambda: _evops().funnel_conversion(
-            ev(), ["view", "click", "purchase"], within="1 hour"
+            ev(), ["view", "click", "purchase"]
         ),
         "tumbling": lambda: _evops().tumbling_counts(ev()),
         "session": lambda: _evops().batch_sessions_gaps_and_islands(ev()),
@@ -270,13 +266,10 @@ def _ops(spark, d):
                 ),
                 "doc_id",
             ),
-            group_col="source",
         ),
-        "line": lambda: drop_duplicate_lines(
-            docs(), "doc_id", "text", max_line_df=3, line_sep="\n"
-        ),
+        "line": lambda: drop_duplicate_lines(docs()),
         "span": lambda: remove_duplicate_spans(
-            docs(), "doc_id", "text", window=8, max_df=4
+            docs(), window=8, max_df=4
         ),
     }
 
